@@ -1,19 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
+  * SPARK_GRAFT_SF_DIR and reports per-query seconds.
   *
   * Queries are forced through the noop datasource so the FULL plan executes
   * (a count() would let Catalyst prune projections and under-report);
   * a warm-up pass on the flagship star join absorbs one-time JIT/codegen
   * cost before timing.
   *
-  * Timings are emitted by two routes so neither can be lost: the stdout
-  * line (rounded to ms so it stays within the driver's captured tail) and
-  * a full-precision per-query file, BENCH_LOCAL.json, written into the
-  * repo so the artifact survives any stdout truncation.
+  * Output contract — two stdout lines, then one file:
+  *   1. the full line: `{"metric":"total","value":..,"unit":"sec",
+  *      "runs":..,"state_build_sec":..,"errors":[..],"queries":{..},
+  *      "sf":..}` with every query's seconds rounded to ms;
+  *   2. the compact line: `{"n":..,"total":..,"state_build":..,
+  *      "errors":[..],"runs":..,"sf":..}`, ~120 bytes, so the headline
+  *      numbers survive any captured output tail;
+  *   3. SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL.json): the full line's
+  *      fields at full precision, plus a `layers` object that gives, per
+  *      query, the Spark work of its recorded (fastest) attempt — `jobs`
+  *      started, `stages` completed, `tasks` ended and `task_s`, the
+  *      summed executor run time of those tasks. Wall time against
+  *      task_s and jobs separates the fixed per-job driver floor from
+  *      executor compute.
+  * Readers parse both stdout lines by key, so their keys never change.
   *
   * Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) and the
   * recorded time is the per-query MIN. A single-shot timer on a shared
@@ -21,39 +35,68 @@ import org.apache.spark.sql.SparkSession
   * q88/q97 at 2x their reproducible time); min-of-N measures the plan,
   * not the host. The emitted JSON carries a "runs" field so readers know
   * the discipline.
+  *
+  * SPARK_GRAFT_BENCH_ONLY=<regex> restricts the timed queries to the
+  * matching names (warm-up and state build still run), which makes a
+  * one-query run with its layer record a quick local probe.
   */
 object Bench {
+
+  /** Spark work per job group. Bench puts every timed attempt in its own
+    * job group, so the counts of one attempt can be read back by name.
+    * Listener events arrive asynchronously; read them after
+    * `spark.stop()`, which drains the listener bus.
+    */
+  private final class Layers extends SparkListener {
+    final class Counts {
+      var jobs = 0
+      var stages = 0
+      var tasks = 0
+      var taskMs = 0L
+    }
+    private val byGroup = mutable.HashMap.empty[String, Counts]
+    private val stageGroup = mutable.HashMap.empty[Int, String]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach { g =>
+          byGroup.getOrElseUpdate(g, new Counts).jobs += 1
+          e.stageIds.foreach(stageGroup(_) = g)
+        }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        stageGroup.get(e.stageInfo.stageId).foreach(byGroup(_).stages += 1)
+      }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      stageGroup.get(e.stageId).foreach { g =>
+        val c = byGroup(g)
+        c.tasks += 1
+        if (e.taskMetrics != null) c.taskMs += e.taskMetrics.executorRunTime
+      }
+    }
+    def apply(group: String): Option[Counts] = synchronized(byGroup.get(group))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The JVM-wide whole-stage-codegen class cache defaults to 100
-      // entries; the suite's widest plans (q116/q179: 90+ Exchanges of
-      // union tiers) alone generate 500-2000 codegen units, so at the
-      // default every bench attempt re-ran Janino over the full plan —
-      // measured: q179 4.62 -> 2.96 s, q116 5.00 -> 3.60 s, state_build
-      // 105 -> 76 s (min-of-3, sf0.1) from this one knob. Scale-neutral:
-      // it trades bounded driver memory for compile time identically on
-      // a cluster driver; it caches generated CODE, never data or
-      // results.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
+    val layers = new Layers
+    spark.sparkContext.addSparkListener(layers)
 
-    def execOnce(name: String): Double = {
+    // `group` names the attempt's job group (see Layers); null runs the
+    // attempt untracked
+    def execOnce(name: String, group: String = null): Double = {
+      if (group != null) spark.sparkContext.setJobGroup(group, group)
       val t0 = System.nanoTime()
       val t = try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => -1.0 }
+      finally spark.sparkContext.clearJobGroup()
       // Release blocks the query materialized (localCheckpoint/persist
       // intermediates) AFTER the timed window: each attempt then starts
       // from the same clean block manager an isolated run would see.
@@ -79,9 +122,11 @@ object Bench {
     }
 
     // Min over `runs` attempts; a failure (-1) on any attempt reports -1.
-    def exec(name: String): Double = {
-      val ts = (1 to runs).map(_ => execOnce(name))
-      if (ts.contains(-1.0)) -1.0 else ts.min
+    // Also returns the job group of the recorded attempt (null on failure).
+    def exec(name: String): (Double, String) = {
+      val ts = (1 to runs).map(i => execOnce(name, s"$name#$i"))
+      if (ts.contains(-1.0)) (-1.0, null)
+      else (ts.min, s"$name#${ts.indexOf(ts.min) + 1}")
     }
 
     execOnce("q13_star_join") // warm-up: JIT + codegen + parquet footer cache
@@ -103,9 +148,14 @@ object Bench {
     // Local perf-iteration filter (the driver never sets it — its runs
     // are full; same contract as Verify's SPARK_GRAFT_ONLY)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
-    val results = SparkEntry.queries.keys.toSeq.sorted
+    val timed = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.findFirstIn(n).isDefined))
       .map(n => n -> exec(n))
+    val results = timed.map { case (n, (t, _)) => n -> t }
+    // stop() drains the listener bus: the layer counts are final after it
+    spark.stop()
+    val layerOf = timed.flatMap { case (n, (_, g)) =>
+      Option(g).flatMap(layers(_)).map(n -> _) }
     // A crashed query (-1 sentinel) must not poison the suite total —
     // round 7's committed total silently summed ten -1.0s and became
     // incomparable round-over-round. `value` is the sum of successful
@@ -143,6 +193,11 @@ object Bench {
     val entries = results
       .map { case (k, v) => s"""    "$k": $v""" }
       .mkString(",\n")
+    val layerEntries = layerOf
+      .map { case (k, c) =>
+        s"""    "$k": {"jobs": ${c.jobs}, "stages": ${c.stages}, """ +
+          s""""tasks": ${c.tasks}, "task_s": ${c.taskMs / 1000.0}}""" }
+      .mkString(",\n")
     val full =
       s"""{
          |  "metric": "total",
@@ -154,10 +209,12 @@ object Bench {
          |  "sf": "$sfDir",
          |  "queries": {
          |$entries
+         |  },
+         |  "layers": {
+         |$layerEntries
          |  }
          |}
          |""".stripMargin
     java.nio.file.Files.write(outPath, full.getBytes("UTF-8"))
-    spark.stop()
   }
 }

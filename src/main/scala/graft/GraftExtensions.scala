@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProduct, MinHashSignature, SimHash64, SortedOverlapCount, WordShingles}
+import graft.functions.GraftFunctions
 
 /** Installable engine surface: `spark.sql.extensions=graft.GraftExtensions`
   * registers the native expression family at session BUILD time, so every
@@ -15,115 +15,11 @@ import graft.functions.{DotProduct, MinHashSignature, SimHash64, SortedOverlapCo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  private def arity(name: String, n: Int)(build: Seq[Expression] => Expression):
-      Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == n, s"$name expects $n argument(s), got ${exprs.length}")
-      build(exprs)
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, f.name,
+          f.usage, ""),
+        f.build))
     }
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - left-to-right dot product of two double arrays"),
-      arity("graft_dot", 2)(e => DotProduct(e(0), e(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "graft_minhash(shingles, h) - MinHash signature of h permutations"),
-      arity("graft_minhash", 2)(e =>
-        MinHashSignature(e(0), e(1).eval().asInstanceOf[Int]))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(tokens) - 64-bit SimHash sketch"),
-      arity("graft_simhash", 1)(e => SimHash64(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_shingles"),
-      info("graft_shingles", "graft_shingles(text, n) - word n-gram shingle set"),
-      arity("graft_shingles", 2)(e =>
-        WordShingles(e(0), e(1).eval().asInstanceOf[Int]))))
-    ext.injectFunction((FunctionIdentifier("graft_overlap"),
-      info("graft_overlap",
-        "graft_overlap(a, b) - intersection size of two SORTED string arrays"),
-      arity("graft_overlap", 2)(e => SortedOverlapCount(e(0), e(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      info("graft_bloom_contains",
-        "graft_bloom_contains(bloom, key) - bloom-filter membership probe " +
-          "(bytes from graft.ops.Bloom.build, key a 64-bit hash)"),
-      arity("graft_bloom_contains", 2)(e =>
-        graft.ops.Bloom.BloomMightContain(e(0), e(1)))))
-    ext.injectFunction((FunctionIdentifier("graft_frequent_items"),
-      info("graft_frequent_items",
-        "graft_frequent_items(item, k) - Misra-Gries frequent-items " +
-          "summary: array<struct<item,lb>> of at most k candidates"),
-      arity("graft_frequent_items", 2)(e =>
-        graft.functions.MisraGriesTopK(e(0),
-          e(1).eval().asInstanceOf[Number].intValue()))))
-    // column-composition builders (GraftFunctions.registerAll's twins):
-    // the builder emits the same unresolved tree the Column API would
-    // (TextAnalysis.*Expr), the analyzer finishes it — UDF-free
-    ext.injectFunction((FunctionIdentifier("graft_winnow_select"),
-      info("graft_winnow_select",
-        "graft_winnow_select(text, k, w) - winnowing fingerprint " +
-          "selection (Schleimer et al. 2004): md5 of every k-gram of " +
-          "the normalized text, minimum per w-window"),
-      arity("graft_winnow_select", 3)(e =>
-        graft.functions.TextAnalysis.winnowSelectExpr(e(0),
-          e(1).eval().asInstanceOf[Number].intValue(),
-          e(2).eval().asInstanceOf[Number].intValue()))))
-    ext.injectFunction((FunctionIdentifier("graft_run_entropy"),
-      info("graft_run_entropy",
-        "graft_run_entropy(arr) - integer-log2 self-entropy sum of a " +
-          "string array: sum over distinct elements of " +
-          "f*(floor(log2 n) - floor(log2 f)), one sorted-run pass"),
-      arity("graft_run_entropy", 1)(e =>
-        graft.functions.TextAnalysis.runEntropySumExpr(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_quality_ppm"),
-      info("graft_quality_ppm",
-        "graft_quality_ppm(text) - exact-integer composite quality " +
-          "score in parts-per-million (length saturation, punctuation " +
-          "cleanliness, stopword presence, token-length sanity)"),
-      arity("graft_quality_ppm", 1)(e =>
-        graft.functions.TextAnalysis.qualityScorePpmExpr(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_split"),
-      info("graft_split",
-        "graft_split(id) - canonical deterministic 90/5/5 " +
-          "train/val/test label from an id (md5-bucket arithmetic)"),
-      arity("graft_split", 1)(e =>
-        graft.functions.TextAnalysis.splitExpr(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_token_count"),
-      info("graft_token_count",
-        "graft_token_count(text) - whitespace token count"),
-      arity("graft_token_count", 1)(e =>
-        graft.functions.TextAnalysis.tokenCountExpr(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_lang_id"),
-      info("graft_lang_id",
-        "graft_lang_id(text) - stopword-ratio argmax language id " +
-          "(en/de/fr/es/und)"),
-      arity("graft_lang_id", 1)(e =>
-        graft.functions.TextAnalysis.langIdExpr(e(0)))))
-    // the codec tier's SQL surface: binary payload -> decoded struct
-    ext.injectFunction((FunctionIdentifier("graft_image_stats"),
-      info("graft_image_stats",
-        "graft_image_stats(content) - decode an image payload (P6 PPM, " +
-          "PNG, GIF, or baseline JPEG, sniffed from the magic bytes) " +
-          "and return the pixel statistics struct (width, height, " +
-          "n_pixels, sum_channel, sum_channel_sq, max_channel, " +
-          "mean_channel)"),
-      arity("graft_image_stats", 1)(e =>
-        graft.functions.ImageStatsExpr(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_audio_stats"),
-      info("graft_audio_stats",
-        "graft_audio_stats(content) - decode a RIFF/WAVE PCM16 payload " +
-          "(real chunk walk) and return the sample statistics struct " +
-          "(n_samples, duration_ms, sum_sample, min_sample, max_sample)"),
-      arity("graft_audio_stats", 1)(e =>
-        graft.functions.AudioStatsExpr(e(0)))))
-    ext.injectFunction((FunctionIdentifier("graft_cdc_chunks"),
-      info("graft_cdc_chunks",
-        "graft_cdc_chunks(text) - content-defined chunking: " +
-          "array<struct(l, ck)> of chunk code-point lengths and " +
-          "xxhash64 chunk keys; boundaries from a Rabin-style rolling " +
-          "polynomial over the trailing 8 code points (bucket 64)"),
-      arity("graft_cdc_chunks", 1)(e =>
-        graft.functions.CdcChunksExpr(e(0)))))
-  }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** SQL-surface registration for the engine's function family (SURVEY §4.2):
   * after `GraftFunctions.registerAll(spark)`, every capability is callable
@@ -12,54 +13,64 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftFunctions {
 
-  private def arity[A](name: String, n: Int)(
-      build: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => A):
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] => A =
-    exprs => {
+  /** One SQL function: its name, its usage line (DESCRIBE FUNCTION) and
+    * a builder that checks the argument count. [[registerAll]] and
+    * [[graft.GraftExtensions]] both install [[sqlFunctions]].
+    */
+  final case class SqlFunction(name: String, usage: String,
+      build: Seq[Expression] => Expression)
+
+  private def fn(name: String, n: Int, usage: String)(
+      build: Seq[Expression] => Expression): SqlFunction =
+    SqlFunction(name, usage, exprs => {
       require(exprs.length == n,
         s"$name expects $n argument(s), got ${exprs.length}")
       build(exprs)
-    }
+    })
 
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  private def intArg(e: Expression): Int =
+    e.eval().asInstanceOf[Number].intValue()
 
-    reg.createOrReplaceTempFunction("graft_dot",
-      arity("graft_dot", 2)(exprs => DotProduct(exprs(0), exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      arity("graft_minhash", 2)(exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      arity("graft_simhash", 1)(exprs => SimHash64(exprs(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      arity("graft_shingles", 2)(exprs => WordShingles(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])), "built-in")
-    reg.createOrReplaceTempFunction("graft_overlap",
-      arity("graft_overlap", 2)(exprs =>
-        SortedOverlapCount(exprs(0), exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      arity("graft_bloom_contains", 2)(exprs =>
-        graft.ops.Bloom.BloomMightContain(exprs(0), exprs(1))), "built-in")
+  val sqlFunctions: Seq[SqlFunction] = Seq(
+    fn("graft_dot", 2,
+      "graft_dot(a, b) - left-to-right dot product of two double arrays")(
+      e => DotProduct(e(0), e(1))),
+    fn("graft_minhash", 2,
+      "graft_minhash(shingles, h) - MinHash signature of h permutations")(
+      e => MinHashSignature(e(0), e(1).eval().asInstanceOf[Int])),
+    fn("graft_simhash", 1,
+      "graft_simhash(tokens) - 64-bit SimHash sketch")(
+      e => SimHash64(e(0))),
+    fn("graft_shingles", 2,
+      "graft_shingles(text, n) - word n-gram shingle set")(
+      e => WordShingles(e(0), e(1).eval().asInstanceOf[Int])),
+    fn("graft_overlap", 2,
+      "graft_overlap(a, b) - intersection size of two SORTED string arrays")(
+      e => SortedOverlapCount(e(0), e(1))),
+    fn("graft_bloom_contains", 2,
+      "graft_bloom_contains(bloom, key) - bloom-filter membership probe " +
+        "(bytes from graft.ops.Bloom.build, key a 64-bit hash)")(
+      e => graft.ops.Bloom.BloomMightContain(e(0), e(1))),
     // aggregate: the analyzer wraps a bare AggregateFunction from the
     // registry in an AggregateExpression, same as the built-in aggregates
-    reg.createOrReplaceTempFunction("graft_frequent_items",
-      arity("graft_frequent_items", 2)(exprs =>
-        MisraGriesTopK(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue())),
-      "built-in")
+    fn("graft_frequent_items", 2,
+      "graft_frequent_items(item, k) - Misra-Gries frequent-items " +
+        "summary: array<struct<item,lb>> of at most k candidates")(
+      e => MisraGriesTopK(e(0), intArg(e(1)))),
     // column-composition builders (not custom Expressions): the builder
     // emits the SAME unresolved tree the Column API would produce
     // (TextAnalysis.*Expr — parsed template + argument splice), the
     // analyzer finishes resolution — still UDF-free, fully codegen'd
-    reg.createOrReplaceTempFunction("graft_winnow_select",
-      arity("graft_winnow_select", 3)(exprs =>
-        TextAnalysis.winnowSelectExpr(exprs(0),
-          exprs(1).eval().asInstanceOf[Number].intValue(),
-          exprs(2).eval().asInstanceOf[Number].intValue())), "built-in")
-    reg.createOrReplaceTempFunction("graft_run_entropy",
-      arity("graft_run_entropy", 1)(exprs =>
-        TextAnalysis.runEntropySumExpr(exprs(0))), "built-in")
-
+    fn("graft_winnow_select", 3,
+      "graft_winnow_select(text, k, w) - winnowing fingerprint " +
+        "selection (Schleimer et al. 2004): md5 of every k-gram of " +
+        "the normalized text, minimum per w-window")(
+      e => TextAnalysis.winnowSelectExpr(e(0), intArg(e(1)), intArg(e(2)))),
+    fn("graft_run_entropy", 1,
+      "graft_run_entropy(arr) - integer-log2 self-entropy sum of a " +
+        "string array: sum over distinct elements of " +
+        "f*(floor(log2 n) - floor(log2 f)), one sorted-run pass")(
+      e => TextAnalysis.runEntropySumExpr(e(0))),
     // the remaining text formulas, also as splice builders (these were
     // UDF wrappers before the parsed-template technique existed — now
     // every registered function is UDF-free except the HTML parsers).
@@ -71,32 +82,49 @@ object GraftFunctions {
     // holds on NULL too — asserted by SqlSurfaceSpec's NULL-input case.
     // The corpus itself has no NULL text (documents.text is generated
     // non-null), so no query result depends on the choice.
-    reg.createOrReplaceTempFunction("graft_token_count",
-      arity("graft_token_count", 1)(exprs =>
-        TextAnalysis.tokenCountExpr(exprs(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_lang_id",
-      arity("graft_lang_id", 1)(exprs =>
-        TextAnalysis.langIdExpr(exprs(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_quality_ppm",
-      arity("graft_quality_ppm", 1)(exprs =>
-        TextAnalysis.qualityScorePpmExpr(exprs(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_split",
-      arity("graft_split", 1)(exprs =>
-        TextAnalysis.splitExpr(exprs(0))), "built-in")
+    fn("graft_token_count", 1,
+      "graft_token_count(text) - whitespace token count")(
+      e => TextAnalysis.tokenCountExpr(e(0))),
+    fn("graft_lang_id", 1,
+      "graft_lang_id(text) - stopword-ratio argmax language id " +
+        "(en/de/fr/es/und)")(
+      e => TextAnalysis.langIdExpr(e(0))),
+    fn("graft_quality_ppm", 1,
+      "graft_quality_ppm(text) - exact-integer composite quality " +
+        "score in parts-per-million (length saturation, punctuation " +
+        "cleanliness, stopword presence, token-length sanity)")(
+      e => TextAnalysis.qualityScorePpmExpr(e(0))),
+    fn("graft_split", 1,
+      "graft_split(id) - canonical deterministic 90/5/5 " +
+        "train/val/test label from an id (md5-bucket arithmetic)")(
+      e => TextAnalysis.splitExpr(e(0))),
     // the codec tier's SQL surface (binary -> decoded struct): native
-    // expressions over the from-scratch PPM/PNG/WAV decoders
-    reg.createOrReplaceTempFunction("graft_image_stats",
-      arity("graft_image_stats", 1)(exprs =>
-        ImageStatsExpr(exprs(0))), "built-in")
-    reg.createOrReplaceTempFunction("graft_audio_stats",
-      arity("graft_audio_stats", 1)(exprs =>
-        AudioStatsExpr(exprs(0))), "built-in")
+    // expressions over the from-scratch image/audio decoders
+    fn("graft_image_stats", 1,
+      "graft_image_stats(content) - decode an image payload (P6 PPM, " +
+        "PNG, GIF, or baseline JPEG, sniffed from the magic bytes) " +
+        "and return the pixel statistics struct (width, height, " +
+        "n_pixels, sum_channel, sum_channel_sq, max_channel, " +
+        "mean_channel)")(
+      e => ImageStatsExpr(e(0))),
+    fn("graft_audio_stats", 1,
+      "graft_audio_stats(content) - decode a RIFF/WAVE PCM16 payload " +
+        "(real chunk walk) and return the sample statistics struct " +
+        "(n_samples, duration_ms, sum_sample, min_sample, max_sample)")(
+      e => AudioStatsExpr(e(0))),
     // content-defined chunking (rolling polynomial window hash, one
     // pass per row — the q193/q194 kernel)
-    reg.createOrReplaceTempFunction("graft_cdc_chunks",
-      arity("graft_cdc_chunks", 1)(exprs =>
-        CdcChunksExpr(exprs(0))), "built-in")
+    fn("graft_cdc_chunks", 1,
+      "graft_cdc_chunks(text) - content-defined chunking: " +
+        "array<struct(l, ck)> of chunk code-point lengths and " +
+        "xxhash64 chunk keys; boundaries from a Rabin-style rolling " +
+        "polynomial over the trailing 8 code points (bucket 64)")(
+      e => CdcChunksExpr(e(0))))
 
+  def registerAll(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    sqlFunctions.foreach(f =>
+      reg.createOrReplaceTempFunction(f.name, f.build, "built-in"))
     JobParse.register(spark)
   }
 }

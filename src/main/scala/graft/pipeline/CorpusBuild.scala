@@ -1251,16 +1251,6 @@ object CorpusBuild {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** The cross-split rows of a winnow-overlap relation: split labels
-    * derive from the ids alone ([[graft.ops.Splits]] — no table to
-    * join), so the decontamination filter is a projection + filter over
-    * the pair stream, free at any scale.
-    */
-  def crossSplitOnly(overlap: DataFrame): DataFrame = overlap
-    .withColumn("split_a", graft.ops.Splits.split(col("id_a")))
-    .withColumn("split_b", graft.ops.Splits.split(col("id_b")))
-    .filter(col("split_a") =!= col("split_b"))
-
   /** SPLIT-AWARE decontamination served from the stored fingerprint
     * state: [[stateWinnowOverlap]]'s batch-vs-standing-corpus screen
     * restricted to pairs that CROSS a train/val/test boundary — the
@@ -1273,18 +1263,18 @@ object CorpusBuild {
   def stateSplitLeakage(spark: SparkSession, stateDir: String,
       batch: DataFrame, minShared: Long = 2L,
       maxDf: Long = 64L): DataFrame = {
-    // Same algebra as crossSplitOnly(stateWinnowOverlap(...)), with the
-    // split labels computed ON THE JOIN INPUTS (one md5 per fingerprint
-    // row) instead of above the pair aggregate: written the naive way,
-    // Catalyst pushes the id-derived split filter below the groupBy into
-    // the fp-equality join condition, re-evaluating 2×(md5+conv) per
+    // Same algebra as stateWinnowOverlap plus a cross-split filter.
+    // Split labels derive from the ids alone ([[graft.ops.Splits]]), so
+    // labelling the pair stream looks free, but it is not: Catalyst
+    // pushes the id-derived split filter below the groupBy into the
+    // fp-equality join condition, re-evaluating 2×(md5+conv) per
     // CANDIDATE PAIR row — the pair stream is the fan-out of every rare
     // fingerprint, far larger than either input (measured r17: 2×md5 per
-    // pair ≈ half the query's task time). As input columns the labels are
-    // computed once per fp row and the pushed-down predicate compares two
-    // strings. Split is a pure function of the id, so pre-computing it
-    // and grouping by the (functionally dependent) label columns leaves
-    // the result bit-identical.
+    // pair ≈ half the query's task time). So the labels are computed ON
+    // THE JOIN INPUTS, once per fingerprint row, and the pushed-down
+    // predicate compares two strings. Split is a pure function of the
+    // id, so pre-computing it and grouping by the (functionally
+    // dependent) label columns leaves the result bit-identical.
     val corpusFps = stateFingerprints(spark, stateDir)
     val rare = corpusFps.groupBy("fpk").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("fpk")

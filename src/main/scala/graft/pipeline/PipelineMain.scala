@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.sources.Sources
@@ -22,15 +22,11 @@ object PipelineMain {
       sys.exit(2)
     }
     val Array(csvDir, lakeGlob, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-jobs-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER deploys the pipeline on a cluster; unset, it runs
+    // on the local master every other main uses
+    val spark = graft.Sessions.create(
+      master = sys.env.getOrElse("SPARK_MASTER", s"local[${graft.Sessions.cpus}]"),
+      appName = "graft-jobs-pipeline")
 
     val sightings = Sources.readCsv(spark, graft.schema.Schemas.rawScrapedUrl, csvDir)
     // anchor the date to the three segments right above the file name —

@@ -257,9 +257,13 @@ object MixQueries {
         ws.as("ws"))
       .join(covPerDoc, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_toks"),
-        filter(col("ws"), (tok, i0) => length(tok) > 0 &&
-          !array_contains(coalesce(col("cov"), array().cast("array<int>")),
-            i0 + 1)).as("kept_ws"))
+        // null text has no token array: it keeps no tokens and cleans to
+        // "", as the oracle's COALESCEs define
+        coalesce(
+          filter(col("ws"), (tok, i0) => length(tok) > 0 &&
+            !array_contains(coalesce(col("cov"), array().cast("array<int>")),
+              i0 + 1)),
+          array().cast("array<string>")).as("kept_ws"))
       .select(col("doc_id"), col("n_toks"),
         size(col("kept_ws")).cast("long").as("n_kept_tokens"),
         array_join(col("kept_ws"), " ").as("clean_text"))

@@ -61,12 +61,11 @@ object DocStream {
     *        read-side policy rather than a fold-side mutation
     * @param onCrossSplit when set, the same pre-fold screen restricted
     *        to pairs CROSSING a train/val/test boundary
-    *        ([[CorpusBuild.crossSplitOnly]] — split labels derive from
-    *        the ids, no extra join): the q159 split-leakage audit
-    *        served at ingest time, so a test-split doc quoting standing
-    *        train data surfaces before it ever folds in. Shares the
-    *        overlap relation with onBatchOverlap — one screen, two
-    *        readouts
+    *        ([[CorpusBuild.stateSplitLeakage]] — the q166 composition,
+    *        split labels computed on the join inputs): the q159
+    *        split-leakage audit served at ingest time, so a test-split
+    *        doc quoting standing train data surfaces before it ever
+    *        folds in. Rows are (id_a, id_b, n_shared, split_a, split_b)
     * @param onPii when set, every micro-batch is PII-screened on
     *        arrival ([[graft.queries.PiiQueries.screened]] — real
     *        detection over the batch text, nothing planted) and the
@@ -164,11 +163,10 @@ object DocStream {
           if ((onBatchOverlap != null || onCrossSplit != null) &&
               cfg.trackFingerprints &&
               CorpusBuild.hasState(b.sparkSession, stateDir)) {
-            val overlap =
-              CorpusBuild.stateWinnowOverlap(b.sparkSession, stateDir, b)
-            if (onBatchOverlap != null) onBatchOverlap(overlap)
-            if (onCrossSplit != null)
-              onCrossSplit(CorpusBuild.crossSplitOnly(overlap))
+            if (onBatchOverlap != null) onBatchOverlap(
+              CorpusBuild.stateWinnowOverlap(b.sparkSession, stateDir, b))
+            if (onCrossSplit != null) onCrossSplit(
+              CorpusBuild.stateSplitLeakage(b.sparkSession, stateDir, b))
           }
           if (onQuality != null && cfg.trackClassifier &&
               CorpusBuild.hasState(b.sparkSession, stateDir)) {

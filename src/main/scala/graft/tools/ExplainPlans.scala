@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Plan-inspection main: prints the formatted physical plan of selected
   * queries so pushdown/broadcast/shuffle decisions can be reviewed.
@@ -10,14 +8,7 @@ import graft.SparkEntry
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.create()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_PLAN_ONLY=1: build plans without executing eager
     // materializations (the PlanSpec escape hatch) — shows the full

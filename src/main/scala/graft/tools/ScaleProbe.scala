@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The 10× scale probe (r16): a MEASURED, not asserted, linearity
@@ -23,16 +22,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create()
     val base = "/root/testdata/sf0.1"
     val work = "/tmp/scaleprobe"
 
@@ -44,6 +34,13 @@ object ScaleProbe {
 
     val docs = spark.read.parquet(s"$base/documents.parquet")
     val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
+
+    // round-17 additions (VERDICT #5): the r16 sortedOut/materialize
+    // choices (q18/q56/q143) and this round's rewrites (q102/q122/q166)
+    // re-measured at 10x so a choice that inverts with scale is caught
+    val extraQueries = Seq("q18_ngram_jaccard", "q56_dedup_groups",
+      "q143_winnow_overlap", "q102_dup_span_removal",
+      "q122_ngram_novelty", "q166_state_split_leakage")
 
     val results = scales.map { k =>
       val dir = s"$work/x$k"
@@ -96,18 +93,12 @@ object ScaleProbe {
       val t106 = q("q106_incremental_dup_spans")
       println(f"SCALE x$k: docs=$nDocs state_build=$tBuild%.1f " +
         f"q96=$t96%.1f q103=$t103%.1f q106=$t106%.1f")
-      // round-17 additions (VERDICT #5): the r16 sortedOut/materialize
-      // choices (q18/q56/q143) and this round's rewrites (q102/q122/q166)
-      // re-measured at 10x so a choice that inverts with scale is caught
-      val extra = Seq("q18_ngram_jaccard", "q56_dedup_groups",
-        "q143_winnow_overlap", "q102_dup_span_removal",
-        "q122_ngram_novelty", "q166_state_split_leakage")
-        .map(n => n -> q(n))
+      val extra = extraQueries.map(n => n -> q(n))
       extra.foreach { case (n, t) => println(f"SCALE x$k: $n=$t%.1f") }
       (k, nDocs, tBuild, t96, t103, t106, extra)
     }
     println("\nscale,docs,state_build_s,q96_s,q103_s,q106_s," +
-      results.head._7.map(_._1).mkString(","))
+      extraQueries.mkString(","))
     results.foreach { case (k, n, b, a, c, d2, ex) =>
       println(f"$k,$n,$b%.1f,$a%.1f,$c%.1f,$d2%.1f," +
         ex.map(e => f"${e._2}%.1f").mkString(","))

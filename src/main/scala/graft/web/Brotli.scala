@@ -643,27 +643,13 @@ object Brotli {
       nMetadata: Long, nLiterals: Long, nCopyBytes: Long, nDictRefs: Long,
       nDictBytes: Long, outBytes: Long, sumOut: Long, streamBytes: Long)
 
-  private final class Out(hint: Int) {
-    var buf = new Array[Byte](math.max(hint, 64))
-    var len = 0
-    def ensure(extra: Int): Unit = {
-      if (len + extra > buf.length) {
-        var cap = buf.length
-        while (cap < len + extra) cap <<= 1
-        buf = java.util.Arrays.copyOf(buf, cap)
-      }
-    }
-    def add(b: Byte): Unit = { buf(len) = b; len += 1 }
-    def result: Array[Byte] = java.util.Arrays.copyOf(buf, len)
-  }
-
   def decode(in: Array[Byte]): Array[Byte] = decodeWithStats(in)._1
 
   def decodeWithStats(in: Array[Byte]): (Array[Byte], Stats) = {
     val r = new Reader(in)
     val wbits = readWindowBits(r)
     val maxBackward = (1L << wbits) - 16L
-    val out = new Out(in.length * 3)
+    val out = new OutBuffer("brotli", in.length * 3)
     val ring = Array(16, 15, 11, 4)
     var ringIdx = 0
     var nMeta = 0L
@@ -774,7 +760,7 @@ object Brotli {
   /** Decode one compressed metablock body; returns (literals, copy
     * bytes, dict refs, dict bytes emitted).
     */
-  private def decodeCompressedMetablock(r: Reader, out: Out, mlen0: Int,
+  private def decodeCompressedMetablock(r: Reader, out: OutBuffer, mlen0: Int,
       maxBackward: Long, ring: Array[Int], getRingIdx: () => Int,
       setRingIdx: Int => Unit): (Long, Long, Long, Long) = {
     val litBlocks = new BlockState(r, readVarCount(r))
@@ -886,14 +872,7 @@ object Brotli {
           require(copyLen.toLong <= mlen,
             s"brotli: copy of $copyLen past metablock length ($mlen left)")
           val emit = copyLen
-          out.ensure(emit)
-          var c = 0
-          var src = out.len - distance.toInt
-          while (c < emit) {
-            out.add(out.buf(src))
-            src += 1
-            c += 1
-          }
+          out.copyBack(distance.toInt, emit)
           nCopy += emit
           mlen -= emit
           if (!implicitD0 && dsym != 0) {

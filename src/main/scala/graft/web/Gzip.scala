@@ -219,15 +219,7 @@ object Deflate {
     */
   def inflate(bytes: Array[Byte], start: Int, end: Int): Inflated = {
     val br = new BitReader(bytes, start, end)
-    var out = new Array[Byte](math.max(64, (end - start) * 3))
-    var outLen = 0
-    def ensure(n: Int): Unit = {
-      if (outLen + n > out.length) {
-        var cap = out.length
-        while (cap < outLen + n) cap <<= 1
-        out = java.util.Arrays.copyOf(out, cap)
-      }
-    }
+    val out = new OutBuffer("deflate", (end - start) * 3)
     var bfinal = 0
     var firstBtype = -1
     do {
@@ -242,9 +234,9 @@ object Deflate {
           val nlen = br.readByte() | (br.readByte() << 8)
           require((len ^ 0xFFFF) == nlen,
             s"deflate: stored-block NLEN $nlen is not the complement of LEN $len")
-          ensure(len)
+          out.ensure(len)
           var i = 0
-          while (i < len) { out(outLen) = { val b = br.readByte(); b.toByte }; outLen += 1; i += 1 }
+          while (i < len) { out.add(br.readByte().toByte); i += 1 }
         case 1 | 2 =>
           val (lit, dist) =
             if (btype == 1) (FixedLit, FixedDist)
@@ -283,9 +275,8 @@ object Deflate {
           var sym = lit.decode(br)
           while (sym != 256) {
             if (sym < 256) {
-              ensure(1)
-              out(outLen) = sym.toByte
-              outLen += 1
+              out.ensure(1)
+              out.add(sym.toByte)
             } else {
               require(sym <= 285, s"deflate: invalid length symbol $sym")
               val li = sym - 257
@@ -293,15 +284,9 @@ object Deflate {
               val dsym = dist.decode(br)
               require(dsym <= 29, s"deflate: invalid distance symbol $dsym")
               val d = DistBase(dsym) + br.bits(DistExtra(dsym))
-              require(d <= outLen,
-                s"deflate: back-reference distance $d beyond ${outLen} produced bytes")
-              ensure(len)
-              var i = 0
-              while (i < len) { // overlapped copy is the spec's RLE idiom
-                out(outLen) = out(outLen - d)
-                outLen += 1
-                i += 1
-              }
+              require(d <= out.len,
+                s"deflate: back-reference distance $d beyond ${out.len} produced bytes")
+              out.copyBack(d, len)
             }
             sym = lit.decode(br)
           }
@@ -309,8 +294,7 @@ object Deflate {
           throw new IllegalArgumentException("deflate: reserved BTYPE 11")
       }
     } while (bfinal == 0)
-    Inflated(java.util.Arrays.copyOf(out, outLen), br.consumedUpTo,
-      firstBtype)
+    Inflated(out.result, br.consumedUpTo, firstBtype)
   }
 
   /** Adler-32 (RFC 1950 §8) — the zlib stream checksum. */

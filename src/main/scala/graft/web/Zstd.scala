@@ -414,7 +414,7 @@ object Zstd {
         // BOTH the on-wire and regenerated size of every block — the
         // reference decoder rejects violators with srcSize_wrong
         val blockMax = math.min(windowSize, 1L << 17)
-        val content = new ZstdEntropy.OutBuf
+        val content = new OutBuffer("zstd", 1024)
         val ctx = new ZstdEntropy.FrameCtx
         var nBlocks = 0; var nRaw = 0; var nRle = 0; var nCompressed = 0
         var last = false
@@ -457,7 +457,7 @@ object Zstd {
               throw new IllegalArgumentException("zstd: reserved block type 3")
           }
         }
-        val data = content.toArray
+        val data = content.result
         if (declared >= 0)
           require(data.length.toLong == declared,
             s"zstd: content ${data.length} != declared FCS $declared")

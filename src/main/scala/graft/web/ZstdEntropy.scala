@@ -501,44 +501,13 @@ private[graft] object ZstdEntropy {
     var rep3: Long = 8L
   }
 
-  /** Growable output buffer exposing its backing array so match
-    * copies can reference the whole frame window decoded so far.
-    */
-  final class OutBuf {
-    var arr: Array[Byte] = new Array[Byte](1024)
-    var len: Int = 0
-    private def ensure(n: Int): Unit = {
-      if (len + n > arr.length) {
-        var cap = arr.length
-        while (cap < len + n) cap <<= 1
-        arr = java.util.Arrays.copyOf(arr, cap)
-      }
-    }
-    def write(bytes: Array[Byte], off: Int, n: Int): Unit = {
-      ensure(n); System.arraycopy(bytes, off, arr, len, n); len += n
-    }
-    def fill(b: Byte, n: Int): Unit = {
-      ensure(n); java.util.Arrays.fill(arr, len, len + n, b); len += n
-    }
-    /** Overlap-safe LZ77 match copy from `offset` back. */
-    def matchCopy(offset: Long, n: Int): Unit = {
-      require(offset >= 1 && offset <= len,
-        s"zstd: match offset $offset beyond $len-byte window")
-      ensure(n)
-      val d = offset.toInt
-      var i = 0
-      while (i < n) { arr(len) = arr(len - d); len += 1; i += 1 }
-    }
-    def toArray: Array[Byte] = java.util.Arrays.copyOf(arr, len)
-  }
-
   /** Decode one compressed block (§3.1.1.3): literals section, then
     * the sequences section (count, table modes, the backward
     * interleaved-state bitstream), then sequence execution into
     * `out`. Mutates `ctx` (tables, repeat offsets).
     */
   def decodeCompressedBlock(bytes: Array[Byte], start: Int, size: Int,
-      ctx: FrameCtx, out: OutBuf): Unit = {
+      ctx: FrameCtx, out: OutBuffer): Unit = {
     val blockEnd = start + size
     require(blockEnd <= bytes.length, "zstd: compressed block over-runs")
     val blockStartLen = out.len
@@ -645,7 +614,9 @@ private[graft] object ZstdEntropy {
               ctx.rep3 = ctx.rep2; ctx.rep2 = ctx.rep1; ctx.rep1 = o; o
           }
         }
-      out.matchCopy(offset, ml)
+      require(offset >= 1 && offset <= out.len,
+        s"zstd: match offset $offset beyond ${out.len}-byte window")
+      out.copyBack(offset.toInt, ml)
       require(out.len - blockStartLen <= MaxBlockContent,
         "zstd: block regenerates more than the 128 KB cap")
       i += 1

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -16,20 +15,12 @@ import graft.ops.Bpe
   * while merges keep landing. Raw ScalaCheck generators with fixed seeds
   * (scalatest bridge not in the offline cache).
   */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with SharedSpark {
 
   private def forAll[A](gen: Gen[A], n: Int = 6)(body: A => Unit): Unit =
     (0 until n).foreach { i =>
       gen(Gen.Parameters.default, Seed(4242L + i)).foreach(body)
     }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("BpeSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Small-alphabet word dicts: repetitious enough that merges cascade
     * (merged symbols win later rounds — the multi-char-symbol paths).

@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,21 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucketed by the join key makes the join a zero-shuffle zip of
   * co-located buckets — this spec proves the Exchange disappears.
   */
-class BucketingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("BucketingSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_bucket_wh").toString)
-    // force the shuffle-vs-bucket comparison to use sort-merge paths
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketingSpec extends AnyFunSuite with SharedSpark {
 
   test("bucketed co-located join plans with no shuffle Exchange") {
+    // force the shuffle-vs-bucket comparison to use sort-merge paths
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(bucketedJoin())
+  }
+
+  private def bucketedJoin(): Unit = {
     val sf = "/root/testdata/sf0.001"
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
     val o = spark.read.parquet(s"$sf/orders.parquet")

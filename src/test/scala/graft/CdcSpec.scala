@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +13,7 @@ import graft.queries.ExtensionQueries
   * and change every chunk after the edit. Plus structural invariants:
   * chunk lengths tile the document exactly, short/empty inputs behave.
   */
-class CdcSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("CdcSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CdcSpec extends AnyFunSuite with SharedSpark {
 
   /** (length, key) chunk sequence of a string through the shared kernel. */
   private def chunksOf(texts: String*): Seq[Seq[(Long, Long)]] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.ops.NaiveBayes
   * prior — against numbers derived on paper), plus planted-signal
   * recovery on the real corpus.
   */
-class ClassifierSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ClassifierSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClassifierSpec extends AnyFunSuite with SharedSpark {
 
   test("hand-computed model: Laplace ratios, unseen-token default, and " +
       "prior fold to the exact paper values") {

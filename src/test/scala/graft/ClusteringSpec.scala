@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import graft.ops.Clustering
   * output and fire on a poisoned centroid set, and empty clusters must
   * survive a round (keep their previous centroid, not NaN out).
   */
-class ClusteringSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ClusteringSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ClusteringSpec extends AnyFunSuite with SharedSpark {
 
   /** 3 planted centers in R^8, 40 points each, noise far below the
     * center separation — a clustering that misses these is wrong, not

@@ -9,7 +9,7 @@ import graft.multimodal.Codecs
   * encoder — a matched encode/decode bug cancels in a round-trip), plus
   * round-trip identities and loud-failure cases for malformed input.
   */
-class CodecSpec extends AnyFunSuite {
+class CodecSpec extends AnyFunSuite with SharedSpark {
 
   // ------------------------------------------------------------- PPM
 
@@ -321,13 +321,6 @@ class CodecSpec extends AnyFunSuite {
   }
 
   // ------------------------------------------------- Spark pipelines
-
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .appName("CodecSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q151/q152 pipelines: synthesized binaries decode to statistics " +
       "predictable from the source text (incl. empty and non-ASCII)") {

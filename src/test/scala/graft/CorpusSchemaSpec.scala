@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,17 +15,9 @@ import graft.queries.Tables
   * scan-behavior change that alters what queries actually see turns the
   * suite red here first.
   */
-class CorpusSchemaSpec extends AnyFunSuite {
+class CorpusSchemaSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("CorpusSchemaSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def fields(name: String,
       df: org.apache.spark.sql.DataFrame): Seq[(String, DataType)] =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,17 +11,9 @@ import graft.queries.CurationQueries
   * exists for), and the q160/q163 rollups must satisfy their structural
   * invariants on the real corpus.
   */
-class CurationExtrasSpec extends AnyFunSuite {
+class CurationExtrasSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("CurationExtrasSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("cross-modal clusters: planted modality-specific near-dups merge " +
       "through the shared doc id — an image-only edge and an audio-only " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import graft.queries.CurationQueries
 /** The must-be-empty gates are only meaningful if they can demonstrably
   * fire: poison each violation class and assert the gate surfaces it.
   */
-class CurationGateSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("CurationGateSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CurationGateSpec extends AnyFunSuite with SharedSpark {
 
   private def vecs = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,18 +13,9 @@ import graft.streaming.DocStream
   * across stream RESTARTS (checkpoint picks up only new files) and
   * redeliveries (replay-idempotent skip).
   */
-class DocStreamSpec extends AnyFunSuite {
+class DocStreamSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("DocStreamSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("streamed ingest across restarts == one full batch build; " +
       "restart with no new files is a no-op; replayed batch skips") {

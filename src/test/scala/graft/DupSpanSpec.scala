@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * within-doc repetition (a window occurring twice in ONE doc is a
   * corpus-level duplicate too).
   */
-class DupSpanSpec extends AnyFunSuite {
+class DupSpanSpec extends AnyFunSuite with SharedSpark {
 
   private val K = 5
 
@@ -20,14 +19,6 @@ class DupSpanSpec extends AnyFunSuite {
     (0 until n).foreach { i =>
       gen(Gen.Parameters.default, Seed(4242L + i)).foreach(body)
     }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("DupSpanSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Tiny token alphabet so k-windows collide often; some docs are exact
     * copies of earlier ones, some are shorter than the window.
@@ -121,6 +112,21 @@ class DupSpanSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("q102: a null-text doc keeps no tokens and cleans to the empty " +
+      "string") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("dupspannull").toString
+    Seq((1L, Option("a b c d e f")), (2L, Option.empty[String]),
+        (3L, Option("a b c d e f g")))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val removed = graft.queries.MixQueries.q102_dup_span_removal(spark, dir)
+      .collect().map(r => r.getLong(0) -> (r.get(2), r.get(3))).toMap
+    assert(removed(2L) === ((0L, "")))
+    // the duplicated 5-window "a b c d e" (and "b c d e f") is excised
+    assert(removed(3L) === ((1L, "g")))
   }
 
   test("property: q106 incremental audit == q101 full recompute on " +

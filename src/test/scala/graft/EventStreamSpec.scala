@@ -1,28 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.Tables
 import graft.streaming.EventStream
 
-class EventStreamSpec extends AnyFunSuite {
+class EventStreamSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("EventStreamSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the async checksum writer can deadlock under rapid local state commits
-    .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  test("streaming windowed counts over the events lake match the batch aggregate") {
+  streamingTest("streaming windowed counts over the events lake match the batch aggregate") {
     val stream = EventStream.readEventStream(spark, s"$sf")
       .filter(col("event_id").isNotNull) // schema applied to the parquet dir
     val q = EventStream.windowedCounts(stream)
@@ -42,7 +30,7 @@ class EventStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming windowed distinct-user sketches are bit-identical to " +
+  streamingTest("streaming windowed distinct-user sketches are bit-identical to " +
       "the batch HLL aggregate") {
     val stream = EventStream.readEventStream(spark, s"$sf")
       .filter(col("event_id").isNotNull)
@@ -76,7 +64,7 @@ class EventStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming sessionize merges a session across micro-batches via GroupState") {
+  streamingTest("streaming sessionize merges a session across micro-batches via GroupState") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     def ev(id: Long, user: Long, minute: Long): EventStream.Event =
@@ -112,7 +100,7 @@ class EventStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("late-but-within-watermark event bridges fragments across micro-batches") {
+  streamingTest("late-but-within-watermark event bridges fragments across micro-batches") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     def ev(id: Long, user: Long, minute: Long): EventStream.Event =
@@ -152,7 +140,7 @@ class EventStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("native session_window streaming agrees with its batch form") {
+  streamingTest("native session_window streaming agrees with its batch form") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     def ev(id: Long, user: Long, minute: Long): EventStream.Event =

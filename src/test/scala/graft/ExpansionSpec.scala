@@ -11,20 +11,9 @@ import graft.queries.{ExpansionQueries, Tables}
   * can't check: range-join equivalence to the naive predicate join, sketch
   * error bounds against the exact tier, and hash-sampling determinism.
   */
-class ExpansionSpec extends AnyFunSuite {
+class ExpansionSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("ExpansionSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the async checksum writer can deadlock under rapid local state commits
-    .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("withinTime equals the naive inequality join (recall AND precision)") {
     val ev = Tables.events(spark, sf)
@@ -146,7 +135,7 @@ class ExpansionSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming dedup within watermark drops cross-batch duplicate ids") {
+  streamingTest("streaming dedup within watermark drops cross-batch duplicate ids") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val source = MemoryStream[(Long, java.sql.Timestamp)](spark)
@@ -222,7 +211,7 @@ class ExpansionSpec extends AnyFunSuite {
     }
   }
 
-  test("stream-stream interval join equals its batch form across micro-batches") {
+  streamingTest("stream-stream interval join equals its batch form across micro-batches") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     def ev(id: Long, user: Long, sec: Long) =
@@ -260,7 +249,7 @@ class ExpansionSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("foreachBatch + appendNewKeys = an idempotent streaming upsert sink") {
+  streamingTest("foreachBatch + appendNewKeys = an idempotent streaming upsert sink") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val sink = java.nio.file.Files

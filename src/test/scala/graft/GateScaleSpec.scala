@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** EVERY oracle-checked must-be-EMPTY gate (q67 SimHash precision, q88
@@ -15,18 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * proves the shipped parameters hold an order of magnitude above the
   * oracle corpus.
   */
-class GateScaleSpec extends AnyFunSuite {
+class GateScaleSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.1"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("GateScaleSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("q67: SimHash precision gate stays empty at sf0.1") {
     assert(graft.queries.ExtensionQueries.q67_sketch_precision(spark, sf).isEmpty,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,20 +12,12 @@ import graft.ops.Components
   * nodes, components merged BY the batch (two standing components joined
   * via a new node), isolated nodes, and batch-internal clusters.
   */
-class IncrementalCCSpec extends AnyFunSuite {
+class IncrementalCCSpec extends AnyFunSuite with SharedSpark {
 
   private def forAll[A](gen: Gen[A], n: Int = 8)(body: A => Unit): Unit =
     (0 until n).foreach { i =>
       gen(Gen.Parameters.default, Seed(909L + i)).foreach(body)
     }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("IncrementalCCSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** n nodes (ids 0..n-1), random sparse edges; nodes with id % 5 == 0
     * form the "new batch".

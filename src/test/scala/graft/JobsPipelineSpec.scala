@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Date
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.JobsPipeline
@@ -12,15 +11,7 @@ import graft.schema.Schemas.RawScrapedUrl
   * sightings → dedupe → parse → impute → backfill, with hand-computed
   * goldens for the salary-interval property (reference README.md:28).
   */
-class JobsPipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("JobsPipelineSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JobsPipelineSpec extends AnyFunSuite with SharedSpark {
 
   private def page(title: String, career: String): String =
     s"""<html><body>

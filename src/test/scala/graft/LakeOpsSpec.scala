@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,15 +11,7 @@ import graft.sources.Sources
   * never truncate the table), small-file compaction (fewer files, identical
   * rows), and schema-evolution reads (mergeSchema unions parquet footers).
   */
-class LakeOpsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("LakeOpsSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LakeOpsSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft_lake").toFile.getAbsolutePath

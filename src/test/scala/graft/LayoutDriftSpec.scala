@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,18 +11,9 @@ import graft.queries.{AnalyticsQueries, Tables}
   * monitor's zero/one calibration points, and the z-order layout's
   * both-dims-narrow span property (the reason to z-order at all).
   */
-class LayoutDriftSpec extends AnyFunSuite {
+class LayoutDriftSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("LayoutDriftSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // ---- containment ----
 

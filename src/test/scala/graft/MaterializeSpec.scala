@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The `spark.graft.checkpointMode` materialization tiers (ops.Materialize)
@@ -10,18 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the full shingle → prefix-filter → connected-components pipeline —
   * against the default localCheckpoint tier's result.
   */
-class MaterializeSpec extends AnyFunSuite {
+class MaterializeSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("MaterializeSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def q56InMode(mode: String): Seq[(Long, Long)] = {
     spark.conf.set("spark.graft.checkpointMode", mode)

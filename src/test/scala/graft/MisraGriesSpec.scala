@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{MisraGries, MisraGriesTopK}
 
-class MisraGriesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("MisraGriesSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MisraGriesSpec extends AnyFunSuite with SharedSpark {
 
   /** Zipf-ish skewed stream with a fixed seed: item i appears with weight
     * proportional to 1/(i+1).
@@ -70,10 +61,9 @@ class MisraGriesSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming: the summary's guarantee holds across micro-batches " +
+  streamingTest("streaming: the summary's guarantee holds across micro-batches " +
       "(state round-trips serialize/merge)") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     val k = 8
     val stream = skewedStream(6000, 100, seed = 19)
     val input = org.apache.spark.sql.execution.streaming.runtime

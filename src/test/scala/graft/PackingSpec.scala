@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -15,20 +14,12 @@ import graft.ops.{Packing, Splits}
   * generators with fixed seeds (the scalatest bridge is not in the
   * offline cache), so failures are reproducible.
   */
-class PackingSpec extends AnyFunSuite {
+class PackingSpec extends AnyFunSuite with SharedSpark {
 
   private def forAll[A](gen: Gen[A], n: Int = 8)(body: A => Unit): Unit =
     (0 until n).foreach { i =>
       gen(Gen.Parameters.default, Seed(1337L + i)).foreach(body)
     }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("PackingSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** (doc_id, source, n_toks) with id gaps, 0-token docs, and exact
     * seqLen multiples — every boundary the floor/mod arithmetic can hit.

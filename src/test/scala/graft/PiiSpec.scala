@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.queries.PiiQueries
   * and that redaction removes every match while leaving clean text
   * byte-identical.
   */
-class PiiSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("PiiSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PiiSpec extends AnyFunSuite with SharedSpark {
 
   test("hand-written PII strings are detected, typed, and redacted; " +
       "clean text passes through byte-identical") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{CompletenessQueries, CoreQueries, ExpansionQueries}
@@ -10,33 +9,13 @@ import graft.queries.{CompletenessQueries, CoreQueries, ExpansionQueries}
   * predicate pushdown reaching the scan, dimension broadcasts, hash (not
   * nested-loop) range joins, and the single-sort SCD2 window stack.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("PlanSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // AQE finalizes the plan only after execution
     df.queryExecution.executedPlan.toString
-  }
-
-  /** The suites share one SparkContext, and getOrCreate applies any later
-    * builder's runtime confs to the EXISTING session — BucketingSpec
-    * disables broadcasting to force sort-merge paths, which would leak
-    * into these assertions depending on suite order. Pin what we assert.
-    */
-  private def withBroadcastEnabled[A](body: => A): A = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
-    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("q35: the returnflag predicate is pushed to the parquet scan") {
@@ -58,14 +37,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q13: star-join dimensions broadcast; fact side is never broadcast") {
-    val plan = withBroadcastEnabled(executedPlan(CoreQueries.q13_star_join(spark, sf)))
+    val plan = executedPlan(CoreQueries.q13_star_join(spark, sf))
     assert(plan.contains("BroadcastHashJoin"), "dims must broadcast")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       "equi star joins must never degrade to nested loops")
   }
 
   test("q47: the range join plans as a HASH join on the bin, not a nested loop") {
-    val plan = withBroadcastEnabled(executedPlan(ExpansionQueries.q47_range_join(spark, sf)))
+    val plan = executedPlan(ExpansionQueries.q47_range_join(spark, sf))
     assert(plan.contains("HashJoin"), s"expected a hash join on the bin key")
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"),
@@ -100,8 +79,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q72: the vocab joins map-side (broadcast); corpus never shuffles by token") {
-    val plan = withBroadcastEnabled(executedPlan(
-      graft.queries.PrepQueries.q72_oov_stats(spark, sf)))
+    val plan = executedPlan(
+      graft.queries.PrepQueries.q72_oov_stats(spark, sf))
     assert(plan.contains("BroadcastHashJoin"),
       s"top-500 vocab must broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
@@ -188,7 +167,7 @@ class PlanSpec extends AnyFunSuite {
     // run their pipelines just to be plan-inspected (iterative CC queries
     // still execute by nature — a driver loop has no single lazy plan)
     spark.conf.set("spark.graft.eagerMaterialize", "false")
-    val offenders = try withBroadcastEnabled {
+    val offenders = try {
       graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, q) =>
         val plan = q(spark, sf).queryExecution.sparkPlan.toString
         val nested = plan.contains("BroadcastNestedLoopJoin") ||
@@ -204,21 +183,19 @@ class PlanSpec extends AnyFunSuite {
       "(no hash exchange — only the output sort's range partitioning), " +
       "and NB scoring reaches the model via BROADCAST hash join, never " +
       "shuffling corpus tokens against the vocabulary") {
-    withBroadcastEnabled {
-      val pii = graft.queries.PiiQueries.q172_pii_redact(spark, sf)
-        .queryExecution.sparkPlan.toString
-      assert(!pii.contains("hashpartitioning"),
-        s"q172 must ride the scan — detection/redaction shuffle nothing:\n$pii")
-      val nb = graft.queries.ClassifierQueries
-        .q174_nb_classifier(spark, sf).queryExecution.sparkPlan.toString
-      assert(nb.contains("BroadcastHashJoin"),
-        s"q174's model join must broadcast the vocabulary relation:\n$nb")
-      val url = graft.queries.UrlQueries.q175_url_normalize(spark, sf)
-        .queryExecution.sparkPlan.toString
-      assert(!url.contains("hashpartitioning"),
-        s"q175 must ride the scan — extraction/normalization shuffle " +
-          s"nothing:\n$url")
-    }
+    val pii = graft.queries.PiiQueries.q172_pii_redact(spark, sf)
+      .queryExecution.sparkPlan.toString
+    assert(!pii.contains("hashpartitioning"),
+      s"q172 must ride the scan — detection/redaction shuffle nothing:\n$pii")
+    val nb = graft.queries.ClassifierQueries
+      .q174_nb_classifier(spark, sf).queryExecution.sparkPlan.toString
+    assert(nb.contains("BroadcastHashJoin"),
+      s"q174's model join must broadcast the vocabulary relation:\n$nb")
+    val url = graft.queries.UrlQueries.q175_url_normalize(spark, sf)
+      .queryExecution.sparkPlan.toString
+    assert(!url.contains("hashpartitioning"),
+      s"q175 must ride the scan — extraction/normalization shuffle " +
+        s"nothing:\n$url")
   }
 
   test("q54: SCD2's two window passes share one exchange per window key") {
@@ -231,10 +208,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q87: the bloom probe filters fact rows BEFORE the closing join") {
-    // helper nests OUTSIDE executedPlan: planning happens at collect(),
-    // so the conf pin must still be in force there
-    val plan = withBroadcastEnabled(executedPlan(
-      graft.queries.CurationQueries.q87_bloom_semijoin(spark, sf)))
+    val plan = executedPlan(
+      graft.queries.CurationQueries.q87_bloom_semijoin(spark, sf))
     val probeAt = plan.indexOf("bloommightcontain")
     val joinAt = "(?i)join".r.findFirstMatchIn(plan).map(_.start).getOrElse(-1)
     assert(probeAt >= 0, s"bloom probe missing from plan:\n$plan")
@@ -247,8 +222,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("q94: the corpus token stream maps against a BROADCAST vocab " +
       "(no shuffle of the corpus by token)") {
-    val plan = withBroadcastEnabled(executedPlan(
-      graft.queries.CurationQueries.q94_tokenize(spark, sf)))
+    val plan = executedPlan(
+      graft.queries.CurationQueries.q94_tokenize(spark, sf))
     val finalPlan = plan.split("== Initial Plan ==")(0)
     assert(finalPlan.contains("BroadcastHashJoin"),
       s"vocab join must broadcast:\n$plan")

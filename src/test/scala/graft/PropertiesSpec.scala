@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Date
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -17,21 +16,13 @@ import graft.schema.Schemas.RawScrapedUrl
   * ScalaCheck generators with fixed seeds (the scalatest-scalacheck bridge
   * is not in the offline dependency cache), so failures are reproducible.
   */
-class PropertiesSpec extends AnyFunSuite {
+class PropertiesSpec extends AnyFunSuite with SharedSpark {
 
   /** Run `body` over `n` deterministic samples of `gen`. */
   private def forAll[A](gen: Gen[A], n: Int = 10)(body: A => Unit): Unit =
     (0 until n).foreach { i =>
       gen(Gen.Parameters.default, Seed(42L + i)).foreach(body)
     }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("PropertiesSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val genRow: Gen[RawScrapedUrl] = for {
     kw <- Gen.oneOf("data scientist", "data engineer", "analyst")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,20 +14,12 @@ import graft.queries.CurationQueries
   * skewed source, and singleton sources — so the scale path stays
   * swappable with zero parity risk.
   */
-class Q92ParitySpec extends AnyFunSuite {
+class Q92ParitySpec extends AnyFunSuite with SharedSpark {
 
   private def forAll[A](gen: Gen[A], n: Int = 6)(body: A => Unit): Unit =
     (0 until n).foreach { i =>
       gen(Gen.Parameters.default, Seed(777L + i)).foreach(body)
     }
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("Q92ParitySpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   /** Corpora with per-source sizes straddling the k=30 quota: some below,
     * one exactly at it, one heavily dominant (the skew case q98 exists for).

@@ -2,24 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schema.Schemas
 import graft.sources.{Catalog, Sources}
 
-class SourcesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("SourcesSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("CSV round-trip preserves schema and null/empty contract (S3/S4/S5)") {
     import spark.implicits._

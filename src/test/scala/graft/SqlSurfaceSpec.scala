@@ -11,16 +11,10 @@ import graft.ops.TextDedup
   * consistent with its Column-API twin; the plain-Scala evals cross-check
   * the Column formulations on the driver corpus.
   */
-class SqlSurfaceSpec extends AnyFunSuite {
+class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("SqlSurfaceSpec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  override protected lazy val spark: SparkSession = {
+    val s = SharedSpark.session
     GraftFunctions.registerAll(s)
     s
   }

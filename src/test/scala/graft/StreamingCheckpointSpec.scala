@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ledger (SURVEY §2.8 I1): a checkpointed file source processes each file
   * exactly once ACROSS RESTARTS — the checkpoint is the ledger.
   */
-class StreamingCheckpointSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("StreamingCheckpointSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingCheckpointSpec extends AnyFunSuite with SharedSpark {
 
   test("checkpointed file stream processes each file exactly once across restarts") {
     import spark.implicits._

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{TopKAggregate, TopKByScore}
 
-class TopKAggregateSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("TopKAggregateSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKAggregateSpec extends AnyFunSuite with SharedSpark {
 
   private def drain(b: TopKByScore.Buf): Seq[(Double, Long)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.UnigramLm
 
-class UnigramLmSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("UnigramLmSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UnigramLmSpec extends AnyFunSuite with SharedSpark {
 
   test("log2Fix: exact on powers of two, strictly monotone on the " +
       "doubling ladder, order-preserving on representative values, " +

@@ -13,7 +13,7 @@ import graft.web.{Deflate, Gzip, Warc}
   * and the loud-failure contract on every corruption class the
   * quarantine tier relies on.
   */
-class WebArchiveSpec extends AnyFunSuite {
+class WebArchiveSpec extends AnyFunSuite with SharedSpark {
 
   private def ascii(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
@@ -899,13 +899,6 @@ class WebArchiveSpec extends AnyFunSuite {
   }
 
   // ----------------------------------------- front door → state build
-
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .appName("WebArchiveSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("warcToDocs: the documents relation recovered from archive " +
       "bytes alone equals the source projection, and feeds " +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,15 +12,7 @@ import graft.queries.ExtensionQueries
   * checked on constructed docs rather than the corpus so the overlap is
   * known by design.
   */
-class WinnowSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("WinnowSpec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class WinnowSpec extends AnyFunSuite with SharedSpark {
 
   // mirrors q140's selection (k=8, w=4) but keeps the full fingerprint
   // SET per doc so overlap is observable; q140's query itself only
