@@ -2,8 +2,11 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and reports per-query seconds.
@@ -23,10 +26,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   *   3. SPARK_GRAFT_BENCH_OUT (default BENCH_LOCAL.json): the full line's
   *      fields at full precision, plus a `layers` object that gives, per
   *      query, the Spark work of its recorded (fastest) attempt — `jobs`
-  *      started, `stages` completed, `tasks` ended and `task_s`, the
-  *      summed executor run time of those tasks. Wall time against
-  *      task_s and jobs separates the fixed per-job driver floor from
-  *      executor compute.
+  *      started, `stages` completed, `tasks` ended, `task_s` (the summed
+  *      executor run time of those tasks), `shuffle_write_bytes` (what
+  *      those tasks wrote to shuffle files) and `plan_s` (the analysis,
+  *      optimization and planning phases of every SQL execution the
+  *      attempt ran, from each `QueryExecution.tracker`). Wall time
+  *      against task_s, plan_s and jobs separates the fixed per-job
+  *      driver floor and the planner from executor compute.
   * Readers parse both stdout lines by key, so their keys never change.
   *
   * Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) and the
@@ -39,6 +45,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * SPARK_GRAFT_BENCH_ONLY=<regex> restricts the timed queries to the
   * matching names (warm-up and state build still run), which makes a
   * one-query run with its layer record a quick local probe.
+  *
+  * A query's result is an unordered relation unless
+  * `SparkEntry.orderedResults` lists it, so the timed work is the query
+  * itself, with no presentation sort.
   */
 object Bench {
 
@@ -46,16 +56,26 @@ object Bench {
     * job group, so the counts of one attempt can be read back by name.
     * Listener events arrive asynchronously; read them after
     * `spark.stop()`, which drains the listener bus.
+    *
+    * Planning time reaches a [[QueryExecutionListener]], which is not
+    * told the job group. Both listener kinds are served in event order
+    * by the one shared listener queue, and an execution's start event is
+    * delivered before its end event runs `onSuccess`, so the group of
+    * the latest execution start is the group of the execution ending.
     */
-  private final class Layers extends SparkListener {
+  private final class Layers extends SparkListener
+      with QueryExecutionListener {
     final class Counts {
       var jobs = 0
       var stages = 0
       var tasks = 0
       var taskMs = 0L
+      var shuffleWriteBytes = 0L
+      var planMs = 0L
     }
     private val byGroup = mutable.HashMap.empty[String, Counts]
     private val stageGroup = mutable.HashMap.empty[Int, String]
+    private var execGroup: Option[String] = None
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       Option(e.properties)
@@ -73,9 +93,26 @@ object Bench {
       stageGroup.get(e.stageId).foreach { g =>
         val c = byGroup(g)
         c.tasks += 1
-        if (e.taskMetrics != null) c.taskMs += e.taskMetrics.executorRunTime
+        if (e.taskMetrics != null) {
+          c.taskMs += e.taskMetrics.executorRunTime
+          c.shuffleWriteBytes += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+        }
       }
     }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized { execGroup = s.jobGroupId }
+      case _ => ()
+    }
+    override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+      synchronized {
+        execGroup.foreach { g =>
+          byGroup.getOrElseUpdate(g, new Counts).planMs +=
+            qe.tracker.phases.values.map(_.durationMs).sum
+        }
+      }
+    override def onFailure(f: String, qe: QueryExecution,
+        e: Exception): Unit = ()
     def apply(group: String): Option[Counts] = synchronized(byGroup.get(group))
   }
 
@@ -85,6 +122,7 @@ object Bench {
     val spark = Sessions.create()
     val layers = new Layers
     spark.sparkContext.addSparkListener(layers)
+    spark.listenerManager.register(layers)
 
     // `group` names the attempt's job group (see Layers); null runs the
     // attempt untracked
@@ -196,7 +234,9 @@ object Bench {
     val layerEntries = layerOf
       .map { case (k, c) =>
         s"""    "$k": {"jobs": ${c.jobs}, "stages": ${c.stages}, """ +
-          s""""tasks": ${c.tasks}, "task_s": ${c.taskMs / 1000.0}}""" }
+          s""""tasks": ${c.tasks}, "task_s": ${c.taskMs / 1000.0}, """ +
+          s""""shuffle_write_bytes": ${c.shuffleWriteBytes}, """ +
+          s""""plan_s": ${c.planMs / 1000.0}}""" }
       .mkString(",\n")
     val full =
       s"""{

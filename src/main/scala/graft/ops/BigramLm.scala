@@ -122,6 +122,5 @@ object BigramLm {
       .select(col("doc_id"), col("n_pairs"), col("pplx_sum"),
         TextAnalysis.intDiv(col("pplx_sum") * 1000000L, col("n_pairs"))
           .as("avg_q6"))
-      .orderBy("doc_id")
   }
 }

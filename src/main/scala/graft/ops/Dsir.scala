@@ -123,6 +123,5 @@ object Dsir {
             col("n_bigrams"))).otherwise(0L).as("avg_shift_q6"),
         when((col("n_bigrams") > 0L) && (col("dsir_sum") >= 0L), 1L)
           .otherwise(0L).as("selected"))
-      .orderBy("doc_id")
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization tier for iterative loops (connected components) and
@@ -25,6 +25,11 @@ import org.apache.spark.storage.StorageLevel
   * mode materializes EAGERLY — a lazy persist would re-execute the
   * not-yet-cached plan once per downstream action and could interleave
   * with the next round's mutation of `labels`.
+  *
+  * Materializing is for relations read more than once. A query result
+  * read once by its sink is never materialized here: results are
+  * unordered (see `SparkEntry.orderedResults`), so there is no output
+  * sort whose sampling pass a checkpoint would have to pay for.
   */
 object Materialize {
 
@@ -76,43 +81,6 @@ object Materialize {
     if (df.sparkSession.conf.get("spark.graft.eagerMaterialize", "true").toBoolean)
       apply(df)
     else df
-
-  /** Output sort for RESULT-sized relations: `df.orderBy(cols)` alone
-    * range-partitions the child, and the range exchange runs a SAMPLING
-    * job over the child to pick bounds — re-executing the entire final
-    * stage once more (measured round 16: q18's pair relation 2.37 s with
-    * a bare orderBy vs 1.65 s materialized first — the sampling pass
-    * re-ran the window + candidate + verify stage). Materializing first
-    * makes both the sampling job and the sort shuffle read
-    * checkpoint-local blocks, so the expensive subtree executes exactly
-    * once. Use where the result is small relative to the work that
-    * produced it (pair lists, card rows, gate readouts) — NOT for
-    * corpus-sized outputs, where the extra block write outweighs the
-    * re-executed (cheap, scan-shaped) final stage.
-    *
-    * `checkpointMode=reliable` note: reliable checkpoints write DFS files
-    * that Spark deletes only when `spark.cleaner.referenceTracking
-    * .cleanCheckpoints=true` (releaseAll unpersists RDD blocks, not
-    * checkpoint FILES) — a long cluster session running many sorted
-    * queries should either enable that cleaner flag or point
-    * `spark.graft.checkpointDir` at a TTL'd scratch path. Result-sized
-    * relations don't need executor-loss tolerance for a final sort, so
-    * `persist` mode is the better cluster tier for this call site.
-    */
-  def ordered(df: DataFrame, cols: Column*): DataFrame =
-    maybe(df).orderBy(cols: _*)
-
-  /** `.sortedOut(...)` = [[ordered]] as method syntax, so a query's final
-    * `.orderBy(...)` converts with a one-token edit. Skip it where the
-    * relation is ALREADY materialized (memo serves, publish outputs) —
-    * there the sampling pass reads cheap blocks and a second checkpoint
-    * of the same rows is pure cost.
-    */
-  implicit class OrderedSyntax(private val df: DataFrame) extends AnyVal {
-    def sortedOut(cols: Column*): DataFrame = ordered(df, cols: _*)
-    def sortedOut(c0: String, cs: String*): DataFrame =
-      ordered(df, (c0 +: cs).map(org.apache.spark.sql.functions.col): _*)
-  }
 
   // Cross-query shared artifacts (the dedup-cluster memo) outlive the
   // per-query release cycle: pin() records the RDD ids backing a

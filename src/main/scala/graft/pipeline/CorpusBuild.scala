@@ -310,7 +310,6 @@ object CorpusBuild {
         countDistinct(col("seq_id")).as("n_seqs"),
         min(col("seq_id")).as("seq_lo"), max(col("seq_id")).as("seq_hi"),
         sum(col("n_toks")).as("n_tokens"))
-      .orderBy("shard")
   }
 
   // ---------------------------------------------------------------------
@@ -812,7 +811,6 @@ object CorpusBuild {
         .select(col("dim"), lit("TOTAL").as("bucket"),
           col("tot_ref").as("n_ref"), col("tot_cur").as("n_cur"),
           expr("(1000000 * t) DIV (2 * tot_ref * tot_cur)").as("drift_ppm")))
-      .orderBy("dim", "bucket")
   }
 
   // ---------------------------------------------------------------------
@@ -874,7 +872,6 @@ object CorpusBuild {
         col("label").as("actual"),
         when(col("predicted") === col("label"), 1L).otherwise(0L)
           .as("correct"))
-      .orderBy("doc_id")
   }
 
   /** The ingest DOOR's readout: every doc of an arriving batch scored
@@ -973,7 +970,6 @@ object CorpusBuild {
       .select(col("doc_id"), col("n_chunks"), col("n_eval_shared"),
         graft.functions.TextAnalysis.intDiv(col("n_eval_shared") * 1000000L,
           greatest(col("n_chunks"), lit(1L))).as("shared_ppm"))
-      .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------------

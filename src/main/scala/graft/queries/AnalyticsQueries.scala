@@ -39,7 +39,6 @@ object AnalyticsQueries {
         (exactSum(col("l_extendedprice")) / count(lit(1))).as("avg_price"),
         (exactSum(col("l_discount")) / count(lit(1))).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
 
   val q28Sql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -107,7 +106,6 @@ object AnalyticsQueries {
       .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
       .groupBy(col("n_name"))
       .agg(exactSum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
   }
 
   val q30Sql: String =
@@ -143,7 +141,6 @@ object AnalyticsQueries {
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
     scored.withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= 3)
-      .orderBy("doc_id", "rk")
   }
 
   val q31Sql: String =
@@ -180,7 +177,6 @@ object AnalyticsQueries {
       .groupBy("status", "tile")
       .agg(count(lit(1)).as("n"), min("price").as("lo"), max("price").as("hi"))
       .select(col("status"), col("tile"), col("n"), col("lo"), col("hi"))
-      .orderBy("status", "tile")
   }
 
   val q78SqlFull: String =
@@ -220,7 +216,6 @@ object AnalyticsQueries {
           .when(col("v_ts").isNotNull, 1)
           .otherwise(0).cast("int").as("stage"))
       .groupBy("stage").agg(count(lit(1)).as("n_users"))
-      .orderBy("stage")
   }
 
   val q79Sql: String =
@@ -263,7 +258,6 @@ object AnalyticsQueries {
         datediff(col("day"), col("cohort_day")).cast("int").as("day_offset"))
       .groupBy("cohort_day", "day_offset")
       .agg(count(lit(1)).as("n_users"))
-      .orderBy("cohort_day", "day_offset")
   }
 
   val q80Sql: String =
@@ -332,7 +326,6 @@ object AnalyticsQueries {
         .select(col("dim"), lit("TOTAL").as("bucket"),
           col("tot_ref").as("n_ref"), col("tot_cur").as("n_cur"),
           expr("(1000000 * t) DIV (2 * tot_ref * tot_cur)").as("drift_ppm")))
-      .orderBy("dim", "bucket")
   }
 
   val q126Sql: String =
@@ -411,7 +404,6 @@ object AnalyticsQueries {
       .agg(count(lit(1)).as("n"),
         min("o_totalprice").as("min_price"), max("o_totalprice").as("max_price"),
         min("days").as("min_day"), max("days").as("max_day"))
-      .orderBy("zbucket")
   }
 
   val q127Sql: String = {

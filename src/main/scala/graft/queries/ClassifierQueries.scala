@@ -55,7 +55,6 @@ object ClassifierQueries {
         col("label").as("actual"),
         when(col("predicted") === col("label"), 1L).otherwise(0L)
           .as("correct"))
-      .orderBy("doc_id")
   }
 
   val q174Sql: String =

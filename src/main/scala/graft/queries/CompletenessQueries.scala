@@ -27,7 +27,6 @@ object CompletenessQueries {
       .groupBy("l_partkey", "l_extendedprice")
       .agg(min("l_suppkey").as("supp"))
       .select(col("l_partkey"), col("supp"), col("l_extendedprice").as("price"))
-      .orderBy("l_partkey")
   }
 
   val q33Sql: String =
@@ -101,7 +100,6 @@ object CompletenessQueries {
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), exactSum(col("o_totalprice")).as("total"),
         grouping_id(col("o_orderstatus"), col("o_orderpriority")).cast("long").as("gid"))
-      .orderBy(col("gid"), col("o_orderstatus"), col("o_orderpriority"))
 
   val q36Sql: String =
     """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -121,7 +119,6 @@ object CompletenessQueries {
       .agg(count(lit(1)))
       .na.fill(0L)
       .withColumnsRenamed(Map("F" -> "n_f", "O" -> "n_o", "P" -> "n_p"))
-      .orderBy("o_orderpriority")
 
   val q37Sql: String =
     """SELECT o_orderpriority,
@@ -145,7 +142,6 @@ object CompletenessQueries {
           .when(col("has_order").isNotNull, "order_only")
           .otherwise(lit("line_only")).as("side"),
         coalesce(col("n_items"), lit(0L)).as("n_items"))
-      .orderBy("okey")
   }
 
   val q38Sql: String =
@@ -172,7 +168,6 @@ object CompletenessQueries {
     val views = ev.filter(col("event_type") === "view")
       .select("user_id", "event_id", "ts")
     graft.ops.AsOf.asofJoin(clicks, views, "user_id", "ts", "event_id", "event_id")
-      .orderBy("event_id")
   }
 
   val q39Sql: String =
@@ -200,7 +195,6 @@ object CompletenessQueries {
         expr("percentile(o_totalprice, 0.5)").as("med"),
         expr("percentile(o_totalprice, 0.9)").as("p90"),
         count(lit(1)).as("n"))
-      .orderBy("o_orderstatus")
 
   val q40Sql: String =
     """SELECT o_orderstatus,
@@ -222,7 +216,7 @@ object CompletenessQueries {
       .withColumn("membership", lit("both"))
     val only96 = buyers(1996).except(buyers(1999))
       .withColumn("membership", lit("only_1996"))
-    both.unionByName(only96).orderBy("membership", "custkey")
+    both.unionByName(only96)
   }
 
   val q41Sql: String =
@@ -252,7 +246,6 @@ object CompletenessQueries {
       .select(col("l_suppkey"), posexplode(col("top")))
       .select(col("l_suppkey"), (col("pos") + 1).cast("int").as("rk"),
         col("col.score").as("price"), col("col.id").as("line_id"))
-      .orderBy("l_suppkey", "rk")
 
   val q42Sql: String =
     """SELECT l_suppkey, rk, price, line_id FROM (
@@ -279,7 +272,6 @@ object CompletenessQueries {
         (sum(col("p")).over(byCust.rowsBetween(-2, 0)).cast("double") /
           count(lit(1)).over(byCust.rowsBetween(-2, 0))).as("trailing3_avg"))
       .select("o_custkey", "o_orderkey", "running_total", "trailing3_avg")
-      .orderBy("o_custkey", "o_orderkey")
   }
 
   val q43Sql: String =
@@ -313,7 +305,6 @@ object CompletenessQueries {
         size(col("lines")).as("n_lines"),
         element_at(col("lines"), 1).as("first_line"),
         array_contains(col("flags"), "R").as("has_return"))
-      .orderBy("l_orderkey")
 
   val q44Sql: String =
     """SELECT l_orderkey,

@@ -43,7 +43,6 @@ object CurationQueries {
         regexp_replace(
           regexp_replace(col("note"), EmailRe, "[EMAIL]"),
           PhoneRe, "[PHONE]").as("redacted"))
-      .orderBy("cust_id")
   }
 
   val q83Sql: String =
@@ -77,7 +76,6 @@ object CurationQueries {
       .select(col("doc_id"), graft.ops.Splits.bucket(col("doc_id")).as("bucket"))
       .select(col("doc_id"), col("bucket"),
         graft.ops.Splits.splitOfBucket(col("bucket")).as("split"))
-      .orderBy("doc_id")
 
   val q84Sql: String =
     """WITH b AS (
@@ -109,7 +107,6 @@ object CurationQueries {
       .withColumn("split_b", graft.ops.Splits.split(col("id_b")))
       .filter(col("split_a") =!= col("split_b"))
       .select("id_a", "id_b", "split_a", "split_b", "jaccard")
-      .orderBy("id_a", "id_b")
 
   val q159Sql: String =
     """WITH s AS (
@@ -166,7 +163,6 @@ object CurationQueries {
     graft.pipeline.CorpusBuild.stateSplitLeakage(s, dir, Tables.documents(s, d))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b", "n_shared", "split_a", "split_b")
-      .orderBy("id_a", "id_b")
   }
 
   val q166Sql: String =
@@ -242,7 +238,6 @@ object CurationQueries {
       .select(col("q_bucket"), col("n_docs"), col("n_tokens"),
         sum(col("n_docs")).over(cum).as("cum_docs"),
         sum(col("n_tokens")).over(cum).as("cum_tokens"))
-      .orderBy(col("q_bucket").desc)
   }
 
   val q160Sql: String = {
@@ -335,7 +330,6 @@ object CurationQueries {
         coalesce(col("m_image"), lit(0L)).as("image_neardup_docs"),
         coalesce(col("m_audio"), lit(0L)).as("audio_neardup_docs"),
         col("weight_ppm"))
-      .orderBy("source")
   }
 
   val q163Sql: String = {
@@ -453,7 +447,6 @@ object CurationQueries {
           .when(col("h_new").isNull, "removed")
           .when(col("h_old") =!= col("h_new"), "changed")
           .otherwise("unchanged").as("status"))
-      .orderBy("doc_id")
   }
 
   val q85Sql: String =
@@ -500,7 +493,6 @@ object CurationQueries {
       .groupBy("event_type", "n").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * 9 > col("n"))
       .select(col("event_type"), col("cnt"))
-      .orderBy(col("cnt").desc, col("event_type"))
   }
 
   val q86Sql: String =
@@ -523,7 +515,6 @@ object CurationQueries {
         Tables.lineitem(s, d), "l_partkey",
         Tables.part(s, d).filter(col("p_size") >= 46), "p_partkey")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
 
   val q87Sql: String =
     """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
@@ -601,7 +592,7 @@ object CurationQueries {
       .unionByName(SharedAnn.serve(s, d, "neardup")
         .select(lit("neardup").as("tier"), col("id_a").as("query_id"),
           col("id_b").as("neighbor_id"), col("cos")))
-    annGate(claimed, vecs).orderBy("tier", "query_id", "neighbor_id")
+    annGate(claimed, vecs)
   }
 
   val q88Sql: String =
@@ -637,7 +628,7 @@ object CurationQueries {
         greatest(abs(col("exact")) * 0.05, lit(1e-9)))
       .select(lit("p50_price_flag").as("check"), col("l_returnflag").as("key"),
         col("approx").cast("double").as("approx"), col("exact"))
-    hll.unionByName(pct).orderBy("check", "key")
+    hll.unionByName(pct)
   }
 
   val q89Sql: String =
@@ -781,7 +772,6 @@ object CurationQueries {
       .unionByName(nonempty("state_ann_curve_claims_nonempty",
         SharedAnn.serve(s, d, "state_ivf_curve")
           .filter(col("nprobe") === 1L)))
-      .orderBy("gate")
   }
 
   val q116Sql: String =
@@ -855,7 +845,6 @@ object CurationQueries {
       .select(col("s.stage").as("stage"), col("s.n_in").as("n_in"),
         col("s.n_out").as("n_out"),
         (col("s.n_in") - col("s.n_out")).as("n_dropped"))
-      .orderBy("stage")
   }
 
   val q90Sql: String = {
@@ -920,7 +909,6 @@ object CurationQueries {
       .select(col("s.col_name").as("col_name"), col("s.n_null").as("n_null"),
         col("s.n_distinct").as("n_distinct"), col("s.min_v").as("min_v"),
         col("s.max_v").as("max_v"))
-      .orderBy("col_name")
   }
 
   val q91Sql: String = {
@@ -954,7 +942,6 @@ object CurationQueries {
       .withColumn("pick_rank", row_number().over(w).cast("long"))
       .filter(col("pick_rank") <= 30)
       .select("doc_id", "source", "pick_rank")
-      .orderBy("doc_id")
   }
 
   val q92Sql: String =
@@ -997,7 +984,6 @@ object CurationQueries {
       .select(col("source"), posexplode(col("top")).as(Seq("i", "e")))
       .select(col("e.id").as("doc_id"), col("source"),
         (col("i") + 1).cast("long").as("pick_rank"))
-      .orderBy("doc_id")
   }
 
   /** q93 — vocabulary coverage curve: cumulative share of total token
@@ -1027,7 +1013,6 @@ object CurationQueries {
       .select(col("rank"), col("token"), col("n"), col("cum_n"),
         (col("cum_n").cast("double") / col("total").cast("double"))
           .as("coverage"))
-      .orderBy("rank")
   }
 
   val q93Sql: String =
@@ -1077,7 +1062,6 @@ object CurationQueries {
         array_join(transform(
           sort_array(collect_list(struct(col("pos"), col("tid")))),
           x => x.getField("tid").cast("string")), ",").as("ids"))
-      .orderBy("doc_id")
   }
 
   val q94Sql: String =
@@ -1120,7 +1104,6 @@ object CurationQueries {
     val shardRows = s.conf.get("spark.graft.packShardRows", "1048576").toLong
     graft.ops.Packing
       .packSequences(counts, "doc_id", "source", "n_toks", 2048L, shardRows)
-      .orderBy("doc_id")
   }
 
   val q95Sql: String =
@@ -1155,7 +1138,6 @@ object CurationQueries {
       .withColumn("scope",
         when(col("id_a") % 20 === 0 && col("id_b") % 20 === 0, "batch")
           .otherwise("corpus"))
-      .orderBy("id_a", "id_b")
   }
 
   val q96Sql: String =
@@ -1190,7 +1172,6 @@ object CurationQueries {
         d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
       .groupBy("component").agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-      .orderBy("cluster_size")
   }
 
   val q97Sql: String =
@@ -1264,7 +1245,6 @@ object CurationQueries {
       .select(col("q_bucket"), col("n_docs"), col("n_tokens"),
         col("epochs"),
         (col("epochs") * col("n_tokens")).as("alloc_tokens"))
-      .orderBy(col("q_bucket").desc)
   }
 
   val q195Sql: String = {
@@ -1409,7 +1389,6 @@ object CurationQueries {
           col("r_pii") * 8L + col("r_dup") * 16L +
           col("r_cdc") * 32L).as("reason_mask"))
       .withColumn("keep", when(col("reason_mask") === 0L, 1L).otherwise(0L))
-      .orderBy("doc_id")
   }
 
   val q190Sql: String = {

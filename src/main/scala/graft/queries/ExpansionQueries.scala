@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Materialize.OrderedSyntax
 
 /** Round-2 surface expansion: grouping sets, window navigation functions,
   * range joins, histograms, vocabulary building, correlated EXISTS
@@ -26,8 +25,7 @@ object ExpansionQueries {
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total,
         |  CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid
         |FROM orders_gs
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY gid, o_orderstatus, o_orderpriority""".stripMargin)
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)
   }
 
   val q45Sql: String =
@@ -59,7 +57,6 @@ object ExpansionQueries {
       .withColumn("last_key", last("o_orderkey").over(wFull))
       .select("o_custkey", "o_orderkey", "prev_price", "next_price",
         "quartile", "pct_rank", "cume", "first_key", "last_key")
-      .orderBy("o_custkey", "o_orderkey")
   }
 
   val q46Sql: String =
@@ -93,7 +90,6 @@ object ExpansionQueries {
       .agg(count(lit(1)).as("n_views"),
         min(abs(col("p_us") - col("b_us"))).as("min_gap_us"),
         min(col("b_event_id")).as("min_view_id"))
-      .orderBy("click_id")
   }
 
   val q47Sql: String =
@@ -121,7 +117,6 @@ object ExpansionQueries {
       .withColumn("lo", (col("bin") * binWidth))
       .withColumn("hi", ((col("bin") + 1) * binWidth))
       .select("bin", "lo", "hi", "n", "cum_n")
-      .orderBy("bin")
   }
 
   val q48Sql: String =
@@ -147,7 +142,6 @@ object ExpansionQueries {
           .select(explode(split(trim(col("text")), "\\s+")).as("token")),
         500)
       .select("vocab_id", "token", "n")
-      .orderBy("vocab_id")
 
   val q49Sql: String =
     """WITH toks AS (
@@ -177,8 +171,7 @@ object ExpansionQueries {
         |                AND o.o_totalprice > 300000)
         |  AND NOT EXISTS (SELECT 1 FROM orders_ex o
         |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND year(o.o_orderdate) = 1999)
-        |ORDER BY c_custkey""".stripMargin)
+        |                    AND year(o.o_orderdate) = 1999)""".stripMargin)
   }
 
   val q50Sql: String =
@@ -244,7 +237,6 @@ object ExpansionQueries {
       .join(n, Seq("l_returnflag"))
       .select(col("l_returnflag"), col("approx_orders"), col("approx_med"),
         col("approx_p90"), col("n"), col("reg_sum"), col("v_zero"))
-      .sortedOut("l_returnflag")
   }
 
   val q51Sql: String = {
@@ -297,7 +289,6 @@ object ExpansionQueries {
         (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
           .cast("long") % 100).as("bucket"))
       .filter(col("bucket") < 10)
-      .orderBy("doc_id")
 
   val q52Sql: String =
     """SELECT doc_id,
@@ -319,7 +310,6 @@ object ExpansionQueries {
   val q53_embedding_neardup: Q = (s, d) =>
     SharedAnn.publish(s, d, "neardup")
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-      .orderBy("id_a", "id_b")
 
   val q53Sql: String =
     s"""WITH ${ExtensionQueries.LshCte}
@@ -338,7 +328,6 @@ object ExpansionQueries {
     graft.ops.Scd2.buildHistory(Tables.orders(s, d),
         keyCol = "o_custkey", tsCol = "o_orderdate", tieCol = "o_orderkey",
         trackedCols = Seq("o_orderstatus"))
-      .orderBy("o_custkey", "version")
 
   val q54Sql: String =
     """WITH w AS (
@@ -387,7 +376,6 @@ object ExpansionQueries {
           sqrt((col("s2") - col("n") * col("mean") * col("mean")) / (col("n") - 1)))
           .as("z"),
         ((col("price") - col("mn")) / (col("mx") - col("mn"))).as("mm"))
-      .orderBy("line_id", "price")
   }
 
   val q55Sql: String =
@@ -419,7 +407,6 @@ object ExpansionQueries {
     graft.ops.TextDedup.dedupClusterRelationPublish(Tables.documents(s, d),
         d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
       .select(col("id").as("doc_id"), col("component"))
-      .orderBy("doc_id")
   }
 
   val q56Sql: String =
@@ -461,7 +448,6 @@ object ExpansionQueries {
         explode(graft.multimodal.Multimodal.frameOffsets(col("nb"), 32, 2)).as("off"))
       .select(col("media_id"), col("off"),
         md5(col("text").substr(col("off").cast("int") + 1, lit(32))).as("frame_md5"))
-      .orderBy("media_id", "off")
 
   val q57Sql: String =
     """SELECT doc_id AS media_id, off,
@@ -488,7 +474,6 @@ object ExpansionQueries {
         merges = Seq(
           "n" -> sum("n"), "mn" -> min("mn"), "mx" -> max("mx")))
       .select(col("event_type"), col("n"), col("mn"), col("mx"))
-      .orderBy("event_type")
 
   val q58Sql: String =
     """SELECT event_type, count(*) AS n, min(value) AS mn, max(value) AS mx
@@ -520,7 +505,6 @@ object ExpansionQueries {
       .select(col("status"), col("day"),
         coalesce(col("n"), lit(0L)).as("n"),
         last(col("mx"), ignoreNulls = true).over(wFill).as("mx_filled"))
-      .orderBy("status", "day")
   }
 
   val q59Sql: String =
@@ -578,7 +562,6 @@ object ExpansionQueries {
       .join(days, Seq("month"))
       .select(col("month"), col("approx_customers"), col("n_days"),
         col("reg_sum"), col("v_zero"))
-      .orderBy("month")
   }
 
   val q60Sql: String = {
@@ -617,8 +600,7 @@ object ExpansionQueries {
         |    PARTITION BY o_custkey ORDER BY o_orderdate
         |    RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)
         |    AS BIGINT) AS trailing30_n
-        |FROM orders_rf
-        |ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin)
+        |FROM orders_rf""".stripMargin)
   }
 
   val q61Sql: String =
@@ -658,7 +640,6 @@ object ExpansionQueries {
       .select(col("l_orderkey"), col("l_linenumber"), col("o_custkey"),
         col("l_shipdate"), col("o_orderstatus").as("status_at_ship"),
         col("version"))
-      .orderBy("l_orderkey", "l_linenumber", "version")
   }
 
   val q66Sql: String =
@@ -696,7 +677,6 @@ object ExpansionQueries {
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), Tables.exactSum(col("o_totalprice")).as("total"),
         grouping_id(col("o_orderstatus"), col("o_orderpriority")).cast("long").as("gid"))
-      .orderBy(col("gid"), col("o_orderstatus"), col("o_orderpriority"))
 
   val q65Sql: String =
     """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
@@ -718,7 +698,6 @@ object ExpansionQueries {
         col("o_totalprice").as("price"))
     graft.ops.Robust.madOutliers(o, "status", "price")
       .select("o_orderkey", "status", "price", "med", "mad", "is_outlier")
-      .orderBy("o_orderkey")
   }
 
   val q62Sql: String =
@@ -758,7 +737,6 @@ object ExpansionQueries {
         size(filter(col("prices"), _ > 50000d)).as("n_big"),
         element_at(col("prices"), 1).as("cheapest"),
         element_at(col("prices"), -1).as("dearest"))
-      .orderBy("l_orderkey")
 
   val q63Sql: String =
     """SELECT l_orderkey,
@@ -790,7 +768,6 @@ object ExpansionQueries {
       .select(col("a.key").as("key_a"), col("b.key").as("key_b"),
         levenshtein(col("a.name"), col("b.name")).as("dist"))
       .filter(col("dist") <= 5)
-      .orderBy("key_a", "key_b")
   }
 
   val q64Sql: String =
@@ -831,7 +808,6 @@ object ExpansionQueries {
         lit(1d) - col("n_distinct").cast("double") /
           col("n_shingles").cast("double"))
       .select("doc_id", "n_shingles", "n_distinct", "top_rep", "rep_ratio")
-      .orderBy("doc_id")
   }
 
   val q68Sql: String =
@@ -881,7 +857,6 @@ object ExpansionQueries {
         col("n_hit").cast("double") / col("n_shingles").cast("double"))
       .withColumn("is_contaminated", col("contamination") >= 0.5)
       .select("doc_id", "n_shingles", "n_hit", "contamination", "is_contaminated")
-      .orderBy("doc_id")
   }
 
   val q69Sql: String =

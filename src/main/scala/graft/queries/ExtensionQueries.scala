@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Materialize.OrderedSyntax
 
 import graft.functions.TextAnalysis
 import graft.multimodal.Multimodal
@@ -130,7 +129,6 @@ object ExtensionQueries {
     */
   val q17_exact_dedup: Q = (s, d) =>
     TextDedup.exactDedup(Tables.documents(s, d), "doc_id", "text")
-      .orderBy("text_hash")
 
   val q17Sql: String =
     """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
@@ -144,7 +142,6 @@ object ExtensionQueries {
   val q18_ngram_jaccard: Q = (s, d) =>
     TextDedup.ngramJaccardPairs(Tables.documents(s, d),
         "doc_id", "text", "lang", n = 3, threshold = 0.5)
-      .sortedOut("id_a", "id_b")
 
   val q18Sql: String =
     """WITH s AS (
@@ -180,7 +177,6 @@ object ExtensionQueries {
   val q19_minhash_lsh: Q = (s, d) =>
     TextDedup.minhashLshPairs(Tables.documents(s, d),
         "doc_id", "text", n = 3, numHashes = 48, bands = 8, threshold = 0.5)
-      .sortedOut("id_a", "id_b")
 
   val q19Sql: String =
     ModalPairSql.textPairs + "\nORDER BY id_a, id_b"
@@ -197,7 +193,6 @@ object ExtensionQueries {
   val q20_simhash: Q = (s, d) =>
     TextDedup.simhashPairs(Tables.documents(s, d), "doc_id", "text",
         maxDist = 6, bands = 10, crossEngine = true)
-      .sortedOut("id_a", "id_b")
 
   val q20Sql: String = {
     // per-bit majority vote: 60 SUM(CASE) terms generated here so the
@@ -296,7 +291,6 @@ object ExtensionQueries {
           size(array_union(col("sh_a"), col("sh_b"))).cast("double") < 0.5)
       .select("id_a", "id_b", "tier")
     rechecked.unionByName(simMissing)
-      .sortedOut("tier", "id_a", "id_b")
   }
 
   val q67Sql: String =
@@ -313,7 +307,6 @@ object ExtensionQueries {
     Similarity.cosineTopK(emb, emb, "vec_id", "embedding", k = 1)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cos"), col("rank"))
-      .orderBy("query_id")
   }
 
   val q21Sql: String =
@@ -347,7 +340,6 @@ object ExtensionQueries {
       round(TextAnalysis.charLen(col("text")).cast("double") /
         greatest(TextAnalysis.tokenCount(col("text")), lit(1)).cast("double"), 6)
         .as("mean_token_len"))
-    .orderBy("doc_id")
 
   val q22Sql: String =
     """SELECT doc_id,
@@ -369,7 +361,6 @@ object ExtensionQueries {
       TextAnalysis.langId(col("text")).as("lang_id"),
       round(TextAnalysis.stopwordRatio(col("text"), "en"), 6).as("en_stop_ratio"),
       TextAnalysis.qualityScore(col("text")).as("quality"))
-    .orderBy("doc_id")
 
   private def duckStopRatio(langList: String): String =
     s"""CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
@@ -416,7 +407,6 @@ object ExtensionQueries {
       col("doc_id"),
       TextAnalysis.normalizeText(col("text")).as("norm_text"),
       TextAnalysis.fingerprintMd5(col("text")).as("fingerprint"))
-    .orderBy("doc_id")
 
   val q24Sql: String =
     """SELECT doc_id,
@@ -442,7 +432,7 @@ object ExtensionQueries {
     * would be faster but is not reproducible in the oracle engine), and
     * both HOF chains guard the empty case explicitly because Spark's
     * sequence(1, n) DESCENDS for n ≤ 0. Scale shape: a pure per-row
-    * projection — one corpus scan, no shuffle but the final sort; the
+    * projection — one corpus scan, no key shuffle; the
     * md5-per-position cost distributes with the rows.
     */
   /** The per-doc winnowing selection (doc_id, grams, sel) shared by q140's
@@ -509,7 +499,6 @@ object ExtensionQueries {
         size(col("sel")).cast("long").as("n_windows"),
         size(array_distinct(col("sel"))).cast("long").as("n_fingerprints"),
         array_min(col("sel")).as("min_fp"))
-      .orderBy("doc_id")
   }
 
   val q140Sql: String =
@@ -563,7 +552,6 @@ object ExtensionQueries {
     // per-row kernel in the winnow path
     winnowOverlapPairs(graft.ops.TextDedup.maybeMaterialize(
         winnowFpKeys(Tables.documents(s, d))))
-      .sortedOut("id_a", "id_b")
 
   val q143Sql: String =
     """WITH t AS (
@@ -615,7 +603,6 @@ object ExtensionQueries {
     val cut2 = b.getLong(0) + 2 * ((b.getLong(1) - b.getLong(0)) / 3)
     graft.pipeline.CorpusBuild.stateWinnowOverlap(s, dir,
         docs.filter(col("doc_id") > cut2))
-      .sortedOut("id_a", "id_b")
   }
 
   val q144Sql: String =
@@ -661,7 +648,7 @@ object ExtensionQueries {
     */
   val q25_multimodal_meta: Q = (s, d) => {
     val media = Multimodal.mediaFromText(s, Tables.documents(s, d), "doc_id", "text")
-    Multimodal.extractMeta(media).toDF().orderBy("media_id")
+    Multimodal.extractMeta(media).toDF()
   }
 
   val q25Sql: String =
@@ -685,7 +672,6 @@ object ExtensionQueries {
     SharedAnn.publish(s, d, "lsh")
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cos"), col("rank"))
-      .orderBy("query_id")
 
   /** The LSH bucket/candidate arithmetic, shared by q26 (top-1) and q53
     * (near-dup pairs): corpus-derived difference planes, 8 tables × 8
@@ -752,7 +738,6 @@ object ExtensionQueries {
     graft.streaming.EventStream.sessionizeSql(
         Tables.events(s, d).select("event_id", "user_id", "ts"), gapMinutes = 30)
       .withColumn("session_id", col("session_id").cast("long"))
-      .orderBy("user_id", "session_id")
 
   val q27Sql: String =
     """WITH g AS (
@@ -776,7 +761,7 @@ object ExtensionQueries {
     * driver check, planted-twin recall asserted in ScalaTest).
     */
   val q32_ivf_cosine: Q = (s, d) =>
-    SharedAnn.publish(s, d, "ivf").orderBy("query_id")
+    SharedAnn.publish(s, d, "ivf")
 
   /** q109 — IVF-PQ approximate top-1 (the memory-bound tier: byte codes +
     * ADC shortlist, exact re-rank — see Similarity.ivfPqTopK). Rows-only
@@ -785,7 +770,7 @@ object ExtensionQueries {
     * WHICH candidates reach the exact re-rank, never the emitted score).
     */
   val q109_ivfpq_cosine: Q = (s, d) =>
-    SharedAnn.publish(s, d, "ivfpq").orderBy("query_id")
+    SharedAnn.publish(s, d, "ivfpq")
 
   /** q112 — per-group embedding centroids, EXACT: component-wise mean of
     * the embedding vectors within each doc_id%4 slice (a stand-in for
@@ -815,7 +800,6 @@ object ExtensionQueries {
       .select(col("grp"), col("dim"),
         (col("s").cast("double") / col("n").cast("double") / lit(1e7))
           .as("mean"))
-      .orderBy("grp", "dim")
   }
 
   val q112Sql: String =
@@ -859,7 +843,6 @@ object ExtensionQueries {
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("cluster"))))
-      .orderBy("vec_id")
   }
 
   /** q124 — k-means assignment-consistency gate (the q88 rescoring
@@ -872,7 +855,6 @@ object ExtensionQueries {
     val (assigned, cents) = sharedKMeans(s, d)
     graft.ops.Clustering.assignmentGate(assigned, emb, "vec_id",
         "embedding", cents)
-      .orderBy("id")
   }
 
   val q124Sql: String =
@@ -890,7 +872,6 @@ object ExtensionQueries {
     graft.ops.Similarity.clusterNearDupPairsFromAssignments(
         Tables.embeddings(s, d), "vec_id", "embedding",
         threshold = 0.3, assigned = sharedKMeans(s, d)._1)
-      .orderBy("id_a", "id_b")
 
   /** q130 — the q88-discipline gate over q129: every emitted pair's
     * cosine recomputed through the independent HOF zip_with/aggregate
@@ -913,7 +894,6 @@ object ExtensionQueries {
       .filter(col("cos_ref") < 0.3 - 1e-6 ||
         abs(col("cos_ref") - col("cos")) > 1e-6)
       .select("id_a", "id_b", "cos", "cos_ref")
-      .orderBy("id_a", "id_b")
   }
 
   val q130Sql: String =
@@ -937,7 +917,6 @@ object ExtensionQueries {
       .withColumn("cluster_size",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("cluster"))))
-      .orderBy("vec_id")
   }
 
   /** q148 — the q124 argmin gate over the STORED model: every
@@ -949,7 +928,7 @@ object ExtensionQueries {
     */
   val q148_state_kmeans_gate: Q = (s, d) => {
     val dir = graft.queries.TokenizerQueries.ensurePostingState(s, d)
-    graft.pipeline.CorpusBuild.stateKmeansGate(s, dir).orderBy("id")
+    graft.pipeline.CorpusBuild.stateKmeansGate(s, dir)
   }
 
   val q148Sql: String = q124Sql
@@ -963,7 +942,6 @@ object ExtensionQueries {
   val q149_state_semdedup: Q = (s, d) => {
     val dir = graft.queries.TokenizerQueries.ensurePostingState(s, d)
     graft.pipeline.CorpusBuild.stateSemDeDup(s, dir, threshold = 0.3)
-      .orderBy("id_a", "id_b")
   }
 
   /** q150 — the q130 rescoring gate over q149: every state-served
@@ -987,7 +965,6 @@ object ExtensionQueries {
       .filter(col("cos_ref") < 0.3 - 1e-6 ||
         abs(col("cos_ref") - col("cos")) > 1e-6)
       .select("id_a", "id_b", "cos", "cos_ref")
-      .orderBy("id_a", "id_b")
   }
 
   val q150Sql: String = q130Sql
@@ -1005,7 +982,7 @@ object ExtensionQueries {
     // publish into the SharedAnn memo (the q26/q32/q109 billing
     // discipline): the tier's own query always rebuilds and pays its
     // pipeline; the q156 gate reads the published readout
-    SharedAnn.publish(s, d, "state_ivf").orderBy("query_id")
+    SharedAnn.publish(s, d, "state_ivf")
 
   /** q156 — the q88 rescoring gate over q155: every state-served
     * (query, neighbor, cos) re-scored with the independent HOF cosine
@@ -1023,7 +1000,6 @@ object ExtensionQueries {
     val vecs = graft.pipeline.CorpusBuild.stateVecs(s, dir)
       .select(col("id").as("vec_id"), col("v"))
     CurationQueries.annGate(claimed, vecs)
-      .orderBy("tier", "query_id", "neighbor_id")
   }
 
   val q156Sql: String = CurationQueries.q88Sql
@@ -1073,7 +1049,6 @@ object ExtensionQueries {
         coalesce(col("n_recalled"), lit(0L)).as("n_recalled"),
         expr("(1000000 * coalesce(n_recalled, 0)) DIV n_queries")
           .as("recall_ppm"))
-      .orderBy("nprobe")
   }
 
   /** q168 — the q156 rescoring gate over the WHOLE q167 curve family:
@@ -1091,7 +1066,6 @@ object ExtensionQueries {
       .select(concat(lit("state_ivf_p"), col("nprobe")).as("tier"),
         col("query_id"), col("neighbor_id"), col("cos"))
     CurationQueries.annGate(claims, vecs)
-      .orderBy("tier", "query_id", "neighbor_id")
   }
 
   val q168Sql: String = CurationQueries.q88Sql
@@ -1159,7 +1133,6 @@ object ExtensionQueries {
         col("n_dup_chunks"),
         TextAnalysis.intDiv(col("n_dup_chunks") * 1000000L,
           greatest(col("n_chunks"), lit(1L))).as("dup_ppm"))
-      .orderBy("doc_id")
   }
 
   val q193Sql: String = CdcOracle.q193Sql
@@ -1201,7 +1174,6 @@ object ExtensionQueries {
       .select(col("doc_id"), col("n_chunks"), col("n_eval_shared"),
         TextAnalysis.intDiv(col("n_eval_shared") * 1000000L,
           greatest(col("n_chunks"), lit(1L))).as("shared_ppm"))
-      .orderBy("doc_id")
   }
 
 

@@ -13,8 +13,7 @@ import graft.functions.TextAnalysis
   * Scale shape: q134/q135/q137 are PURE per-row transforms — tokenize,
   * sort, and scan each document's own tokens with HOFs (no explode, no
   * join, no per-document shuffle), so at 100 TB they are map-only over
-  * the scan and the only exchange is the final orderBy for the readout
-  * (a real pipeline writes the flags without sorting at all). q136 joins
+  * the scan: no key exchange at all. q136 joins
   * the exploded tokens against a broadcast vocabulary (unigram counts are
   * vocab-sized, orders of magnitude below doc count), so its only
   * required shuffle is the vocab-count aggregate plus the per-document
@@ -50,7 +49,6 @@ object FilterQueries {
           col("n_tokens")).as("dup_ppm"),
         TextAnalysis.intDiv(col("top_cnt") * 1000000L, col("n_tokens"))
           .as("top_ppm"))
-      .orderBy("doc_id")
   }
 
   val q134Sql: String =
@@ -92,7 +90,6 @@ object FilterQueries {
       .select(col("doc_id"), col("n_bigrams"), col("top_cnt"),
         TextAnalysis.intDiv(col("top_cnt") * 1000000L, col("n_bigrams"))
           .as("top_ppm"))
-      .orderBy("doc_id")
   }
 
   val q135Sql: String =
@@ -137,7 +134,6 @@ object FilterQueries {
       .select(col("doc_id"), col("n_tokens"), col("surprisal_sum"),
         TextAnalysis.intDiv(col("surprisal_sum") * 1000000L, col("n_tokens"))
           .as("avg_q6"))
-      .orderBy("doc_id")
   }
 
   val q136Sql: String =
@@ -172,7 +168,6 @@ object FilterQueries {
       .select(col("doc_id"),
         (col("n0") - size(col("c")).cast("long")).as("n_removed"),
         array_join(col("c"), " ").as("cleaned"))
-      .orderBy("doc_id")
   }
 
   val q137Sql: String =
@@ -194,8 +189,7 @@ object FilterQueries {
     * the complement of q134's top-word fraction; q136 scores against the
     * CORPUS distribution, this against the doc's own). Map-only like the
     * Gopher family: one sorted-run HOF pass per row
-    * ([[TextAnalysis.runEntropySum]]), no explode, no per-doc shuffle —
-    * the only exchange is the final sort.
+    * ([[TextAnalysis.runEntropySum]]), no explode, no key shuffle.
     */
   val q146_doc_entropy: Q = (s, d) =>
     Tables.documents(s, d)
@@ -207,7 +201,6 @@ object FilterQueries {
       .filter(col("n_tokens") >= 1L)
       .select(col("doc_id"), col("n_tokens"), col("entropy_sum"),
         expr("(1000000 * entropy_sum) DIV n_tokens").as("avg_q6"))
-      .orderBy("doc_id")
 
   val q146Sql: String =
     """WITH e AS (
@@ -449,7 +442,6 @@ object FilterQueries {
         col("sum_pplx"), col("source_q6"), col("excess"),
         TextAnalysis.intDiv(col("excess") * 1000000L, col("te"))
           .as("weight_ppm"))
-      .orderBy("source")
   }
 
   /** The (source, weight_ppm) readout of q201's rollup, serving the

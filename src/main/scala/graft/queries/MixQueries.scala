@@ -35,7 +35,6 @@ object MixQueries {
         "doc_id", "source", targetDocs = 300L)
       .select(col("doc_id"), col("source"),
         col("n_docs").cast("long").as("n_source_docs"), col("rate"))
-      .orderBy("doc_id")
   }
 
   val q99Sql: String =
@@ -78,7 +77,6 @@ object MixQueries {
     Packing.packSequences(counts, "skey", "mix", "n_toks",
         seqLen = 2048L, shardRows = 1L << 52)
       .select("doc_id", "skey", "n_toks", "seq_id", "seq_offset")
-      .orderBy("doc_id")
   }
 
   val q100Sql: String =
@@ -181,7 +179,6 @@ object MixQueries {
         coalesce(col("dup_toks"), lit(0L)).as("n_dup_tokens"),
         expr("(1000000 * coalesce(dup_toks, 0L)) DIV greatest(n_toks, 1L)")
           .as("dup_ppm"))
-      .orderBy("doc_id")
   }
 
   val q101Sql: String =
@@ -229,45 +226,55 @@ object MixQueries {
     * (the q94 reassembly pattern — the one corpus-keyed shuffle is the
     * per-doc aggregate, proportional to output). A fully-duplicated doc
     * comes back empty rather than disappearing, so the drop decision
-    * stays with the caller. Covered positions expand each duplicated
-    * window into its k token slots (×k fan-out, then distinct) — bounded
-    * by k·duplicated-windows, never the corpus.
+    * stays with the caller. A doc's duplicated windows merge into
+    * disjoint covered ranges — bounded by its duplicated windows, never
+    * the corpus.
     */
   val q102_dup_span_removal: Q = (s, d) => {
     val k = 5
     val docs = Tables.documents(s, d)
     val occ = shingleOcc(docs, k)
-    // Reassembly is MAP-SIDE: ship each doc its covered-position SET
-    // (collect_set over the duplicated windows' ×k expansion — sized by
-    // duplicated tokens only) and excise inside the token array with one
-    // index-aware filter. The previous shape exploded EVERY token into
-    // (doc_id, tp, tok) rows, anti-joined, and re-collected them through
-    // a corpus-token-sized shuffle + per-doc sort — the shuffle carried
-    // the whole corpus text to remove its (usually small) duplicated
-    // share. Same output: the token array is already in position order,
-    // collect_set dedups exactly like the old distinct, and empty tokens
-    // (empty-text docs) are excised by the same length guard.
-    val covPerDoc = occ.join(dupShingles(occ), Seq("shk"), "left_semi")
-      .select(col("doc_id"),
-        explode(sequence(col("p"), col("p") + (k - 1))).as("tp"))
-      .groupBy("doc_id").agg(collect_set(col("tp")).as("cov"))
+    // Reassembly is MAP-SIDE: ship each doc the starts of its duplicated
+    // windows (sized by duplicated windows only), merge them into
+    // disjoint covered ranges and keep the token runs between the ranges.
+    // Each token is visited once: no per-token search of a covered set,
+    // and no corpus-token-sized shuffle carrying the text to the excision.
+    val startsPerDoc = occ.join(dupShingles(occ), Seq("shk"), "left_semi")
+      .groupBy("doc_id").agg(array_sort(collect_list(col("p"))).as("starts"))
+    // covered [s, e) ranges: a window starting inside or right after the
+    // last range extends it (starts ascend, so p + k is its new end)
+    val noRanges = array().cast("array<struct<s:int,e:int>>")
+    // (`get` reads past either end of an array as null)
+    val ranges = coalesce(aggregate(col("starts"), noRanges, (acc, p) => {
+      val last = get(acc, size(acc) - 1)
+      when(p <= last.getField("e"),
+        concat(slice(acc, lit(1), size(acc) - 1),
+          array(struct(last.getField("s").as("s"), (p + k).as("e")))))
+        .otherwise(concat(acc, array(struct(p.as("s"), (p + k).as("e")))))
+    }), noRanges)
+    // kept run j (0..m) spans [end of range j - 1, start of range j):
+    // from the first token before range 0, to past the last token after
+    // range m - 1
     val ws = TextAnalysis.tokens(col("text"))
+    val keptRuns = transform(sequence(lit(0), size(col("ranges"))), j => {
+      val from = coalesce(get(col("ranges"), j - 1).getField("e"), lit(1))
+      val until = coalesce(get(col("ranges"), j).getField("s"),
+        size(col("ws")) + 1)
+      slice(col("ws"), from, until - from)
+    })
     docs.select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"),
         ws.as("ws"))
-      .join(covPerDoc, Seq("doc_id"), "left")
+      .join(startsPerDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_toks"), col("ws"), ranges.as("ranges"))
       .select(col("doc_id"), col("n_toks"),
         // null text has no token array: it keeps no tokens and cleans to
         // "", as the oracle's COALESCEs define
-        coalesce(
-          filter(col("ws"), (tok, i0) => length(tok) > 0 &&
-            !array_contains(coalesce(col("cov"), array().cast("array<int>")),
-              i0 + 1)),
+        coalesce(filter(flatten(keptRuns), tok => length(tok) > 0),
           array().cast("array<string>")).as("kept_ws"))
       .select(col("doc_id"), col("n_toks"),
         size(col("kept_ws")).cast("long").as("n_kept_tokens"),
         array_join(col("kept_ws"), " ").as("clean_text"))
-      .orderBy("doc_id")
   }
 
   val q102Sql: String =
@@ -342,7 +349,6 @@ object MixQueries {
     graft.ops.Components.mergeIncremental(
         standing, newDocs.select(col("doc_id").as("id")), newPairs)
       .select(col("id").as("doc_id"), col("component"))
-      .orderBy("doc_id")
   }
 
   val q103Sql: String =
@@ -418,7 +424,6 @@ object MixQueries {
         coalesce(col("dup_toks"), lit(0L)).as("n_dup_tokens"),
         expr("(1000000 * coalesce(dup_toks, 0L)) DIV greatest(n_toks, 1L)")
           .as("dup_ppm"))
-      .orderBy("doc_id")
   }
 
   /** q111 — SPAN-LEVEL eval decontamination: where q69 flags documents
@@ -467,7 +472,6 @@ object MixQueries {
       .select(col("doc_id"), col("n_toks"),
         coalesce(col("kept"), lit(0L)).as("n_kept_tokens"),
         coalesce(col("ct"), lit("")).as("clean_text"))
-      .orderBy("doc_id")
   }
 
   val q111Sql: String =
@@ -534,7 +538,6 @@ object MixQueries {
         greatest(col("sa"), col("sb")).as("src_hi"))
       .groupBy("src_lo", "src_hi")
       .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("src_lo", "src_hi")
   }
 
   val q113Sql: String =
@@ -588,7 +591,6 @@ object MixQueries {
           .as("n_seen_before"))
       .withColumn("novelty_ppm",
         expr("(1000000 * (n_shingles - n_seen_before)) DIV n_shingles"))
-      .orderBy("doc_id")
   }
 
   val q122Sql: String =
@@ -624,7 +626,6 @@ object MixQueries {
   val q125_containment: Q = (s, d) =>
     graft.ops.TextDedup.containmentPairs(Tables.documents(s, d),
         "doc_id", "text", "lang", n = 3, tNum = 9, tDen = 10)
-      .orderBy("id_a", "id_b")
 
   val q125Sql: String =
     """WITH s AS (

@@ -119,7 +119,6 @@ object PiiQueries {
     Tables.documents(s, d)
       .withColumn("aug", plantedText)
       .select(col("doc_id") +: detect(col("aug")): _*)
-      .orderBy("doc_id")
 
   val q172Sql: String =
     s"""WITH a AS (
@@ -163,7 +162,6 @@ object PiiQueries {
         sum("n_ipv4").as("ipv4s"),
         sum("n_phones").as("phones"),
         sum("n_residual").as("residual_after_redaction"))
-      .orderBy("source")
 
   val q173Sql: String =
     s"""WITH a AS (

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Materialize.OrderedSyntax
 
 /** Round-3 training-data-preparation surface: the operators between a raw
   * deduped corpus and a tokenizer/training run — native session windows,
@@ -32,7 +31,6 @@ object PrepQueries {
         col("w.start").as("session_start"),
         col("w.end").as("session_end"),
         col("n_events"))
-      .orderBy("user_id", "session_start")
   }
 
   val q70Sql: String =
@@ -58,8 +56,7 @@ object PrepQueries {
     * (16-token overlap), the shape every pretraining tokenizer pipeline
     * feeds. The token array IS replicated through the chunk explode — that
     * is intrinsic (output ≈ overlap-factor × input) and the work is per-row
-    * and embarrassingly parallel; no shuffle until the final presentation
-    * sort, which production drops.
+    * and embarrassingly parallel; no key shuffle.
     */
   val q71_chunks: Q = (s, d) => {
     val chunkLen = 64
@@ -75,7 +72,6 @@ object PrepQueries {
           .as("n_tokens"),
         concat_ws(" ", slice(col("toks"), col("start") + 1, lit(chunkLen)))
           .as("chunk_text"))
-      .orderBy("doc_id", "chunk_id")
   }
 
   val q71Sql: String =
@@ -115,7 +111,6 @@ object PrepQueries {
       .withColumn("unk_rate",
         col("n_unk").cast("double") / col("n_tokens").cast("double"))
       .select("doc_id", "n_tokens", "n_known", "n_unk", "unk_rate")
-      .orderBy("doc_id")
   }
 
   val q72Sql: String =
@@ -158,7 +153,6 @@ object PrepQueries {
       .join(corpus.select(md5(col("text")).as("h")).distinct(),
         Seq("h"), "left_anti")
       .select("doc_id", "h", "n_batch_dups")
-      .orderBy("doc_id")
   }
 
   val q73Sql: String =
@@ -193,7 +187,6 @@ object PrepQueries {
       .filter(col("rk") === 1)
       .select(col("component"), col("id").as("survivor_id"),
         col("n_chars"), col("n_docs"))
-      .orderBy("component")
   }
 
   val q74Sql: String =
@@ -245,7 +238,6 @@ object PrepQueries {
       .select(col("doc_id"), col("lang"), bucket.as("bucket"))
       .filter(col("bucket") < rate)
       .select("doc_id", "lang", "bucket")
-      .orderBy("doc_id")
   }
 
   val q75Sql: String =
@@ -285,7 +277,6 @@ object PrepQueries {
       .select(col("media_id"), col("n_chars"), col("stride"),
         length(col("resized")).cast("long").as("resized_len"),
         md5(col("resized")).as("resized_md5"))
-      .orderBy("media_id")
 
   val q76Sql: String =
     """WITH d AS (
@@ -332,7 +323,6 @@ object PrepQueries {
         max(col("code")).as("max_code"))
       .withColumn("mean_code",
         col("sum_code").cast("double") / col("n").cast("double"))
-      .orderBy("media_id")
 
   val q77Sql: String =
     """WITH c0 AS (
@@ -357,14 +347,14 @@ object PrepQueries {
     * statistics. The oracle predicts every field from the source text,
     * so a mis-parsed width, a dropped pad byte, or an off-by-one in
     * the plane copy all hash-mismatch. Per-partition encode+decode
-    * pipeline in ONE stage — no shuffle before the final sort; at
+    * pipeline in ONE stage — no key shuffle; at
     * 100 TB the decode rides the scan exactly like this.
     */
   val q151_image_decode: Q = (s, d) =>
     graft.multimodal.Multimodal.decodeImageStats(
         graft.multimodal.Multimodal.imagesFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q151Sql: String =
     """WITH a AS (
@@ -400,7 +390,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.decodeAudioStats(
         graft.multimodal.Multimodal.wavFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q152Sql: String =
     """WITH a AS (
@@ -431,7 +421,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.decodeImageDHash(
         graft.multimodal.Multimodal.imagesFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q153Sql: String =
     ModalPairSql.imageHashes + "\nORDER BY s.media_id"
@@ -450,7 +440,6 @@ object PrepQueries {
           graft.multimodal.Multimodal.imagesFromText(
             s, Tables.documents(s, d), "doc_id", "text")),
         maxDist = 3)
-      .orderBy("id_a", "id_b")
 
   val q154Sql: String =
     ModalPairSql.imagePairs + "\nORDER BY id_a, id_b"
@@ -470,7 +459,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.decodeAudioFingerprint(
         graft.multimodal.Multimodal.wavFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q157Sql: String =
     ModalPairSql.audioFingerprints + "\nORDER BY s.media_id"
@@ -485,7 +474,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.decodeAudioFeatures(
         graft.multimodal.Multimodal.wavFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q158Sql: String =
     """WITH a AS (
@@ -520,7 +509,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.videoFromText(
           s, Tables.documents(s, d), "doc_id", "text"),
         stride = 4)
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q161Sql: String =
     """WITH a AS (
@@ -558,7 +547,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.videoFromText(
           s, Tables.documents(s, d), "doc_id", "text"),
         threshold = 1000L)
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q162Sql: String =
     """WITH a AS (
@@ -597,14 +586,14 @@ object PrepQueries {
     * oracle is q151's SQL VERBATIM: the container changed, the decoded
     * truth didn't — so a wrong un-filter, a dropped IDAT byte, or a
     * mis-read IHDR all hash-mismatch against the same prediction.
-    * Encode+decode ride one per-partition stage, shuffle-free before
-    * the final sort — at 100 TB the codec rides the scan.
+    * Encode+decode ride one per-partition stage, shuffle-free — at
+    * 100 TB the codec rides the scan.
     */
   val q164_png_decode: Q = (s, d) =>
     graft.multimodal.Multimodal.decodePngStats(
         graft.multimodal.Multimodal.pngFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q164Sql: String = q151Sql
 
@@ -630,7 +619,6 @@ object PrepQueries {
     graft.ops.Components.connectedComponents(
         Tables.documents(s, d).select(col("doc_id").as("id")), edges)
       .select(col("id").as("doc_id"), col("component"))
-      .orderBy("doc_id")
   }
 
   /** q169 — REAL LZW-compressed image decode: synthesize a genuine
@@ -647,13 +635,13 @@ object PrepQueries {
     * grayscale palette triplicates each index into RGB, so the oracle
     * predicts every field from the text: sum_channel = 3·Σcodes,
     * mean = Σcodes/(16·h). Per-partition encode+decode in one stage,
-    * shuffle-free before the final sort.
+    * shuffle-free.
     */
   val q169_gif_decode: Q = (s, d) =>
     graft.multimodal.Multimodal.decodeGifStats(
         graft.multimodal.Multimodal.gifFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q169Sql: String =
     """WITH a AS (
@@ -695,14 +683,13 @@ object PrepQueries {
     * wire exercise genuine transform-codec entropy coding (the first
     * DCT-family format in the tier; the stub now covers only the
     * perceptual codecs MP3/H.264). Per-partition encode+decode in one
-    * stage, shuffle-free before the final sort; at 100 TB the codec
-    * rides the scan.
+    * stage, shuffle-free; at 100 TB the codec rides the scan.
     */
   val q170_jpeg_decode: Q = (s, d) =>
     graft.multimodal.Multimodal.decodeJpegStats(
         graft.multimodal.Multimodal.jpegFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q170Sql: String =
     """WITH a AS (
@@ -739,13 +726,13 @@ object PrepQueries {
     * VERBATIM: lossless compression means the container changed and
     * the decoded truth didn't — the audio analog of the q164 PNG
     * discipline. Per-partition encode+decode in one stage,
-    * shuffle-free before the final sort.
+    * shuffle-free.
     */
   val q171_flac_decode: Q = (s, d) =>
     graft.multimodal.Multimodal.decodeFlacStats(
         graft.multimodal.Multimodal.flacFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q171Sql: String = q152Sql
 
@@ -763,7 +750,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.downsampleImageStats(
         graft.multimodal.Multimodal.imagesFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q177Sql: String =
     """WITH a AS (
@@ -810,7 +797,7 @@ object PrepQueries {
     * always bills the full encode→corrupt→decode pipeline.
     */
   val q178_quarantine_decode: Q = (s, d) =>
-    SharedQuarantine.publish(s, d).orderBy("media_id")
+    SharedQuarantine.publish(s, d)
 
   val q178Sql: String =
     """WITH a AS (
@@ -885,7 +872,6 @@ object PrepQueries {
       .withColumn("src", lit("kept"))
       .unionByName(upserts.withColumn("src", lit("applied")))
       .select("key", "status", "price", "src")
-      .orderBy("key")
   }
 
   val q81Sql: String =
@@ -939,7 +925,6 @@ object PrepQueries {
         lit(1d) - col("n_unique").cast("double") / col("n_docs").cast("double"))
       .select("lang", "source", "n_docs", "n_unique", "dup_rate",
         "total_chars", "total_tokens")
-      .orderBy("lang", "source")
 
   val q82Sql: String =
     """SELECT lang, source,
@@ -974,7 +959,7 @@ object PrepQueries {
           s, Tables.documents(s, d), "doc_id", "text"),
         stride = 4,
         decoder = graft.multimodal.Codecs.decodeJpegStream)
-      .toDF().sortedOut("media_id")
+      .toDF()
 
   // 192 = 3 RGB channels (gray triplicated) x 64 pixels per 8x8 block
   val q181Sql: String =
@@ -1014,7 +999,7 @@ object PrepQueries {
           s, Tables.documents(s, d), "doc_id", "text"),
         threshold = 50000L,
         decoder = graft.multimodal.Codecs.decodeJpegStream)
-      .toDF().sortedOut("media_id")
+      .toDF()
 
   val q182Sql: String =
     """WITH a AS (
@@ -1060,7 +1045,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.decodeAdpcmStats(
         graft.multimodal.Multimodal.adpcmFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().sortedOut("media_id")
+      .toDF()
 
   val q183Sql: String =
     """WITH a AS (
@@ -1099,7 +1084,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.mp3FrameCensus(
         graft.multimodal.Multimodal.mp3FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q199Sql: String =
     """WITH a AS (
@@ -1155,7 +1140,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.corruptMp3(
           graft.multimodal.Multimodal.mp3FromText(
             s, Tables.documents(s, d), "doc_id", "text")))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q200Sql: String =
     s"""WITH census AS ( $q199Sql )
@@ -1199,7 +1184,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.mp3ExtractTags(
         graft.multimodal.Multimodal.mp3TaggedFromDocs(
           s, Tables.documents(s, d), "doc_id"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q202Sql: String =
     """WITH a AS (
@@ -1258,7 +1243,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264NalCensus(
         graft.multimodal.Multimodal.h264FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q204Sql: String =
     """WITH a AS (
@@ -1325,7 +1310,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.corruptH264(
           graft.multimodal.Multimodal.h264FromText(
             s, Tables.documents(s, d), "doc_id", "text")))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q205Sql: String =
     s"""WITH census AS ( $q204Sql )
@@ -1373,7 +1358,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264IdrIndex(
         graft.multimodal.Multimodal.h264FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q207Sql: String =
     """WITH a AS (
@@ -1441,7 +1426,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264SliceCensus(
         graft.multimodal.Multimodal.h264FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q209Sql: String =
     """WITH a AS (
@@ -1495,7 +1480,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264SeiCensus(
         graft.multimodal.Multimodal.h264SeiFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q210Sql: String =
     """WITH a AS (
@@ -1562,7 +1547,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264GopWorklist(
         graft.multimodal.Multimodal.h264FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id", "gop_idx")
+      .toDF()
 
   val q211Sql: String =
     """WITH a AS (
@@ -1640,7 +1625,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264PpsCensus(
         graft.multimodal.Multimodal.h264PpsFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q233Sql: String = {
     val ppsBits =
@@ -1723,7 +1708,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.tryH264PpsCensus(
         graft.multimodal.Multimodal.h264PpsFromText(
           s, Tables.documents(s, d), "doc_id", "text", breakRefs = true))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q234Sql: String = {
     def z(c: String) =
@@ -1956,7 +1941,7 @@ object PrepQueries {
     graft.multimodal.Pdf.pdf15Census(
         graft.multimodal.Pdf.pdf15FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q248Sql: String =
     s"""WITH $Pdf15Cte
@@ -1987,7 +1972,7 @@ object PrepQueries {
     graft.multimodal.Pdf.tryPdf15Census(
         graft.multimodal.Pdf.pdf15FromText(
           s, Tables.documents(s, d), "doc_id", "text", breakRefs = true))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q249Sql: String = {
     def z(c: String) =
@@ -2021,7 +2006,7 @@ object PrepQueries {
     graft.multimodal.Pdf.extractPdfDocs(
         graft.multimodal.Pdf.pdf15FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q250Sql: String =
     s"""WITH $Pdf15Cte
@@ -2091,7 +2076,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.mp3SideInfoCensus(
         graft.multimodal.Multimodal.mp3SiFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q251Sql: String =
     s"""WITH $Mp3SiCte
@@ -2121,7 +2106,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.mp3SiFromText(
           s, Tables.documents(s, d), "doc_id", "text",
           lieBigValues = true))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q252Sql: String =
     s"""WITH $Mp3SiCte
@@ -2182,7 +2167,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.h264MbCensus(
         graft.multimodal.Multimodal.h264IFrameFromText(
           s, Tables.documents(s, d), "doc_id"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q253Sql: String =
     s"""WITH $H264MbCte
@@ -2208,7 +2193,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.tryH264MbCensus(
         graft.multimodal.Multimodal.h264IFrameFromText(
           s, Tables.documents(s, d), "doc_id", lieTz = true))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q254Sql: String =
     s"""WITH $H264MbCte
@@ -2239,7 +2224,7 @@ object PrepQueries {
     graft.multimodal.Pdf.pdfCensus(
         graft.multimodal.Pdf.pdfFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q239Sql: String =
     s"""WITH $PdfCte
@@ -2269,7 +2254,7 @@ object PrepQueries {
     graft.multimodal.Pdf.tryPdfCensus(
         graft.multimodal.Pdf.pdfFromText(
           s, Tables.documents(s, d), "doc_id", "text", breakRefs = true))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q240Sql: String = {
     def z(c: String) =
@@ -2301,7 +2286,7 @@ object PrepQueries {
     graft.multimodal.Pdf.extractPdfDocs(
         graft.multimodal.Pdf.pdfFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q241Sql: String =
     s"""WITH $PdfCte
@@ -2367,7 +2352,7 @@ object PrepQueries {
     graft.multimodal.Mp4.mp4Census(
         graft.multimodal.Mp4.mp4FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q242Sql: String =
     s"""WITH $Mp4Cte
@@ -2398,7 +2383,7 @@ object PrepQueries {
     graft.multimodal.Mp4.mp4BridgeCensus(
         graft.multimodal.Mp4.mp4FromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   /** q244 — MP4 CROSS-BOX QUARANTINE: for media_id % 13 == 0 the
     * first stsz entry over-declares its sample by one byte; else for
@@ -2412,7 +2397,7 @@ object PrepQueries {
     graft.multimodal.Mp4.tryMp4Census(
         graft.multimodal.Mp4.mp4FromText(
           s, Tables.documents(s, d), "doc_id", "text", breakRefs = true))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q244Sql: String = {
     def z(c: String) =
@@ -2451,7 +2436,7 @@ object PrepQueries {
     graft.multimodal.Multimodal.docLakeDispatch(
         graft.multimodal.Multimodal.docLakeFromText(
           s, Tables.documents(s, d), "doc_id", "text"))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q245Sql: String =
     s"""WITH $PdfCte,
@@ -2492,7 +2477,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.corruptMixed(
           graft.multimodal.Multimodal.mixedMediaLake(
             s, Tables.documents(s, d), "doc_id", "text")))
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q184Sql: String =
     """WITH a AS (
@@ -2553,7 +2538,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.flcFromText(
           s, Tables.documents(s, d), "doc_id", "text"),
         stride = 4, decoder = graft.multimodal.Flc.decodeFlc)
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q185Sql: String =
     """WITH a AS (
@@ -2601,7 +2586,7 @@ object PrepQueries {
         graft.multimodal.Multimodal.flcFromText(
           s, Tables.documents(s, d), "doc_id", "text"),
         threshold = 400L, decoder = graft.multimodal.Flc.decodeFlc)
-      .toDF().orderBy("media_id")
+      .toDF()
 
   val q186Sql: String =
     """WITH a AS (

@@ -86,7 +86,6 @@ object ReleaseQueries {
         sum(col("selected")).as("dsir_selected"),
         sum(when(col("decode_ok") === 0, 1L).otherwise(0L))
           .as("media_quarantined"))
-      .orderBy("source")
   }
 
   val q179Sql: String = {
@@ -212,7 +211,6 @@ object ReleaseQueries {
         sum(col("selected")).as("dsir_selected"),
         sum(when(col("decode_ok") === 0, 1L).otherwise(0L))
           .as("media_quarantined"))
-      .orderBy("source")
   }
 
   val queries: Map[String, Q] = Map(

@@ -59,7 +59,6 @@ object StorageQueries {
       StructField("source", StringType),
       StructField("n_chars", LongType)))
     Sources.readCsv(s, schema, csvRoundtripDir)
-      .orderBy("doc_id")
   }
 
   val q104Sql: String =
@@ -136,7 +135,6 @@ object StorageQueries {
     val dir = TokenizerQueries.ensurePostingState(s, d)
     graft.pipeline.CorpusBuild.stateFeed(s, dir)
       .select("doc_id", "source", "n_toks", "seq_id", "seq_offset")
-      .orderBy("doc_id")
   }
 
   val q121Sql: String =
@@ -240,7 +238,6 @@ object StorageQueries {
       .select(col("source"), col("n_docs"), col("n_split_docs"),
         col("n_fragments"), col("max_frags"),
         expr("(1000000 * n_split_docs) DIV n_docs").as("split_ppm"))
-      .orderBy("source")
   }
 
   val q141Sql: String =

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Materialize.OrderedSyntax
 
 import graft.functions.TextAnalysis
 import graft.ops.Bpe
@@ -31,7 +30,7 @@ object TokenizerQueries {
     */
   val q105_bpe_merges: Q = (s, d) =>
     Bpe.learnMerges(Bpe.wordDict(Tables.documents(s, d), "text"),
-      "word", "n", NumMerges).orderBy("merge_rank")
+      "word", "n", NumMerges)
 
   /** The same NumMerges rounds unrolled: dN = the dict after N merges,
     * bN = round N's winning pair. DuckDB's replace is left-to-right
@@ -131,7 +130,6 @@ object TokenizerQueries {
         coalesce(col("n_hapax"), lit(0L)).as("n_hapax"),
         expr("(1000000 * coalesce(sum_freq, 0L)) " +
           "DIV greatest(coalesce(n_bigrams, 0L), 1L)").as("mean_freq_ppm"))
-      .orderBy("doc_id")
   }
 
   val q107Sql: String =
@@ -177,7 +175,7 @@ object TokenizerQueries {
       .orderBy("merge_rank")
       .select("lhs", "rhs").collect()
       .map(r => (r.getString(0), r.getString(1)))
-    Bpe.tokenizeDocs(docs, merges.toIndexedSeq).orderBy("doc_id")
+    Bpe.tokenizeDocs(docs, merges.toIndexedSeq)
   }
 
   /** q105's learn chain (b1..bN) + an apply chain: per doc, the same
@@ -455,7 +453,6 @@ object TokenizerQueries {
     */
   val q115_bm25_gate: Q = (s, d) =>
     bm25Gate(bm25TopK(s, d), serveMatchCore(s, d))
-      .orderBy("doc_id")
 
   val q115Sql: String =
     """SELECT CAST(NULL AS BIGINT) AS doc_id, CAST(NULL AS BIGINT) AS n_terms,
@@ -550,7 +547,6 @@ object TokenizerQueries {
   val q118_state_keyword_index: Q = (s, d) =>
     graft.pipeline.CorpusBuild
       .stateKeywordCore(s, ensurePostingState(s, d), SearchTerms)
-      .orderBy("doc_id")
 
   val q118Sql: String =
     """SELECT doc_id,
@@ -586,7 +582,6 @@ object TokenizerQueries {
     val dir = ensurePostingState(s, d)
     bm25Gate(graft.pipeline.CorpusBuild.stateBm25TopK(s, dir, SearchTerms),
         graft.pipeline.CorpusBuild.stateKeywordCore(s, dir, SearchTerms))
-      .orderBy("doc_id")
   }
 
   /** q138 — corpus-LM surprisal served from the STORED posting state:
@@ -598,7 +593,6 @@ object TokenizerQueries {
     */
   val q138_state_surprisal: Q = (s, d) =>
     graft.pipeline.CorpusBuild.stateSurprisal(s, ensurePostingState(s, d))
-      .orderBy("doc_id")
 
   val q110Sql: String =
     """SELECT doc_id,
@@ -636,7 +630,6 @@ object TokenizerQueries {
       .select(col("doc_id"),
         size(filter(hits, b => b)).cast("long").as("n_phrase"))
       .filter(col("n_phrase") > 0L)
-      .orderBy("doc_id")
   }
 
   val q131Sql: String =
@@ -720,7 +713,6 @@ object TokenizerQueries {
   val q133_state_phrase: Q = (s, d) =>
     graft.pipeline.CorpusBuild.statePhraseCount(s, ensurePostingState(s, d),
         PhraseTerms._1, PhraseTerms._2)
-      .orderBy("doc_id")
 
   /** q139 — q108's BPE compression readout served from the STORED merge
     * table (`CorpusBuild.trackMerges`): the ingest generations store
@@ -734,7 +726,6 @@ object TokenizerQueries {
   val q139_state_bpe_tokenize: Q = (s, d) =>
     graft.pipeline.CorpusBuild
       .stateBpeTokenize(s, ensurePostingState(s, d), Tables.documents(s, d))
-      .orderBy("doc_id")
 
   /** q142 — q49's top-500 vocabulary served from the STORED word dict
     * (`CorpusBuild.trackMerges`' additive deltas, folded by sum): the
@@ -784,7 +775,6 @@ object TokenizerQueries {
         sum("n_docs").over(cum).as("docs_cum"),
         sum("n_toks").over(cum).as("tokens_cum"),
         sum("new_types").over(cum).as("vocab_cum"))
-      .orderBy("k")
   }
 
   val q145Sql: String =
@@ -824,7 +814,6 @@ object TokenizerQueries {
           .select(col("word").as("token"), col("n")),
         500)
       .select("vocab_id", "token", "n")
-      .orderBy("vocab_id")
 
   /** q189 — reciprocal-rank-fusion hybrid retrieval (Cormack, Clarke &
     * Buettcher, "Reciprocal Rank Fusion outperforms Condorcet and
@@ -968,7 +957,6 @@ object TokenizerQueries {
           greatest(col("n_words"), lit(1L))).as("fertility_q6"),
         TextAnalysis.intDiv(col("n_chars_total") * 1000000L,
           greatest(col("n_bpe"), lit(1L))).as("chars_per_bpe_q6"))
-      .sortedOut("lang")
 
   /** q198 — q192's fertility table served from the STORED merge table
     * (`CorpusBuild.trackMerges`): the tokenizer is LOADED (q139's
@@ -1162,7 +1150,6 @@ object TokenizerQueries {
   val q235_unigram_train: Q = (s, d) =>
     graft.ops.UnigramLm.learn(graft.ops.TextDedup.maybeMaterialize(
         Bpe.wordDict(Tables.documents(s, d), "text")))
-      .orderBy("piece")
 
   val q235Sql: String =
     s"""$unigramTrainHead
@@ -1182,7 +1169,6 @@ object TokenizerQueries {
     */
   val q236_unigram_tokenize: Q = (s, d) =>
     graft.ops.UnigramLm.tokenizeCorpus(Tables.documents(s, d))
-      .orderBy("doc_id")
 
   val q236Sql: String =
     s"""$unigramTokenizeBody
@@ -1206,7 +1192,6 @@ object TokenizerQueries {
   val q237_state_unigram_tokenize: Q = (s, d) =>
     graft.pipeline.CorpusBuild.stateUnigramTokenize(
         s, ensurePostingState(s, d), Tables.documents(s, d))
-      .orderBy("doc_id")
 
   /** q238 — TOKENIZER FERTILITY COMPARISON, BPE vs unigram-LM on the
     * SAME corpus and the SAME word denominator — the dataset-card
@@ -1236,7 +1221,6 @@ object TokenizerQueries {
         col("bpe_fertility_q6"),
         TextAnalysis.intDiv(col("n_unigram") * 1000000L,
           greatest(col("n_words"), lit(1L))).as("unigram_fertility_q6"))
-      .orderBy("lang")
   }
 
   val q238Sql: String =

@@ -79,7 +79,6 @@ object UrlQueries {
         col("u").as("url_raw"),
         normalize(col("u")).as("url_norm"),
         regexp_extract(col("u"), "https?://([^/]+)", 1).as("domain"))
-      .orderBy("doc_id")
 
   val q175Sql: String =
     s"""WITH a AS (
@@ -105,7 +104,6 @@ object UrlQueries {
       .groupBy("domain")
       .agg(count(lit(1)).as("docs"),
         countDistinct("url_norm").as("distinct_urls"))
-      .orderBy("domain")
 
   val q176Sql: String =
     s"""WITH a AS (

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Materialize.OrderedSyntax
 
 import graft.web.WebLake
 
@@ -58,7 +57,7 @@ object WebQueries {
   val q212_gzip_member_census: Q = (s, d) =>
     WebLake.gzipMemberCensus(
         WebLake.gzipBundleFromDocs(s, Tables.documents(s, d)))
-      .toDF().sortedOut("archive_id")
+      .toDF()
 
   val q212Sql: String =
     s"""WITH $DocsCte,
@@ -134,7 +133,7 @@ object WebQueries {
   val q213_warc_record_census: Q = (s, d) =>
     WebLake.warcRecordCensus(
         WebLake.warcGzFromDocs(s, Tables.documents(s, d)))
-      .toDF().sortedOut("archive_id")
+      .toDF()
 
   val q213Sql: String =
     s"""WITH $WarcCte
@@ -164,7 +163,7 @@ object WebQueries {
   val q214_cdx_index: Q = (s, d) =>
     WebLake.cdxIndex(
         WebLake.warcGzFromDocs(s, Tables.documents(s, d)))
-      .toDF().sortedOut("doc_id")
+      .toDF()
 
   val q214Sql: String =
     s"""WITH $WarcCte
@@ -194,7 +193,7 @@ object WebQueries {
     WebLake.tryGzipCensus(
         WebLake.corruptGzipBundle(
           WebLake.gzipBundleFromDocs(s, Tables.documents(s, d))))
-      .toDF().sortedOut("archive_id")
+      .toDF()
 
   val q215Sql: String =
     s"""WITH census AS ( $q212Sql )
@@ -226,7 +225,7 @@ object WebQueries {
   val q216_web_extract: Q = (s, d) =>
     WebLake.extractWebDocs(
         WebLake.warcGzFromDocs(s, Tables.documents(s, d)))
-      .toDF().sortedOut("doc_id")
+      .toDF()
 
   val q216Sql: String =
     """WITH a AS (
@@ -260,7 +259,7 @@ object WebQueries {
     */
   val q217_robots_audit: Q = (s, d) =>
     WebLake.robotsAudit(s, Tables.documents(s, d))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   // The four synthesized rules priced per URI: best allow vs best
   // disallow octet lengths, -1 when unmatched (no match at all ->
@@ -302,7 +301,7 @@ object WebQueries {
     */
   val q218_fetch_schedule: Q = (s, d) =>
     WebLake.fetchSchedule(s, Tables.documents(s, d))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q218Sql: String =
     s"""WITH $RobotsCte
@@ -339,7 +338,7 @@ object WebQueries {
   val q219_http_census: Q = (s, d) =>
     WebLake.httpResponseCensus(
         WebLake.warcHttpFromDocs(s, Tables.documents(s, d)))
-      .toDF().sortedOut("archive_id")
+      .toDF()
 
   // The HTTP message priced per doc: 404/chunked/content-coding splits,
   // header bytes by line, the gzip member arithmetic (stored deflate,
@@ -422,7 +421,7 @@ object WebQueries {
     WebLake.tryHttpCensus(
         WebLake.warcHttpFromDocs(s, Tables.documents(s, d),
           corruptEvery = 23L))
-      .toDF().sortedOut("archive_id")
+      .toDF()
 
   val q220Sql: String =
     s"""WITH $HttpCte,
@@ -450,7 +449,7 @@ object WebQueries {
   val q221_http_extract: Q = (s, d) =>
     WebLake.extractHttpDocs(
         WebLake.warcHttpFromDocs(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q221Sql: String =
     """WITH a AS (
@@ -485,7 +484,7 @@ object WebQueries {
     */
   val q222_boilerplate_extract: Q = (s, d) =>
     WebLake.extractMainText(s, Tables.documents(s, d))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q222Sql: String =
     """WITH a AS (
@@ -518,7 +517,7 @@ object WebQueries {
     */
   val q223_recrawl_delta: Q = (s, d) =>
     WebLake.recrawlDelta(s, Tables.documents(s, d))
-      .toDF().orderBy("source")
+      .toDF()
 
   val q223Sql: String =
     """WITH a AS (
@@ -554,7 +553,7 @@ object WebQueries {
     */
   val q224_refetch_worklist: Q = (s, d) =>
     WebLake.refetchWorklist(s, Tables.documents(s, d))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q224Sql: String =
     s"""WITH $RobotsCte,
@@ -592,7 +591,7 @@ object WebQueries {
   val q225_zstd_frame_census: Q = (s, d) =>
     WebLake.zstdFrameCensus(
         WebLake.zstFromDocs(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   // Per doc: n raw chunks of 128, one RLE(32) pad, FCS 1 byte under
   // 256 else 2, object = 16B skippable + frame.
@@ -638,7 +637,7 @@ object WebQueries {
     WebLake.tryZstdCensus(
         WebLake.corruptZst(
           WebLake.zstFromDocs(s, Tables.documents(s, d))))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q226Sql: String =
     s"""WITH census AS ( $q225Sql )
@@ -672,7 +671,7 @@ object WebQueries {
   val q227_warczst_index: Q = (s, d) =>
     WebLake.warcZstIndex(
         WebLake.warcZstFromDocs(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   // Frame arithmetic for the warc.zst tier: the record bytes (same
   // header pricing as the gzip tier) wrapped in a single-segment
@@ -724,7 +723,7 @@ object WebQueries {
     WebLake.tryWarcZstCensus(
         WebLake.corruptSeekTable(
           WebLake.warcZstFromDocs(s, Tables.documents(s, d))))
-      .toDF().orderBy("archive_id")
+      .toDF()
 
   val q228Sql: String =
     s"""WITH $WarcZstCte
@@ -754,7 +753,6 @@ object WebQueries {
   val q229_jsonl_roundtrip: Q = (s, d) =>
     WebLake.readJsonlZst(s,
         WebLake.jsonlZstFromDocs(s, Tables.documents(s, d)))
-      .orderBy("doc_id")
 
   val q229Sql: String =
     """SELECT CAST(doc_id AS BIGINT) AS doc_id,
@@ -783,7 +781,7 @@ object WebQueries {
   val q230_compression_sniff: Q = (s, d) =>
     WebLake.sniffCompression(
         WebLake.mixedCompressionLake(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q230Sql: String =
     """WITH z AS (
@@ -840,7 +838,6 @@ object WebQueries {
         sum(when(col("detected") === col("label"), 1L).otherwise(0L))
           .as("n_agree"),
         sum(when(col("detected") === "und", 1L).otherwise(0L)).as("n_und"))
-      .orderBy("source")
   }
 
   val q231Sql: String = {
@@ -904,7 +901,7 @@ object WebQueries {
   val q232_zstd_entropy_census: Q = (s, d) =>
     WebLake.zstdEntropyCensus(
         WebLake.zstEntropyFromDocs(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q232Sql: String =
     s"""WITH $ZstdCte
@@ -951,7 +948,7 @@ object WebQueries {
   val q246_brotli_census: Q = (s, d) =>
     WebLake.brotliCensus(
         WebLake.brotliLake(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   private val BrotliCte =
     """bz AS (
@@ -994,7 +991,7 @@ object WebQueries {
   val q247_brotli_quarantine: Q = (s, d) =>
     WebLake.tryBrotliCensus(
         WebLake.brotliLake(s, Tables.documents(s, d), truncateEvery = 13L))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q247Sql: String =
     s"""WITH $BrotliCte
@@ -1032,7 +1029,7 @@ object WebQueries {
   val q255_brotli_entropy_census: Q = (s, d) =>
     WebLake.brotliCensus(
         WebLake.brotliEntropyLake(s, Tables.documents(s, d)))
-      .toDF().orderBy("doc_id")
+      .toDF()
 
   val q255Sql: String = {
     val e = graft.web.Brotli.insExtraCaseSql("n")

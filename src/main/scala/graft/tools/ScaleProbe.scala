@@ -35,9 +35,11 @@ object ScaleProbe {
     val docs = spark.read.parquet(s"$base/documents.parquet")
     val maxId = docs.agg(max("doc_id")).head.getLong(0) + 1
 
-    // round-17 additions (VERDICT #5): the r16 sortedOut/materialize
-    // choices (q18/q56/q143) and this round's rewrites (q102/q122/q166)
-    // re-measured at 10x so a choice that inverts with scale is caught
+    // queries whose shape was chosen on sf0.1 timings — materialized
+    // pair relations (q18/q56/q143), map-side span excision (q102),
+    // doc-sized novelty join (q122), split labels on the join inputs
+    // (q166) — re-measured at 10x so a choice that inverts with scale is
+    // caught
     val extraQueries = Seq("q18_ngram_jaccard", "q56_dedup_groups",
       "q143_winnow_overlap", "q102_dup_span_removal",
       "q122_ngram_novelty", "q166_state_split_leakage")

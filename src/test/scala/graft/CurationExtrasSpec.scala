@@ -110,9 +110,11 @@ class CurationExtrasSpec extends AnyFunSuite with SharedSpark {
 
   test("q160 budget curve: buckets bounded, cumulative sums consistent " +
       "best-bucket-down, totals equal the corpus") {
+    // the query's rows are unordered: replay the prefix sums in q_bucket
+    // DESC order
     val rows = CurationQueries.q160_budget_curve(spark, sf).collect()
+      .sortBy(-_.getLong(0))
     assert(rows.nonEmpty)
-    // rows arrive ordered by q_bucket DESC; replay the prefix sums
     var cd = 0L; var ct = 0L
     rows.foreach { r =>
       val bucket = r.getLong(0)
@@ -146,9 +148,8 @@ class CurationExtrasSpec extends AnyFunSuite with SharedSpark {
       "epochs are monotone non-increasing down the quality order, the " +
       "best bucket is fully funded, and a boundary bucket is partial") {
     val rows = graft.queries.CurationQueries
-      .q195_epoch_allocation(spark, sf).collect()
-    // rows come back ordered q_bucket DESC: (bucket, docs, tokens,
-    // epochs, alloc)
+      .q195_epoch_allocation(spark, sf).collect().sortBy(-_.getLong(0))
+    // rows in q_bucket DESC order: (bucket, docs, tokens, epochs, alloc)
     val totalTokens = rows.map(_.getLong(2)).sum
     val budget = 2L * totalTokens
     val alloc = rows.map(_.getLong(4)).sum

@@ -512,6 +512,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
     // streamed-fold ≡ one-shot-train: the state-served classification
     // equals q174's exact output over the same corpus
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .sortBy(_.getAs[Long]("doc_id")) // results are unordered
       .map(r => (0 until r.length).map(r.get).toSeq)
     val served = rows(CorpusBuild.stateNbScores(spark, state, docs))
     val oneShot = rows(ClassifierQueries.q174_nb_classifier(spark, sf))
@@ -576,6 +577,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
     // streamed-fold ≡ one-shot: the state-served weights equal q188's
     // exact output over the same corpus
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .sortBy(_.getAs[Long]("doc_id")) // results are unordered
       .map(r => (0 until r.length).map(r.get).toSeq)
     val served = rows(CorpusBuild.stateDsirScores(spark, state, docs))
     val oneShot = rows(
@@ -641,6 +643,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
     // streamed-fold ≡ one-shot: the state-served perplexity equals
     // q187's exact output over the same corpus
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .sortBy(_.getAs[Long]("doc_id")) // results are unordered
       .map(r => (0 until r.length).map(r.get).toSeq)
     val oneShot = rows(
       graft.queries.FilterQueries.q187_bigram_perplexity(spark, sf))
@@ -742,6 +745,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
     // streamed-fold ≡ one-shot: the state-served audit equals q194's
     // exact output over the same corpus
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .sortBy(_.getAs[Long]("doc_id")) // results are unordered
       .map(r => (0 until r.length).map(r.get).toSeq)
     val oneShot = rows(ExtensionQueries.q194_cdc_decontam(spark, sf))
     assert(rows(CorpusBuild.stateCdcDecontam(spark, state, docs))
@@ -889,6 +893,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
     // and the fold underneath produced the same state a door-less
     // ingest would: the served card tiers read identical models
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .sortBy(_.getAs[Long]("doc_id")) // results are unordered
       .map(r => (0 until r.length).map(r.get).toSeq)
     assert(rows(CorpusBuild.stateBigramScores(spark, state, docs)) ===
       rows(graft.queries.FilterQueries.q187_bigram_perplexity(spark, sf)),

@@ -140,11 +140,12 @@ class DupSpanSpec extends AnyFunSuite with SharedSpark {
       // keys regularly straddle the standing/new boundary, exercising
       // the crossed-threshold (standing count 1 + batch occurrence) and
       // touched-doc recompute paths
+      // both results are unordered: compare them in doc_id order
       val full = graft.queries.MixQueries.q101_dup_spans(spark, dir)
-        .collect().map(_.toSeq)
+        .collect().sortBy(_.getLong(0)).map(_.toSeq)
       val inc = graft.queries.MixQueries
         .q106_incremental_dup_spans(spark, dir)
-        .collect().map(_.toSeq)
+        .collect().sortBy(_.getLong(0)).map(_.toSeq)
       assert(inc === full, "incremental span audit diverged from batch")
     }
   }
