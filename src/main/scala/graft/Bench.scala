@@ -28,9 +28,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *      query, the Spark work of its recorded (fastest) attempt — `jobs`
   *      started, `stages` completed, `tasks` ended, `task_s` (the summed
   *      executor run time of those tasks), `shuffle_write_bytes` (what
-  *      those tasks wrote to shuffle files) and `plan_s` (the analysis,
-  *      optimization and planning phases of every SQL execution the
-  *      attempt ran, from each `QueryExecution.tracker`). Wall time
+  *      those tasks wrote to shuffle files), `spill_bytes` (what they
+  *      spilled, in memory plus on disk), `gc_s` (their summed JVM GC
+  *      time) and `plan_s` (the analysis, optimization and planning
+  *      phases of every SQL execution the attempt ran, from each
+  *      `QueryExecution.tracker`). Wall time
   *      against task_s, plan_s and jobs separates the fixed per-job
   *      driver floor and the planner from executor compute.
   * Readers parse both stdout lines by key, so their keys never change.
@@ -71,6 +73,8 @@ object Bench {
       var tasks = 0
       var taskMs = 0L
       var shuffleWriteBytes = 0L
+      var spillBytes = 0L
+      var gcMs = 0L
       var planMs = 0L
     }
     private val byGroup = mutable.HashMap.empty[String, Counts]
@@ -96,6 +100,9 @@ object Bench {
         if (e.taskMetrics != null) {
           c.taskMs += e.taskMetrics.executorRunTime
           c.shuffleWriteBytes += e.taskMetrics.shuffleWriteMetrics.bytesWritten
+          c.spillBytes += e.taskMetrics.memoryBytesSpilled +
+            e.taskMetrics.diskBytesSpilled
+          c.gcMs += e.taskMetrics.jvmGCTime
         }
       }
     }
@@ -236,6 +243,7 @@ object Bench {
         s"""    "$k": {"jobs": ${c.jobs}, "stages": ${c.stages}, """ +
           s""""tasks": ${c.tasks}, "task_s": ${c.taskMs / 1000.0}, """ +
           s""""shuffle_write_bytes": ${c.shuffleWriteBytes}, """ +
+          s""""spill_bytes": ${c.spillBytes}, "gc_s": ${c.gcMs / 1000.0}, """ +
           s""""plan_s": ${c.planMs / 1000.0}}""" }
       .mkString(",\n")
     val full =

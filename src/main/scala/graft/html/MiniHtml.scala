@@ -51,16 +51,49 @@ object MiniHtml {
     }
 
     /** BS4 .string: descend while the node has exactly one child. */
-    def string: Option[String] = children.toSeq match {
-      case Seq(TextNode(v)) => Some(v)
-      case Seq(e: Elem) => e.string
-      case _ => None
+    def string: Option[String] = {
+      var e = this
+      while (e.children.length == 1) e.children(0) match {
+        case TextNode(v) => return Some(v)
+        case c: Elem => e = c
+      }
+      None
     }
 
-    /** Preorder depth-first over descendant elements (this excluded). */
-    def descendants: Iterator[Elem] = children.iterator.flatMap {
-      case e: Elem => Iterator.single(e) ++ e.descendants
-      case _ => Iterator.empty
+    /** Preorder depth-first over descendant elements (this excluded).
+      * An explicit stack of (child list, next index) frames, so each step
+      * costs O(1) whatever the depth; nested `flatMap` iterators would pass
+      * every element up through one iterator per ancestor.
+      */
+    def descendants: Iterator[Elem] = new Iterator[Elem] {
+      private val lists = ArrayBuffer[ArrayBuffer[Node]](children)
+      private val nextIdx = ArrayBuffer[Int](0)
+      private var pending: Elem = advance()
+
+      private def advance(): Elem = {
+        while (lists.nonEmpty) {
+          val top = lists.length - 1
+          val kids = lists(top)
+          val i = nextIdx(top)
+          if (i == kids.length) { lists.remove(top); nextIdx.remove(top) }
+          else {
+            nextIdx(top) = i + 1
+            kids(i) match {
+              case e: Elem => lists += e.children; nextIdx += 0; return e
+              case _ =>
+            }
+          }
+        }
+        null
+      }
+
+      def hasNext: Boolean = pending != null
+      def next(): Elem = {
+        if (pending == null) throw new NoSuchElementException("descendants")
+        val e = pending
+        pending = advance()
+        e
+      }
     }
 
     private def attrMatches(e: Elem, name: String, value: String): Boolean =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
 import graft.ops.{Components, Dedupe, Mixing, Packing, Splits, TextDedup}
+import graft.queries.Tables
 
 /** The end-to-end corpus build — the LLM-side counterpart of JobsPipeline:
   * what a training-data team actually runs, composed entirely from the
@@ -303,7 +304,7 @@ object CorpusBuild {
       .sortWithinPartitions(col("shard"), col("skey"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("shard").parquet(outDir)
-    feed.sparkSession.read.parquet(outDir)
+    Tables.read(feed.sparkSession, outDir)
       // hive partition columns read back as inferred INT — re-widen
       .groupBy(col("shard").cast("long").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
@@ -494,7 +495,7 @@ object CorpusBuild {
       val counts = newDocs.select(col("doc_id"), col(cfg.packSrcCol),
         TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
       val baseTotals = state.gen match {
-        case Some(g) => spark.read.parquet(s"$stateDir/gen=$g/packtotals")
+        case Some(g) => Tables.read(spark, s"$stateDir/gen=$g/packtotals")
         case None => counts.limit(0).select(col(cfg.packSrcCol),
           lit(0L).as("_base_toks"))
       }
@@ -539,9 +540,9 @@ object CorpusBuild {
       // rescan; readers take the latest generation's file, no fold —
       // the packtotals discipline): the trained tokenizer stays in
       // lockstep with the corpus statistics that justify it
-      val dict = TextDedup.maybeMaterialize(spark.read.parquet(
-          (base to gen).map(g => s"$stateDir/gen=$g/worddict"): _*)
-        .groupBy("word").agg(sum(col("n")).as("n")))
+      val dict = TextDedup.maybeMaterialize(
+        chain(spark, stateDir, "worddict", base, gen)
+          .groupBy("word").agg(sum(col("n")).as("n")))
       graft.ops.Bpe.learnMerges(dict, "word", "n", cfg.bpeMerges)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/merges")
@@ -609,10 +610,8 @@ object CorpusBuild {
         newDocs, "doc_id", "text", col("lang"), cfg.shingleN))
       val (ccStanding, shStand) = state.gen match {
         case Some(g) =>
-          val standDocs = spark.read.parquet(
-            (base to g).map(x => s"$stateDir/gen=$x/ccdocs"): _*)
-          val standLabels = spark.read.parquet(
-              (base to g).map(x => s"$stateDir/gen=$x/cclabels"): _*)
+          val standDocs = chain(spark, stateDir, "ccdocs", base, g)
+          val standLabels = chain(spark, stateDir, "cclabels", base, g)
             .groupBy("id").agg(min(col("component")).as("component"))
           (standLabels, TextDedup.maybeMaterialize(TextDedup
             .shingleRelation(standDocs, "doc_id", "text", col("lang"),
@@ -654,13 +653,9 @@ object CorpusBuild {
     * served with ZERO pair generation: one scan of the label deltas and
     * a map-side-combining min on the 8-byte id.
     */
-  def stateReleaseCc(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/cclabels"): _*)
+  def stateReleaseCc(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "cclabels")
       .groupBy("id").agg(min(col("component")).as("component"))
-  }
 
   // ---------------------------------------------------------------------
   // Stored count tables (cfg.trackCounts): the corpus-wide statistics the
@@ -682,13 +677,9 @@ object CorpusBuild {
     * the same reason the label fold is: ids only enter once and never
     * re-claim a shingle).
     */
-  def stateShingleFirst(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/spanfirst"): _*)
+  def stateShingleFirst(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "spanfirst")
       .groupBy("shk").agg(min(col("n")).as("first_doc"))
-  }
 
   /** The q122 n-gram novelty of `docs` with first-seen attribution read
     * from the STORED table — novelty of an incoming batch against the
@@ -825,23 +816,15 @@ object CorpusBuild {
     * batch's train split.
     */
   def stateClassifierCounts(spark: SparkSession,
-      stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/clfcounts"): _*)
+      stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "clfcounts")
       .groupBy("tk").agg(sum(col("c0")).as("c0"), sum(col("c1")).as("c1"))
-  }
 
   /** Folded 1-row doc-prior table (n0, n1). */
   def stateClassifierPriors(spark: SparkSession,
-      stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/clfpriors"): _*)
+      stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "clfpriors")
       .agg(sum(col("n0")).as("n0"), sum(col("n1")).as("n1"))
-  }
 
   /** The state-derived NB (model, scalars) pair —
     * [[graft.ops.NaiveBayes.modelFromCounts]] over the folded counts;
@@ -897,13 +880,9 @@ object CorpusBuild {
     * batch's train split — ≤ [[graft.ops.Dsir.B]] rows, broadcast-sized
     * at any corpus scale.
     */
-  def stateDsirCounts(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/dsircounts"): _*)
+  def stateDsirCounts(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "dsircounts")
       .groupBy("fb").agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-  }
 
   /** q188's importance weights served from STORED STATE: score `docs`
     * against the folded bucket counts — q188's exact output shape
@@ -924,12 +903,8 @@ object CorpusBuild {
   // ---------------------------------------------------------------------
 
   /** The folded eval-split CDC chunk index: (doc_id, ck) rows. */
-  def stateCdcEvalChunks(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-      (base to gen).map(g => s"$stateDir/gen=$g/cdcevalchunks"): _*)
-  }
+  def stateCdcEvalChunks(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "cdcevalchunks")
 
   /** q194's chunk-grained decontamination audit served from STORED
     * STATE: `docs`' train split is chunked at query time (the chunking
@@ -981,22 +956,14 @@ object CorpusBuild {
   // ---------------------------------------------------------------------
 
   /** Folded UNPRUNED bigram count table (bk, c2). */
-  def stateLmBigramCounts(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/lmbigrams"): _*)
+  def stateLmBigramCounts(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "lmbigrams")
       .groupBy("bk").agg(sum(col("c2")).as("c2"))
-  }
 
   /** Folded UNPRUNED unigram count table (w, c1) — vocab-bounded. */
-  def stateLmUnigramCounts(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/lmunigrams"): _*)
+  def stateLmUnigramCounts(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "lmunigrams")
       .groupBy("w").agg(sum(col("c1")).as("c1"))
-  }
 
   /** q187's perplexity readout served from STORED STATE: score `docs`
     * against the folded count tables — q187's exact output shape
@@ -1012,13 +979,9 @@ object CorpusBuild {
       stateLmUnigramCounts(spark, stateDir))
 
   private def foldCounts(spark: SparkSession, stateDir: String,
-      table: String, keys: String*): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/$table"): _*)
+      table: String, keys: String*): DataFrame =
+    storedChain(spark, stateDir, table)
       .groupBy(keys.head, keys.tail: _*).agg(sum(col("n")).as("n"))
-  }
 
   // ---------------------------------------------------------------------
   // Stored posting state (cfg.trackPostings): the inverted-index
@@ -1040,12 +1003,8 @@ object CorpusBuild {
     * re-aggregation (unlike the count folds, a position row is never
     * split across batches).
     */
-  def statePositions(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-      (base to gen).map(g => s"$stateDir/gen=$g/positions"): _*)
-  }
+  def statePositions(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "positions")
 
   /** Phrase counts ("p1 immediately followed by p2") served ENTIRELY from
     * the stored positional index: each term filters the posting table by
@@ -1092,12 +1051,8 @@ object CorpusBuild {
     * materialized at per-batch cost (PackingSpec's equivalence property,
     * persisted).
     */
-  def stateFeed(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-      (base to gen).map(g => s"$stateDir/gen=$g/feed"): _*)
-  }
+  def stateFeed(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "feed")
 
   /** BM25 top-k for `terms` served ENTIRELY from stored state: tf from
     * the posting table, df/N/avgdl from the folded postings + doc-length
@@ -1163,7 +1118,7 @@ object CorpusBuild {
   def stateBpeMerges(spark: SparkSession, stateDir: String): DataFrame = {
     val (gen, _, _) = readPointer(spark, stateDir).getOrElse(
       throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(s"$stateDir/gen=$gen/merges")
+    Tables.read(spark, s"$stateDir/gen=$gen/merges")
   }
 
   /** q108's BPE compression readout with the tokenizer LOADED from state
@@ -1193,7 +1148,7 @@ object CorpusBuild {
       docs: DataFrame): DataFrame = {
     val (gen, _, _) = readPointer(spark, stateDir).getOrElse(
       throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    val learned = spark.read.parquet(s"$stateDir/gen=$gen/unigram")
+    val learned = Tables.read(spark, s"$stateDir/gen=$gen/unigram")
       .select("piece", "em_n").collect()
       .map(r => r.getString(0) -> r.getLong(1))
     graft.ops.UnigramLm.tokenizeStats(docs,
@@ -1208,12 +1163,8 @@ object CorpusBuild {
     * fpk the 8-byte xxhash64 re-key of the md5 selection
     * (ExtensionQueries.winnowFpKeys).
     */
-  def stateFingerprints(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-      (base to gen).map(g => s"$stateDir/gen=$g/fingerprints"): _*)
-  }
+  def stateFingerprints(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "fingerprints")
 
   /** q143's partial-overlap detection, batch vs STANDING CORPUS, served
     * from the stored fingerprint table: the incoming batch is
@@ -1316,7 +1267,7 @@ object CorpusBuild {
         .filter(size(col("v")) > 0)
     val prev: Option[org.apache.spark.sql.Row] =
       if (gen > base)
-        Some(spark.read.parquet(s"$stateDir/gen=${gen - 1}/vecmeta").head())
+        Some(Tables.read(spark, s"$stateDir/gen=${gen - 1}/vecmeta").head())
       else None
     val (prevTrainedGen, prevNTrained, prevNTotal, prevMaxId) = prev
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -1342,8 +1293,7 @@ object CorpusBuild {
         math.ceil(cfg.retrainGrowth * prevNTrained).toLong)
     val (trainedGen, nTrained, cents) =
       if (needTrain) {
-        val folded = spark.read.parquet(
-          (base to gen).map(g => s"$stateDir/gen=$g/vecs"): _*)
+        val folded = chain(spark, stateDir, "vecs", base, gen)
         val (assignedAll, cs) = graft.ops.Clustering.kMeans(
           folded, "id", "v", cfg.kmeansK, cfg.kmeansIters)
         assignedAll.withColumn("g", lit(gen))
@@ -1382,7 +1332,7 @@ object CorpusBuild {
     */
   private def readCentroidRows(spark: SparkSession,
       path: String): Seq[Array[Double]] = {
-    val rows = spark.read.parquet(path)
+    val rows = Tables.read(spark, path)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
     if (rows.isEmpty) return Nil
     val cents = Array.fill(rows.map(_._1).max + 1)(
@@ -1394,11 +1344,8 @@ object CorpusBuild {
   /** The folded embedding table (cfg.trackCentroids) — (id, v),
     * disjoint per-generation appends (the vecs contract).
     */
-  def stateVecs(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet((base to gen).map(g => s"$stateDir/gen=$g/vecs"): _*)
-  }
+  def stateVecs(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "vecs")
 
   /** The stored centroid model — the latest generation's snapshot. */
   def stateCentroids(spark: SparkSession,
@@ -1416,15 +1363,11 @@ object CorpusBuild {
     * never touched (model serving without a corpus scan — the q142
     * vocabulary discipline for the embedding space).
     */
-  def stateKmeans(spark: SparkSession, stateDir: String): DataFrame = {
-    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
-      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
-    spark.read.parquet(
-        (base to gen).map(g => s"$stateDir/gen=$g/assignments"): _*)
+  def stateKmeans(spark: SparkSession, stateDir: String): DataFrame =
+    storedChain(spark, stateDir, "assignments")
       .groupBy("id")
       .agg(max(struct(col("g"), col("cluster"))).as("m"))
       .select(col("id"), col("m.cluster").as("cluster"))
-  }
 
   /** The q124 argmin gate over the STORED model: every state-served
     * assignment must minimize the distance to the stored centroids,
@@ -1600,7 +1543,7 @@ object CorpusBuild {
         s"$stateDir/gen=${state.base.get}/feed"))) {
       stateFeed(spark, stateDir).write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/feed")
-      spark.read.parquet(s"$stateDir/gen=${state.gen.get}/packtotals")
+      Tables.read(spark, s"$stateDir/gen=${state.gen.get}/packtotals")
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/packtotals")
     }
@@ -1620,10 +1563,10 @@ object CorpusBuild {
       stateKmeans(spark, stateDir).withColumn("g", lit(gen))
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/assignments")
-      spark.read.parquet(s"$stateDir/gen=${state.gen.get}/centroids")
+      Tables.read(spark, s"$stateDir/gen=${state.gen.get}/centroids")
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/centroids")
-      spark.read.parquet(s"$stateDir/gen=${state.gen.get}/vecmeta")
+      Tables.read(spark, s"$stateDir/gen=${state.gen.get}/vecmeta")
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/vecmeta")
     }
@@ -1634,12 +1577,12 @@ object CorpusBuild {
       // already trained on the full folded dict)
       stateWordDict(spark, stateDir).write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/worddict")
-      spark.read.parquet(s"$stateDir/gen=${state.gen.get}/merges")
+      Tables.read(spark, s"$stateDir/gen=${state.gen.get}/merges")
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/merges")
       // unigram piece table: snapshot — carry the latest forward (it
       // was already learned on the full folded dict)
-      spark.read.parquet(s"$stateDir/gen=${state.gen.get}/unigram")
+      Tables.read(spark, s"$stateDir/gen=${state.gen.get}/unigram")
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/unigram")
     }
@@ -1667,9 +1610,7 @@ object CorpusBuild {
         s"$stateDir/gen=${state.base.get}/ccdocs"))) {
       // slim docs fold by union (batch-disjoint appends); labels fold by
       // min per id — both rewritten as one table at the new base
-      spark.read.parquet(
-          (state.base.get to state.gen.get)
-            .map(g => s"$stateDir/gen=$g/ccdocs"): _*)
+      chain(spark, stateDir, "ccdocs", state.base.get, state.gen.get)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$stateDir/gen=$gen/ccdocs")
       stateReleaseCc(spark, stateDir).write.mode(SaveMode.Overwrite)
@@ -1688,14 +1629,30 @@ object CorpusBuild {
     gen
   }
 
+  /** One state table's generation chain `base..gen`, read as a single
+    * relation through [[Tables.read]] (its schema resolved once per chain).
+    */
+  private def chain(spark: SparkSession, stateDir: String, table: String,
+      base: Int, gen: Int): DataFrame =
+    Tables.read(spark, (base to gen).map(g => s"$stateDir/gen=$g/$table"): _*)
+
+  /** The committed chain of one state table. */
+  private def storedChain(spark: SparkSession, stateDir: String,
+      table: String): DataFrame = {
+    val (gen, _, base) = readPointer(spark, stateDir).getOrElse(
+      throw new IllegalArgumentException(s"no corpus state at $stateDir"))
+    chain(spark, stateDir, table, base, gen)
+  }
+
   private final case class State(gen: Option[Int], maxId: Option[Long],
       base: Option[Int], docs: DataFrame, labels: DataFrame,
       digests: DataFrame)
 
-  /** Read the state by folding the generation chain `base..gen`: docs and
-    * digests are disjoint appends (union); labels take `min(component)`
-    * per id — exact last-writer state because merge labels only decrease
-    * (see [[Components.mergeIncrementalDelta]]). `docSchema` shapes the
+  /** Read the state by folding the generation chain `base..gen`, each
+    * tier one [[chain]] read: docs and digests are disjoint appends
+    * (union); labels take `min(component)` per id — exact last-writer
+    * state because merge labels only decrease (see
+    * [[Components.mergeIncrementalDelta]]). `docSchema` shapes the
     * empty bootstrap frames when no state exists yet (pass null only when
     * state is known to exist).
     */
@@ -1703,13 +1660,12 @@ object CorpusBuild {
       docSchema: org.apache.spark.sql.types.StructType): State =
     readPointer(spark, stateDir) match {
       case Some((gen, maxId, base)) =>
-        def chain(table: String): DataFrame = spark.read.parquet(
-          (base to gen).map(g => s"$stateDir/gen=$g/$table"): _*)
+        def tier(table: String) = chain(spark, stateDir, table, base, gen)
         State(Some(gen), Some(maxId), Some(base),
-          chain("docs"),
-          chain("labels").groupBy("id")
+          tier("docs"),
+          tier("labels").groupBy("id")
             .agg(min(col("component")).as("component")),
-          chain("digests"))
+          tier("digests"))
       case None =>
         require(docSchema != null, s"no corpus state at $stateDir")
         import org.apache.spark.sql.types._

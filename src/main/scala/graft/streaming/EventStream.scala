@@ -37,7 +37,7 @@ object EventStream {
     val eventsFile = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = eventsFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val probe = if (fs.exists(eventsFile)) eventsFile.toString else dir
-    val scanned = spark.read.parquet(probe).schema
+    val scanned = graft.queries.Tables.read(spark, probe).schema
     graft.queries.Tables.normalizeEventTs(
       spark.readStream.schema(scanned).parquet(dir))
   }

@@ -101,6 +101,29 @@ class JobParseSpec extends AnyFunSuite {
     assert(value.contains("Middle"))
   }
 
+  test("MiniHtml: descendants and .string equal their recursive " +
+      "definitions on the real page") {
+    def preorder(e: MiniHtml.Elem): List[MiniHtml.Elem] =
+      e.children.toList.flatMap {
+        case c: MiniHtml.Elem => c :: preorder(c)
+        case _ => Nil
+      }
+    def string(e: MiniHtml.Elem): Option[String] = e.children.toList match {
+      case List(MiniHtml.TextNode(v)) => Some(v)
+      case List(c: MiniHtml.Elem) => string(c)
+      case _ => None
+    }
+    for (page <- Seq(html, "", "<a><b><c>x</c></b></a><d></d>",
+        "<a><b>x</b><b>y</b></a>")) {
+      val root = MiniHtml.parse(page)
+      val expected = preorder(root)
+      val got = root.descendants.toList
+      assert(got.length === expected.length)
+      assert(got.zip(expected).forall { case (a, b) => a eq b })
+      assert((root :: expected).forall(e => e.string == string(e)))
+    }
+  }
+
   test("MiniHtml: raw-text elements and comments are handled") {
     val doc = MiniHtml.parse(
       """<head><script>if (a < b) { x(); }</script><!-- c --></head><p>ok</p>""")

@@ -247,6 +247,26 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
     assert(hits.isEmpty, s"presentation-sort helper is back: $hits")
   }
 
+  test("stored parquet in the queries and the corpus state is read only " +
+      "through the schema resolver") {
+    // a bare parquet read infers its schema with a Spark job on every call;
+    // Tables.read resolves it once per (paths, stamp, confs)
+    import scala.jdk.CollectionConverters._
+    val bare = """read\s*\.\s*parquet\(""".r
+    val dir = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(dir.resolve("queries"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "Tables.scala").toSeq :+
+      dir.resolve("pipeline/CorpusBuild.scala")
+    val hits = files.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      bare.findAllMatchIn(text).map(m =>
+        s"$f:${text.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(files.size > 10, s"the guard scanned too few files: $files")
+    assert(hits.isEmpty, s"bare parquet read outside Tables.read: $hits")
+  }
+
   test("the terminal-ordering walk sees a sort through the AQE wrapper " +
       "and the write node") {
     import org.apache.spark.sql.execution.QueryExecution
