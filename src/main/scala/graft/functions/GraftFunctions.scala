@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 
 /** SQL-surface registration for the engine's function family (SURVEY §4.2):
   * after `GraftFunctions.registerAll(spark)`, every capability is callable
@@ -57,47 +58,44 @@ object GraftFunctions {
       "graft_frequent_items(item, k) - Misra-Gries frequent-items " +
         "summary: array<struct<item,lb>> of at most k candidates")(
       e => MisraGriesTopK(e(0), intArg(e(1)))),
-    // column-composition builders (not custom Expressions): the builder
-    // emits the SAME unresolved tree the Column API would produce
-    // (TextAnalysis.*Expr — parsed template + argument splice), the
-    // analyzer finishes resolution — still UDF-free, fully codegen'd
+    // composition builders (not custom Expressions): each calls its
+    // TextAnalysis / Splits Column function on the argument expressions
+    // and returns the composed Column's Catalyst tree, which the analyzer
+    // resolves in place — UDF-free, fully codegen'd, and the same formula
+    // the Column API runs, so SQL ≡ Column by construction.
     fn("graft_winnow_select", 3,
       "graft_winnow_select(text, k, w) - winnowing fingerprint " +
         "selection (Schleimer et al. 2004): md5 of every k-gram of " +
         "the normalized text, minimum per w-window")(
-      e => TextAnalysis.winnowSelectExpr(e(0), intArg(e(1)), intArg(e(2)))),
+      e => expression(TextAnalysis.winnowSelect(column(e(0)),
+        intArg(e(1)), intArg(e(2))))),
     fn("graft_run_entropy", 1,
       "graft_run_entropy(arr) - integer-log2 self-entropy sum of a " +
         "string array: sum over distinct elements of " +
         "f*(floor(log2 n) - floor(log2 f)), one sorted-run pass")(
-      e => TextAnalysis.runEntropySumExpr(e(0))),
-    // the remaining text formulas, also as splice builders (these were
-    // UDF wrappers before the parsed-template technique existed — now
-    // every registered function is UDF-free except the HTML parsers).
-    // NULL contract (differs from the retired UDF wrappers, which
-    // returned 0/"und"/0 on NULL): these follow SQL null propagation —
-    // graft_token_count(NULL) and graft_quality_ppm(NULL) are NULL,
+      e => expression(TextAnalysis.runEntropySum(column(e(0))))),
+    // NULL contract: SQL null propagation, as the Column functions have
+    // it — graft_token_count(NULL) and graft_quality_ppm(NULL) are NULL,
     // graft_lang_id(NULL) is 'und' (its CASE falls through to the ELSE
-    // branch). The Column twins share the same trees, so SQL ≡ Column
-    // holds on NULL too — asserted by SqlSurfaceSpec's NULL-input case.
-    // The corpus itself has no NULL text (documents.text is generated
-    // non-null), so no query result depends on the choice.
+    // branch); SqlSurfaceSpec's NULL-input case pins it. The corpus
+    // itself has no NULL text (documents.text is generated non-null), so
+    // no query result depends on the choice.
     fn("graft_token_count", 1,
       "graft_token_count(text) - whitespace token count")(
-      e => TextAnalysis.tokenCountExpr(e(0))),
+      e => expression(TextAnalysis.tokenCount(column(e(0))))),
     fn("graft_lang_id", 1,
       "graft_lang_id(text) - stopword-ratio argmax language id " +
         "(en/de/fr/es/und)")(
-      e => TextAnalysis.langIdExpr(e(0))),
+      e => expression(TextAnalysis.langId(column(e(0))))),
     fn("graft_quality_ppm", 1,
       "graft_quality_ppm(text) - exact-integer composite quality " +
         "score in parts-per-million (length saturation, punctuation " +
         "cleanliness, stopword presence, token-length sanity)")(
-      e => TextAnalysis.qualityScorePpmExpr(e(0))),
+      e => expression(TextAnalysis.qualityScorePpm(column(e(0))))),
     fn("graft_split", 1,
       "graft_split(id) - canonical deterministic 90/5/5 " +
         "train/val/test label from an id (md5-bucket arithmetic)")(
-      e => TextAnalysis.splitExpr(e(0))),
+      e => expression(graft.ops.Splits.split(column(e(0))))),
     // the codec tier's SQL surface (binary -> decoded struct): native
     // expressions over the from-scratch image/audio decoders
     fn("graft_image_stats", 1,
@@ -129,9 +127,8 @@ object GraftFunctions {
   }
 }
 
-/** Plain-Scala evaluations of the TextAnalysis formulas for the SQL UDF
-  * surface (and as an independent cross-check of the Column formulations —
-  * see TextAnalysisParitySpec).
+/** Plain-Scala evaluations of the TextAnalysis formulas: an independent
+  * cross-check of the Column formulations (SqlSurfaceSpec).
   */
 object TextAnalysisEval {
 

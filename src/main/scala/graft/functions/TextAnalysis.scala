@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * they stay inside WholeStageCodegen and scale linearly with input: token
   * counting, BPE-ish token estimation, language ID (stopword-ratio
   * heuristic), quality scoring, normalization and MD5 fingerprinting,
-  * and word n-gram shingling (the substrate for MinHash / Jaccard dedup).
+  * winnowing, and word n-gram shingling (the substrate for MinHash /
+  * Jaccard dedup). Each formula exists once, as a Column function; the
+  * `graft_*` SQL functions in [[GraftFunctions]] are built from these
+  * same functions, so SQL and the Column API cannot drift apart.
   */
 object TextAnalysis {
 
@@ -202,179 +205,65 @@ object TextAnalysis {
     */
   def floorLog2(x: Column): Column = (length(bin(x)) - 1).cast("long")
 
-  /** The winnowing fingerprint selection as ONE composable Column
-    * (q140's algebra — Schleimer et al. 2004, public literature):
-    * normalize the text, md5-hash every k-gram, keep each w-window's
-    * minimum hash. No intermediate columns, so it can be built by a SQL
-    * function builder (`graft_winnow_select`); the repeated `grams`
-    * subtree is deterministic, so codegen subexpression elimination
-    * evaluates the hash chain once per row. Both guards are explicit
-    * because Spark's sequence(1, n) DESCENDS for n ≤ 0 (the
-    * ExtensionQueries.winnowSel contract, kept in lockstep by
-    * WinnowSpec).
+  /** Binds `v` once per row for `f`: `f` reads a lambda variable, so a
+    * computed `v` is evaluated once however often `f` uses it — also
+    * inside `f`'s own per-element lambdas, where an inlined subtree would
+    * be recomputed per element (subexpression elimination does not reach
+    * into lambda bodies).
     */
-  def winnowSelect(text: Column, k: Int, w: Int): Column = {
-    require(k > 0 && w > 0, "winnow k and w must be positive")
-    val s = normalizeText(text)
-    val grams = when(length(s) >= k,
+  private def let(v: Column)(f: Column => Column): Column =
+    element_at(transform(array(v), f), 1)
+
+  /** md5 hex of every k-gram of `s`, in position order — winnowing's
+    * first step (Schleimer et al. 2004). Fewer than k chars → empty; the
+    * guard is explicit because Spark's sequence(1, n) DESCENDS for n ≤ 0.
+    */
+  def grams(s: Column, k: Int): Column =
+    when(length(s) >= k,
         transform(sequence(lit(1), length(s) - (k - 1)),
           i => md5(substr(s, i, lit(k)))))
       .otherwise(array().cast("array<string>"))
+
+  /** The minimum of every window of w consecutive `grams` — winnowing's
+    * selection. Fewer than w grams → empty (same sequence guard).
+    */
+  def windowMins(grams: Column, w: Int): Column =
     when(size(grams) >= w,
         transform(sequence(lit(1), size(grams) - (w - 1)),
           j => array_min(slice(grams, j, lit(w)))))
       .otherwise(array().cast("array<string>"))
-  }
 
-  // ---- Expression-level twins for the SQL function registry ----------
-  // A registry builder receives and returns CATALYST expressions during
-  // analysis; a Column-node bridge stays Unevaluable there (the node
-  // conversion only happens at the Dataset boundary), so these builders
-  // PARSE the same SQL the Column helpers would emit and splice the
-  // argument expression over a placeholder attribute — the analyzer's
-  // fixed-point resolution then resolves the unresolved tree in place,
-  // and the result is ordinary codegen'd built-in functions (no UDF).
-
-  private lazy val sqlParser =
-    new org.apache.spark.sql.catalyst.parser.CatalystSqlParser()
-
-  private def splice(template: String, placeholder: String,
-      arg: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    sqlParser.parseExpression(template).transformUp {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          if a.name == placeholder => arg
-      // inside a lambda body the parser defers identifier binding, so
-      // the placeholder parses as an unresolved LAMBDA variable there
-      case v: org.apache.spark.sql.catalyst.expressions.UnresolvedNamedLambdaVariable
-          if v.nameParts == Seq(placeholder) => arg
-    }
-
-  /** [[winnowSelect]] as a registry builder (graft_winnow_select). */
-  private[graft] def winnowSelectExpr(
-      text: org.apache.spark.sql.catalyst.expressions.Expression,
-      k: Int, w: Int): org.apache.spark.sql.catalyst.expressions.Expression = {
+  /** The winnowing fingerprint selection of `text` as ONE Column (q140's
+    * algebra): [[windowMins]] of the [[grams]] of the [[normalizeText]]
+    * form. The normalized text and the gram array are each let-bound, so
+    * both are computed once per row and the whole selection is O(L·(k+w))
+    * per document. `ExtensionQueries.winnowSel` builds its s/grams/sel
+    * columns from the same pieces; `graft_winnow_select` is this
+    * function.
+    */
+  def winnowSelect(text: Column, k: Int, w: Int): Column = {
     require(k > 0 && w > 0, "winnow k and w must be positive")
-    // the SQL text mirrors ExtensionQueries.winnowSel verbatim (doubled
-    // backslashes: the SQL literal itself escapes them once)
-    val s = "trim(regexp_replace(regexp_replace(lower(__graft_arg__), " +
-      "'[^a-z0-9\\\\s]', ''), '\\\\s+', ' '))"
-    val grams = s"CASE WHEN length($s) >= $k THEN transform(" +
-      s"sequence(1, length($s) - ${k - 1}), i -> md5(substr($s, i, $k)))" +
-      " ELSE array() END"
-    val sel = s"CASE WHEN size($grams) >= $w THEN transform(" +
-      s"sequence(1, size($grams) - ${w - 1})," +
-      s" j -> array_min(slice($grams, j, $w))) ELSE array() END"
-    splice(sel, "__graft_arg__", text)
-  }
-
-  /** [[runEntropySum]] as a registry builder (graft_run_entropy). */
-  private[graft] def runEntropySumExpr(
-      arr: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val n = "CAST(size(__graft_arg__) AS BIGINT)"
-    def l2(x: String) = s"CAST(length(bin($x)) - 1 AS BIGINT)"
-    def closed(run: String) =
-      s"CASE WHEN $run > 0L THEN $run * (${l2(n)} - ${l2(run)}) ELSE 0L END"
-    val isRun = "st.run > 0L AND t = st.prev"
-    val template =
-      s"""aggregate(
-         |  array_sort(__graft_arg__),
-         |  named_struct('prev', get(__graft_arg__, 0), 'run', 0L, 'acc', 0L),
-         |  (st, t) -> named_struct(
-         |    'prev', t,
-         |    'run', CASE WHEN $isRun THEN st.run + 1L ELSE 1L END,
-         |    'acc', CASE WHEN $isRun THEN st.acc
-         |           ELSE st.acc + (${closed("st.run")}) END),
-         |  st -> st.acc + (${closed("st.run")}))""".stripMargin
-    splice(template, "__graft_arg__", arr)
-  }
-
-  /** [[qualityScorePpm]] as a registry builder (graft_quality_ppm).
-    * The SQL text mirrors the Column composition term for term (same
-    * exact-integer intDiv tree, same saturations, same stopword
-    * literals); SqlSurfaceSpec asserts SQL ≡ Column on real rows, so
-    * the two formulations cannot drift apart silently.
-    */
-  private[graft] def qualityScorePpmExpr(
-      text: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val enList = stopwords("en").map(w => s"'$w'").mkString("array(", ", ", ")")
-    def iDiv(a: String, b: String) =
-      s"CAST((($a) - pmod($a, $b)) / ($b) AS BIGINT)"
-    val len = "CAST(length(__graft_arg__) AS BIGINT)"
-    val toks = "CAST(greatest(size(split(trim(__graft_arg__), '\\\\s+')), 1) AS BIGINT)"
-    val punct = "CAST(regexp_count(__graft_arg__, '[^A-Za-z0-9\\\\s]') AS BIGINT)"
-    val stop = "CAST(size(filter(split(trim(__graft_arg__), '\\\\s+'), " +
-      s"x -> array_contains($enList, x))) AS BIGINT)"
-    val lenScore = s"least(${iDiv(s"$len * 1000000", "500")}, 1000000)"
-    val punctScore = s"1000000 - ${iDiv(s"$punct * 1000000", s"greatest($len, 1)")}"
-    val stopScore = s"least(${iDiv(s"$stop * 4 * 1000000", toks)}, 1000000)"
-    val tokScore = s"least(${iDiv(s"$len * 1000000", s"$toks * 8")}, 1000000)"
-    splice(iDiv(s"($lenScore) + ($punctScore) + ($stopScore) + ($tokScore)",
-      "4"), "__graft_arg__", text)
-  }
-
-  /** [[tokenCount]] as a registry builder (graft_token_count). */
-  private[graft] def tokenCountExpr(
-      text: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression =
-    splice("size(split(trim(__graft_arg__), '\\\\s+'))", "__graft_arg__", text)
-
-  /** [[langId]] as a registry builder (graft_lang_id): the same
-    * stopword-ratio argmax with the same tie-break order (en > de > fr >
-    * es > und), mirrored term for term.
-    */
-  private[graft] def langIdExpr(
-      text: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val toks = "split(trim(__graft_arg__), '\\\\s+')"
-    def ratio(lang: String) = {
-      val list = stopwords(lang).map(w => s"'$w'")
-        .mkString("array(", ", ", ")")
-      s"CAST(size(filter($toks, x -> array_contains($list, x))) AS DOUBLE)" +
-        s" / CAST(greatest(size($toks), 1) AS DOUBLE)"
-    }
-    val langs = Seq("en", "de", "fr", "es")
-    val rs = langs.map(l => l -> ratio(l))
-    val best = rs.map(_._2).mkString("greatest(", ", ", ")")
-    val chain = rs.map { case (l, r) => s"WHEN ($r) = ($best) THEN '$l'" }
-      .mkString(" ")
-    splice(s"CASE WHEN ($best) <= 0D THEN 'und' $chain ELSE 'und' END",
-      "__graft_arg__", text)
-  }
-
-  /** [[graft.ops.Splits.split]] as a registry builder (graft_split) —
-    * the canonical 90/5/5 md5-bucket label from an id; SqlSurfaceSpec
-    * asserts SQL ≡ Column so the arithmetic stays locked to Splits.
-    */
-  private[graft] def splitExpr(
-      id: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val bucket = "CAST(conv(substring(md5(CAST(__graft_arg__ AS STRING)), " +
-      "1, 8), 16, 10) AS BIGINT) % 100"
-    splice(s"CASE WHEN ($bucket) < 90 THEN 'train' " +
-      s"WHEN ($bucket) < 95 THEN 'val' ELSE 'test' END",
-      "__graft_arg__", id)
+    let(normalizeText(text))(s => let(grams(s, k))(windowMins(_, w)))
   }
 
   /** Per-row "self-entropy" of `arr` in the q136 integer-log2
     * quantization: Σ over distinct elements of f·(⌊log2 n⌋ − ⌊log2 f⌋)
     * (n = array size, f = the element's multiplicity) — the within-doc
     * counterpart of corpus-LM surprisal, bit-stable where float
-    * Σ p·ln p is not. Computed in ONE sorted-run pass (equal elements
-    * adjacent after `array_sort`; each run closes by adding
-    * run·(L(n)−L(run)), the final run closes in the finish lambda) —
+    * Σ p·ln p is not. Since the multiplicities sum to n this is
+    * n·⌊log2 n⌋ − Σ f·⌊log2 f⌋, computed in ONE sorted-run pass (equal
+    * elements adjacent after `array_sort`; each run adds run·⌊log2 run⌋
+    * when it closes, the last one in the finish lambda) over the
+    * let-bound argument, so a computed `arr` is evaluated once per row —
     * map-only: no explode, no per-document shuffle. Empty arrays yield 0.
     */
-  def runEntropySum(arr: Column): Column = {
-    val n = size(arr).cast("long")
-    def l2(x: Column) = (length(bin(x)) - 1).cast("long")
-    def closed(run: Column) =
-      when(run > 0L, run * (l2(n) - l2(run))).otherwise(lit(0L))
+  def runEntropySum(arr: Column): Column = let(arr) { a =>
+    val n = size(a).cast("long")
+    // floorLog2(0) = 0, so the empty opening run closes to 0
+    def closed(run: Column) = run * floorLog2(run)
     aggregate(
-      array_sort(arr),
-      struct(get(arr, lit(0)).as("prev"), lit(0L).as("run"),
+      array_sort(a),
+      struct(get(a, lit(0)).as("prev"), lit(0L).as("run"),
         lit(0L).as("acc")),
       (st, t) => {
         val isRun = st.getField("run") > 0L && t === st.getField("prev")
@@ -384,7 +273,7 @@ object TextAnalysis {
             .otherwise(st.getField("acc") + closed(st.getField("run")))
             .as("acc"))
       },
-      st => st.getField("acc") + closed(st.getField("run")))
+      st => n * floorLog2(n) - (st.getField("acc") + closed(st.getField("run"))))
   }
 
   /** Collapse runs of consecutive duplicate tokens to one occurrence

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ArraySeq
+
 /** Sequence packing: GPT-style concat-then-chunk placement. Docs
   * concatenate in id order within each source; each doc's landing position
   * is (seq_id, seq_offset) over fixed-length token sequences — both pure
@@ -71,7 +73,7 @@ object Packing {
   def packSequences(counts: DataFrame, idCol: String, srcCol: String,
       tokCol: String, seqLen: Long, shardRows: Long): DataFrame =
     place(cumBefore(counts, idCol, srcCol, tokCol, shardRows),
-      counts.columns, seqLen)
+      ArraySeq.unsafeWrapArray(counts.columns), seqLen)
 
   /** INCREMENTAL pack: place an id-monotone batch as the CONTINUATION of
     * an already-packed corpus, using a stored per-source token total
@@ -93,7 +95,8 @@ object Packing {
       .join(broadcast(baseTotals), Seq(srcCol), "left")
       .withColumn("_cum_before",
         coalesce(col("_base_toks"), lit(0L)) + col("_cum_before"))
-    val placements = place(based, counts.columns, seqLen)
+    val placements =
+      place(based, ArraySeq.unsafeWrapArray(counts.columns), seqLen)
     val newTotals = counts.groupBy(col(srcCol))
       .agg(sum(col(tokCol)).as("_batch_toks"))
       .join(baseTotals, Seq(srcCol), "full")

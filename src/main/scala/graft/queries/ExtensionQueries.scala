@@ -435,23 +435,19 @@ object ExtensionQueries {
     * projection — one corpus scan, no key shuffle; the
     * md5-per-position cost distributes with the rows.
     */
-  /** The per-doc winnowing selection (doc_id, grams, sel) shared by q140's
-    * readout, q143's overlap detector, and WinnowSpec — k-gram md5 hashes
-    * plus the window-min selection, both HOF chains guarding the empty
-    * case explicitly (Spark's sequence(1, n) DESCENDS for n ≤ 0).
+  /** The per-doc winnowing selection shared by q140's readout, q143's
+    * overlap detector, and WinnowSpec: `docs` plus the
+    * [[TextAnalysis.winnowSelect]] pieces as columns — `s` (the
+    * normalized text), `grams` (its k-gram md5 hashes,
+    * [[TextAnalysis.grams]]) and `sel` (the window minima,
+    * [[TextAnalysis.windowMins]]).
     */
   private[graft] def winnowSel(docs: DataFrame, k: Int = 8,
       w: Int = 4): DataFrame =
     docs
       .withColumn("s", TextAnalysis.normalizeText(col("text")))
-      .withColumn("grams", expr(
-        s"CASE WHEN length(s) >= $k THEN transform(" +
-          s"sequence(1, length(s) - ${k - 1}), i -> md5(substr(s, i, $k)))" +
-          " ELSE array() END"))
-      .withColumn("sel", expr(
-        s"CASE WHEN size(grams) >= $w THEN transform(" +
-          s"sequence(1, size(grams) - ${w - 1})," +
-          s" j -> array_min(slice(grams, j, $w))) ELSE array() END"))
+      .withColumn("grams", TextAnalysis.grams(col("s"), k))
+      .withColumn("sel", TextAnalysis.windowMins(col("grams"), w))
 
   /** Per-doc DISTINCT fingerprints, re-keyed to 8 bytes INSIDE the
     * per-row HOF: `array_distinct(transform(sel, xxhash64))` — the

@@ -490,6 +490,13 @@ object TokenizerQueries {
     s"/tmp/graft_q118_state_${ProcessHandle.current().pid()}_" +
       math.abs(d.hashCode.toLong)
 
+  /** Posting-state dirs this process has built; each gets one shutdown
+    * hook that deletes it, since the pid key means no later process can
+    * reuse it.
+    */
+  private val builtStateDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Build the posting+pack state once per (process, sf dir): three
     * id-monotone `ingestBatch` generations with the posting and pack
     * trackers on and the near-dup tier off — the index-maintenance
@@ -503,6 +510,8 @@ object TokenizerQueries {
   private[graft] def ensurePostingState(s: SparkSession, d: String): String = {
     val dir = postingStateDir(d)
     if (!new java.io.File(s"$dir/LATEST").exists()) {
+      if (builtStateDirs.add(dir)) sys.addShutdownHook(
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)))
       val cfg = graft.pipeline.CorpusBuild.Config(
         trackPostings = true, trackPack = true, trackDrift = true,
         trackPositions = true, trackMerges = true,

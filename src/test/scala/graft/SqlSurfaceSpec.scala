@@ -80,6 +80,35 @@ class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
     assert(viaSql === viaCols)
   }
 
+  test("composition builders evaluate a computed argument outside every " +
+      "per-element lambda body") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate,
+      Expression, HigherOrderFunction, Lower}
+    import spark.implicits._
+    Seq((1L, "Plain Text here")).toDF("doc_id", "text")
+      .createOrReplaceTempView("sql_surface_audit")
+    // every Column-derived builder, over an argument computed by lower():
+    // a lambda body holding that subtree recomputes it per array element
+    val calls = Seq(
+      "graft_winnow_select(lower(text), 8, 4)",
+      "graft_run_entropy(split(lower(text), ' '))",
+      "graft_token_count(lower(text))",
+      "graft_lang_id(lower(text))",
+      "graft_quality_ppm(lower(text))",
+      "graft_split(lower(text))")
+    def perElementBodies(e: Expression): Seq[Expression] = e.flatMap {
+      case a: ArrayAggregate => Seq(a.merge) // finish runs once per row
+      case h: HigherOrderFunction => h.functions
+      case _ => Nil
+    }
+    val leaks = calls.filter { call =>
+      spark.sql(s"SELECT $call FROM sql_surface_audit").queryExecution
+        .analyzed.flatMap(_.expressions).flatMap(perElementBodies)
+        .exists(_.exists(_.isInstanceOf[Lower]))
+    }
+    assert(leaks.isEmpty, s"argument re-evaluated per element by: $leaks")
+  }
+
   test("graft_quality_ppm / graft_split callable from SQL and equal to " +
       "their Column-API twins on the corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -14,21 +14,12 @@ import graft.queries.ExtensionQueries
   */
 class WinnowSpec extends AnyFunSuite with SharedSpark {
 
-  // mirrors q140's selection (k=8, w=4) but keeps the full fingerprint
-  // SET per doc so overlap is observable; q140's query itself only
-  // exposes counts + min (the oracle-checkable readout)
+  // q140's own selection (k=8, w=4), keeping the full fingerprint SET
+  // per doc so overlap is observable; q140's query itself only exposes
+  // counts + min (the oracle-checkable readout)
   private def fingerprints(texts: Seq[(Long, String)]): Map[Long, Set[String]] = {
     import spark.implicits._
-    val df = texts.toDF("doc_id", "text")
-      .withColumn("s", graft.functions.TextAnalysis.normalizeText(col("text")))
-      .withColumn("grams", expr(
-        "CASE WHEN length(s) >= 8 THEN transform(" +
-          "sequence(1, length(s) - 7), i -> md5(substr(s, i, 8)))" +
-          " ELSE array() END"))
-      .withColumn("sel", expr(
-        "CASE WHEN size(grams) >= 4 THEN transform(" +
-          "sequence(1, size(grams) - 3), j -> array_min(slice(grams, j, 4)))" +
-          " ELSE array() END"))
+    val df = ExtensionQueries.winnowSel(texts.toDF("doc_id", "text"))
       .select(col("doc_id"), array_distinct(col("sel")).as("fps"))
     df.collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
   }
