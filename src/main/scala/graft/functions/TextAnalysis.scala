@@ -279,10 +279,13 @@ object TextAnalysis {
   /** Collapse runs of consecutive duplicate tokens to one occurrence
     * ("batch batch batch" → "batch") — the Gopher-family self-repetition
     * cleanup, as a pure per-row transform (two-arg filter HOF: keep index
-    * 0 and every token that differs from its predecessor).
+    * 0 and every token that differs from its predecessor). `toks` is
+    * let-bound, so a computed argument is evaluated once per row, not
+    * once per token by the predecessor lookup.
     */
-  def collapseRuns(toks: Column): Column =
+  def collapseRuns(toks: Column): Column = let(toks) { a =>
     // greatest(i, 1) keeps the predecessor lookup inside ANSI bounds at
     // index 0 (where the i === 0 arm decides anyway: t =!= t is false)
-    filter(toks, (t, i) => i === 0 || t =!= element_at(toks, greatest(i, lit(1))))
+    filter(a, (t, i) => i === 0 || t =!= element_at(a, greatest(i, lit(1))))
+  }
 }

@@ -25,11 +25,18 @@ object Dedupe {
     df.dropDuplicates(keys)
 
   /** Deterministic first-row-per-key: the row that sorts first by
-    * `order` within each key group wins.
+    * `order` within each key group wins. Each `perKey` (name, aggregate)
+    * is evaluated over the whole key group before the losers drop, so
+    * the winner can carry its group's size (q74's `n_docs`) in the same
+    * sorted pass.
     */
-  def firstRowPerKey(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
+  def firstRowPerKey(df: DataFrame, keys: Seq[String], order: Seq[Column],
+      perKey: Seq[(String, Column)] = Nil): DataFrame = {
+    val group = Window.partitionBy(keys.map(col): _*)
+    val ranked = df.withColumn("__rn", row_number().over(group.orderBy(order: _*)))
+    perKey.foldLeft(ranked) { case (acc, (name, agg)) =>
+        acc.withColumn(name, agg.over(group))
+      }
       .filter(col("__rn") === 1)
       .drop("__rn")
   }

@@ -58,16 +58,28 @@ object NaiveBayes {
       tok.groupBy("tok")
         .agg(sum(when(col("label") === 0, 1L).otherwise(0L)).as("c0"),
           sum(when(col("label") === 1, 1L).otherwise(0L)).as("c1")))
-    // scalar side: class token totals, vocabulary size, doc priors —
-    // now an agg over the vocab-sized materialized counts, not a
-    // second corpus pass
+    // class token totals and vocabulary size aggregate the vocab-sized
+    // materialized counts, not a second corpus pass
+    smoothed(counts, "tok", docs.agg(
+        sum(when(col(labelCol) === 0, 1L).otherwise(0L)).as("n0"),
+        sum(when(col(labelCol) === 1, 1L).otherwise(0L)).as("n1")),
+      "NaiveBayes.train", "the training set")
+  }
+
+  /** The Laplace-smoothed (model, scalars) pair over per-token class
+    * counts `counts` (key, c0, c1) and 1-row doc priors (n0, n1): the
+    * model holds each token's ratio ln θ₁ − ln θ₀ keyed by `key`, the
+    * scalars the unseen-token default ratio and the log prior. `who`
+    * and `where` name the caller and its training data in the
+    * single-class guard's message.
+    */
+  private def smoothed(counts: DataFrame, key: String, priors: DataFrame,
+      who: String, where: String): (DataFrame, DataFrame) = {
     val scal = counts.agg(
         sum(col("c0")).as("tot0"),
         sum(col("c1")).as("tot1"),
         count(lit(1)).as("v"))
-      .crossJoin(docs.agg(
-        sum(when(col(labelCol) === 0, 1L).otherwise(0L)).as("n0"),
-        sum(when(col(labelCol) === 1, 1L).otherwise(0L)).as("n1")))
+      .crossJoin(priors) // 1-row x 1-row scalar product
       .select(col("tot0"), col("tot1"), col("v"),
         (log((lit(1.0)) / (col("tot1") + col("v"))) -
           log(lit(1.0) / (col("tot0") + col("v")))).as("default_ratio"),
@@ -80,16 +92,14 @@ object NaiveBayes {
         when(col("n0") > 0 && col("n1") > 0,
             log(col("n1").cast("double") / col("n0")))
           .otherwise(assert_true(col("n0") > 0 && col("n1") > 0,
-            lit("NaiveBayes.train: both classes (0 and 1) must be " +
-              "present in the training set")).cast("double"))
+            lit(s"$who: both classes (0 and 1) must be present in $where"))
+            .cast("double"))
           .as("log_prior"))
     val model = counts
       .crossJoin(broadcast(scal.select("tot0", "tot1", "v")))
-      .select(col("tok"),
-        (log((col("c1") + 1) /
-            (col("tot1") + col("v"))) -
-          log((col("c0") + 1) /
-            (col("tot0") + col("v")))).as("ratio"))
+      .select(col(key),
+        (log((col("c1") + 1) / (col("tot1") + col("v"))) -
+          log((col("c0") + 1) / (col("tot0") + col("v")))).as("ratio"))
     (model, scal.select("default_ratio", "log_prior"))
   }
 
@@ -126,45 +136,20 @@ object NaiveBayes {
     * score with [[predictByKey]].
     */
   def modelFromCounts(counts: DataFrame,
-      priors: DataFrame): (DataFrame, DataFrame) = {
-    val scal = counts.agg(sum("c0").as("tot0"), sum("c1").as("tot1"),
-        count(lit(1)).as("v"))
-      .crossJoin(priors) // 1-row x 1-row scalar product
-      .select(col("tot0"), col("tot1"), col("v"),
-        (log(lit(1.0) / (col("tot1") + col("v"))) -
-          log(lit(1.0) / (col("tot0") + col("v")))).as("default_ratio"),
-        when(col("n0") > 0 && col("n1") > 0,
-            log(col("n1").cast("double") / col("n0")))
-          .otherwise(assert_true(col("n0") > 0 && col("n1") > 0,
-            lit("NaiveBayes.modelFromCounts: both classes (0 and 1) " +
-              "must be present in the folded state")).cast("double"))
-          .as("log_prior"))
-    val model = counts
-      .crossJoin(broadcast(scal.select("tot0", "tot1", "v")))
-      .select(col("tk"),
-        (log((col("c1") + 1) / (col("tot1") + col("v"))) -
-          log((col("c0") + 1) / (col("tot0") + col("v")))).as("ratio"))
-    (model, scal.select("default_ratio", "log_prior"))
-  }
+      priors: DataFrame): (DataFrame, DataFrame) =
+    smoothed(counts, "tk", priors,
+      "NaiveBayes.modelFromCounts", "the folded state")
 
   /** [[predict]] against a tk-keyed model (the [[modelFromCounts]]
     * shape): per-doc term frequencies hash each token with the same
     * xxhash64 and left-join the BROADCAST model.
     */
   def predictByKey(docs: DataFrame, textCol: String, idCol: String,
-      model: DataFrame, scalars: DataFrame): DataFrame = {
-    val tf = tokens(docs.select(col(idCol), col(textCol)), textCol)
-      .groupBy(col(idCol), xxhash64(col("tok")).as("tk"))
-      .agg(count(lit(1)).as("tf"))
-    tf.join(broadcast(model), Seq("tk"), "left_outer")
-      .crossJoin(broadcast(scalars))
-      .groupBy(idCol)
-      .agg((sum(col("tf") *
-          coalesce(col("ratio"), col("default_ratio"))) +
-        first("log_prior")).as("log_odds"))
-      .select(col(idCol),
-        when(col("log_odds") > 0, 1L).otherwise(0L).as("predicted"))
-  }
+      model: DataFrame, scalars: DataFrame): DataFrame =
+    scored(tokens(docs.select(col(idCol), col(textCol)), textCol)
+        .groupBy(col(idCol), xxhash64(col("tok")).as("tk"))
+        .agg(count(lit(1)).as("tf")),
+      "tk", idCol, model, scalars)
 
   /** Score docs with a trained (model, scalars) pair: per-doc term
     * frequencies left-join the BROADCAST model (unseen tokens take the
@@ -173,10 +158,17 @@ object NaiveBayes {
     * output.
     */
   def predict(docs: DataFrame, textCol: String, idCol: String,
-      model: DataFrame, scalars: DataFrame): DataFrame = {
-    val tf = tokens(docs.select(col(idCol), col(textCol)), textCol)
-      .groupBy(idCol, "tok").agg(count(lit(1)).as("tf"))
-    tf.join(broadcast(model), Seq("tok"), "left_outer")
+      model: DataFrame, scalars: DataFrame): DataFrame =
+    scored(tokens(docs.select(col(idCol), col(textCol)), textCol)
+        .groupBy(idCol, "tok").agg(count(lit(1)).as("tf")),
+      "tok", idCol, model, scalars)
+
+  /** The scoring tail over per-doc term frequencies `tf` (idCol, key,
+    * tf) and a model keyed by `key`.
+    */
+  private def scored(tf: DataFrame, key: String, idCol: String,
+      model: DataFrame, scalars: DataFrame): DataFrame =
+    tf.join(broadcast(model), Seq(key), "left_outer")
       .crossJoin(broadcast(scalars))
       .groupBy(idCol)
       .agg((sum(col("tf") *
@@ -184,5 +176,4 @@ object NaiveBayes {
         first("log_prior")).as("log_odds"))
       .select(col(idCol),
         when(col("log_odds") > 0, 1L).otherwise(0L).as("predicted"))
-  }
 }

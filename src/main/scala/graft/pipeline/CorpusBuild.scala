@@ -709,19 +709,10 @@ object CorpusBuild {
   def stateSpanAudit(spark: SparkSession, stateDir: String,
       docs: DataFrame, cfg: Config = Config()): DataFrame = {
     import graft.queries.MixQueries
-    import graft.functions.TextAnalysis
     val dup = stateShingleCounts(spark, stateDir)
       .filter(col("n") >= 2).select("shk")
-    val perDoc = MixQueries.spanAgg(
-      MixQueries.shingleOcc(docs, cfg.spanK), dup, cfg.spanK)
-    docs.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_toks"),
-        coalesce(col("spans"), lit(0L)).as("n_dup_spans"),
-        coalesce(col("dup_toks"), lit(0L)).as("n_dup_tokens"),
-        expr("(1000000 * coalesce(dup_toks, 0L)) DIV greatest(n_toks, 1L)")
-          .as("dup_ppm"))
+    MixQueries.spanReadout(docs, MixQueries.spanAgg(
+      MixQueries.shingleOcc(docs, cfg.spanK), dup, cfg.spanK))
   }
 
   /** The q107 count-statistics LM scoring of `docs` against the STORED
@@ -731,20 +722,8 @@ object CorpusBuild {
   def stateLmScore(spark: SparkSession, stateDir: String,
       docs: DataFrame): DataFrame = {
     import graft.queries.TokenizerQueries
-    val counts = stateBigramCounts(spark, stateDir)
-    val perDoc = TokenizerQueries.bigramOcc(docs).join(counts, "bk")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("n")).as("sum_freq"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("n_hapax"))
-    docs.select(col("doc_id"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("sum_freq"), lit(0L)).as("sum_freq"),
-        coalesce(col("n_hapax"), lit(0L)).as("n_hapax"),
-        expr("(1000000 * coalesce(sum_freq, 0L)) " +
-          "DIV greatest(coalesce(n_bigrams, 0L), 1L)").as("mean_freq_ppm"))
+    TokenizerQueries.lmReadout(docs, TokenizerQueries.bigramOcc(docs),
+      stateBigramCounts(spark, stateDir))
   }
 
   /** The monitor dimensions as (dim, bucket) rows, one per doc per dim.
@@ -786,22 +765,11 @@ object CorpusBuild {
       .agg(count(lit(1)).as("n_cur"))
     // full outer: mass present on one side only is exactly the drift a
     // vanished (or brand-new) bucket contributes
-    val counts = ref.join(cur, Seq("dim", "bucket"), "full_outer")
-      .select(col("dim"), col("bucket"),
-        coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    val totals = counts.groupBy("dim")
-      .agg(sum("n_ref").as("tot_ref"), sum("n_cur").as("tot_cur"))
-    val terms = counts.join(broadcast(totals), "dim")
-      .withColumn("term",
-        abs(col("n_ref") * col("tot_cur") - col("n_cur") * col("tot_ref")))
-    terms.select(col("dim"), col("bucket"), col("n_ref"), col("n_cur"),
-        expr("(1000000 * term) DIV (2 * tot_ref * tot_cur)").as("drift_ppm"))
-      .unionByName(terms.groupBy("dim", "tot_ref", "tot_cur")
-        .agg(sum("term").as("t"))
-        .select(col("dim"), lit("TOTAL").as("bucket"),
-          col("tot_ref").as("n_ref"), col("tot_cur").as("n_cur"),
-          expr("(1000000 * t) DIV (2 * tot_ref * tot_cur)").as("drift_ppm")))
+    graft.queries.AnalyticsQueries.tvdDrift(
+      ref.join(cur, Seq("dim", "bucket"), "full_outer")
+        .select(col("dim"), col("bucket"),
+          coalesce(col("n_ref"), lit(0L)).as("n_ref"),
+          coalesce(col("n_cur"), lit(0L)).as("n_cur")))
   }
 
   // ---------------------------------------------------------------------
@@ -846,15 +814,10 @@ object CorpusBuild {
     */
   def stateNbScores(spark: SparkSession, stateDir: String,
       docs: DataFrame): DataFrame = {
-    val base = graft.queries.ClassifierQueries.planted(docs)
+    import graft.queries.ClassifierQueries
     val (model, scal) = stateClassifierModel(spark, stateDir)
-    graft.ops.NaiveBayes.predictByKey(
-        base.filter(col("is_test")), "aug", "doc_id", model, scal)
-      .join(base.select("doc_id", "label"), Seq("doc_id"))
-      .select(col("doc_id"), col("predicted"),
-        col("label").as("actual"),
-        when(col("predicted") === col("label"), 1L).otherwise(0L)
-          .as("correct"))
+    ClassifierQueries.heldOutScores(ClassifierQueries.planted(docs))(
+      graft.ops.NaiveBayes.predictByKey(_, "aug", "doc_id", model, scal))
   }
 
   /** The ingest DOOR's readout: every doc of an arriving batch scored
@@ -926,25 +889,16 @@ object CorpusBuild {
       batch: DataFrame): DataFrame =
     cdcAudit(batch, stateCdcEvalChunks(spark, stateDir))
 
-  /** Shared audit rollup: chunk `docs` per row, mark chunks present in
-    * `evalChunks`' key set, aggregate per doc — one distinct + one key
-    * join + one rollup, never pairwise (q194's algebra verbatim).
+  /** Chunk `docs` per row (a chunk-less doc keeps one null-ck row) and
+    * audit the chunks against `evalChunks` with q194's rollup.
     */
   private def cdcAudit(docs: DataFrame, evalChunks: DataFrame): DataFrame = {
-    val evalSet = evalChunks.select("ck").distinct()
-      .withColumn("in_eval", lit(1L))
-    docs.select(col("doc_id"),
-        explode_outer(graft.queries.ExtensionQueries
-          .cdcChunks(col("text"))).as("c"))
-      .select(col("doc_id"), col("c.ck").as("ck"))
-      .join(evalSet, Seq("ck"), "left_outer")
-      .groupBy("doc_id")
-      .agg(count(col("ck")).as("n_chunks"),
-        coalesce(sum(coalesce(col("in_eval"), lit(0L))), lit(0L))
-          .as("n_eval_shared"))
-      .select(col("doc_id"), col("n_chunks"), col("n_eval_shared"),
-        graft.functions.TextAnalysis.intDiv(col("n_eval_shared") * 1000000L,
-          greatest(col("n_chunks"), lit(1L))).as("shared_ppm"))
+    import graft.queries.ExtensionQueries
+    ExtensionQueries.cdcAudit(
+      docs.select(col("doc_id"),
+          explode_outer(ExtensionQueries.cdcChunks(col("text"))).as("c"))
+        .select(col("doc_id"), col("c.ck").as("ck")),
+      evalChunks)
   }
 
   // ---------------------------------------------------------------------

@@ -311,9 +311,19 @@ object AnalyticsQueries {
         priceBucket.cast("string").as("bucket"))
       .unionByName(o.select(col("is_ref"), lit("orderpriority").as("dim"),
         col("o_orderpriority").as("bucket")))
-    val counts = rows.groupBy("dim", "bucket").agg(
+    tvdDrift(rows.groupBy("dim", "bucket").agg(
       sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
-      sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_cur"))
+      sum(when(col("is_ref"), 0L).otherwise(1L)).as("n_cur")))
+  }
+
+  /** The TVD rollup over per-(dim, bucket) reference/current counts
+    * (dim, bucket, n_ref, n_cur): each bucket's drift term
+    * |n_ref·M − n_cur·N| in exact integer ppm of ½·N·M, plus a TOTAL row
+    * per dim. Shared by q126 (both windows counted in-query) and
+    * [[graft.pipeline.CorpusBuild.stateDrift]] (reference = the folded
+    * state counts).
+    */
+  private[graft] def tvdDrift(counts: DataFrame): DataFrame = {
     val totals = counts.groupBy("dim")
       .agg(sum("n_ref").as("tot_ref"), sum("n_cur").as("tot_cur"))
     val terms = counts.join(broadcast(totals), "dim")
@@ -328,8 +338,31 @@ object AnalyticsQueries {
           expr("(1000000 * t) DIV (2 * tot_ref * tot_cur)").as("drift_ppm")))
   }
 
+  /** [[tvdDrift]] as oracle SQL: continues a WITH list whose last CTE
+    * is `counts` (dim, bucket, n_ref, n_cur). Shared by q126Sql and
+    * q128Sql.
+    */
+  private[queries] val tvdSql: String =
+    """tot AS (SELECT dim, CAST(SUM(n_ref) AS BIGINT) AS tot_ref,
+      |               CAST(SUM(n_cur) AS BIGINT) AS tot_cur
+      |        FROM counts GROUP BY dim),
+      |terms AS (
+      |  SELECT c.dim, c.bucket, c.n_ref, c.n_cur, t.tot_ref, t.tot_cur,
+      |    abs(c.n_ref * t.tot_cur - c.n_cur * t.tot_ref) AS term
+      |  FROM counts c JOIN tot t ON c.dim = t.dim)
+      |SELECT dim, bucket, n_ref, n_cur,
+      |  CAST((1000000 * term) // (2 * tot_ref * tot_cur) AS BIGINT)
+      |    AS drift_ppm
+      |FROM terms
+      |UNION ALL
+      |SELECT dim, 'TOTAL', tot_ref, tot_cur,
+      |  CAST((1000000 * CAST(SUM(term) AS BIGINT))
+      |    // (2 * tot_ref * tot_cur) AS BIGINT)
+      |FROM terms GROUP BY dim, tot_ref, tot_cur
+      |ORDER BY dim, bucket""".stripMargin
+
   val q126Sql: String =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderdate < TIMESTAMP '1998-06-01' AS is_ref,
       |    o_totalprice, o_orderpriority FROM orders),
       |mm AS (SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi
@@ -347,23 +380,7 @@ object AnalyticsQueries {
       |    CAST(SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) AS BIGINT) AS n_ref,
       |    CAST(SUM(CASE WHEN is_ref THEN 0 ELSE 1 END) AS BIGINT) AS n_cur
       |  FROM rows_ GROUP BY dim, bucket),
-      |tot AS (SELECT dim, CAST(SUM(n_ref) AS BIGINT) AS tot_ref,
-      |               CAST(SUM(n_cur) AS BIGINT) AS tot_cur
-      |        FROM counts GROUP BY dim),
-      |terms AS (
-      |  SELECT c.dim, c.bucket, c.n_ref, c.n_cur, t.tot_ref, t.tot_cur,
-      |    abs(c.n_ref * t.tot_cur - c.n_cur * t.tot_ref) AS term
-      |  FROM counts c JOIN tot t ON c.dim = t.dim)
-      |SELECT dim, bucket, n_ref, n_cur,
-      |  CAST((1000000 * term) // (2 * tot_ref * tot_cur) AS BIGINT)
-      |    AS drift_ppm
-      |FROM terms
-      |UNION ALL
-      |SELECT dim, 'TOTAL', tot_ref, tot_cur,
-      |  CAST((1000000 * CAST(SUM(term) AS BIGINT))
-      |    // (2 * tot_ref * tot_cur) AS BIGINT)
-      |FROM terms GROUP BY dim, tot_ref, tot_cur
-      |ORDER BY dim, bucket""".stripMargin
+      |$tvdSql""".stripMargin
 
   /** q127 — Z-order layout audit: quantize orders onto a 1024×1024
     * (price × order-day) grid, Morton-interleave the two 10-bit ranks

@@ -48,17 +48,33 @@ object ClassifierQueries {
     val base = planted(Tables.documents(s, d))
     val (model, scal) = graft.ops.NaiveBayes.train(
       base.filter(!col("is_test")), "aug", "label")
-    graft.ops.NaiveBayes.predict(
-        base.filter(col("is_test")), "aug", "doc_id", model, scal)
+    heldOutScores(base)(
+      graft.ops.NaiveBayes.predict(_, "aug", "doc_id", model, scal))
+  }
+
+  /** The held-out readout of a [[planted]] corpus: `score` maps the test
+    * split to (doc_id, predicted), and each doc reads predicted vs actual
+    * plus a correctness flag. Shared by q174 (in-query model) and
+    * [[graft.pipeline.CorpusBuild.stateNbScores]] (state-derived model).
+    */
+  private[graft] def heldOutScores(base: DataFrame)(
+      score: DataFrame => DataFrame): DataFrame =
+    score(base.filter(col("is_test")))
       .join(base.select("doc_id", "label"), Seq("doc_id"))
       .select(col("doc_id"), col("predicted"),
         col("label").as("actual"),
         when(col("predicted") === col("label"), 1L).otherwise(0L)
           .as("correct"))
-  }
 
-  val q174Sql: String =
-    """WITH a AS (
+  /** q174's train/smooth/score algebra as oracle CTEs: the planted
+    * corpus `a`, its tokens `tok`, the train-split `counts`, the scalar
+    * row `scal`, the smoothed per-token `model` ratios, and `score`
+    * (doc_id, log_odds) for the docs whose term frequencies `tfWhere`
+    * keeps. q174Sql and [[nbScoreAllSql]] read `score`. `||` stays at
+    * line ends so an outer stripMargin cannot eat it.
+    */
+  private def nbLogOddsSql(tfWhere: String): String =
+    s"""WITH a AS (
       |  SELECT doc_id,
       |    coalesce(text, '') ||
       |      CASE WHEN doc_id % 2 = 0
@@ -93,7 +109,7 @@ object ClassifierQueries {
       |  LEFT JOIN counts c1 ON c1.label = 1 AND c1.tok = toks.tok),
       |tf AS (
       |  SELECT doc_id, tok, count(*) AS tf FROM tok
-      |  WHERE is_test GROUP BY 1, 2),
+      |  $tfWhere GROUP BY 1, 2),
       |score AS (
       |  SELECT tf.doc_id,
       |    SUM(tf.tf * coalesce(m.ratio,
@@ -102,7 +118,10 @@ object ClassifierQueries {
       |  FROM tf
       |  CROSS JOIN scal s
       |  LEFT JOIN model m ON m.tok = tf.tok
-      |  GROUP BY tf.doc_id, s.tot0, s.tot1, s.v, s.n0, s.n1)
+      |  GROUP BY tf.doc_id, s.tot0, s.tot1, s.v, s.n0, s.n1)""".stripMargin
+
+  val q174Sql: String =
+    s"""${nbLogOddsSql("WHERE is_test")}
       |SELECT a.doc_id,
       |  CAST(CASE WHEN sc.log_odds > 0 THEN 1 ELSE 0 END AS BIGINT)
       |    AS predicted,
@@ -140,50 +159,7 @@ object ClassifierQueries {
     * line ends so an outer stripMargin cannot eat it.
     */
   private[graft] val nbScoreAllSql: String =
-    """WITH a AS (
-      |  SELECT doc_id,
-      |    coalesce(text, '') ||
-      |      CASE WHEN doc_id % 2 = 0
-      |        THEN repeat(' alpha', CAST(doc_id % 3 + 1 AS INTEGER))
-      |        ELSE repeat(' gamma', CAST(doc_id % 3 + 1 AS INTEGER)) END
-      |      AS aug,
-      |    doc_id % 2 AS label,
-      |    doc_id % 10 >= 8 AS is_test
-      |  FROM documents),
-      |tok AS (
-      |  SELECT doc_id, label, is_test, t.tok
-      |  FROM a, unnest(string_split(aug, ' ')) AS t(tok)
-      |  WHERE t.tok <> ''),
-      |counts AS (
-      |  SELECT label, tok, count(*) AS c FROM tok
-      |  WHERE NOT is_test GROUP BY 1, 2),
-      |scal AS (
-      |  SELECT
-      |    (SELECT sum(c) FROM counts WHERE label = 0) AS tot0,
-      |    (SELECT sum(c) FROM counts WHERE label = 1) AS tot1,
-      |    (SELECT count(DISTINCT tok) FROM counts) AS v,
-      |    (SELECT count(*) FROM a WHERE NOT is_test AND label = 0) AS n0,
-      |    (SELECT count(*) FROM a WHERE NOT is_test AND label = 1) AS n1),
-      |toks AS (SELECT DISTINCT tok FROM counts),
-      |model AS (
-      |  SELECT toks.tok,
-      |    ln((coalesce(c1.c, 0) + 1) / (s.tot1 + s.v))
-      |      - ln((coalesce(c0.c, 0) + 1) / (s.tot0 + s.v)) AS ratio
-      |  FROM toks
-      |  CROSS JOIN scal s
-      |  LEFT JOIN counts c0 ON c0.label = 0 AND c0.tok = toks.tok
-      |  LEFT JOIN counts c1 ON c1.label = 1 AND c1.tok = toks.tok),
-      |tf AS (
-      |  SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
-      |score AS (
-      |  SELECT tf.doc_id,
-      |    SUM(tf.tf * coalesce(m.ratio,
-      |      ln(1.0 / (s.tot1 + s.v)) - ln(1.0 / (s.tot0 + s.v))))
-      |      + ln(CAST(s.n1 AS DOUBLE) / s.n0) AS log_odds
-      |  FROM tf
-      |  CROSS JOIN scal s
-      |  LEFT JOIN model m ON m.tok = tf.tok
-      |  GROUP BY tf.doc_id, s.tot0, s.tot1, s.v, s.n0, s.n1)
+    s"""${nbLogOddsSql("")}
       |SELECT doc_id,
       |  CAST(CASE WHEN log_odds > 0 THEN 1 ELSE 0 END AS BIGINT)
       |    AS predicted

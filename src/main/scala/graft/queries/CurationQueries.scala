@@ -166,24 +166,7 @@ object CurationQueries {
   }
 
   val q166Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]',
-      |         '', 'g'), '\s+', ' ', 'g')) AS s
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(s) >= 8 THEN
-      |      [md5(substr(s, i, 8)) for i in generate_series(1, len(s) - 7)]
-      |    ELSE [] END AS grams
-      |  FROM t),
-      |w AS (
-      |  SELECT doc_id, grams,
-      |    CASE WHEN len(grams) >= 4 THEN
-      |      [list_min(grams[j:j+3])
-      |       for j in generate_series(1, len(grams) - 3)]
-      |    ELSE [] END AS sel
-      |  FROM g),
+    s"""WITH ${ModalPairSql.winnowCtes},
       |fps AS (
       |  SELECT doc_id, unnest(list_distinct(sel)) AS fp FROM w),
       |rare AS (
@@ -215,6 +198,18 @@ object CurationQueries {
       |            ELSE 'test' END)
       |ORDER BY id_a, id_b""".stripMargin
 
+  /** The ≤21-row quality-bucket relation (q_bucket, n_docs, n_tokens):
+    * docs bucketed by their exact integer quality score in 50k-ppm
+    * steps, with doc and token totals per bucket. Shared by q160 and
+    * q195.
+    */
+  private def qualityBuckets(docs: DataFrame): DataFrame =
+    docs.select(
+        TextAnalysis.qualityScorePpm(col("text")).as("q_ppm"),
+        TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
+      .groupBy(expr("q_ppm DIV 50000").cast("long").as("q_bucket"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
+
   /** q160 — token-budget selection curve: docs bucketed by the exact
     * integer quality score (q23's ppm arithmetic, 21 buckets of 50k
     * ppm), with cumulative docs/tokens from the BEST bucket down — the
@@ -226,12 +221,7 @@ object CurationQueries {
     */
   val q160_budget_curve: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val scored = Tables.documents(s, d).select(
-      TextAnalysis.qualityScorePpm(col("text")).as("q_ppm"),
-      TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
-    val buckets = scored
-      .groupBy(expr("q_ppm DIV 50000").cast("long").as("q_bucket"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
+    val buckets = qualityBuckets(Tables.documents(s, d))
     val cum = Window.orderBy(col("q_bucket").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     buckets
@@ -240,39 +230,51 @@ object CurationQueries {
         sum(col("n_tokens")).over(cum).as("cum_tokens"))
   }
 
-  val q160Sql: String = {
+  /** The integer quality score (q23's ppm arithmetic,
+    * [[TextAnalysis.qualityScorePpm]]) of `text` as an oracle SQL
+    * expression. Shared by q90Sql and [[qualityBucketsSql]].
+    */
+  private def qualityPpmSql: String = {
     val enList = TextAnalysis.stopwords("en").map(w => s"'$w'")
       .mkString("[", ", ", "]")
+    s"""((least((CAST(length(text) AS BIGINT) * 1000000) // 500, 1000000)
+       |      + (1000000 - (CAST(len(regexp_extract_all(text,
+       |          '[^A-Za-z0-9\\s]')) AS BIGINT) * 1000000)
+       |        // greatest(CAST(length(text) AS BIGINT), 1))
+       |      + least((CAST(len(list_filter(string_split_regex(trim(text),
+       |            '\\s+'), x -> list_contains($enList, x))) AS BIGINT)
+       |          * 4 * 1000000)
+       |        // greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
+       |            AS BIGINT), 1), 1000000)
+       |      + least((CAST(length(text) AS BIGINT) * 1000000)
+       |        // (greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
+       |            AS BIGINT), 1) * 8), 1000000)) // 4)""".stripMargin
+  }
+
+  /** [[qualityBuckets]] as oracle CTEs: `r` (q_ppm, n_toks) per doc and
+    * `b` (q_bucket, n_docs, n_tokens). q160Sql and q195Sql continue the
+    * WITH list after `b`.
+    */
+  private def qualityBucketsSql: String =
     s"""WITH r AS (
-       |  SELECT
-       |    CAST(length(text) AS BIGINT) AS len_c,
-       |    CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS BIGINT)
-       |      AS punct_c,
-       |    CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
-       |      x -> list_contains($enList, x))) AS BIGINT) AS stop_c,
-       |    greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
-       |      AS BIGINT), 1) AS toks_c,
+       |  SELECT $qualityPpmSql AS q_ppm,
        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
        |      AS n_toks
        |  FROM documents),
-       |q AS (
-       |  SELECT ((least((len_c * 1000000) // 500, 1000000)
-       |       + (1000000 - (punct_c * 1000000) // greatest(len_c, 1))
-       |       + least((stop_c * 4 * 1000000) // toks_c, 1000000)
-       |       + least((len_c * 1000000) // (toks_c * 8), 1000000)) // 4)
-       |       // 50000 AS q_bucket, n_toks
-       |  FROM r),
        |b AS (
-       |  SELECT CAST(q_bucket AS BIGINT) AS q_bucket,
-       |    count(*) AS n_docs, CAST(SUM(n_toks) AS BIGINT) AS n_tokens
-       |  FROM q GROUP BY 1)
+       |  SELECT q_ppm // 50000 AS q_bucket,
+       |    CAST(count(*) AS BIGINT) AS n_docs,
+       |    CAST(sum(n_toks) AS BIGINT) AS n_tokens
+       |  FROM r GROUP BY q_ppm // 50000)""".stripMargin
+
+  val q160Sql: String =
+    s"""$qualityBucketsSql
        |SELECT q_bucket, n_docs, n_tokens,
        |  CAST(SUM(n_docs) OVER (ORDER BY q_bucket DESC
        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_docs,
        |  CAST(SUM(n_tokens) OVER (ORDER BY q_bucket DESC
        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
        |FROM b ORDER BY q_bucket DESC""".stripMargin
-  }
 
   /** q163 — per-source DATASET CARD: the governance rollup a corpus
     * release ships — per source: docs, tokens, distinct languages,
@@ -847,25 +849,12 @@ object CurationQueries {
         (col("s.n_in") - col("s.n_out")).as("n_dropped"))
   }
 
-  val q90Sql: String = {
-    val enList = TextAnalysis.stopwords("en").map(w => s"'$w'")
-      .mkString("[", ", ", "]")
+  val q90Sql: String =
     s"""WITH f AS (
        |  SELECT n_chars >= 100 AS f1,
        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) >= 20
        |      AS f2,
-       |    ((least((CAST(length(text) AS BIGINT) * 1000000) // 500, 1000000)
-       |      + (1000000 - (CAST(len(regexp_extract_all(text,
-       |          '[^A-Za-z0-9\\s]')) AS BIGINT) * 1000000)
-       |        // greatest(CAST(length(text) AS BIGINT), 1))
-       |      + least((CAST(len(list_filter(string_split_regex(trim(text),
-       |            '\\s+'), x -> list_contains($enList, x))) AS BIGINT)
-       |          * 4 * 1000000)
-       |        // greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
-       |            AS BIGINT), 1), 1000000)
-       |      + least((CAST(length(text) AS BIGINT) * 1000000)
-       |        // (greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
-       |            AS BIGINT), 1) * 8), 1000000)) // 4) >= 400000 AS f4,
+       |    $qualityPpmSql >= 400000 AS f4,
        |    md5(text) AS h
        |  FROM documents),
        |a AS (SELECT
@@ -883,7 +872,6 @@ object CurationQueries {
        |  UNION ALL SELECT '3_exact_dedup', n2, n3 FROM a
        |  UNION ALL SELECT '4_quality', n3, n4 FROM a)
        |ORDER BY stage""".stripMargin
-  }
 
   /** q91 — dataset profile: per-column null count, exact distinct count,
     * and min/max (as strings) for the corpus table — the schema-drift /
@@ -1175,28 +1163,7 @@ object CurationQueries {
   }
 
   val q97Sql: String =
-    """WITH RECURSIVE s AS (
-      |  SELECT doc_id, lang,
-      |    list_distinct([array_to_string(ws[i:i+2], ' ')
-      |                   for i in generate_series(1, len(ws)-2)]) AS sh
-      |  FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS ws
-      |        FROM documents)
-      |  WHERE len(ws) >= 3),
-      |pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-      |      / len(list_distinct(a.sh || b.sh)) >= 0.5),
-      |edges AS (
-      |  SELECT id_a AS a, id_b AS b FROM pairs
-      |  UNION SELECT id_b, id_a FROM pairs),
-      |reach(src, dst) AS (
-      |  SELECT doc_id, doc_id FROM documents
-      |  UNION
-      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-      |comp AS (
-      |  SELECT src AS doc_id, min(dst) AS component
-      |  FROM reach GROUP BY src),
+    s"""${ModalPairSql.langClusters},
       |sizes AS (
       |  SELECT component, CAST(count(*) AS BIGINT) AS cluster_size
       |  FROM comp GROUP BY component)
@@ -1222,12 +1189,7 @@ object CurationQueries {
     */
   val q195_epoch_allocation: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val scored = Tables.documents(s, d).select(
-      TextAnalysis.qualityScorePpm(col("text")).as("q_ppm"),
-      TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
-    val buckets = scored
-      .groupBy(expr("q_ppm DIV 50000").cast("long").as("q_bucket"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
+    val buckets = qualityBuckets(Tables.documents(s, d))
     val cum = Window.orderBy(col("q_bucket").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.rowsBetween(Window.unboundedPreceding,
@@ -1247,31 +1209,8 @@ object CurationQueries {
         (col("epochs") * col("n_tokens")).as("alloc_tokens"))
   }
 
-  val q195Sql: String = {
-    val enList = TextAnalysis.stopwords("en").map(w => s"'$w'")
-      .mkString("[", ", ", "]")
-    s"""WITH r AS (
-       |  SELECT
-       |    ((least((CAST(length(text) AS BIGINT) * 1000000) // 500, 1000000)
-       |      + (1000000 - (CAST(len(regexp_extract_all(text,
-       |          '[^A-Za-z0-9\\s]')) AS BIGINT) * 1000000)
-       |        // greatest(CAST(length(text) AS BIGINT), 1))
-       |      + least((CAST(len(list_filter(string_split_regex(trim(text),
-       |            '\\s+'), x -> list_contains($enList, x))) AS BIGINT)
-       |          * 4 * 1000000)
-       |        // greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
-       |            AS BIGINT), 1), 1000000)
-       |      + least((CAST(length(text) AS BIGINT) * 1000000)
-       |        // (greatest(CAST(len(string_split_regex(trim(text), '\\s+'))
-       |            AS BIGINT), 1) * 8), 1000000)) // 4) AS q_ppm,
-       |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
-       |      AS n_toks
-       |  FROM documents),
-       |b AS (
-       |  SELECT q_ppm // 50000 AS q_bucket,
-       |    CAST(count(*) AS BIGINT) AS n_docs,
-       |    CAST(sum(n_toks) AS BIGINT) AS n_tokens
-       |  FROM r GROUP BY q_ppm // 50000),
+  val q195Sql: String =
+    s"""$qualityBucketsSql,
        |c AS (
        |  SELECT q_bucket, n_docs, n_tokens,
        |    CAST(SUM(n_tokens) OVER (ORDER BY q_bucket DESC
@@ -1285,7 +1224,6 @@ object CurationQueries {
        |  least(greatest(budget - above * 4, 0)
        |    // greatest(n_tokens, 1), 4) * n_tokens AS alloc_tokens
        |FROM c ORDER BY q_bucket DESC""".stripMargin
-  }
 
   /** q190 — the per-DOCUMENT curation decision matrix: q179 answers
     * "what does the release look like per source"; this answers "why
@@ -1320,37 +1258,31 @@ object CurationQueries {
     * memoized cluster relation; one final per-doc join tree on 8-byte
     * doc_id keys.
     */
-  val q190_curation_matrix: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(s, d)
-    val comp = graft.ops.TextDedup.dedupClusterRelationShared(
-      docs, d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
-    val byLen = Window.partitionBy("component")
-      .orderBy(col("n_chars").desc, col("id"))
-    val kept = comp
-      .join(docs.select(col("doc_id").as("id"), col("n_chars")), "id")
-      .withColumn("rk", row_number().over(byLen))
-      .filter(col("rk") === 1)
-      .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
+  val q190_curation_matrix: Q = (s, d) =>
     // bit 32 — chunk-grained eval contamination (q194's audit): a TRAIN
     // doc sharing ≥ 1 content-defined chunk with the eval split; eval
     // docs themselves are never flagged (they are not contaminated
     // train data)
-    matrixFromTiers(s, d, kept,
-      ExtensionQueries.q194_cdc_decontam(s, d)
-        .filter(col("n_eval_shared") > 0L)
-        .select(col("doc_id"), lit(1L).as("cdc_hit")))
-  }
+    matrixFromTiers(s, d, ExtensionQueries.q194_cdc_decontam(s, d))
 
   /** The matrix body shared by q190 (in-query CDC audit) and q208
     * (CDC audit served from the stored chunk index): the map-only
-    * short/rep/pii flags, the memo-served perplexity column, the
-    * survivor join, and the bitmap rollup — only the `cdc` relation
-    * differs between the tiers.
+    * short/rep/pii flags, the memo-served perplexity column, q74's
+    * longest-wins survivor over the shared cluster memo, and the bitmap
+    * rollup. `cdc` is q194's audit shape (doc_id, n_eval_shared, ...);
+    * it is the only tier that differs between the two queries.
     */
   private def matrixFromTiers(s: SparkSession, d: String,
-      kept: DataFrame, cdc: DataFrame): DataFrame = {
+      cdc: DataFrame): DataFrame = {
     val docs = Tables.documents(s, d)
+    val comp = graft.ops.TextDedup.dedupClusterRelationShared(
+      docs, d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
+    val kept = graft.ops.Dedupe.firstRowPerKey(
+        comp.join(docs.select(col("doc_id").as("id"), col("n_chars")), "id"),
+        keys = Seq("component"), order = Seq(col("n_chars").desc, col("id")))
+      .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
+    val cdcHit = cdc.filter(col("n_eval_shared") > 0L)
+      .select(col("doc_id"), lit(1L).as("cdc_hit"))
     val pplx = SharedPplx.serve(s, d)
       .select(col("doc_id"), col("avg_q6"))
     val st = TextAnalysis.runStats(
@@ -1376,7 +1308,7 @@ object CurationQueries {
     flags
       .join(pplx, Seq("doc_id"), "left_outer")
       .join(kept, Seq("doc_id"), "left_outer")
-      .join(cdc, Seq("doc_id"), "left_outer")
+      .join(cdcHit, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("r_short"), col("r_rep"),
         when(coalesce(col("avg_q6"), lit(0L)) > 5400000L, 1L)
           .otherwise(0L).as("r_pplx"),
@@ -1460,27 +1392,14 @@ object CurationQueries {
     * chunks in one rolling-hash pass riding the scan. Every other
     * tier already serves a memo or is map-only, so this completes the
     * matrix's serve-path story: zero model building, zero eval
-    * re-chunking at query time. Oracle: q190's SQL verbatim — a stale
-    * chunk fold flips a bit and hash-mismatches.
+    * re-chunking at query time. Both queries are [[matrixFromTiers]];
+    * only the `cdc` audit they pass differs. Oracle: q190's SQL
+    * verbatim — a stale chunk fold flips a bit and hash-mismatches
+    * (PlanSpec also pins q208 ≡ q190 row for row).
     */
-  val q208_state_curation_matrix: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documents(s, d)
-    val dir = TokenizerQueries.ensurePostingState(s, d)
-    val comp = graft.ops.TextDedup.dedupClusterRelationShared(
-      docs, d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
-    val byLen = Window.partitionBy("component")
-      .orderBy(col("n_chars").desc, col("id"))
-    val kept = comp
-      .join(docs.select(col("doc_id").as("id"), col("n_chars")), "id")
-      .withColumn("rk", row_number().over(byLen))
-      .filter(col("rk") === 1)
-      .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
-    matrixFromTiers(s, d, kept,
-      graft.pipeline.CorpusBuild.stateCdcDecontam(s, dir, docs)
-        .filter(col("n_eval_shared") > 0L)
-        .select(col("doc_id"), lit(1L).as("cdc_hit")))
-  }
+  val q208_state_curation_matrix: Q = (s, d) =>
+    matrixFromTiers(s, d, graft.pipeline.CorpusBuild.stateCdcDecontam(s,
+      TokenizerQueries.ensurePostingState(s, d), Tables.documents(s, d)))
 
   val queries: Map[String, Q] = Map(
     "q83_pii_redact" -> q83_pii_redact,

@@ -410,27 +410,8 @@ object ExpansionQueries {
   }
 
   val q56Sql: String =
-    """WITH RECURSIVE s AS (
-      |  SELECT doc_id, lang,
-      |    list_distinct([array_to_string(ws[i:i+2], ' ')
-      |                   for i in generate_series(1, len(ws)-2)]) AS sh
-      |  FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS ws
-      |        FROM documents)
-      |  WHERE len(ws) >= 3),
-      |pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-      |      / len(list_distinct(a.sh || b.sh)) >= 0.5),
-      |edges AS (
-      |  SELECT id_a AS a, id_b AS b FROM pairs
-      |  UNION SELECT id_b, id_a FROM pairs),
-      |reach(src, dst) AS (
-      |  SELECT doc_id, doc_id FROM documents
-      |  UNION
-      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a)
-      |SELECT src AS doc_id, min(dst) AS component
-      |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin
+    s"""${ModalPairSql.langClusters}
+       |SELECT doc_id, component FROM comp ORDER BY doc_id""".stripMargin
 
   /** q57 — multimodal frame sampling: every 2nd fixed-size frame's offset
     * from the payload length (graft.multimodal.Multimodal.frameOffsets —

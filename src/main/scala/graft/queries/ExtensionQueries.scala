@@ -498,24 +498,7 @@ object ExtensionQueries {
   }
 
   val q140Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]',
-      |         '', 'g'), '\s+', ' ', 'g')) AS s
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(s) >= 8 THEN
-      |      [md5(substr(s, i, 8)) for i in generate_series(1, len(s) - 7)]
-      |    ELSE [] END AS grams
-      |  FROM t),
-      |w AS (
-      |  SELECT doc_id, grams,
-      |    CASE WHEN len(grams) >= 4 THEN
-      |      [list_min(grams[j:j+3])
-      |       for j in generate_series(1, len(grams) - 3)]
-      |    ELSE [] END AS sel
-      |  FROM g)
+    s"""WITH ${ModalPairSql.winnowCtes}
       |SELECT doc_id,
       |  CAST(len(grams) AS BIGINT) AS n_grams,
       |  CAST(len(sel) AS BIGINT) AS n_windows,
@@ -550,24 +533,7 @@ object ExtensionQueries {
         winnowFpKeys(Tables.documents(s, d))))
 
   val q143Sql: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]',
-      |         '', 'g'), '\s+', ' ', 'g')) AS s
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(s) >= 8 THEN
-      |      [md5(substr(s, i, 8)) for i in generate_series(1, len(s) - 7)]
-      |    ELSE [] END AS grams
-      |  FROM t),
-      |w AS (
-      |  SELECT doc_id, grams,
-      |    CASE WHEN len(grams) >= 4 THEN
-      |      [list_min(grams[j:j+3])
-      |       for j in generate_series(1, len(grams) - 3)]
-      |    ELSE [] END AS sel
-      |  FROM g),
+    s"""WITH ${ModalPairSql.winnowCtes},
       |fps AS (
       |  SELECT doc_id, unnest(list_distinct(sel)) AS fp FROM w),
       |rare AS (
@@ -595,34 +561,16 @@ object ExtensionQueries {
   val q144_state_winnow_overlap: Q = (s, d) => {
     val dir = graft.queries.TokenizerQueries.ensurePostingState(s, d)
     val docs = Tables.documents(s, d)
-    val b = docs.agg(min("doc_id"), max("doc_id")).first()
-    val cut2 = b.getLong(0) + 2 * ((b.getLong(1) - b.getLong(0)) / 3)
+    val (_, cut2) = TokenizerQueries.generationCuts(docs, "doc_id")
     graft.pipeline.CorpusBuild.stateWinnowOverlap(s, dir,
         docs.filter(col("doc_id") > cut2))
   }
 
   val q144Sql: String =
-    """WITH b AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
+    s"""WITH b AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
       |           FROM documents),
       |c2 AS (SELECT lo + 2 * ((hi - lo) // 3) AS cut2 FROM b),
-      |t AS (
-      |  SELECT doc_id,
-      |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]',
-      |         '', 'g'), '\s+', ' ', 'g')) AS s
-      |  FROM documents),
-      |g AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(s) >= 8 THEN
-      |      [md5(substr(s, i, 8)) for i in generate_series(1, len(s) - 7)]
-      |    ELSE [] END AS grams
-      |  FROM t),
-      |w AS (
-      |  SELECT doc_id,
-      |    CASE WHEN len(grams) >= 4 THEN
-      |      [list_min(grams[j:j+3])
-      |       for j in generate_series(1, len(grams) - 3)]
-      |    ELSE [] END AS sel
-      |  FROM g),
+      |${ModalPairSql.winnowCtes},
       |fps AS (
       |  SELECT doc_id, unnest(list_distinct(sel)) AS fp FROM w),
       |rare AS (
@@ -1158,10 +1106,23 @@ object ExtensionQueries {
         (graft.ops.Splits.bucket(col("doc_id")) < 90).as("is_train"),
         explode_outer(cdcChunks(col("text"))).as("c"))
       .select(col("doc_id"), col("is_train"), col("c.ck").as("ck"))
-    val evalSet = chunks.filter(!col("is_train") && col("ck").isNotNull)
-      .select("ck").distinct()
+    cdcAudit(chunks.filter(col("is_train")),
+      chunks.filter(!col("is_train") && col("ck").isNotNull))
+  }
+
+  /** The CDC audit rollup: `chunks` (doc_id, ck) are the audited docs'
+    * chunk rows (a null ck marks a chunk-less doc), marked against the
+    * key set of `evalChunks` (ck, ...) and aggregated per doc — one
+    * distinct + one key join + one rollup, never pairwise. Shared by
+    * q194 (eval side chunked in-query) and
+    * [[graft.pipeline.CorpusBuild.stateCdcDecontam]] (eval side read
+    * from the folded chunk index).
+    */
+  private[graft] def cdcAudit(chunks: DataFrame,
+      evalChunks: DataFrame): DataFrame = {
+    val evalSet = evalChunks.select("ck").distinct()
       .withColumn("in_eval", lit(1L))
-    chunks.filter(col("is_train"))
+    chunks
       .join(evalSet, Seq("ck"), "left_outer")
       .groupBy("doc_id")
       .agg(count(col("ck")).as("n_chunks"),

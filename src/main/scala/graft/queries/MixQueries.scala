@@ -166,11 +166,12 @@ object MixQueries {
         sum(col("e0") - col("s0") + lit(1)).as("dup_toks"))
   }
 
-  val q101_dup_spans: Q = (s, d) => {
-    val k = 5
-    val docs = Tables.documents(s, d)
-    val occ = shingleOcc(docs, k)
-    val perDoc = spanAgg(occ, dupShingles(occ), k)
+  /** The per-doc span-audit readout: every doc of `docs` with its token
+    * count, joined to its [[spanAgg]] row (docs without duplicated spans
+    * read 0), and the duplicated-token share in integer ppm. Shared by
+    * q101, q106 and [[graft.pipeline.CorpusBuild.stateSpanAudit]].
+    */
+  private[graft] def spanReadout(docs: DataFrame, perDoc: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
       .join(perDoc, Seq("doc_id"), "left")
@@ -179,6 +180,12 @@ object MixQueries {
         coalesce(col("dup_toks"), lit(0L)).as("n_dup_tokens"),
         expr("(1000000 * coalesce(dup_toks, 0L)) DIV greatest(n_toks, 1L)")
           .as("dup_ppm"))
+
+  val q101_dup_spans: Q = (s, d) => {
+    val k = 5
+    val docs = Tables.documents(s, d)
+    val occ = shingleOcc(docs, k)
+    spanReadout(docs, spanAgg(occ, dupShingles(occ), k))
   }
 
   val q101Sql: String =
@@ -416,14 +423,7 @@ object MixQueries {
       .unionByName(spanAgg(
         occStd.join(touched, Seq("doc_id"), "left_semi"), dupAll, k))
       .unionByName(spanAgg(occNew, dupAll, k))
-    docs.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_toks"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_toks"),
-        coalesce(col("spans"), lit(0L)).as("n_dup_spans"),
-        coalesce(col("dup_toks"), lit(0L)).as("n_dup_tokens"),
-        expr("(1000000 * coalesce(dup_toks, 0L)) DIV greatest(n_toks, 1L)")
-          .as("dup_ppm"))
+    spanReadout(docs, perDoc)
   }
 
   /** q111 — SPAN-LEVEL eval decontamination: where q69 flags documents

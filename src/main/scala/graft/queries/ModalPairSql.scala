@@ -8,8 +8,10 @@ package graft.queries
   * enclosing objects at initialization time (a val-init cycle between
   * query objects would read partially-initialized nulls).
   *
-  * Every string is a complete SELECT (no trailing ORDER BY) so callers
-  * can embed it as a derived table / CTE body or append their own sort.
+  * Every pair/hash string is a complete SELECT (no trailing ORDER BY)
+  * so callers can embed it as a derived table / CTE body or append
+  * their own sort. [[mediaCodes]], [[langClusters]] and [[winnowCtes]]
+  * are CTE lists that other oracles continue.
   */
 private[queries] object ModalPairSql {
 
@@ -31,16 +33,79 @@ private[queries] object ModalPairSql {
       |WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
       |    / len(list_distinct(a.sh || b.sh)) >= 0.5""".stripMargin
 
+  /** The opening CTE of every oracle that rebuilds a media payload from
+    * the source text: `a` (media_id, codes), the ASCII code points of
+    * each document, in order. Callers continue the WITH list after its
+    * trailing comma.
+    */
+  val mediaCodes: String =
+    """WITH a AS (
+      |  SELECT doc_id AS media_id,
+      |    [ord(c) for c in string_split(coalesce(text, ''), '')
+      |     if ord(c) BETWEEN 0 AND 127] AS codes
+      |  FROM documents),""".stripMargin
+
+  /** The lang-blocked near-duplicate cluster labeling as recursive CTEs:
+    * `s` (word 3-shingle sets), `pairs` (same-lang Jaccard ≥ 0.5),
+    * `edges`, the transitive closure `reach`, and `comp` (doc_id,
+    * component = min reachable doc id). q56, q74 and q97 each read
+    * `comp`; callers continue the WITH list after it.
+    */
+  val langClusters: String =
+    """WITH RECURSIVE s AS (
+      |  SELECT doc_id, lang,
+      |    list_distinct([array_to_string(ws[i:i+2], ' ')
+      |                   for i in generate_series(1, len(ws)-2)]) AS sh
+      |  FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS ws
+      |        FROM documents)
+      |  WHERE len(ws) >= 3),
+      |pairs AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
+      |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |      / len(list_distinct(a.sh || b.sh)) >= 0.5),
+      |edges AS (
+      |  SELECT id_a AS a, id_b AS b FROM pairs
+      |  UNION SELECT id_b, id_a FROM pairs),
+      |reach(src, dst) AS (
+      |  SELECT doc_id, doc_id FROM documents
+      |  UNION
+      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
+      |comp AS (
+      |  SELECT src AS doc_id, min(dst) AS component
+      |  FROM reach GROUP BY src)""".stripMargin
+
+  /** Winnowing (k = 8, w = 4) as CTEs without the leading WITH: `t`
+    * (normalized text), `g` (md5 of every 8-gram), `w` (doc_id, grams,
+    * sel = the min of every 4-gram window). q140, q143, q144 and q166
+    * continue the WITH list after it.
+    */
+  val winnowCtes: String =
+    """t AS (
+      |  SELECT doc_id,
+      |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]',
+      |         '', 'g'), '\s+', ' ', 'g')) AS s
+      |  FROM documents),
+      |g AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(s) >= 8 THEN
+      |      [md5(substr(s, i, 8)) for i in generate_series(1, len(s) - 7)]
+      |    ELSE [] END AS grams
+      |  FROM t),
+      |w AS (
+      |  SELECT doc_id, grams,
+      |    CASE WHEN len(grams) >= 4 THEN
+      |      [list_min(grams[j:j+3])
+      |       for j in generate_series(1, len(grams) - 3)]
+      |    ELSE [] END AS sel
+      |  FROM g)""".stripMargin
+
   /** The q153 image dHash rebuilt from the source text (same integer
     * algebra as the decoder: nearest-neighbor 9×8 gray resample,
     * strict-less bits, two 32-bit halves).
     */
   val imageHashes: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""$mediaCodes
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 48.0) AS BIGINT)) AS h
       |  FROM a),

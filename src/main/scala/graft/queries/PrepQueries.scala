@@ -175,43 +175,19 @@ object PrepQueries {
     * component machinery.
     */
   val q74_dedup_survivors: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
     val comp = graft.ops.TextDedup.dedupClusterRelationShared(
       docs, d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
-    val w = Window.partitionBy("component")
-    val byLen = w.orderBy(col("n_chars").desc, col("id"))
-    comp.join(docs.select(col("doc_id").as("id"), col("n_chars")), "id")
-      .withColumn("rk", row_number().over(byLen))
-      .withColumn("n_docs", count(lit(1)).over(w))
-      .filter(col("rk") === 1)
+    graft.ops.Dedupe.firstRowPerKey(
+        comp.join(docs.select(col("doc_id").as("id"), col("n_chars")), "id"),
+        keys = Seq("component"), order = Seq(col("n_chars").desc, col("id")),
+        perKey = Seq("n_docs" -> count(lit(1))))
       .select(col("component"), col("id").as("survivor_id"),
         col("n_chars"), col("n_docs"))
   }
 
   val q74Sql: String =
-    """WITH RECURSIVE s AS (
-      |  SELECT doc_id, lang,
-      |    list_distinct([array_to_string(ws[i:i+2], ' ')
-      |                   for i in generate_series(1, len(ws)-2)]) AS sh
-      |  FROM (SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS ws
-      |        FROM documents)
-      |  WHERE len(ws) >= 3),
-      |pairs AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-      |      / len(list_distinct(a.sh || b.sh)) >= 0.5),
-      |edges AS (
-      |  SELECT id_a AS a, id_b AS b FROM pairs
-      |  UNION SELECT id_b, id_a FROM pairs),
-      |reach(src, dst) AS (
-      |  SELECT doc_id, doc_id FROM documents
-      |  UNION
-      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-      |comp AS (
-      |  SELECT src AS doc_id, min(dst) AS component
-      |  FROM reach GROUP BY src),
+    s"""${ModalPairSql.langClusters},
       |ranked AS (
       |  SELECT c.component, c.doc_id, d.n_chars,
       |    row_number() OVER (PARTITION BY c.component
@@ -357,11 +333,7 @@ object PrepQueries {
       .toDF()
 
   val q151Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (
       |  SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 48.0) AS BIGINT)) AS h
@@ -512,11 +484,7 @@ object PrepQueries {
       .toDF()
 
   val q161Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 48.0) AS BIGINT)) AS nf
       |  FROM a),
@@ -550,11 +518,7 @@ object PrepQueries {
       .toDF()
 
   val q162Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 48.0) AS BIGINT)) AS nf
       |  FROM a),
@@ -644,11 +608,7 @@ object PrepQueries {
       .toDF()
 
   val q169Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |capped AS (
       |  -- mirror gifFromText's 16*65535-code cap (16-bit height field)
       |  SELECT media_id, codes[1:1048560] AS codes FROM a),
@@ -692,11 +652,7 @@ object PrepQueries {
       .toDF()
 
   val q170Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |capped AS (
       |  -- mirror jpegFromText's 8191-code cap (16-bit height = 8*nb)
       |  SELECT media_id, codes[1:8191] AS codes FROM a),
@@ -753,11 +709,7 @@ object PrepQueries {
       .toDF()
 
   val q177Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (
       |  SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 48.0) AS BIGINT)) AS h
@@ -800,11 +752,7 @@ object PrepQueries {
     SharedQuarantine.publish(s, d)
 
   val q178Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (
       |  SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 48.0) AS BIGINT)) AS h,
@@ -963,11 +911,7 @@ object PrepQueries {
 
   // 192 = 3 RGB channels (gray triplicated) x 64 pixels per 8x8 block
   val q181Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 6.0) AS BIGINT)) AS nf
       |  FROM a),
@@ -1002,11 +946,7 @@ object PrepQueries {
       .toDF()
 
   val q182Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 6.0) AS BIGINT)) AS nf
       |  FROM a),
@@ -1086,21 +1026,38 @@ object PrepQueries {
           s, Tables.documents(s, d), "doc_id", "text"))
       .toDF()
 
-  val q199Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
-      |s AS (SELECT media_id, codes,
-      |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
-      |  FROM a),
-      |fr AS (
+  /** `fr`: every 16-code frame of a synthesized stream (MP3 or H.264)
+    * with its code sum `csum`, the seed of each frame field. Continues
+    * a WITH list after `s` (media_id, codes, nf).
+    */
+  private val FrameSumsCte: String =
+    """fr AS (
       |  SELECT media_id, nf, f,
       |    coalesce(list_sum(codes[16*f + 1 : 16*f + 16]), 0) AS csum
       |  FROM (SELECT media_id, nf, codes,
       |      unnest(generate_series(0, nf - 1)) AS f
-      |    FROM s)),
+      |    FROM s)),""".stripMargin
+
+  /** The H.264 SPS NAL size per stream (`sp`: media_id, sps_bytes), from
+    * the Exp-Golomb widths of the four stream-keyed header fields.
+    */
+  private val SpsBytesCte: String =
+    """sp AS (
+      |  SELECT media_id,
+      |    (34
+      |      + 2 * (length(bin(media_id % 9 + 1)) - 1) + 1
+      |      + 2 * (length(bin(media_id % 4 + 2)) - 1) + 1
+      |      + 2 * (length(bin(media_id % 20 + 1)) - 1) + 1
+      |      + 2 * (length(bin(media_id % 15 + 1)) - 1) + 1
+      |      + 7) // 8 AS sps_bytes
+      |  FROM s),""".stripMargin
+
+  val q199Sql: String =
+    s"""${ModalPairSql.mediaCodes}
+      |s AS (SELECT media_id, codes,
+      |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
+      |  FROM a),
+      |$FrameSumsCte
       |fl AS (
       |  SELECT media_id, nf, f,
       |    [32,40,48,56,64,80,96,112,128,160,192,224,256,320]
@@ -1246,20 +1203,11 @@ object PrepQueries {
       .toDF()
 
   val q204Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
       |  FROM a),
-      |fr AS (
-      |  SELECT media_id, nf, f,
-      |    coalesce(list_sum(codes[16*f + 1 : 16*f + 16]), 0) AS csum
-      |  FROM (SELECT media_id, nf, codes,
-      |      unnest(generate_series(0, nf - 1)) AS f
-      |    FROM s)),
+      |$FrameSumsCte
       |fl AS (
       |  SELECT media_id, nf, f,
       |    16 + (csum + f) % 64 AS plen,
@@ -1361,30 +1309,13 @@ object PrepQueries {
       .toDF()
 
   val q207Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
       |  FROM a),
-      |fr AS (
-      |  SELECT media_id, nf, f,
-      |    coalesce(list_sum(codes[16*f + 1 : 16*f + 16]), 0) AS csum
-      |  FROM (SELECT media_id, nf, codes,
-      |      unnest(generate_series(0, nf - 1)) AS f
-      |    FROM s)),
+      |$FrameSumsCte
       |fl AS (SELECT media_id, nf, f, 16 + (csum + f) % 64 AS plen FROM fr),
-      |sp AS (
-      |  SELECT media_id,
-      |    (34
-      |      + 2 * (length(bin(media_id % 9 + 1)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 4 + 2)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 20 + 1)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 15 + 1)) - 1) + 1
-      |      + 7) // 8 AS sps_bytes
-      |  FROM s),
+      |$SpsBytesCte
       |off AS (
       |  SELECT media_id, f, plen,
       |    12 + sps_bytes + coalesce(SUM(4 + plen) OVER (
@@ -1429,20 +1360,11 @@ object PrepQueries {
       .toDF()
 
   val q209Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
       |  FROM a),
-      |fr AS (
-      |  SELECT media_id, nf, f,
-      |    coalesce(list_sum(codes[16*f + 1 : 16*f + 16]), 0) AS csum
-      |  FROM (SELECT media_id, nf, codes,
-      |      unnest(generate_series(0, nf - 1)) AS f
-      |    FROM s)),
+      |$FrameSumsCte
       |fl AS (
       |  SELECT media_id, nf, f,
       |    (16 + (csum + f) % 64) % 2 AS pe,
@@ -1483,31 +1405,14 @@ object PrepQueries {
       .toDF()
 
   val q210Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf,
       |    coalesce(list_sum(codes), 0) AS tsum
       |  FROM a),
-      |fr AS (
-      |  SELECT media_id, nf, f,
-      |    coalesce(list_sum(codes[16*f + 1 : 16*f + 16]), 0) AS csum
-      |  FROM (SELECT media_id, nf, codes,
-      |      unnest(generate_series(0, nf - 1)) AS f
-      |    FROM s)),
+      |$FrameSumsCte
       |fl AS (SELECT media_id, nf, f, 16 + (csum + f) % 64 AS plen FROM fr),
-      |sp AS (
-      |  SELECT media_id,
-      |    (34
-      |      + 2 * (length(bin(media_id % 9 + 1)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 4 + 2)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 20 + 1)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 15 + 1)) - 1) + 1
-      |      + 7) // 8 AS sps_bytes
-      |  FROM s),
+      |$SpsBytesCte
       |se AS (
       |  SELECT media_id,
       |    CASE WHEN media_id % 2 = 0 THEN 5
@@ -1550,30 +1455,13 @@ object PrepQueries {
       .toDF()
 
   val q211Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
       |  FROM a),
-      |fr AS (
-      |  SELECT media_id, nf, f,
-      |    coalesce(list_sum(codes[16*f + 1 : 16*f + 16]), 0) AS csum
-      |  FROM (SELECT media_id, nf, codes,
-      |      unnest(generate_series(0, nf - 1)) AS f
-      |    FROM s)),
+      |$FrameSumsCte
       |fl AS (SELECT media_id, nf, f, 16 + (csum + f) % 64 AS plen FROM fr),
-      |sp AS (
-      |  SELECT media_id,
-      |    (34
-      |      + 2 * (length(bin(media_id % 9 + 1)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 4 + 2)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 20 + 1)) - 1) + 1
-      |      + 2 * (length(bin(media_id % 15 + 1)) - 1) + 1
-      |      + 7) // 8 AS sps_bytes
-      |  FROM s),
+      |$SpsBytesCte
       |off AS (
       |  SELECT media_id, nf, f, plen,
       |    12 + sps_bytes + coalesce(SUM(4 + plen) OVER (
@@ -1630,11 +1518,7 @@ object PrepQueries {
   val q233Sql: String = {
     val ppsBits =
       s"${uel("k")} + ${uel("nl0")} + ${uel("nl1")} + ${sel("qp")} + 12"
-    s"""WITH a AS (
-       |  SELECT doc_id AS media_id,
-       |    [ord(c) for c in string_split(coalesce(text, ''), '')
-       |     if ord(c) BETWEEN 0 AND 127] AS codes
-       |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
        |s AS (SELECT media_id, codes,
        |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf,
        |    1 + media_id % 3 AS np
@@ -2541,11 +2425,7 @@ object PrepQueries {
       .toDF()
 
   val q185Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |b AS (SELECT media_id, codes[1:1048560] AS codes FROM a),
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf
@@ -2589,11 +2469,7 @@ object PrepQueries {
       .toDF()
 
   val q186Sql: String =
-    """WITH a AS (
-      |  SELECT doc_id AS media_id,
-      |    [ord(c) for c in string_split(coalesce(text, ''), '')
-      |     if ord(c) BETWEEN 0 AND 127] AS codes
-      |  FROM documents),
+    s"""${ModalPairSql.mediaCodes}
       |b AS (SELECT media_id, codes[1:1048560] AS codes FROM a),
       |s AS (SELECT media_id, codes,
       |    greatest(1, CAST(ceil(len(codes) / 16.0) AS BIGINT)) AS nf

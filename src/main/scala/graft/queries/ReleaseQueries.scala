@@ -1,19 +1,20 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The release card — the single relation a dataset release review
-  * reads, composing three tiers this engine already verifies
-  * separately: dedup survivor selection (q74's keep-list, served
-  * through the shared cluster memo), the PII screen (q172's planted
-  * algebra), and URL/domain provenance (q175's planted algebra), all
-  * rolled up per source.
+  * reads: per source, raw and dedup-kept docs, PII exposure, distinct
+  * planted domains, quality-classifier and DSIR passes, and media
+  * quarantine counts. The card is written once, as [[releaseCard]]
+  * over four per-document tier inputs (near-dup cluster labels, NB
+  * quality scores, DSIR selection, media decode readout); q179 and
+  * q206 are two bindings of those inputs — q179 derives every tier
+  * in-query, q206 serves each from stored state or a memo — so the
+  * two cards cannot drift apart in how they roll the tiers up.
   *
-  * 100 TB: the survivor join is the memoized cluster relation (built
-  * once per session, billed to q56); everything else is map-only
-  * column work plus one map-side-combined rollup shuffle with
+  * 100 TB: one document scan carries the PII/URL columns; the tiers
+  * join on 8-byte doc ids; one map-side-combined rollup shuffle with
   * |sources| output rows.
   */
 object ReleaseQueries {
@@ -35,22 +36,9 @@ object ReleaseQueries {
     */
   val q179_release_card: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    // q74's keep-list: shared cluster labeling -> longest-wins survivor
-    val comp = graft.ops.TextDedup.dedupClusterRelationShared(
+    // kept tier: q74's labeling from the shared cluster memo
+    val clusters = graft.ops.TextDedup.dedupClusterRelationShared(
       docs, d, "doc_id", "text", "lang", n = 3, threshold = 0.5)
-    val byLen = Window.partitionBy("component")
-      .orderBy(col("n_chars").desc, col("id"))
-    val kept = comp
-      .join(docs.select(col("doc_id").as("id"), col("n_chars")), "id")
-      .withColumn("rk", row_number().over(byLen))
-      .filter(col("rk") === 1)
-      .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
-    val screened = PiiQueries.screened(
-      docs.withColumn("aug", PiiQueries.plantedText), "aug")
-    val withUrl = screened
-      .withColumn("u", regexp_extract(UrlQueries.plantedText,
-        UrlQueries.UrlRe, 0))
-      .withColumn("domain", regexp_extract(col("u"), "https?://([^/]+)", 1))
     // quality tier: q174's model, scoring EVERY doc (the card screens
     // the whole corpus, not just the held-out split)
     val base = ClassifierQueries.planted(docs)
@@ -61,18 +49,43 @@ object ReleaseQueries {
     // data-selection tier: q188's DSIR importance sign test — how much
     // of each source leans target-ward under the standing contrast
     val dsir = FilterQueries.q188_dsir_weights(s, d)
-      .select(col("doc_id"), col("selected"))
     // media tier: the q178 corrupt lake genuinely decoded — the
     // quarantine flag comes from the PNG chunk walk, not the id rule
     val quar = graft.multimodal.Multimodal.tryDecodeImageStats(
         graft.multimodal.Multimodal.corruptedPngFromText(
           s, docs, "doc_id", "text"))
-      .toDF().select(col("media_id").as("doc_id"), col("decode_ok"))
+      .toDF()
+    releaseCard(docs, clusters, qual, dsir, quar)
+  }
+
+  /** The card body shared by q179 (every tier derived in-query) and
+    * q206 (every tier served from stored state or a memo). The inputs
+    * are the four tiers, each keyed by document:
+    *  - `clusters`: (id, component) near-dup labels; the kept tier is
+    *    q74's longest-wins survivor of each component;
+    *  - `qual`: (doc_id, predicted) NB quality screen;
+    *  - `dsir`: (doc_id, selected, ...) DSIR sign test;
+    *  - `quar`: (media_id, decode_ok, ...) media decode readout.
+    * PII hits and domains are map-only planted algebra over `docs`.
+    */
+  private def releaseCard(docs: DataFrame, clusters: DataFrame,
+      qual: DataFrame, dsir: DataFrame, quar: DataFrame): DataFrame = {
+    val kept = graft.ops.Dedupe.firstRowPerKey(
+        clusters.join(docs.select(col("doc_id").as("id"), col("n_chars")), "id"),
+        keys = Seq("component"), order = Seq(col("n_chars").desc, col("id")))
+      .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
+    val screened = PiiQueries.screened(
+      docs.withColumn("aug", PiiQueries.plantedText), "aug")
+    val withUrl = screened
+      .withColumn("u", regexp_extract(UrlQueries.plantedText,
+        UrlQueries.UrlRe, 0))
+      .withColumn("domain", regexp_extract(col("u"), "https?://([^/]+)", 1))
     withUrl
       .join(kept, Seq("doc_id"), "left_outer")
       .join(qual, Seq("doc_id"))
-      .join(dsir, Seq("doc_id"))
-      .join(quar, Seq("doc_id"))
+      .join(dsir.select(col("doc_id"), col("selected")), Seq("doc_id"))
+      .join(quar.select(col("media_id").as("doc_id"), col("decode_ok")),
+        Seq("doc_id"))
       .groupBy("source")
       .agg(
         count(lit(1)).as("docs"),
@@ -131,8 +144,9 @@ object ReleaseQueries {
   }
 
   /** q206 — the six-tier release card SERVED FROM STORED STATE and the
-    * pinned memos: q179 re-derives every tier per run; this produces
-    * the IDENTICAL card with zero model building and zero media
+    * pinned memos: q179 re-derives every tier per run; this binds
+    * [[releaseCard]]'s tier inputs to stored folds and memos instead,
+    * so the IDENTICAL card costs zero model building and zero media
     * decoding at query time — the q196/q197/q198/q203 discipline
     * applied to the engine's flagship composition:
     *
@@ -166,51 +180,18 @@ object ReleaseQueries {
   val q206_state_release_card: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val dir = TokenizerQueries.ensurePostingState(s, d)
-    // kept tier: the STORED incremental-CC labeling (q103's fold family,
-    // cfg.trackReleaseCc) — q74's labeling served as one delta scan +
-    // min-combine, zero pair generation even on a COLD session (the
-    // shared memo q56 publishes would rebuild pair+CC when cold)
-    val comp = graft.pipeline.CorpusBuild.stateReleaseCc(s, dir)
-    val byLen = Window.partitionBy("component")
-      .orderBy(col("n_chars").desc, col("id"))
-    val kept = comp
-      .join(docs.select(col("doc_id").as("id"), col("n_chars")), "id")
-      .withColumn("rk", row_number().over(byLen))
-      .filter(col("rk") === 1)
-      .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
-    val screened = PiiQueries.screened(
-      docs.withColumn("aug", PiiQueries.plantedText), "aug")
-    val withUrl = screened
-      .withColumn("u", regexp_extract(UrlQueries.plantedText,
-        UrlQueries.UrlRe, 0))
-      .withColumn("domain", regexp_extract(col("u"), "https?://([^/]+)", 1))
-    // quality tier: every doc scored against the state-derived model —
-    // the fold is the sufficient statistic, no train at query time
-    val qual = graft.pipeline.CorpusBuild.stateNbScreen(s, dir, docs)
-    // data-selection tier: the folded DSIR bucket table
-    val dsir = graft.pipeline.CorpusBuild.stateDsirScores(s, dir, docs)
-      .select(col("doc_id"), col("selected"))
-    // media tier: q178's decode readout served from the pinned memo
-    val quar = SharedQuarantine.serve(s, d)
-      .select(col("media_id").as("doc_id"), col("decode_ok"))
-    withUrl
-      .join(kept, Seq("doc_id"), "left_outer")
-      .join(qual, Seq("doc_id"))
-      .join(dsir, Seq("doc_id"))
-      .join(quar, Seq("doc_id"))
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(coalesce(col("is_kept"), lit(0L))).as("kept_docs"),
-        sum(when(col("n_emails") + col("n_ipv4") + col("n_phones") > 0, 1L)
-          .otherwise(0L)).as("docs_with_pii"),
-        sum(col("n_emails") + col("n_ipv4") + col("n_phones"))
-          .as("pii_total"),
-        countDistinct("domain").as("distinct_domains"),
-        sum(col("predicted")).as("quality_pass"),
-        sum(col("selected")).as("dsir_selected"),
-        sum(when(col("decode_ok") === 0, 1L).otherwise(0L))
-          .as("media_quarantined"))
+    releaseCard(docs,
+      // kept tier: the STORED incremental-CC labeling (q103's fold
+      // family, cfg.trackReleaseCc) — zero pair generation even on a
+      // COLD session (the shared memo q56 publishes would rebuild
+      // pair+CC when cold)
+      graft.pipeline.CorpusBuild.stateReleaseCc(s, dir),
+      // quality tier: every doc scored against the state-derived model
+      graft.pipeline.CorpusBuild.stateNbScreen(s, dir, docs),
+      // data-selection tier: the folded DSIR bucket table
+      graft.pipeline.CorpusBuild.stateDsirScores(s, dir, docs),
+      // media tier: q178's decode readout served from the pinned memo
+      SharedQuarantine.serve(s, d))
   }
 
   val queries: Map[String, Q] = Map(

@@ -166,14 +166,13 @@ object StorageQueries {
   val q128_state_drift: Q = (s, d) => {
     val dir = TokenizerQueries.ensurePostingState(s, d)
     val docs = Tables.documents(s, d)
-    val b = docs.agg(min("doc_id"), max("doc_id")).first()
-    val cut2 = b.getLong(0) + 2 * ((b.getLong(1) - b.getLong(0)) / 3)
+    val (_, cut2) = TokenizerQueries.generationCuts(docs, "doc_id")
     graft.pipeline.CorpusBuild.stateDrift(s, dir,
       docs.filter(col("doc_id") > cut2))
   }
 
   val q128Sql: String =
-    """WITH b AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
+    s"""WITH b AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi
       |           FROM documents),
       |c2 AS (SELECT lo + 2 * ((hi - lo) // 3) AS cut2 FROM b),
       |buck AS (
@@ -190,23 +189,7 @@ object StorageQueries {
       |    CAST(SUM(CASE WHEN doc_id > cut2 THEN 1 ELSE 0 END) AS BIGINT)
       |      AS n_cur
       |  FROM buck, c2 GROUP BY dim, bucket),
-      |tot AS (SELECT dim, CAST(SUM(n_ref) AS BIGINT) AS tot_ref,
-      |               CAST(SUM(n_cur) AS BIGINT) AS tot_cur
-      |        FROM counts GROUP BY dim),
-      |terms AS (
-      |  SELECT c.dim, c.bucket, c.n_ref, c.n_cur, t.tot_ref, t.tot_cur,
-      |    abs(c.n_ref * t.tot_cur - c.n_cur * t.tot_ref) AS term
-      |  FROM counts c JOIN tot t ON c.dim = t.dim)
-      |SELECT dim, bucket, n_ref, n_cur,
-      |  CAST((1000000 * term) // (2 * tot_ref * tot_cur) AS BIGINT)
-      |    AS drift_ppm
-      |FROM terms
-      |UNION ALL
-      |SELECT dim, 'TOTAL', tot_ref, tot_cur,
-      |  CAST((1000000 * CAST(SUM(term) AS BIGINT))
-      |    // (2 * tot_ref * tot_cur) AS BIGINT)
-      |FROM terms GROUP BY dim, tot_ref, tot_cur
-      |ORDER BY dim, bucket""".stripMargin
+      |${AnalyticsQueries.tvdSql}""".stripMargin
 
   /** q141 — training-feed fragmentation audit: per source, how many docs
     * the 2048-token greedy pack SPLITS across sequence boundaries, the

@@ -32,15 +32,18 @@ object TokenizerQueries {
     Bpe.learnMerges(Bpe.wordDict(Tables.documents(s, d), "text"),
       "word", "n", NumMerges)
 
-  /** The same NumMerges rounds unrolled: dN = the dict after N merges,
-    * bN = round N's winning pair. DuckDB's replace is left-to-right
-    * non-overlapping like Spark's, and chr(31) sits below every printable
-    * codepoint, so `ORDER BY n DESC, p` (p = lhs||chr(31)||rhs) is
-    * exactly the (count DESC, lhs, rhs) tie-break.
+  private def lhsOf(p: String) = s"string_split($p, chr(31))[1]"
+  private def rhsOf(p: String) = s"string_split($p, chr(31))[2]"
+
+  /** q105's merge learning as oracle CTEs, the NumMerges rounds
+    * unrolled: d0 = the ␟-wrapped word dict, dN = the dict after N
+    * merges, bN = round N's winning pair. DuckDB's replace is
+    * left-to-right non-overlapping like Spark's, and chr(31) sits below
+    * every printable codepoint, so `ORDER BY n DESC, p`
+    * (p = lhs||chr(31)||rhs) is exactly the (count DESC, lhs, rhs)
+    * tie-break. q105Sql reads b1..bN; q108Sql also applies them.
     */
-  val q105Sql: String = {
-    def lhsOf(p: String) = s"string_split($p, chr(31))[1]"
-    def rhsOf(p: String) = s"string_split($p, chr(31))[2]"
+  private val bpeLearnSql: String = {
     val rounds = (1 to NumMerges).map { r =>
       val dPrev = s"d${r - 1}"
       val dNext =
@@ -63,10 +66,6 @@ object TokenizerQueries {
          |b$r AS (SELECT p, n FROM p$r ORDER BY n DESC, p LIMIT 1)$dNext"""
         .stripMargin
     }.mkString(",\n")
-    val readout = (1 to NumMerges).map { r =>
-      s"""SELECT CAST($r AS BIGINT) AS merge_rank, ${lhsOf("p")} AS lhs,
-         |  ${rhsOf("p")} AS rhs, n FROM b$r""".stripMargin
-    }.mkString("\nUNION ALL\n")
     s"""WITH d0 AS (
        |  SELECT cnt,
        |    chr(31) || array_to_string(
@@ -77,7 +76,15 @@ object TokenizerQueries {
        |      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
        |      FROM documents)
        |    WHERE len(word) > 0 GROUP BY word)),
-       |$rounds
+       |$rounds""".stripMargin
+  }
+
+  val q105Sql: String = {
+    val readout = (1 to NumMerges).map { r =>
+      s"""SELECT CAST($r AS BIGINT) AS merge_rank, ${lhsOf("p")} AS lhs,
+         |  ${rhsOf("p")} AS rhs, n FROM b$r""".stripMargin
+    }.mkString("\nUNION ALL\n")
+    s"""$bpeLearnSql
        |SELECT * FROM (
        |$readout)
        |ORDER BY merge_rank""".stripMargin
@@ -116,7 +123,17 @@ object TokenizerQueries {
   val q107_ngram_lm_score: Q = (s, d) => {
     val docs = Tables.documents(s, d)
     val bigrams = graft.ops.TextDedup.maybeMaterialize(bigramOcc(docs))
-    val counts = bigrams.groupBy("bk").agg(count(lit(1)).as("n"))
+    lmReadout(docs, bigrams, bigrams.groupBy("bk").agg(count(lit(1)).as("n")))
+  }
+
+  /** The per-doc LM readout: `bigrams` (doc_id, bk) scored against the
+    * bigram count table `counts` (bk, n), one row per doc of `docs`
+    * (docs without bigrams read 0). Shared by q107 (counts built
+    * in-query) and [[graft.pipeline.CorpusBuild.stateLmScore]] (counts
+    * folded from state).
+    */
+  private[graft] def lmReadout(docs: DataFrame, bigrams: DataFrame,
+      counts: DataFrame): DataFrame = {
     val perDoc = bigrams.join(counts, "bk")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
@@ -183,30 +200,6 @@ object TokenizerQueries {
     * order, then symbols = separator-count/2.
     */
   val q108Sql: String = {
-    def lhsOf(p: String) = s"string_split($p, chr(31))[1]"
-    def rhsOf(p: String) = s"string_split($p, chr(31))[2]"
-    val learnChain = (1 to NumMerges).map { r =>
-      val dPrev = s"d${r - 1}"
-      val dNext =
-        if (r == NumMerges) ""
-        else s""",
-          |d$r AS (
-          |  SELECT cnt, replace(s,
-          |      chr(31) || ${lhsOf("p")} || chr(31) || chr(31) ||
-          |        ${rhsOf("p")} || chr(31),
-          |      chr(31) || ${lhsOf("p")} || ${rhsOf("p")} || chr(31)) AS s
-          |  FROM $dPrev, b$r)""".stripMargin
-      s"""p$r AS (
-         |  SELECT p, CAST(SUM(cnt) AS BIGINT) AS n FROM (
-         |    SELECT cnt, unnest([l[i] || chr(31) || l[i+1]
-         |                        for i in generate_series(1, len(l)-1)]) AS p
-         |    FROM (SELECT cnt,
-         |            string_split(s[2:len(s)-1], chr(31) || chr(31)) AS l
-         |          FROM $dPrev))
-         |  GROUP BY p),
-         |b$r AS (SELECT p, n FROM p$r ORDER BY n DESC, p LIMIT 1)$dNext"""
-        .stripMargin
-    }.mkString(",\n")
     val applyChain = (1 to NumMerges).map { r =>
       s"""t$r AS (
          |  SELECT doc_id, n_tokens, replace(s,
@@ -215,17 +208,7 @@ object TokenizerQueries {
          |      chr(31) || ${lhsOf("p")} || ${rhsOf("p")} || chr(31)) AS s
          |  FROM t${r - 1}, b$r)""".stripMargin
     }.mkString(",\n")
-    s"""WITH d0 AS (
-       |  SELECT cnt,
-       |    chr(31) || array_to_string(
-       |      [word[i] for i in generate_series(1, len(word))],
-       |      chr(31) || chr(31)) || chr(31) AS s
-       |  FROM (
-       |    SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |      SELECT unnest(string_split_regex(trim(text), '\\s+')) AS word
-       |      FROM documents)
-       |    WHERE len(word) > 0 GROUP BY word)),
-       |$learnChain,
+    s"""$bpeLearnSql,
        |t0 AS (
        |  SELECT doc_id,
        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
@@ -497,6 +480,17 @@ object TokenizerQueries {
   private val builtStateDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
+  /** The two id cuts that split `df`'s `idCol` range [lo, hi] into the
+    * posting state's three id-monotone ingest generations: ids ≤ cut1,
+    * (cut1, cut2], and > cut2. Queries that replay the last generation
+    * as their probe batch (q128, q144) filter on the same cut2.
+    */
+  private[graft] def generationCuts(df: DataFrame, idCol: String): (Long, Long) = {
+    val b = df.agg(min(col(idCol)), max(col(idCol))).first()
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
+  }
+
   /** Build the posting+pack state once per (process, sf dir): three
     * id-monotone `ingestBatch` generations with the posting and pack
     * trackers on and the near-dup tier off — the index-maintenance
@@ -519,17 +513,11 @@ object TokenizerQueries {
         trackClassifier = true, trackDsir = true, trackBigramLm = true,
         trackCdc = true, trackReleaseCc = true, nearDupTier = false)
       val docs = Tables.documents(s, d)
-      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).first()
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val cut1 = lo + (hi - lo) / 3
-      val cut2 = lo + 2 * ((hi - lo) / 3)
+      val (cut1, cut2) = generationCuts(docs, "doc_id")
       // the embedding side-input follows the same id-monotone thirds on
       // its own id space (vec batches commit with their doc generation)
       val emb = Tables.embeddings(s, d)
-      val vb = emb.agg(min(col("vec_id")), max(col("vec_id"))).first()
-      val (vlo, vhi) = (vb.getLong(0), vb.getLong(1))
-      val vcut1 = vlo + (vhi - vlo) / 3
-      val vcut2 = vlo + 2 * ((vhi - vlo) / 3)
+      val (vcut1, vcut2) = generationCuts(emb, "vec_id")
       graft.pipeline.CorpusBuild.ingestBatch(dir,
         docs.filter(col("doc_id") <= cut1), cfg,
         emb.filter(col("vec_id") <= vcut1))

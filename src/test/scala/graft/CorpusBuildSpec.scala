@@ -40,7 +40,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
 
   test("run: an all-filtered corpus returns an empty manifest instead of " +
       "dying on the post-write read-back") {
-    val out = java.nio.file.Files.createTempDirectory("corpus_empty")
+    val out = tempDir("corpus_empty")
       .resolve("corpus").toString
     val strict = CorpusBuild.Config(minChars = Long.MaxValue)
     val manifest = CorpusBuild.run(docs, Some(out), strict)
@@ -49,7 +49,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
 
   test("run: manifest is deterministic across re-runs, splits partition " +
       "the keep-list, partitioned write round-trips") {
-    val out = java.nio.file.Files.createTempDirectory("corpus_build")
+    val out = tempDir("corpus_build")
       .resolve("corpus").toString
     val m1 = CorpusBuild.run(docs, Some(out)).collect().toSeq
     val m2 = CorpusBuild.run(docs, None).collect().toSeq
@@ -68,7 +68,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
 
   test("ingestBatch: N sequential ingests == one full build on the union " +
       "(survivors, splits, manifest), and out-of-order ids are refused") {
-    val stateDir = java.nio.file.Files.createTempDirectory("corpus_state")
+    val stateDir = tempDir("corpus_state")
       .resolve("state").toString
     // three append-only batches partitioning the corpus by id range —
     // near-dup clusters in the testdata span ranges, so later batches DO
@@ -137,7 +137,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
 
   test("ingestBatch: generations are DELTAS (bytes scale with the batch), " +
       "a torn pointer recovers via _COMMIT, compaction preserves state") {
-    val stateDir = java.nio.file.Files.createTempDirectory("corpus_delta")
+    val stateDir = tempDir("corpus_delta")
       .resolve("state").toString
     val big = docs.filter(col("doc_id") < 400)
     val small = docs.filter(col("doc_id") >= 400 && col("doc_id") < 420)
@@ -200,7 +200,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
   test("trackPositions: phrase counts from the stored positional index " +
       "equal the corpus-scan HOF counts, count chained occurrences per " +
       "adjacent pair, and survive compaction") {
-    val stateDir = java.nio.file.Files.createTempDirectory("corpus_pos")
+    val stateDir = tempDir("corpus_pos")
       .resolve("state").toString
     val cfg = CorpusBuild.Config(trackPositions = true, nearDupTier = false)
     // plant a chained-occurrence doc: "window join window join" holds TWO
@@ -246,7 +246,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
 
   test("stateSurprisal: the index-served LM scores equal the in-query " +
       "q136 recompute across batches and compaction") {
-    val stateDir = java.nio.file.Files.createTempDirectory("corpus_lm")
+    val stateDir = tempDir("corpus_lm")
       .resolve("state").toString
     val cfg = CorpusBuild.Config(trackPostings = true, nearDupTier = false)
     val maxId = docs.agg(max("doc_id")).first().getLong(0)
@@ -307,7 +307,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
 
     // 4. shard materialization: hive layout by shard, content equality,
     //    disjoint contiguous seq ranges, manifest arithmetic
-    val shardDir = java.nio.file.Files.createTempDirectory("feedshards")
+    val shardDir = tempDir("feedshards")
       .resolve("shards").toString
     val manifest = CorpusBuild.writeFeedShards(feed, shardDir,
         seqsPerShard = 2L)
@@ -343,7 +343,7 @@ class CorpusBuildSpec extends AnyFunSuite with SharedSpark {
       "recompute over every ingested doc; later batches merge standing " +
       "components; compaction preserves it; the serve plan has no pair " +
       "generation") {
-    val stateDir = java.nio.file.Files.createTempDirectory("corpus_relcc")
+    val stateDir = tempDir("corpus_relcc")
       .resolve("state").toString
     val cfg = CorpusBuild.Config(nearDupTier = false, trackReleaseCc = true)
     val cuts = Seq(0L -> 170L, 170L -> 340L, 340L -> Long.MaxValue)

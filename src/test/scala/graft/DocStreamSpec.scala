@@ -19,7 +19,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed ingest across restarts == one full batch build; " +
       "restart with no new files is a no-op; replayed batch skips") {
-    val root = java.nio.file.Files.createTempDirectory("docstream")
+    val root = tempDir("docstream")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -75,7 +75,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "quoting a standing train-split doc surfaces BEFORE it folds, " +
       "with its split labels — and the state-served readout agrees") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("docstream_split")
+    val root = tempDir("docstream_split")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -138,7 +138,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "and the served model passes the argmin + ANN rescoring gates " +
       "in BOTH regimes") {
     import graft.ops.Clustering
-    val root = java.nio.file.Files.createTempDirectory("docstream_vecs")
+    val root = tempDir("docstream_vecs")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -231,7 +231,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed count state == full q101/q107 recompute, and survives " +
       "compaction") {
-    val root = java.nio.file.Files.createTempDirectory("docstream_counts")
+    val root = tempDir("docstream_counts")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -463,7 +463,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "door screens each post-first batch against the standing model") {
     import graft.ops.NaiveBayes
     import graft.queries.ClassifierQueries
-    val root = java.nio.file.Files.createTempDirectory("docstream_clf")
+    val root = tempDir("docstream_clf")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -531,7 +531,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "each post-first batch against the standing counts") {
     import graft.ops.Dsir
     import graft.queries.ClassifierQueries
-    val root = java.nio.file.Files.createTempDirectory("docstream_dsir")
+    val root = tempDir("docstream_dsir")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -597,7 +597,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "read), and the onPerplexity door scores each post-first batch " +
       "against the standing model") {
     import graft.ops.BigramLm
-    val root = java.nio.file.Files.createTempDirectory("docstream_lm")
+    val root = tempDir("docstream_lm")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -684,7 +684,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "onCdc door surfaces each post-first batch's eval-shared chunks " +
       "against the standing index") {
     import graft.queries.ExtensionQueries
-    val root = java.nio.file.Files.createTempDirectory("docstream_cdc")
+    val root = tempDir("docstream_cdc")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -764,7 +764,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "typed into the callback, and with redactPii the corpus state " +
       "folds ONLY redacted text (clean docs byte-identical)") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("docstream_pii")
+    val root = tempDir("docstream_pii")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -824,7 +824,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
       "from batch 2), and pre-fold screening semantics survive the " +
       "composition") {
     import graft.ops.BigramLm
-    val root = java.nio.file.Files.createTempDirectory("docstream_alldoors")
+    val root = tempDir("docstream_alldoors")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -912,7 +912,7 @@ class DocStreamSpec extends AnyFunSuite with SharedSpark {
   test("the web-archive tier is a STREAMING front door: .warc.gz " +
       "segments arriving as micro-batches fold to the same state as a " +
       "one-shot build over the recovered documents") {
-    val root = java.nio.file.Files.createTempDirectory("warcstream")
+    val root = tempDir("warcstream")
     val lake = root.resolve("lake").toString
     val state = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString

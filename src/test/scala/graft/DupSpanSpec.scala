@@ -91,7 +91,7 @@ class DupSpanSpec extends AnyFunSuite with SharedSpark {
       "tile every doc (dup + kept = total tokens)") {
     import spark.implicits._
     forAll(genCorpus) { docs =>
-      val dir = java.nio.file.Files.createTempDirectory("dupclean").toString
+      val dir = tempDir("dupclean").toString
       docs.toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val audit = graft.queries.MixQueries.q101_dup_spans(spark, dir)
@@ -117,7 +117,7 @@ class DupSpanSpec extends AnyFunSuite with SharedSpark {
   test("q102: a null-text doc keeps no tokens and cleans to the empty " +
       "string") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("dupspannull").toString
+    val dir = tempDir("dupspannull").toString
     Seq((1L, Option("a b c d e f")), (2L, Option.empty[String]),
         (3L, Option("a b c d e f g")))
       .toDF("doc_id", "text")
@@ -133,7 +133,7 @@ class DupSpanSpec extends AnyFunSuite with SharedSpark {
       "corpora with copies crossing the batch boundary") {
     import spark.implicits._
     forAll(genCorpus) { docs =>
-      val dir = java.nio.file.Files.createTempDirectory("dupspaninc").toString
+      val dir = tempDir("dupspaninc").toString
       docs.toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       // exact copies every 4th doc + batch = ids % 20 == 0 → duplicate
@@ -154,7 +154,7 @@ class DupSpanSpec extends AnyFunSuite with SharedSpark {
       "positions, and no eval window survives in the cleaned text") {
     import spark.implicits._
     forAll(genCorpus) { docs =>
-      val dir = java.nio.file.Files.createTempDirectory("decontam").toString
+      val dir = tempDir("decontam").toString
       docs.toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val toks = docs.map { case (id, t) =>
@@ -197,7 +197,7 @@ class DupSpanSpec extends AnyFunSuite with SharedSpark {
       "corpora with copies, adjacency, and sub-window docs") {
     import spark.implicits._
     forAll(genCorpus) { docs =>
-      val dir = java.nio.file.Files.createTempDirectory("dupspan").toString
+      val dir = tempDir("dupspan").toString
       docs.toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val got = graft.queries.MixQueries.q101_dup_spans(spark, dir)

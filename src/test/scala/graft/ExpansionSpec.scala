@@ -254,8 +254,7 @@ class ExpansionSpec extends AnyFunSuite with SharedSpark {
   streamingTest("foreachBatch + appendNewKeys = an idempotent streaming upsert sink") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val sink = java.nio.file.Files
-      .createTempDirectory("graft_stream_upsert").toFile.getAbsolutePath + "/t"
+    val sink = tempDir("graft_stream_upsert").toFile.getAbsolutePath + "/t"
     val source = MemoryStream[(Long, String)](spark)
     val q = source.toDF().toDF("id", "v")
       .writeStream

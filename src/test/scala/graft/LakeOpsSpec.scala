@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +12,7 @@ import graft.sources.Sources
 class LakeOpsSpec extends AnyFunSuite with SharedSpark {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_lake").toFile.getAbsolutePath
+    tempDir("graft_lake").toFile.getAbsolutePath
 
   test("overwritePartitions rewrites only the partitions present in the batch") {
     import spark.implicits._

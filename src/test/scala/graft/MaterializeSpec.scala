@@ -28,7 +28,7 @@ class MaterializeSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("q56 runs end-to-end on the reliable-checkpoint tier") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try assert(q56InMode("reliable") === q56InMode("local"))
     finally spark.conf.unset("spark.graft.checkpointDir")

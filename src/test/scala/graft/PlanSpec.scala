@@ -572,6 +572,20 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       "state-served card diverged from the in-query card")
   }
 
+  test("q208: the matrix with its CDC tier served from stored state " +
+      "equals the in-query matrix q190, row for row") {
+    // both are unordered per-document relations: compare in doc_id order
+    def byDoc(df: org.apache.spark.sql.DataFrame) =
+      df.collect().sortBy(_.getAs[Long]("doc_id")).map(_.toSeq).toSeq
+    val inQuery = byDoc(
+      graft.queries.CurationQueries.q190_curation_matrix(spark, sf))
+    val served = byDoc(
+      graft.queries.CurationQueries.q208_state_curation_matrix(spark, sf))
+    assert(inQuery.nonEmpty)
+    assert(served === inQuery,
+      "state-served curation matrix diverged from the in-query matrix")
+  }
+
   test("web-archive tier plans: every walk is map-only past the ONE " +
       "long-keyed synthesis exchange; robots audit and boilerplate " +
       "extract are pure map; no string-keyed shuffle anywhere") {

@@ -40,7 +40,7 @@ class Q92ParitySpec extends AnyFunSuite with SharedSpark {
       "corpora straddling the quota") {
     import spark.implicits._
     forAll(genCorpus) { rows =>
-      val dir = java.nio.file.Files.createTempDirectory("q92par").toString
+      val dir = tempDir("q92par").toString
       rows.toDF("doc_id", "source")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val win = CurationQueries.q92_source_quota(spark, dir)

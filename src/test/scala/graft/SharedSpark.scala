@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuiteLike
@@ -30,6 +33,9 @@ trait SharedSpark extends AnyFunSuiteLike {
     }
   }
 
+  /** A fresh temp dir, deleted with its contents when the JVM exits. */
+  protected def tempDir(prefix: String): Path = SharedSpark.tempDir(prefix)
+
   /** A test whose body runs with the async checkpoint checksum writer
     * off: it can deadlock under rapid local state-store commits.
     */
@@ -40,10 +46,26 @@ trait SharedSpark extends AnyFunSuiteLike {
 
 object SharedSpark {
 
+  private val tempDirs = new ConcurrentLinkedQueue[Path]
+
+  // one hook for every dir, registered on the first tempDir call
+  private lazy val deleteAtExit = sys.addShutdownHook(
+    tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile)))
+
+  /** A fresh temp dir under `java.io.tmpdir`, deleted recursively when
+    * the test JVM exits (a spec's dirs may outlive the spec: a later one
+    * can still read a path the session cached).
+    */
+  def tempDir(prefix: String): Path = {
+    deleteAtExit
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
   // in the qualified form the session stores, so that later getOrCreate
   // calls see an unchanged static conf and stay quiet
-  private lazy val warehouse =
-    "file:" + Files.createTempDirectory("graft_wh").toString
+  private lazy val warehouse = "file:" + tempDir("graft_wh").toString
 
   def session: SparkSession = Sessions.create("local[4]", 4,
     extra = Map("spark.sql.warehouse.dir" -> warehouse))

@@ -12,7 +12,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("CSV round-trip preserves schema and null/empty contract (S3/S4/S5)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_csv").toString + "/raw"
+    val dir = tempDir("graft_csv").toString + "/raw"
     val rows = Seq(
       Schemas.RawScrapedUrl("data scientist", "J1", Some(11000), Some(15000),
         java.sql.Date.valueOf("2022-10-08"), "/hk/en/job-J1"),
@@ -27,7 +27,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("HTML lake read carries path + content per file (S6)") {
-    val lake = Files.createTempDirectory("graft_lake")
+    val lake = tempDir("graft_lake")
     val day = lake.resolve("2022/10/08")
     Files.createDirectories(day)
     Files.writeString(day.resolve("J1.html"), "<html><body>doc one</body></html>")
@@ -42,7 +42,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("appendNewKeys is idempotent across re-runs (S2/D2)") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_sink").toString + "/t"
+    val path = tempDir("graft_sink").toString + "/t"
     val batch = Seq(("J1", 1), ("J2", 2)).toDF("job_id", "v")
     Sources.appendNewKeys(spark, batch, path, Seq("job_id"))
     Sources.appendNewKeys(spark, batch, path, Seq("job_id")) // re-run: no-op
@@ -69,7 +69,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("partitioned lake write prunes partitions on read (S7)") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_part").toString + "/lake"
+    val path = tempDir("graft_part").toString + "/lake"
     val df = Seq(
       ("J1", 2022, 10, 8, "a"), ("J2", 2022, 10, 9, "b"), ("J3", 2022, 11, 1, "c"))
       .toDF("job_id", "year", "month", "day", "payload")
@@ -84,7 +84,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("single-file CSV export: one plain file, null='' contract (S5)") {
     import spark.implicits._
-    val file = Files.createTempDirectory("graft_csv1").toString + "/export.csv"
+    val file = tempDir("graft_csv1").toString + "/export.csv"
     val df = Seq(("J1", Some(11000)), ("J2", None))
       .toDF("job_id", "salary")
     Sources.writeCsvSingleFile(df, file, header = true)
@@ -98,7 +98,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("single-file CSV export overwrites an existing export in place") {
     import spark.implicits._
-    val file = Files.createTempDirectory("graft_csv2").toString + "/export.csv"
+    val file = tempDir("graft_csv2").toString + "/export.csv"
     Sources.writeCsvSingleFile(Seq(("J1", 1)).toDF("job_id", "v"), file)
     Sources.writeCsvSingleFile(Seq(("J2", 2), ("J3", 3)).toDF("job_id", "v"), file)
     val lines = Files.readAllLines(java.nio.file.Path.of(file))
@@ -111,7 +111,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
 
   test("compact preserves a hive-partitioned layout and refuses to flatten") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_cmp").toString + "/lake"
+    val path = tempDir("graft_cmp").toString + "/lake"
     val df = Seq(("J1", 8, "a"), ("J2", 8, "b"), ("J3", 9, "c"))
       .toDF("job_id", "day", "payload").repartition(3)
     Sources.writePartitioned(df, path, Seq("day"))

@@ -95,16 +95,22 @@ class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
       "graft_token_count(lower(text))",
       "graft_lang_id(lower(text))",
       "graft_quality_ppm(lower(text))",
-      "graft_split(lower(text))")
+      "graft_split(lower(text))").map { call =>
+        call -> spark.sql(s"SELECT $call FROM sql_surface_audit")
+      } :+
+      // a Column function with no SQL builder, audited through a select
+      ("collapseRuns(split(lower(text), ' '))" -> spark
+        .table("sql_surface_audit")
+        .select(TextAnalysis.collapseRuns(split(lower(col("text")), " "))))
     def perElementBodies(e: Expression): Seq[Expression] = e.flatMap {
       case a: ArrayAggregate => Seq(a.merge) // finish runs once per row
       case h: HigherOrderFunction => h.functions
       case _ => Nil
     }
-    val leaks = calls.filter { call =>
-      spark.sql(s"SELECT $call FROM sql_surface_audit").queryExecution
-        .analyzed.flatMap(_.expressions).flatMap(perElementBodies)
-        .exists(_.exists(_.isInstanceOf[Lower]))
+    val leaks = calls.collect {
+      case (call, df) if df.queryExecution.analyzed
+          .flatMap(_.expressions).flatMap(perElementBodies)
+          .exists(_.exists(_.isInstanceOf[Lower])) => call
     }
     assert(leaks.isEmpty, s"argument re-evaluated per element by: $leaks")
   }

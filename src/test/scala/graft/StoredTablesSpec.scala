@@ -20,7 +20,7 @@ class StoredTablesSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   /** Job starts per job group, delivered by the listener bus. */
   private final class JobGroups extends SparkListener {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,9 +11,9 @@ class StreamingCheckpointSpec extends AnyFunSuite with SharedSpark {
 
   test("checkpointed file stream processes each file exactly once across restarts") {
     import spark.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_in").toString
-    val outDir = Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
+    val inDir = tempDir("graft_stream_in").toString
+    val outDir = tempDir("graft_stream_out").toString
+    val ckpt = tempDir("graft_stream_ckpt").toString
 
     def writeBatch(name: String, rows: Seq[(Long, String)]): Unit =
       rows.toDF("id", "payload").coalesce(1).write.mode("append")

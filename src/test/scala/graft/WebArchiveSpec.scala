@@ -932,8 +932,7 @@ class WebArchiveSpec extends AnyFunSuite with SharedSpark {
     got.zip(want).foreach { case (g, w) => assert(g === w) }
 
     // and the recovered relation drives the standing state build
-    val dir = java.nio.file.Files
-      .createTempDirectory("webstate").toString
+    val dir = tempDir("webstate").toString
     graft.pipeline.CorpusBuild.ingestBatch(dir, fromWarc)
     val manifest = graft.pipeline.CorpusBuild.stateManifest(spark, dir)
       .collect()
