@@ -1661,4 +1661,71 @@ class CodecSpec extends AnyFunSuite with SharedSpark {
     }
     assert(refused > 0, "no flip was ever refused — the checks are dead")
   }
+
+  /** One seeded bit flip per trial at a byte drawn from `at`: each of
+    * the 400 flips must decode or raise IllegalArgumentException.
+    * Returns how many were refused.
+    */
+  private def seededFlips(base: Array[Byte], at: IndexedSeq[Int])(
+      decode: Array[Byte] => Any): Int = {
+    val rnd = new scala.util.Random(13)
+    var refused = 0
+    (0 until 400).foreach { _ =>
+      val m = base.clone()
+      val i = at(rnd.nextInt(at.length))
+      m(i) = (m(i) ^ (1 << rnd.nextInt(8))).toByte
+      try { decode(m); () } catch {
+        case _: IllegalArgumentException => refused += 1
+        case other: Throwable =>
+          fail(s"flip at byte $i leaked ${other.getClass}: ${other.getMessage}")
+      }
+    }
+    info(s"$refused/400 flips refused")
+    refused
+  }
+
+  test("hostile pin on the JPEG entropy-coded scan: seeded bit flips " +
+      "after SOS either decode or raise the loud contract") {
+    val (w, h) = (24, 16)
+    val gray = Array.tabulate(w * h)(p =>
+      ((p % w) * 9 + (p / w) * 5 + (p % w) * (p / w) % 7 * 11).toByte)
+    val base = Codecs.encodeJpeg(w, h, gray)
+    val sos = base.indexOfSlice(Seq(0xFF.toByte, 0xDA.toByte))
+    val scan = sos + 2 + (((base(sos + 2) & 0xFF) << 8) | (base(sos + 3) & 0xFF))
+    assert(sos > 0 && scan < base.length - 2)
+    val refused = seededFlips(base, scan until base.length - 2)(
+      Codecs.decodeJpeg)
+    assert(refused > 0, "no flip was ever refused — the checks are dead")
+  }
+
+  test("hostile pin on the FLAC frames: seeded bit flips after " +
+      "STREAMINFO either decode or raise the loud contract") {
+    val samples = Array.tabulate[Short](6000)(i =>
+      (6000 * math.sin(i * 0.03) + (i * 37) % 23).toShort)
+    val base = Codecs.encodeFlac(8000, samples)
+    val frames = 4 + 4 + 34 // magic, block header, STREAMINFO
+    assert((base(frames) & 0xFF) == 0xFF) // the first frame's sync code
+    val refused = seededFlips(base, frames until base.length)(
+      Codecs.decodeFlac)
+    assert(refused > 0, "no flip was ever refused — the checks are dead")
+  }
+
+  test("hostile pin on the GIF LZW sub-blocks: seeded bit flips in the " +
+      "code stream either decode or raise the loud contract") {
+    val (w, h) = (40, 30)
+    val plane = Array.tabulate(w * h)(p =>
+      ((p % w) / 3 * 17 + (p / w) / 2 * 29 + (p % w) * (p / w) % 5).toByte)
+    val base = Codecs.encodeGif(w, h, plane)
+    // header, screen descriptor, color table, image descriptor, then
+    // the LZW minimum code size and the length-prefixed sub-blocks
+    var p = 6 + 7 + 768 + 10 + 1
+    val data = IndexedSeq.newBuilder[Int]
+    while (base(p) != 0) {
+      val n = base(p) & 0xFF
+      data ++= (p + 1) to (p + n)
+      p += 1 + n
+    }
+    val refused = seededFlips(base, data.result())(Codecs.decodeGif)
+    assert(refused > 0, "no flip was ever refused — the checks are dead")
+  }
 }
