@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.web.Bits
+
 /** From-scratch, zero-dependency codecs for the two classic uncompressed
   * media containers — real parsers, not stubs:
   *
@@ -375,16 +377,9 @@ object Codecs {
     out.write(minCodeSize)
     val clear = 1 << minCodeSize
     val eoi = clear + 1
-    val bits = new java.io.ByteArrayOutputStream()
-    var cur = 0L; var nBits = 0
+    val bits = new Bits.LsbWriter("gif", indices.length)
     var codeSize = minCodeSize + 1
-    def emit(code: Int): Unit = {
-      cur |= code.toLong << nBits
-      nBits += codeSize
-      while (nBits >= 8) {
-        bits.write((cur & 0xFF).toInt); cur >>>= 8; nBits -= 8
-      }
-    }
+    def emit(code: Int): Unit = bits.bits(code, codeSize)
     val dict = new java.util.HashMap[Long, Integer]()
     var nextCode = eoi + 1
     def reset(): Unit = { dict.clear(); nextCode = eoi + 1; codeSize = minCodeSize + 1 }
@@ -423,9 +418,8 @@ object Codecs {
       if (nextCode == (1 << codeSize) + 1 && codeSize < 12) codeSize += 1
     }
     emit(eoi)
-    if (nBits > 0) bits.write((cur & 0xFF).toInt)
     // 255-byte sub-blocks + terminator
-    val data = bits.toByteArray
+    val data = bits.result
     var off = 0
     while (off < data.length) {
       val n = math.min(255, data.length - off)
@@ -532,17 +526,8 @@ object Codecs {
     val suffix = new Array[Byte](4096)
     var nextCode = eoi + 1
     var codeSize = minCodeSize + 1
-    var cur = 0L; var nBits = 0; var pos = 0
+    val codes = new Bits.LsbReader("gif", data)
     var prevCode = -1
-    def readCode(): Int = {
-      while (nBits < codeSize && pos < data.length) {
-        cur |= (data(pos) & 0xFFL) << nBits; pos += 1; nBits += 8
-      }
-      require(nBits >= codeSize, "truncated LZW stream")
-      val v = (cur & ((1L << codeSize) - 1)).toInt
-      cur >>>= codeSize; nBits -= codeSize
-      v
-    }
     def expand(code: Int): Unit = {
       // walk the prefix chain, then reverse into the output
       var c = code
@@ -566,7 +551,7 @@ object Codecs {
     }
     var ended = false
     while (!ended) {
-      val code = readCode()
+      val code = codes.bits(codeSize)
       if (code == clear) {
         nextCode = eoi + 1; codeSize = minCodeSize + 1; prevCode = -1
       } else if (code == eoi) {
@@ -947,38 +932,19 @@ object Codecs {
     c
   }
 
-  /** Growable MSB-first bit sink backed by a byte builder, with byte
-    * positions visible so CRCs can cover exact spans.
-    */
-  private final class FlacWriter {
-    val buf = new java.io.ByteArrayOutputStream()
-    private var acc = 0; private var n = 0
-    def bytePos: Int = { require(n == 0, "unaligned"); buf.size }
-    def put(value: Int, length: Int): Unit = {
-      var i = length - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((value >>> i) & 1); n += 1
-        if (n == 8) { buf.write(acc); acc = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def putLong(value: Long, length: Int): Unit = {
-      if (length > 24) { put((value >>> 24).toInt, length - 24)
-        put((value & 0xFFFFFF).toInt, 24) }
-      else put(value.toInt, length)
-    }
-    def alignZero(): Unit = while (n != 0) put(0, 1)
-    /** Unary-encoded Rice quotient: q zero bits then a one. */
-    def putUnary(q: Int): Unit = { var i = 0
-      while (i < q) { put(0, 1); i += 1 }; put(1, 1) }
+  /** Unary-encoded Rice quotient: q zero bits then a one. */
+  private def putUnary(w: Bits.MsbWriter, q: Int): Unit = {
+    var left = q
+    while (left >= 32) { w.bits(0, 32); left -= 32 }
+    w.bits(1, left + 1)
   }
 
   /** The UTF-8-style variable-length integer FLAC uses for frame
     * numbers (1-7 bytes, up to 36 payload bits).
     */
-  private def putUtf8(w: FlacWriter, v: Long): Unit = {
+  private def putUtf8(w: Bits.MsbWriter, v: Long): Unit = {
     require(v >= 0 && v < (1L << 36), s"frame number $v out of range")
-    if (v < 0x80) w.put(v.toInt, 8)
+    if (v < 0x80) w.bits(v.toInt, 8)
     else {
       // k total bytes carry 6*(k-1) + (7-k) payload bits for k in 2..6,
       // and exactly 36 for k = 7
@@ -987,10 +953,10 @@ object Codecs {
       val lead = (0xFF << (8 - k)) & 0xFF // k ones then a zero
       val leadBits = if (k == 7) 0
         else (v >>> (6 * (k - 1))).toInt & ((1 << (7 - k)) - 1)
-      w.put(lead | leadBits, 8)
+      w.bits(lead | leadBits, 8)
       var i = k - 2
       while (i >= 0) {
-        w.put(0x80 | ((v >>> (6 * i)).toInt & 0x3F), 8)
+        w.bits(0x80 | ((v >>> (6 * i)).toInt & 0x3F), 8)
         i -= 1
       }
     }
@@ -1006,50 +972,49 @@ object Codecs {
     */
   def encodeFlac(sampleRate: Int, samples: Array[Short]): Array[Byte] = {
     require(sampleRate > 0 && sampleRate < (1 << 20), "bad sample rate")
-    val w = new FlacWriter
-    w.buf.write('f'); w.buf.write('L'); w.buf.write('a'); w.buf.write('C')
+    val w = new Bits.MsbWriter("flac", samples.length + 64)
+    "fLaC".foreach(c => w.bits(c, 8))
     // STREAMINFO: last-block flag + type 0, 24-bit length 34
-    w.put(0x80, 8); w.put(34, 24)
-    w.put(4096, 16); w.put(4096, 16) // min/max block size
-    w.put(0, 24); w.put(0, 24)       // min/max frame size unknown
-    w.put(sampleRate, 20)
-    w.put(0, 3)                      // channels - 1
-    w.put(15, 5)                     // bits/sample - 1
-    w.putLong(samples.length.toLong, 36)
+    w.bits(0x80, 8); w.bits(34, 24)
+    w.bits(4096, 16); w.bits(4096, 16) // min/max block size
+    w.bits(0, 24); w.bits(0, 24)       // min/max frame size unknown
+    w.bits(sampleRate, 20)
+    w.bits(0, 3)                      // channels - 1
+    w.bits(15, 5)                     // bits/sample - 1
+    w.bits(0, 4); w.bits(samples.length, 32) // 36-bit total samples
     val md = java.security.MessageDigest.getInstance("MD5")
     val pcm = java.nio.ByteBuffer.allocate(samples.length * 2)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     samples.foreach(pcm.putShort)
     md.update(pcm.array())
-    md.digest().foreach(b => w.put(b & 0xFF, 8))
+    md.digest().foreach(b => w.bits(b & 0xFF, 8))
     var off = 0; var frameNo = 0L
     while (off < samples.length) {
       val bs = math.min(4096, samples.length - off)
-      val frameStart = w.bytePos
-      w.put(0x3FFE, 14) // sync
-      w.put(0, 1)       // reserved
-      w.put(0, 1)       // fixed blocking strategy
-      w.put(0x7, 4)     // block size: 16-bit value - 1 follows
-      w.put(0x0, 4)     // sample rate: from STREAMINFO
-      w.put(0x0, 4)     // channel assignment: mono
-      w.put(0x4, 3)     // sample size: 16 bits
-      w.put(0, 1)       // reserved
+      val frameStart = w.out.len
+      w.bits(0x3FFE, 14) // sync
+      w.bits(0, 1)       // reserved
+      w.bits(0, 1)       // fixed blocking strategy
+      w.bits(0x7, 4)     // block size: 16-bit value - 1 follows
+      w.bits(0x0, 4)     // sample rate: from STREAMINFO
+      w.bits(0x0, 4)     // channel assignment: mono
+      w.bits(0x4, 3)     // sample size: 16 bits
+      w.bits(0, 1)       // reserved
       putUtf8(w, frameNo)
-      w.put(bs - 1, 16)
-      val hdr = w.buf.toByteArray
-      w.put(crc8(hdr, frameStart, hdr.length), 8)
+      w.bits(bs - 1, 16)
+      w.bits(crc8(w.out.buf, frameStart, w.out.len), 8)
       // subframe header: pad bit + 6-bit type + wasted-bits flag
       val allEqual = (0 until bs).forall(i => samples(off + i) == samples(off))
       if (allEqual) {
-        w.put(0, 1); w.put(0x00, 6); w.put(0, 1)
-        w.put(samples(off) & 0xFFFF, 16)
+        w.bits(0, 1); w.bits(0x00, 6); w.bits(0, 1)
+        w.bits(samples(off) & 0xFFFF, 16)
       } else if (bs < 3) {
-        w.put(0, 1); w.put(0x01, 6); w.put(0, 1)
-        for (i <- 0 until bs) w.put(samples(off + i) & 0xFFFF, 16)
+        w.bits(0, 1); w.bits(0x01, 6); w.bits(0, 1)
+        for (i <- 0 until bs) w.bits(samples(off + i) & 0xFFFF, 16)
       } else {
         val order = 2
-        w.put(0, 1); w.put(0x08 | order, 6); w.put(0, 1)
-        for (i <- 0 until order) w.put(samples(off + i) & 0xFFFF, 16)
+        w.bits(0, 1); w.bits(0x08 | order, 6); w.bits(0, 1)
+        for (i <- 0 until order) w.bits(samples(off + i) & 0xFFFF, 16)
         val res = new Array[Int](bs - order)
         var i = order
         while (i < bs) {
@@ -1058,54 +1023,36 @@ object Codecs {
           i += 1
         }
         // residual: method 00 (4-bit Rice), partition order 0
-        w.put(0, 2); w.put(0, 4)
+        w.bits(0, 2); w.bits(0, 4)
         var zzSum = 0L
         res.foreach(r => zzSum += ((r << 1) ^ (r >> 31)).toLong)
         var k = 0
         while (k < 14 && (res.length.toLong << (k + 1)) < zzSum) k += 1
-        w.put(k, 4)
+        w.bits(k, 4)
         res.foreach { r =>
           val u = (r << 1) ^ (r >> 31)
-          w.putUnary(u >>> k); w.put(u & ((1 << k) - 1), k)
+          putUnary(w, u >>> k); w.bits(u & ((1 << k) - 1), k)
         }
       }
-      w.alignZero()
-      val whole = w.buf.toByteArray
-      w.put(crc16(whole, frameStart, whole.length), 16)
+      w.alignByte(0)
+      w.bits(crc16(w.out.buf, frameStart, w.out.len), 16)
       off += bs; frameNo += 1
     }
-    w.buf.toByteArray
+    w.result
   }
 
-  private final class FlacReader(bytes: Array[Byte]) {
-    var pos = 0
-    private var acc = 0; private var n = 0
-    def bytePos: Int = { require(n == 0, "unaligned"); pos }
-    def atEnd: Boolean = n == 0 && pos >= bytes.length
-    def bit(): Int = {
-      if (n == 0) {
-        require(pos < bytes.length, "FLAC stream truncated")
-        acc = bytes(pos) & 0xFF; pos += 1; n = 8
-      }
-      n -= 1
-      (acc >>> n) & 1
-    }
-    def bits(k: Int): Int = {
-      var v = 0; var i = 0
-      while (i < k) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def bitsLong(k: Int): Long = {
-      var v = 0L; var i = 0
-      while (i < k) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def signedBits(k: Int): Int = (bits(k) << (32 - k)) >> (32 - k)
-    def unary(): Int = { var q = 0; while (bit() == 0) q += 1; q }
-    def align(): Unit = n = 0
+  /** A `k`-bit two's-complement field. */
+  private def signedBits(r: Bits.MsbReader, k: Int): Int =
+    (r.bits(k) << (32 - k)) >> (32 - k)
+
+  /** Unary-coded Rice quotient: the zero bits before a one. */
+  private def unary(r: Bits.MsbReader): Int = {
+    var q = 0
+    while (r.bit() == 0) q += 1
+    q
   }
 
-  private def readUtf8(r: FlacReader): Long = {
+  private def readUtf8(r: Bits.MsbReader): Long = {
     val b0 = r.bits(8)
     if ((b0 & 0x80) == 0) b0.toLong
     else {
@@ -1136,7 +1083,7 @@ object Codecs {
   def decodeFlac(bytes: Array[Byte]): WavAudio = {
     require(bytes.length >= 4 && bytes(0) == 'f' && bytes(1) == 'L' &&
       bytes(2) == 'a' && bytes(3) == 'C', "not a FLAC payload (no magic)")
-    val r = new FlacReader(bytes); r.pos = 4
+    val r = new Bits.MsbReader("flac", bytes, 4, bytes.length)
     var last = false
     var rate = -1; var channels = -1; var bps = -1
     var totalSamples = -1L; var md5 = Array.empty[Byte]
@@ -1150,7 +1097,7 @@ object Codecs {
         rate = r.bits(20)
         channels = r.bits(3) + 1
         bps = r.bits(5) + 1
-        totalSamples = r.bitsLong(36)
+        totalSamples = (r.bits(4).toLong << 32) | (r.bits(32) & 0xFFFFFFFFL)
         md5 = Array.tabulate(16)(_ => r.bits(8).toByte)
       } else {
         var i = 0
@@ -1163,7 +1110,7 @@ object Codecs {
     val outSamples = Array.newBuilder[Short]
     var decoded = 0L
     while (!r.atEnd) {
-      val frameStart = r.bytePos
+      val frameStart = r.position
       require(r.bits(14) == 0x3FFE, "bad frame sync code")
       r.bit() // reserved
       r.bit() // blocking strategy
@@ -1184,7 +1131,7 @@ object Codecs {
         case c => throw new IllegalArgumentException(s"bad block size code $c")
       }
       require(srCode == 0, "frame-local sample rate unsupported")
-      val hdrEnd = r.bytePos
+      val hdrEnd = r.position
       val wantCrc8 = r.bits(8)
       require(crc8(bytes, frameStart, hdrEnd) == wantCrc8,
         "frame header CRC-8 mismatch")
@@ -1195,15 +1142,15 @@ object Codecs {
       require(wasted == 0, "wasted-bits unsupported in subset")
       val block = new Array[Int](bs)
       if (sfType == 0x00) { // CONSTANT
-        val v = r.signedBits(16)
+        val v = signedBits(r, 16)
         java.util.Arrays.fill(block, v)
       } else if (sfType == 0x01) { // VERBATIM
         var i = 0
-        while (i < bs) { block(i) = r.signedBits(16); i += 1 }
+        while (i < bs) { block(i) = signedBits(r, 16); i += 1 }
       } else if (sfType >= 0x08 && sfType <= 0x0C) { // FIXED order 0-4
         val order = sfType - 0x08
         var i = 0
-        while (i < order) { block(i) = r.signedBits(16); i += 1 }
+        while (i < order) { block(i) = signedBits(r, 16); i += 1 }
         val method = r.bits(2)
         require(method == 0 || method == 1,
           s"reserved residual coding method $method")
@@ -1222,9 +1169,9 @@ object Codecs {
           var j = 0
           while (j < cnt) {
             block(idx) =
-              if (escape) { if (rawBits == 0) 0 else r.signedBits(rawBits) }
+              if (escape) { if (rawBits == 0) 0 else signedBits(r, rawBits) }
               else {
-                val u = (r.unary() << param) | r.bits(param)
+                val u = (unary(r) << param) | r.bits(param)
                 (u >>> 1) ^ -(u & 1)
               }
             idx += 1; j += 1
@@ -1247,8 +1194,8 @@ object Codecs {
         }
       } else throw new IllegalArgumentException(
         f"subframe type $sfType%02x unsupported (LPC out of subset)")
-      r.align()
-      val frameEnd = r.bytePos
+      r.alignByte()
+      val frameEnd = r.position
       val wantCrc16 = r.bits(16)
       require(crc16(bytes, frameStart, frameEnd) == wantCrc16,
         "frame CRC-16 mismatch")
@@ -1427,24 +1374,26 @@ object Codecs {
   private def magBits(v: Int, cat: Int): Int =
     if (v >= 0) v else v + (1 << cat) - 1
 
-  private final class BitWriter(out: java.io.ByteArrayOutputStream) {
-    private var acc = 0; private var n = 0
-    def put(value: Int, length: Int): Unit = {
-      var i = length - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((value >>> i) & 1); n += 1
-        if (n == 8) {
-          out.write(acc)
-          if (acc == 0xFF) out.write(0x00) // byte stuffing
-          acc = 0; n = 0
-        }
-        i -= 1
-      }
+  /** T.81 byte stuffing: a 0x00 after every 0xFF of entropy-coded data. */
+  private def stuffScan(scan: Array[Byte],
+      out: java.io.ByteArrayOutputStream): Unit =
+    scan.foreach { b => out.write(b); if (b == -1) out.write(0) }
+
+  /** Undoes byte stuffing from `from` up to the first marker (an 0xFF
+    * not followed by 0x00) or the end of `bytes`.
+    */
+  private def unstuffScan(bytes: Array[Byte], from: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream(bytes.length - from)
+    var p = from
+    var marker = false
+    while (p < bytes.length && !marker) {
+      val b = bytes(p)
+      if (b != -1) { out.write(b); p += 1 }
+      else if (p + 1 < bytes.length && bytes(p + 1) == 0) {
+        out.write(b); p += 2
+      } else marker = true
     }
-    def putHuff(t: HuffSpec, sym: Int): Unit = {
-      val (code, len) = t.encode(sym); put(code, len)
-    }
-    def flushOnes(): Unit = while (n != 0) put(1, 1)
+    out.toByteArray
   }
 
   /** Encode an 8-bit grayscale plane as a single-component baseline
@@ -1480,7 +1429,10 @@ object Codecs {
     marker(0xDA); u16(6 + 2); out.write(1) // one scan component
     out.write(1); out.write(0x00) // component 1: DC table 0, AC table 0
     out.write(0); out.write(63); out.write(0) // full spectral, no approx
-    val bw = new BitWriter(out)
+    val bw = new Bits.MsbWriter("jpeg", gray.length / 8 + 64)
+    def putHuff(t: HuffSpec, sym: Int): Unit = {
+      val (code, len) = t.encode(sym); bw.bits(code, len)
+    }
     val bx = (width + 7) / 8; val by = (height + 7) / 8
     val block = new Array[Double](64); val coef = new Array[Int](64)
     var pred = 0
@@ -1507,28 +1459,29 @@ object Codecs {
         }
         val diff = coef(0) - pred; pred = coef(0)
         val cat = magCategory(diff)
-        bw.putHuff(DcLuma, cat)
-        if (cat > 0) bw.put(magBits(diff, cat), cat)
+        putHuff(DcLuma, cat)
+        if (cat > 0) bw.bits(magBits(diff, cat), cat)
         var last = 63
         while (last >= 1 && coef(last) == 0) last -= 1
         var run = 0; var kk = 1
         while (kk <= last) {
           if (coef(kk) == 0) run += 1
           else {
-            while (run >= 16) { bw.putHuff(AcLuma, 0xF0); run -= 16 }
+            while (run >= 16) { putHuff(AcLuma, 0xF0); run -= 16 }
             val s = magCategory(coef(kk))
-            bw.putHuff(AcLuma, (run << 4) | s)
-            bw.put(magBits(coef(kk), s), s)
+            putHuff(AcLuma, (run << 4) | s)
+            bw.bits(magBits(coef(kk), s), s)
             run = 0
           }
           kk += 1
         }
-        if (last < 63) bw.putHuff(AcLuma, 0x00) // EOB
+        if (last < 63) putHuff(AcLuma, 0x00) // EOB
         bxi += 1
       }
       byi += 1
     }
-    bw.flushOnes()
+    bw.alignByte(1)
+    stuffScan(bw.result, out)
     marker(0xD9) // EOI
     out.toByteArray
   }
@@ -1552,7 +1505,7 @@ object Codecs {
       }
       require(vi == vals.length, "DHT bits/vals mismatch")
     }
-    def decode(br: BitReader): Int = {
+    def decode(br: Bits.MsbReader): Int = {
       var code = 0; var l = 0
       while (l < 16) {
         code = (code << 1) | br.bit(); l += 1
@@ -1560,34 +1513,6 @@ object Codecs {
           return vals(valPtr(l) + code - minCode(l))
       }
       throw new IllegalArgumentException("invalid Huffman code in scan")
-    }
-  }
-
-  /** MSB-first entropy-segment reader that undoes 0xFF00 byte stuffing
-    * and fails loudly on an unexpected in-scan marker.
-    */
-  private final class BitReader(bytes: Array[Byte], var pos: Int) {
-    private var acc = 0; private var n = 0
-    def bit(): Int = {
-      if (n == 0) {
-        require(pos < bytes.length, "entropy stream truncated")
-        val b = bytes(pos) & 0xFF; pos += 1
-        if (b == 0xFF) {
-          require(pos < bytes.length, "entropy stream truncated after 0xFF")
-          val m = bytes(pos) & 0xFF
-          require(m == 0x00,
-            f"unexpected marker FF$m%02X inside entropy-coded scan")
-          pos += 1
-        }
-        acc = b; n = 8
-      }
-      n -= 1
-      (acc >>> n) & 1
-    }
-    def bits(k: Int): Int = {
-      var v = 0; var i = 0
-      while (i < k) { v = (v << 1) | bit(); i += 1 }
-      v
     }
   }
 
@@ -1743,7 +1668,7 @@ object Codecs {
       throw new IllegalArgumentException(s"missing DC DHT id $dcSel"))
     val acTab = huffs.getOrElse((1, acSel),
       throw new IllegalArgumentException(s"missing AC DHT id $acSel"))
-    val br = new BitReader(bytes, pos)
+    val br = new Bits.MsbReader("jpeg", unstuffScan(bytes, pos))
     val bx = (width + 7) / 8; val by = (height + 7) / 8
     val gray = new Array[Byte](width * height)
     val block = new Array[Double](64)
@@ -2062,34 +1987,6 @@ object Codecs {
   case class Mp3SideInfo(mainDataBegin: Int, scfsi: Int,
       granules: Vector[Mp3Granule])
 
-  private final class BitW(n: Int) {
-    val buf = new Array[Byte](n)
-    private var bit = 0
-    def put(v: Int, w: Int): Unit = {
-      var i = w - 1
-      while (i >= 0) {
-        if (((v >> i) & 1) == 1) buf(bit >> 3) =
-          (buf(bit >> 3) | (0x80 >> (bit & 7))).toByte
-        bit += 1
-        i -= 1
-      }
-    }
-  }
-
-  private final class BitR(bytes: Array[Byte], off: Int) {
-    private var bit = off * 8
-    def get(w: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < w) {
-        v = (v << 1) | ((bytes(bit >> 3) >> (7 - (bit & 7))) & 1)
-        bit += 1
-        i += 1
-      }
-      v
-    }
-  }
-
   /** Encode the 17-byte single-channel side-info block. The encoder
     * writes what it is told (the quarantine tier plants an
     * out-of-range big_values through it); the DECODER owns the range
@@ -2097,31 +1994,32 @@ object Codecs {
     */
   def encodeMp3SideInfo(si: Mp3SideInfo): Array[Byte] = {
     require(si.granules.length == 2, "side info carries 2 granules")
-    val w = new BitW(17)
-    w.put(si.mainDataBegin, 9)
-    w.put(0, 5) // private_bits (mono)
-    w.put(si.scfsi, 4)
+    val w = new Bits.MsbWriter("mp3", 17)
+    w.bits(si.mainDataBegin, 9)
+    w.bits(0, 5) // private_bits (mono)
+    w.bits(si.scfsi, 4)
     si.granules.foreach { g =>
-      w.put(g.part23Length, 12)
-      w.put(g.bigValues, 9)
-      w.put(g.globalGain, 8)
-      w.put(g.scalefacCompress, 4)
-      w.put(g.windowSwitching, 1)
+      w.bits(g.part23Length, 12)
+      w.bits(g.bigValues, 9)
+      w.bits(g.globalGain, 8)
+      w.bits(g.scalefacCompress, 4)
+      w.bits(g.windowSwitching, 1)
       if (g.windowSwitching == 1) {
-        w.put(g.blockType, 2)
-        w.put(0, 1) // mixed_block_flag
-        g.tableSelect.take(2).foreach(t => w.put(t, 5))
-        w.put(0, 9) // subblock_gain ×3
+        w.bits(g.blockType, 2)
+        w.bits(0, 1) // mixed_block_flag
+        g.tableSelect.take(2).foreach(t => w.bits(t, 5))
+        w.bits(0, 9) // subblock_gain ×3
       } else {
-        g.tableSelect.foreach(t => w.put(t, 5))
-        w.put(g.region0, 4)
-        w.put(g.region1, 3)
+        g.tableSelect.foreach(t => w.bits(t, 5))
+        w.bits(g.region0, 4)
+        w.bits(g.region1, 3)
       }
-      w.put(g.preflag, 1)
-      w.put(g.scalefacScale, 1)
-      w.put(g.count1Table, 1)
+      w.bits(g.preflag, 1)
+      w.bits(g.scalefacScale, 1)
+      w.bits(g.count1Table, 1)
     }
-    w.buf
+    require(w.bitCount <= 17 * 8, s"side info of ${w.bitCount} bits")
+    java.util.Arrays.copyOf(w.result, 17)
   }
 
   /** Parse one frame's side info at `off` (the byte after the 4-byte
@@ -2132,32 +2030,32 @@ object Codecs {
   def decodeMp3SideInfo(bytes: Array[Byte], off: Int): Mp3SideInfo = {
     require(off + 17 <= bytes.length,
       s"side info at $off over-runs the stream")
-    val r = new BitR(bytes, off)
-    val mdb = r.get(9)
-    r.get(5) // private_bits
-    val scfsi = r.get(4)
+    val r = new Bits.MsbReader("mp3", bytes, off, bytes.length)
+    val mdb = r.bits(9)
+    r.bits(5) // private_bits
+    val scfsi = r.bits(4)
     val gs = Vector.fill(2) {
-      val p23 = r.get(12)
-      val bv = r.get(9)
+      val p23 = r.bits(12)
+      val bv = r.bits(9)
       require(bv <= 288, s"big_values $bv exceeds the spec ceiling 288")
-      val gg = r.get(8)
-      val sfc = r.get(4)
-      val wsf = r.get(1)
+      val gg = r.bits(8)
+      val sfc = r.bits(4)
+      val wsf = r.bits(1)
       if (wsf == 1) {
-        val bt = r.get(2)
+        val bt = r.bits(2)
         require(bt != 0,
           "block_type 0 is reserved under window switching")
-        r.get(1) // mixed_block_flag
-        val ts = Vector.fill(2)(r.get(5))
-        r.get(9) // subblock_gain
+        r.bits(1) // mixed_block_flag
+        val ts = Vector.fill(2)(r.bits(5))
+        r.bits(9) // subblock_gain
         Mp3Granule(p23, bv, gg, sfc, 1, bt, ts, 0, 0,
-          r.get(1), r.get(1), r.get(1))
+          r.bits(1), r.bits(1), r.bits(1))
       } else {
-        val ts = Vector.fill(3)(r.get(5))
-        val r0 = r.get(4)
-        val r1 = r.get(3)
+        val ts = Vector.fill(3)(r.bits(5))
+        val r0 = r.bits(4)
+        val r1 = r.bits(3)
         Mp3Granule(p23, bv, gg, sfc, 0, 0, ts, r0, r1,
-          r.get(1), r.get(1), r.get(1))
+          r.bits(1), r.bits(1), r.bits(1))
       }
     }
     Mp3SideInfo(mdb, scfsi, gs)
@@ -2207,87 +2105,49 @@ object Codecs {
   // format: every boundary, header field, and SPS dimension below is
   // real wire format a second engine predicts exactly.
 
-  /** Exp-Golomb/bit writer for RBSP payloads (spec §9.1: ue(v) codes
-    * value k as ⌊log2(k+1)⌋ zero bits, a 1, then k+1 sans its MSB —
-    * 2·⌊log2(k+1)⌋+1 bits total).
+  /** ue(v) (spec §9.1): value k as ⌊log2(k+1)⌋ zero bits, a 1, then
+    * k+1 sans its MSB — 2·⌊log2(k+1)⌋+1 bits total.
     */
-  private final class GolombWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nbits = 0
-    def bit(b: Int): Unit = {
-      cur = (cur << 1) | (b & 1); nbits += 1
-      if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-    }
-    def bits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bit((v >> i) & 1); i -= 1 }
-    }
-    def ue(v: Int): Unit = {
-      require(v >= 0, s"ue($v)")
-      val k = v + 1
-      val nb = 31 - Integer.numberOfLeadingZeros(k) // ⌊log2(k+1)⌋
-      var i = 0
-      while (i < nb) { bit(0); i += 1 }
-      bits(k, nb + 1)
-    }
-    /** se(v) (spec §9.1.1 table 9-3): signed Exp-Golomb — codeNum =
-      * 2·|v|−1 for v > 0, 2·|v| for v ≤ 0 (positives get the shorter
-      * odd codes).
-      */
-    def se(v: Int): Unit = ue(if (v > 0) 2 * v - 1 else -2 * v)
-    /** rbsp_trailing_bits: the stop bit, then zero-pad to a byte — the
-      * byte holding the stop bit is therefore never 0x00, so a zero
-      * byte immediately before a start code can only be the 4-byte
-      * start code's own prefix (the walk relies on this).
-      */
-    def rbspTrailing(): Array[Byte] = {
-      bit(1)
-      while (nbits != 0) bit(0)
-      out.toByteArray
-    }
-    /** Pad the current byte with ONE bits (the slice-header case: stub
-      * payload follows, so no trailing-bit semantics — ones guarantee
-      * the final header byte is nonzero and no zero-byte pair can form
-      * against the filler).
-      */
-    def padToByteWithOnes(): Array[Byte] = {
-      while (nbits != 0) bit(1)
-      out.toByteArray
-    }
+  private def ue(w: Bits.MsbWriter, v: Int): Unit = {
+    require(v >= 0, s"ue($v)")
+    val k = v + 1
+    val nb = 31 - Integer.numberOfLeadingZeros(k) // ⌊log2(k+1)⌋
+    w.bits(0, nb)
+    w.bits(k, nb + 1)
   }
 
-  /** Exp-Golomb/bit reader over an (unescaped) RBSP. */
-  private final class GolombReader(bytes: Array[Byte]) {
-    private var pos = 0
-    def bit(): Int = {
-      require(pos < bytes.length * 8, "RBSP overrun")
-      val b = (bytes(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1; b
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def ue(): Int = {
-      var nb = 0
-      while (bit() == 0) { nb += 1; require(nb <= 31, "ue(v) overlong") }
-      var v = 1; var i = 0
-      while (i < nb) { v = (v << 1) | bit(); i += 1 }
-      v - 1
-    }
-    /** se() (spec §9.1.1 table 9-3): odd codeNums are positive. */
-    def se(): Int = {
-      val k = ue()
-      if (k % 2 == 1) (k + 1) / 2 else -(k / 2)
-    }
-    /** Verify rbsp_trailing_bits: a stop bit, then zeros to the end. */
-    def expectTrailing(): Unit = {
-      require(bit() == 1, "RBSP stop bit missing")
-      while (pos < bytes.length * 8)
-        require(bit() == 0, "nonzero bit after RBSP stop bit")
-    }
+  private def ue(r: Bits.MsbReader): Int = {
+    var nb = 0
+    while (r.bit() == 0) { nb += 1; require(nb <= 31, "ue(v) overlong") }
+    ((1 << nb) | r.bits(nb)) - 1
+  }
+
+  /** se(v) (spec §9.1.1 table 9-3): signed Exp-Golomb — codeNum =
+    * 2·|v|−1 for v > 0, 2·|v| for v ≤ 0 (positives get the shorter
+    * odd codes).
+    */
+  private def se(w: Bits.MsbWriter, v: Int): Unit =
+    ue(w, if (v > 0) 2 * v - 1 else -2 * v)
+
+  private def se(r: Bits.MsbReader): Int = {
+    val k = ue(r)
+    if (k % 2 == 1) (k + 1) / 2 else -(k / 2)
+  }
+
+  /** rbsp_trailing_bits: the stop bit, then zero-pad to a byte — the
+    * byte holding the stop bit is therefore never 0x00, so a zero
+    * byte immediately before a start code can only be the 4-byte
+    * start code's own prefix (the walk relies on this).
+    */
+  private def rbspTrailing(w: Bits.MsbWriter): Array[Byte] = {
+    w.bits(1, 1)
+    w.result
+  }
+
+  /** Verify rbsp_trailing_bits: a stop bit, then zeros to the end. */
+  private def expectTrailing(r: Bits.MsbReader): Unit = {
+    require(r.bit() == 1, "RBSP stop bit missing")
+    while (!r.atEnd) require(r.bit() == 0, "nonzero bit after RBSP stop bit")
   }
 
   /** Insert emulation_prevention_three_byte (spec §7.4.1.1): any
@@ -2374,22 +2234,22 @@ object Codecs {
       s"log2_max_frame_num ${sps.log2MaxFrameNum} outside [4, 16]")
     require(sps.widthMbs >= 1 && sps.heightMbs >= 1,
       s"dimensions ${sps.widthMbs}x${sps.heightMbs} MBs")
-    val w = new GolombWriter
+    val w = new Bits.MsbWriter("h264")
     w.bits(sps.profileIdc, 8)
     w.bits(0, 8) // constraint_set flags + reserved_zero_2bits
     w.bits(sps.levelIdc, 8)
-    w.ue(0) // seq_parameter_set_id
-    w.ue(sps.log2MaxFrameNum - 4)
-    w.ue(2) // pic_order_cnt_type 2: no further POC fields
-    w.ue(sps.maxNumRefFrames)
-    w.bit(0) // gaps_in_frame_num_value_allowed_flag
-    w.ue(sps.widthMbs - 1)
-    w.ue(sps.heightMbs - 1)
-    w.bit(1) // frame_mbs_only_flag
-    w.bit(sps.direct8x8)
-    w.bit(0) // frame_cropping_flag
-    w.bit(0) // vui_parameters_present_flag
-    w.rbspTrailing()
+    ue(w, 0) // seq_parameter_set_id
+    ue(w, sps.log2MaxFrameNum - 4)
+    ue(w, 2) // pic_order_cnt_type 2: no further POC fields
+    ue(w, sps.maxNumRefFrames)
+    w.bits(0, 1) // gaps_in_frame_num_value_allowed_flag
+    ue(w, sps.widthMbs - 1)
+    ue(w, sps.heightMbs - 1)
+    w.bits(1, 1) // frame_mbs_only_flag
+    w.bits(sps.direct8x8, 1)
+    w.bits(0, 1) // frame_cropping_flag
+    w.bits(0, 1) // vui_parameters_present_flag
+    rbspTrailing(w)
   }
 
   /** The PPS fields this subset carries (spec §7.3.2.2, the
@@ -2419,63 +2279,63 @@ object Codecs {
       s"num_ref_idx defaults ${pps.numRefIdxL0}/${pps.numRefIdxL1}")
     require(pps.initQpMinus26 >= -26 && pps.initQpMinus26 <= 25,
       s"pic_init_qp_minus26 ${pps.initQpMinus26} outside [-26, 25] (spec §7.4.2.2)")
-    val w = new GolombWriter
-    w.ue(pps.ppsId); w.ue(pps.spsId)
-    w.bit(pps.entropyCodingMode)
-    w.bit(0) // bottom_field_pic_order_in_frame_present_flag
-    w.ue(0) // num_slice_groups_minus1
-    w.ue(pps.numRefIdxL0); w.ue(pps.numRefIdxL1)
-    w.bit(0); w.bits(0, 2) // weighted_pred_flag, weighted_bipred_idc
-    w.se(pps.initQpMinus26)
-    w.se(0); w.se(0) // pic_init_qs_minus26, chroma_qp_index_offset
-    w.bit(0); w.bit(0); w.bit(0) // deblock_ctrl, constrained_intra, redundant
-    w.rbspTrailing()
+    val w = new Bits.MsbWriter("h264")
+    ue(w, pps.ppsId); ue(w, pps.spsId)
+    w.bits(pps.entropyCodingMode, 1)
+    w.bits(0, 1) // bottom_field_pic_order_in_frame_present_flag
+    ue(w, 0) // num_slice_groups_minus1
+    ue(w, pps.numRefIdxL0); ue(w, pps.numRefIdxL1)
+    w.bits(0, 1); w.bits(0, 2) // weighted_pred_flag, weighted_bipred_idc
+    se(w, pps.initQpMinus26)
+    se(w, 0); se(w, 0) // pic_init_qs_minus26, chroma_qp_index_offset
+    w.bits(0, 1); w.bits(0, 1); w.bits(0, 1) // deblock_ctrl, constrained_intra, redundant
+    rbspTrailing(w)
   }
 
   private[multimodal] def parsePpsRbsp(rbsp: Array[Byte]): H264Pps = {
-    val r = new GolombReader(rbsp)
-    val ppsId = r.ue()
-    val spsId = r.ue()
+    val r = new Bits.MsbReader("h264", rbsp)
+    val ppsId = ue(r)
+    val spsId = ue(r)
     val entropy = r.bit()
     require(r.bit() == 0, "bottom_field_pic_order flag unsupported")
-    require(r.ue() == 0, "slice groups unsupported (FMO)")
-    val nL0 = r.ue()
-    val nL1 = r.ue()
+    require(ue(r) == 0, "slice groups unsupported (FMO)")
+    val nL0 = ue(r)
+    val nL1 = ue(r)
     require(nL0 <= 31 && nL1 <= 31, s"num_ref_idx defaults $nL0/$nL1 > 31")
     require(r.bit() == 0, "weighted_pred unsupported")
     require(r.bits(2) == 0, "weighted_bipred unsupported")
-    val initQp = r.se()
+    val initQp = se(r)
     require(initQp >= -26 && initQp <= 25,
       s"pic_init_qp_minus26 $initQp outside [-26, 25] (spec §7.4.2.2)")
-    require(r.se() == 0, "pic_init_qs_minus26 != 0 unsupported")
-    require(r.se() == 0, "chroma_qp_index_offset != 0 unsupported")
+    require(se(r) == 0, "pic_init_qs_minus26 != 0 unsupported")
+    require(se(r) == 0, "chroma_qp_index_offset != 0 unsupported")
     require(r.bit() == 0, "deblocking_filter_control unsupported")
     r.bit() // constrained_intra_pred_flag
     require(r.bit() == 0, "redundant_pic_cnt_present unsupported")
-    r.expectTrailing()
+    expectTrailing(r)
     H264Pps(ppsId, spsId, entropy, nL0, nL1, initQp)
   }
 
   private[multimodal] def parseSpsRbsp(rbsp: Array[Byte]): H264Sps = {
-    val r = new GolombReader(rbsp)
+    val r = new Bits.MsbReader("h264", rbsp)
     val profile = r.bits(8)
     require(Seq(66, 77, 88).contains(profile),
       s"profile_idc $profile outside the Baseline/Main/Extended subset")
     require(r.bits(8) == 0, "constraint/reserved byte nonzero")
     val level = r.bits(8)
-    require(r.ue() == 0, "seq_parameter_set_id != 0")
-    val logMfn = r.ue()
+    require(ue(r) == 0, "seq_parameter_set_id != 0")
+    val logMfn = ue(r)
     require(logMfn <= 12, s"log2_max_frame_num_minus4 $logMfn > 12 (spec)")
-    require(r.ue() == 2, "pic_order_cnt_type != 2 unsupported")
-    val maxRef = r.ue()
+    require(ue(r) == 2, "pic_order_cnt_type != 2 unsupported")
+    val maxRef = ue(r)
     r.bit() // gaps_in_frame_num_value_allowed_flag
-    val wMbs = r.ue() + 1
-    val hMbs = r.ue() + 1
+    val wMbs = ue(r) + 1
+    val hMbs = ue(r) + 1
     require(r.bit() == 1, "frame_mbs_only_flag 0 unsupported")
     val d8 = r.bit()
     require(r.bit() == 0, "frame_cropping unsupported")
     require(r.bit() == 0, "VUI unsupported")
-    r.expectTrailing()
+    expectTrailing(r)
     H264Sps(profile, level, logMfn + 4, maxRef, wMbs, hMbs, d8)
   }
 
@@ -2578,14 +2438,18 @@ object Codecs {
         s"slice NAL type $nalType not in {1, 5}")
       require(nalType != 5 || refIdc > 0,
         "IDR slices must have nal_ref_idc != 0 (spec §7.4.1)")
-      val w = new GolombWriter
-      w.ue(0) // first_mb_in_slice
-      w.ue(if (nalType == 5) { if (plen % 2 == 0) 2 else 7 }
+      val w = new Bits.MsbWriter("h264")
+      ue(w, 0) // first_mb_in_slice
+      ue(w, if (nalType == 5) { if (plen % 2 == 0) 2 else 7 }
         else { if (plen % 2 == 0) 0 else 5 })
-      w.ue(ppsId) // pic_parameter_set_id — NOT validated here, see doc
+      ue(w, ppsId) // pic_parameter_set_id — NOT validated here, see doc
       w.bits(if (nalType == 5) 0 // IDR: frame_num shall be 0 (§7.4.3)
         else idx % (1 << sps.log2MaxFrameNum), sps.log2MaxFrameNum)
-      val header = w.padToByteWithOnes()
+      // pad with ones: stub payload follows, so no trailing-bit
+      // semantics — ones keep the final header byte nonzero and no
+      // zero-byte pair can form against the filler
+      w.alignByte(1)
+      val header = w.result
       require(plen >= header.length + 1,
         s"slice payload $plen bytes cannot hold its ${header.length}-byte header")
       val payload = new Array[Byte](plen)
@@ -2710,14 +2574,14 @@ object Codecs {
         // ref-list defaults were known)
         val s = sps.getOrElse(throw new IllegalArgumentException(
           s"slice at offset $p before any SPS"))
-        val r = new GolombReader(rbsp)
-        require(r.ue() == 0, "first_mb_in_slice != 0 unsupported")
-        sliceType = r.ue()
+        val r = new Bits.MsbReader("h264", rbsp)
+        require(ue(r) == 0, "first_mb_in_slice != 0 unsupported")
+        sliceType = ue(r)
         require(sliceType <= 9, s"slice_type $sliceType out of range")
         if (nalType == 5)
           require(sliceType % 5 == 2, // I slice (2 or 7)
             s"IDR with non-I slice_type $sliceType (spec §7.4.3)")
-        ppsId = r.ue()
+        ppsId = ue(r)
         require(ppsById.contains(ppsId),
           s"slice at offset $p references PPS $ppsId; stream carries " +
             s"only {${ppsById.keys.toSeq.sorted.mkString(",")}} " +
@@ -2759,17 +2623,17 @@ object Codecs {
   case class H264Mb(predMode: Int, chromaPred: Int, qpDelta: Int,
       dcLevel: Int, dcTz: Int)
 
-  private def writeTotalZeros1(w: GolombWriter, tz: Int): Unit = {
+  private def writeTotalZeros1(w: Bits.MsbWriter, tz: Int): Unit = {
     require(tz >= 0 && tz <= 15, s"total_zeros $tz")
-    if (tz == 0) w.bit(1)
-    else if (tz == 15) { w.bits(0, 8); w.bit(1) }
+    if (tz == 0) w.bits(1, 1)
+    else if (tz == 15) { w.bits(0, 8); w.bits(1, 1) }
     else {
       val z = (tz + 1) / 2
-      w.bits(0, z); w.bit(1); w.bit(if (tz % 2 == 1) 1 else 0)
+      w.bits(0, z); w.bits(1, 1); w.bits(if (tz % 2 == 1) 1 else 0, 1)
     }
   }
 
-  private def readTotalZeros1(r: GolombReader): Int = {
+  private def readTotalZeros1(r: Bits.MsbReader): Int = {
     var z = 0
     while (r.bit() == 0) {
       z += 1
@@ -2790,27 +2654,27 @@ object Codecs {
     require(mbs.size == sps.widthMbs * sps.heightMbs,
       s"slice carries ${mbs.size} MBs for a ${sps.widthMbs}x" +
         s"${sps.heightMbs} picture")
-    val w = new GolombWriter
-    w.ue(0) // first_mb_in_slice
-    w.ue(7) // slice_type: I (all slices of the picture are I)
-    w.ue(0) // pic_parameter_set_id
+    val w = new Bits.MsbWriter("h264")
+    ue(w, 0) // first_mb_in_slice
+    ue(w, 7) // slice_type: I (all slices of the picture are I)
+    ue(w, 0) // pic_parameter_set_id
     w.bits(0, sps.log2MaxFrameNum) // frame_num = 0 (IDR, §7.4.3)
-    w.ue(idrPicId)
-    w.bit(0); w.bit(0) // dec_ref_pic_marking: no_output, long_term
-    w.se(sliceQpDelta)
+    ue(w, idrPicId)
+    w.bits(0, 1); w.bits(0, 1) // dec_ref_pic_marking: no_output, long_term
+    se(w, sliceQpDelta)
     mbs.zipWithIndex.foreach { case (mb, mi) =>
       require(mb.predMode >= 0 && mb.predMode <= 3, s"pred ${mb.predMode}")
       require(mb.chromaPred >= 0 && mb.chromaPred <= 3,
         s"chroma pred ${mb.chromaPred}")
       require(mb.dcLevel != 0 && math.abs(mb.dcLevel) <= 7,
         s"DC level ${mb.dcLevel} outside the block-constant subset")
-      w.ue(1 + mb.predMode) // I_16x16_<pred>_0_0: CBP rides in the type
-      w.ue(mb.chromaPred)
-      w.se(mb.qpDelta)
+      ue(w, 1 + mb.predMode) // I_16x16_<pred>_0_0: CBP rides in the type
+      ue(w, mb.chromaPred)
+      se(w, mb.qpDelta)
       // Intra16x16DCLevel, TotalCoeff = 1:
       if (math.abs(mb.dcLevel) == 1) {
         w.bits(1, 2) // coeff_token (1, 1): "01"
-        w.bit(if (mb.dcLevel < 0) 1 else 0) // trailing-one sign
+        w.bits(if (mb.dcLevel < 0) 1 else 0, 1) // trailing-one sign
       } else {
         w.bits(5, 6) // coeff_token (1, 0): "000101"
         // level_prefix, suffixLength 0, first-level +2 adjustment
@@ -2818,36 +2682,36 @@ object Codecs {
           if (mb.dcLevel > 0) 2 * mb.dcLevel - 2 else -2 * mb.dcLevel - 1
         val prefix = levelCode - 2
         require(prefix >= 0 && prefix < 14, s"level_prefix $prefix")
-        w.bits(0, prefix); w.bit(1)
+        w.bits(0, prefix); w.bits(1, 1)
       }
-      if (mi == lieTzInMb) { w.bits(0, 8); w.bit(0) } // invalid word
+      if (mi == lieTzInMb) { w.bits(0, 8); w.bits(0, 1) } // invalid word
       else writeTotalZeros1(w, mb.dcTz)
       // run_before: none for TotalCoeff = 1
     }
-    w.rbspTrailing()
+    rbspTrailing(w)
   }
 
   /** Parse an IDR slice RBSP of the tier back to its macroblocks. */
   def parseIFrameSlice(rbsp: Array[Byte], sps: H264Sps): Vector[H264Mb] = {
-    val r = new GolombReader(rbsp)
-    require(r.ue() == 0, "first_mb_in_slice != 0 outside subset")
-    val st = r.ue()
+    val r = new Bits.MsbReader("h264", rbsp)
+    require(ue(r) == 0, "first_mb_in_slice != 0 outside subset")
+    val st = ue(r)
     require(st == 7 || st == 2, s"slice_type $st is not I")
-    require(r.ue() == 0, "pic_parameter_set_id != 0 outside subset")
+    require(ue(r) == 0, "pic_parameter_set_id != 0 outside subset")
     require(r.bits(sps.log2MaxFrameNum) == 0, "IDR frame_num != 0")
-    r.ue() // idr_pic_id
+    ue(r) // idr_pic_id
     r.bit(); r.bit() // dec_ref_pic_marking
-    r.se() // slice_qp_delta
+    se(r) // slice_qp_delta
     val n = sps.widthMbs * sps.heightMbs
     val mbs = Vector.newBuilder[H264Mb]
     var mi = 0
     while (mi < n) {
-      val mbType = r.ue()
+      val mbType = ue(r)
       require(mbType >= 1 && mbType <= 4,
         s"mb_type $mbType outside the I_16x16 CBP-0 subset")
-      val chromaPred = r.ue()
+      val chromaPred = ue(r)
       require(chromaPred <= 3, s"intra_chroma_pred_mode $chromaPred")
-      val qpDelta = r.se()
+      val qpDelta = se(r)
       // coeff_token, 0 <= nC < 2 column
       val (tc, t1) =
         if (r.bit() == 1) (0, 0)
@@ -2879,7 +2743,7 @@ object Codecs {
       mbs += H264Mb(mbType - 1, chromaPred, qpDelta, level, tz)
       mi += 1
     }
-    r.expectTrailing()
+    expectTrailing(r)
     mbs.result()
   }
 

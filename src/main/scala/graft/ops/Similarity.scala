@@ -296,25 +296,7 @@ object Similarity {
       .filter(col("nrm") > 0d)
     val assigned = vecs.withColumn("cluster",
       sort_array(array(centroidDots(col("v")): _*), asc = false)(0).getField("j"))
-    val probes = vecs.select(col("id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"),
-        explode(slice(sort_array(array(centroidDots(col("v")): _*), asc = false),
-          1, nProbe)).as("p"))
-      .select(col("query_id"), col("qv"), col("qn"), col("p.j").as("cluster"))
-
-    val scored = probes.join(
-        assigned.select(col("id").as("neighbor_id"), col("v").as("cv"),
-          col("nrm").as("cn"), col("cluster")),
-        Seq("cluster"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 9).as("cos"))
-    if (k == 1) top1ByCos(scored)
-    else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-    }
+    ivfSearch(vecs, assigned, centroidDots, k, nProbe)
   }
 
   /** IVF search SERVED FROM A STORED MODEL: the coarse quantizer
@@ -349,6 +331,17 @@ object Similarity {
       .filter(col("nrm") > 0d)
     val assigned = vecs.join(
       assignments.select(col("id"), col("cluster")), Seq("id"))
+    ivfSearch(vecs, assigned, centroidDots, k, nProbe)
+  }
+
+  /** The IVF search stage of [[ivfTopK]] and [[ivfTopKFromModel]]: each
+    * query vector of `vecs` (id, v, nrm) probes its `nProbe` best lists
+    * under `centroidDots` and scores only those lists' members of
+    * `assigned` (id, v, nrm, cluster) with exact rounded cosines; the
+    * top `k` per query.
+    */
+  private def ivfSearch(vecs: DataFrame, assigned: DataFrame,
+      centroidDots: Column => Seq[Column], k: Int, nProbe: Int): DataFrame = {
     val probes = vecs.select(col("id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"),
         explode(slice(sort_array(array(centroidDots(col("v")): _*), asc = false),

@@ -235,21 +235,7 @@ object TextDedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
-    // verify with exact set Jaccard: one sorted-merge intersection count;
-    // |A∪B| = |A|+|B|−|A∩B| (both sides distinct), so the double division
-    // has the identical integer numerator/denominator as the
-    // intersect/union formulation — bit-for-bit the same jaccard
-    val verified = candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a"),
-        size(col("sh")).as("na")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b"),
-        size(col("sh")).as("nb")), "id_b")
-      .withColumn("ov", graft.functions.SketchExpressions
-        .sortedOverlapCount(col("sh_a"), col("sh_b")))
-      .select(col("id_a"), col("id_b"),
-        (col("ov").cast("double") /
-          (col("na") + col("nb") - col("ov")).cast("double")).as("jaccard"))
-    verified.filter(col("jaccard") >= threshold)
+    verifyPairs(candidates, sh, threshold)
   }
 
   /** EXACT asymmetric containment pairs — C(A→B) = |A∩B| / |A| ≥ tNum/tDen
@@ -392,8 +378,11 @@ object TextDedup {
       .select(col("id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs against a
-    * shingle relation — the sorted-merge kernel (and identical jaccard
-    * double) shared by every MinHash tier; see ngramJaccardPairs.
+    * shingle relation, shared by the prefix-filter and every MinHash
+    * tier: one sorted-merge intersection count; |A∪B| = |A|+|B|−|A∩B|
+    * (both sides distinct), so the double division has the identical
+    * integer numerator/denominator as the intersect/union formulation —
+    * bit-for-bit the same jaccard.
     */
   private def verifyPairs(candidates: DataFrame, sh: DataFrame,
       threshold: Double): DataFrame =

@@ -275,89 +275,6 @@ object Brotli {
     T(" ", 10, "='")
   )
 
-  // --------------------------------------------------------- bit input
-
-  /** LSB-first bit reader (the DEFLATE convention, which brotli shares):
-    * bits fill from the least-significant end; prefix codes are then
-    * assembled MSB-of-code-first from single-bit reads.
-    */
-  private final class Reader(val buf: Array[Byte]) {
-    private var pos = 0
-    private var acc = 0L
-    private var n = 0
-
-    private def fill(): Unit = {
-      while (n <= 55 && pos < buf.length) {
-        acc |= (buf(pos) & 0xFFL) << n
-        pos += 1
-        n += 8
-      }
-    }
-
-    def readBits(k: Int): Int = {
-      if (n < k) fill()
-      require(n >= k, "brotli: unexpected end of stream")
-      val v = (acc & ((1L << k) - 1)).toInt
-      acc >>>= k
-      n -= k
-      v
-    }
-
-    /** Low 4 bits without consuming; zero-padded past end of stream. */
-    def peek4(): Int = {
-      if (n < 4) fill()
-      (acc & 0xF).toInt
-    }
-
-    def skip(k: Int): Unit = {
-      require(n >= k, "brotli: unexpected end of stream")
-      acc >>>= k
-      n -= k
-    }
-
-    /** Byte-align; the discarded pad bits must be zero (§9.1). */
-    def alignByte(): Unit = {
-      val r = n & 7
-      if (r > 0) {
-        require((acc & ((1L << r) - 1)) == 0L, "brotli: nonzero pad bits")
-        acc >>>= r
-        n -= r
-      }
-    }
-
-    /** Copy `len` aligned bytes to dst (call only after alignByte). */
-    def readAligned(dst: Array[Byte], off: Int, len: Int): Unit = {
-      var o = off
-      var left = len
-      while (left > 0 && n > 0) {
-        dst(o) = (acc & 0xFF).toByte
-        acc >>>= 8
-        n -= 8
-        o += 1
-        left -= 1
-      }
-      require(pos + left <= buf.length, "brotli: unexpected end of stream")
-      System.arraycopy(buf, pos, dst, o, left)
-      pos += left
-    }
-
-    def skipAligned(len: Int): Unit = {
-      var left = len
-      while (left > 0 && n > 0) {
-        acc >>>= 8
-        n -= 8
-        left -= 1
-      }
-      require(pos + left <= buf.length, "brotli: unexpected end of stream")
-      pos += left
-    }
-
-    /** Bytes consumed so far (exact only when byte-aligned). */
-    def consumedBytes: Int = pos - n / 8
-
-    def exhausted: Boolean = n == 0 && pos == buf.length
-  }
-
   // ------------------------------------------------------ prefix codes
 
   /** A canonical prefix code built from per-symbol lengths (≤ 15).
@@ -402,14 +319,14 @@ object Brotli {
         s"brotli: prefix code over/under-subscribed (space $space)")
     }
 
-    def read(r: Reader): Int = {
+    def read(r: Bits.LsbReader): Int = {
       if (single >= 0) return single
       var code = 0
       var first = 0
       var index = 0
       var len = 1
       while (len <= 15) {
-        code = (code << 1) | r.readBits(1)
+        code = (code << 1) | r.bits(1)
         val c = count(len)
         if (code - first < c) return syms(index + (code - first))
         index += c
@@ -421,17 +338,17 @@ object Brotli {
   }
 
   /** Read a prefix-code descriptor (§3.4/§3.5) over `alphabet` symbols. */
-  private def readPrefixCode(r: Reader, alphabet: Int): Prefix = {
-    val hskip = r.readBits(2)
+  private def readPrefixCode(r: Bits.LsbReader, alphabet: Int): Prefix = {
+    val hskip = r.bits(2)
     if (hskip == 1) {
       // simple code: 1-4 explicit symbols
-      val nsym = r.readBits(2) + 1
+      val nsym = r.bits(2) + 1
       var abits = 0
       while ((1 << abits) < alphabet) abits += 1
       val syms = new Array[Int](nsym)
       var i = 0
       while (i < nsym) {
-        val s = r.readBits(abits)
+        val s = r.bits(abits)
         require(s < alphabet, s"brotli: simple-code symbol $s >= $alphabet")
         var j = 0
         while (j < i) {
@@ -447,7 +364,7 @@ object Brotli {
         case 2 => lens(syms(0)) = 1; lens(syms(1)) = 1
         case 3 => lens(syms(0)) = 1; lens(syms(1)) = 2; lens(syms(2)) = 2
         case _ =>
-          if (r.readBits(1) == 1) {
+          if (r.bits(1) == 1) {
             lens(syms(0)) = 1; lens(syms(1)) = 2
             lens(syms(2)) = 3; lens(syms(3)) = 3
           } else {
@@ -465,8 +382,8 @@ object Brotli {
       var numCodes = 0
       var i = hskip
       while (i < 18 && space < 32) {
-        val idx = r.peek4()
-        r.skip(ClcLen(idx))
+        val idx = r.peek(4)
+        r.bits(ClcLen(idx))
         val v = ClcValue(idx)
         clLens(ClcOrder(i)) = v
         if (v != 0) {
@@ -504,7 +421,7 @@ object Brotli {
           if (repeatLen != newLen) { repeat = 0; repeatLen = newLen }
           val old = repeat
           if (repeat > 0) repeat = (repeat - 2) << extra
-          repeat += r.readBits(extra) + 3
+          repeat += r.bits(extra) + 3
           val reps = repeat - old
           require(s + reps <= alphabet,
             "brotli: repeat run past end of alphabet")
@@ -522,12 +439,16 @@ object Brotli {
 
   // ------------------------------------------------------- header bits
 
+  /** Byte-aligns; the dropped pad bits must be zero (§9.1). */
+  private def alignZero(r: Bits.LsbReader): Unit =
+    require(r.alignByte() == 0, "brotli: nonzero pad bits")
+
   /** WBITS (§9.1): window size is (1 << WBITS) - 16, WBITS in 10..24. */
-  private def readWindowBits(r: Reader): Int = {
-    if (r.readBits(1) == 0) return 16
-    val n = r.readBits(3)
+  private def readWindowBits(r: Bits.LsbReader): Int = {
+    if (r.bits(1) == 0) return 16
+    val n = r.bits(3)
     if (n != 0) return 17 + n
-    val m = r.readBits(3)
+    val m = r.bits(3)
     if (m == 0) return 17
     require(m != 1,
       "brotli: reserved WBITS value (large-window streams are not RFC 7932)")
@@ -535,20 +456,21 @@ object Brotli {
   }
 
   /** The 1..256 variable-length count (NBLTYPES / NTREES, §9.2). */
-  private def readVarCount(r: Reader): Int = {
-    if (r.readBits(1) == 0) 1
+  private def readVarCount(r: Bits.LsbReader): Int = {
+    if (r.bits(1) == 0) 1
     else {
-      val k = r.readBits(3)
-      (1 << k) + 1 + r.readBits(k)
+      val k = r.bits(3)
+      (1 << k) + 1 + r.bits(k)
     }
   }
 
   /** Context map (§7.3): `n` entries over `ntrees` values, zero runs
     * RLE-coded, optional inverse move-to-front.
     */
-  private def readContextMap(r: Reader, n: Int, ntrees: Int): Array[Byte] = {
+  private def readContextMap(r: Bits.LsbReader, n: Int,
+      ntrees: Int): Array[Byte] = {
     val cmap = new Array[Byte](n)
-    val rleMax = if (r.readBits(1) == 1) r.readBits(4) + 1 else 0
+    val rleMax = if (r.bits(1) == 1) r.bits(4) + 1 else 0
     val code = readPrefixCode(r, ntrees + rleMax)
     var i = 0
     while (i < n) {
@@ -557,7 +479,7 @@ object Brotli {
         cmap(i) = 0
         i += 1
       } else if (sym <= rleMax) {
-        var reps = (1 << sym) + r.readBits(sym)
+        var reps = (1 << sym) + r.bits(sym)
         require(i + reps <= n, "brotli: context-map zero run overflows map")
         while (reps > 0) { cmap(i) = 0; i += 1; reps -= 1 }
       } else {
@@ -567,7 +489,7 @@ object Brotli {
         i += 1
       }
     }
-    if (r.readBits(1) == 1) {
+    if (r.bits(1) == 1) {
       // inverse move-to-front over the value alphabet
       val mtf = new Array[Byte](256)
       var k = 0
@@ -646,7 +568,7 @@ object Brotli {
   def decode(in: Array[Byte]): Array[Byte] = decodeWithStats(in)._1
 
   def decodeWithStats(in: Array[Byte]): (Array[Byte], Stats) = {
-    val r = new Reader(in)
+    val r = new Bits.LsbReader("brotli", in)
     val wbits = readWindowBits(r)
     val maxBackward = (1L << wbits) - 16L
     val out = new OutBuffer("brotli", in.length * 3)
@@ -663,11 +585,11 @@ object Brotli {
 
     while (!isLast) {
       // ---- metablock header (§9.2)
-      isLast = r.readBits(1) == 1
+      isLast = r.bits(1) == 1
       var emptyLast = false
-      if (isLast) emptyLast = r.readBits(1) == 1
+      if (isLast) emptyLast = r.bits(1) == 1
       if (!emptyLast) {
-        val mnib = r.readBits(2) match {
+        val mnib = r.bits(2) match {
           case 0 => 4
           case 1 => 5
           case 2 => 6
@@ -676,32 +598,32 @@ object Brotli {
         if (mnib == 0) {
           // metadata metablock: skipped bytes, not output
           require(!isLast, "brotli: metadata metablock flagged last")
-          require(r.readBits(1) == 0, "brotli: reserved metadata bit set")
-          val skipBytes = r.readBits(2)
+          require(r.bits(1) == 0, "brotli: reserved metadata bit set")
+          val skipBytes = r.bits(2)
           var skipLen = 0
           var i = 0
           while (i < skipBytes) {
-            val b = r.readBits(8)
+            val b = r.bits(8)
             require(i != skipBytes - 1 || b != 0,
               "brotli: non-minimal MSKIPBYTES")
             skipLen |= b << (8 * i)
             i += 1
           }
           if (skipBytes > 0) skipLen += 1
-          r.alignByte()
-          r.skipAligned(skipLen)
+          alignZero(r)
+          r.skipBytes(skipLen)
           nMetadata += 1
         } else {
-          var mlen = r.readBits(4 * mnib)
+          var mlen = r.bits(4 * mnib)
           require(mnib == 4 || (mlen >> (4 * (mnib - 1))) != 0,
             "brotli: non-minimal MNIBBLES")
           mlen += 1
           nMeta += 1
-          val uncompressed = !isLast && r.readBits(1) == 1
+          val uncompressed = !isLast && r.bits(1) == 1
           if (uncompressed) {
-            r.alignByte()
+            alignZero(r)
             out.ensure(mlen)
-            r.readAligned(out.buf, out.len, mlen)
+            r.readBytes(out.buf, out.len, mlen)
             out.len += mlen
             nUnc += 1
           } else {
@@ -716,8 +638,8 @@ object Brotli {
         nMeta += 1
       }
     }
-    r.alignByte()
-    require(r.exhausted, "brotli: trailing bytes after the last metablock")
+    alignZero(r)
+    require(r.atEnd, "brotli: trailing bytes after the last metablock")
     val data = out.result
     var sum = 0L
     var i = 0
@@ -727,7 +649,7 @@ object Brotli {
   }
 
   /** One per-category block-switch state (§6). */
-  private final class BlockState(r: Reader, val nTypes: Int) {
+  private final class BlockState(r: Bits.LsbReader, val nTypes: Int) {
     var cur = 0
     private var prev = 1
     private var typeCode: Prefix = null
@@ -738,11 +660,11 @@ object Brotli {
       lenCode = readPrefixCode(r, 26)
       left = readLen(r)
     }
-    private def readLen(r: Reader): Long = {
+    private def readLen(r: Bits.LsbReader): Long = {
       val sym = lenCode.read(r)
-      BlockLenBase(sym).toLong + r.readBits(BlockLenExtra(sym))
+      BlockLenBase(sym).toLong + r.bits(BlockLenExtra(sym))
     }
-    def switchIfDone(r: Reader): Unit = {
+    def switchIfDone(r: Bits.LsbReader): Unit = {
       if (left == 0) {
         val sym = typeCode.read(r)
         val next = sym match {
@@ -760,20 +682,20 @@ object Brotli {
   /** Decode one compressed metablock body; returns (literals, copy
     * bytes, dict refs, dict bytes emitted).
     */
-  private def decodeCompressedMetablock(r: Reader, out: OutBuffer, mlen0: Int,
-      maxBackward: Long, ring: Array[Int], getRingIdx: () => Int,
+  private def decodeCompressedMetablock(r: Bits.LsbReader, out: OutBuffer,
+      mlen0: Int, maxBackward: Long, ring: Array[Int], getRingIdx: () => Int,
       setRingIdx: Int => Unit): (Long, Long, Long, Long) = {
     val litBlocks = new BlockState(r, readVarCount(r))
     val cmdBlocks = new BlockState(r, readVarCount(r))
     val distBlocks = new BlockState(r, readVarCount(r))
 
-    val npostfix = r.readBits(2)
-    val ndirect = r.readBits(4) << npostfix
+    val npostfix = r.bits(2)
+    val ndirect = r.bits(4) << npostfix
 
     val contextModes = new Array[Int](litBlocks.nTypes)
     var i = 0
     while (i < contextModes.length) {
-      contextModes(i) = r.readBits(2)
+      contextModes(i) = r.bits(2)
       i += 1
     }
 
@@ -808,8 +730,8 @@ object Brotli {
       val cell = if (rangeIdx >= 2) rangeIdx - 2 else rangeIdx
       val insCode = InsRangeLut(cell) + ((cmd >> 3) & 7)
       val copyCode = CopyRangeLut(cell) + (cmd & 7)
-      val insLen = InsBase(insCode) + r.readBits(InsExtra(insCode))
-      val copyLen = CopyBase(copyCode) + r.readBits(CopyExtra(copyCode))
+      val insLen = InsBase(insCode) + r.bits(InsExtra(insCode))
+      val copyLen = CopyBase(copyCode) + r.bits(CopyExtra(copyCode))
 
       // literals
       var k = 0
@@ -861,7 +783,7 @@ object Brotli {
             val h = x >> npostfix
             val nbits = 1 + (h >> 1)
             val offset = ((2L + (h & 1)) << nbits) - 4L
-            distance = ((offset + r.readBits(nbits)) << npostfix) +
+            distance = ((offset + r.bits(nbits)) << npostfix) +
               postfix + ndirect + 1
           }
         }
@@ -934,63 +856,48 @@ object Brotli {
       s"brotli: compressed-metablock synthesis covers 1..65536 bytes, not $n")
     val insCode = insCodeFor(n)
     val totalBits = 98 + InsExtra(insCode) + 8 * n
-    val out = new Array[Byte]((totalBits + 7) / 8)
-    var bitPos = 0
-    def put(v: Int, bits: Int): Unit = {
-      var i = 0
-      while (i < bits) {
-        if (((v >> i) & 1) == 1)
-          out(bitPos >> 3) = (out(bitPos >> 3) | (1 << (bitPos & 7))).toByte
-        bitPos += 1
-        i += 1
-      }
-    }
-    put(0, 1) // WBITS = 16
-    put(1, 1) // ISLAST
-    put(0, 1) // ISLASTEMPTY = 0
-    put(0, 2) // MNIBBLES code 0 → 4 nibbles
-    put(n - 1, 16)
-    put(0, 3) // NBLTYPES L, I, D = 1
-    put(0, 2) // NPOSTFIX
-    put(0, 4) // NDIRECT
-    put(0, 2) // context mode LSB6
-    put(0, 1) // NTREESL = 1
-    put(0, 1) // NTREESD = 1
+    val w = new Bits.LsbWriter("brotli", (totalBits + 7) / 8)
+    w.bits(0, 1) // WBITS = 16
+    w.bits(1, 1) // ISLAST
+    w.bits(0, 1) // ISLASTEMPTY = 0
+    w.bits(0, 2) // MNIBBLES code 0 → 4 nibbles
+    w.bits(n - 1, 16)
+    w.bits(0, 3) // NBLTYPES L, I, D = 1
+    w.bits(0, 2) // NPOSTFIX
+    w.bits(0, 4) // NDIRECT
+    w.bits(0, 2) // context mode LSB6
+    w.bits(0, 1) // NTREESL = 1
+    w.bits(0, 1) // NTREESD = 1
     // literal code: COMPLEX, hskip 0; code-length code = the degenerate
     // single-symbol form (only CL symbol 8 nonzero), so every one of the
     // 256 flat-depth-8 lengths then reads in zero bits
-    put(0, 2) // hskip
+    w.bits(0, 2) // hskip
     var k = 0
-    while (k < 10) { put(0, 2); k += 1 } // CL symbols 1,2,3,4,0,5,17,6,16,7 → 0
-    put(7, 4) // CL symbol 8 → length 1 (VLC index 7: bits 1,1,1,0)
+    while (k < 10) { w.bits(0, 2); k += 1 } // CL symbols 1,2,3,4,0,5,17,6,16,7 → 0
+    w.bits(7, 4) // CL symbol 8 → length 1 (VLC index 7: bits 1,1,1,0)
     k = 0
-    while (k < 7) { put(0, 2); k += 1 } // CL symbols 9..15 → 0
+    while (k < 7) { w.bits(0, 2); k += 1 } // CL symbols 9..15 → 0
     // command code: simple, 1 symbol — (insCode, copyCode 0), explicit-
     // distance cell (the distance is never read: MLEN ends at the insert)
-    put(1, 2) // hskip = 1 → simple
-    put(0, 2) // NSYM 1
+    w.bits(1, 2) // hskip = 1 → simple
+    w.bits(0, 2) // NSYM 1
     val cmd =
       if (insCode < 8) 128 + (insCode << 3)
       else if (insCode < 16) 256 + ((insCode - 8) << 3)
       else 448 + ((insCode - 16) << 3)
-    put(cmd, 10)
+    w.bits(cmd, 10)
     // distance code: simple, 1 symbol (0) — never read
-    put(1, 2); put(0, 2); put(0, 6)
+    w.bits(1, 2); w.bits(0, 2); w.bits(0, 6)
     // body: command symbol (0 bits), insert extra bits, 8-bit literals.
     // Prefix-code WORDS are assembled MSB-first by the reader (the
     // DEFLATE convention), so each literal's canonical flat-8 code —
     // the byte value itself — goes out bit-reversed; extra bits stay
     // LSB-first.
-    put(n - InsBase(insCode), InsExtra(insCode))
+    w.bits(n - InsBase(insCode), InsExtra(insCode))
     var i = 0
-    while (i < n) {
-      val v = payload(i) & 0xFF
-      var j = 7
-      while (j >= 0) { put((v >> j) & 1, 1); j -= 1 }
-      i += 1
-    }
-    require(bitPos == totalBits, "brotli: compressed encoder size drift")
-    out
+    while (i < n) { w.code(payload(i) & 0xFF, 8); i += 1 }
+    require(w.bitCount == totalBits, "brotli: compressed encoder size drift")
+    w.result
   }
 
   /** The DuckDB CASE for the insert-extra-bit count E(n) — generated
@@ -1014,34 +921,23 @@ object Brotli {
     if (n == 0) return Array[Byte](0x06) // '0' WBITS=16, ISLAST, ISLASTEMPTY
     val chunks = (n + 65534) / 65535
     val outLen = 3 * chunks + n + 1
-    val out = new Array[Byte](outLen)
-    var bitPos = 0
-    def put(v: Int, bits: Int): Unit = {
-      var i = 0
-      while (i < bits) {
-        if (((v >> i) & 1) == 1) {
-          out(bitPos >> 3) = (out(bitPos >> 3) | (1 << (bitPos & 7))).toByte
-        }
-        bitPos += 1
-        i += 1
-      }
-    }
-    put(0, 1) // WBITS = 16
+    val w = new Bits.LsbWriter("brotli", outLen)
+    w.bits(0, 1) // WBITS = 16
     var off = 0
     while (off < n) {
       val len = math.min(65535, n - off)
-      put(0, 1) // ISLAST = 0
-      put(0, 2) // MNIBBLES code 0 → 4 nibbles
-      put(len - 1, 16)
-      put(1, 1) // ISUNCOMPRESSED
-      bitPos = (bitPos + 7) & ~7
-      System.arraycopy(payload, off, out, bitPos >> 3, len)
-      bitPos += 8 * len
+      w.bits(0, 1) // ISLAST = 0
+      w.bits(0, 2) // MNIBBLES code 0 → 4 nibbles
+      w.bits(len - 1, 16)
+      w.bits(1, 1) // ISUNCOMPRESSED
+      w.alignByte()
+      w.writeBytes(payload, off, len)
       off += len
     }
-    put(1, 1) // ISLAST
-    put(1, 1) // ISLASTEMPTY
-    require((bitPos + 7) / 8 == outLen, s"brotli: encoder size drift")
+    w.bits(1, 1) // ISLAST
+    w.bits(1, 1) // ISLASTEMPTY
+    val out = w.result
+    require(out.length == outLen, s"brotli: encoder size drift")
     out
   }
 }

@@ -64,63 +64,6 @@ object Deflate {
 
   def crc32(bytes: Array[Byte]): Long = crc32(bytes, 0, bytes.length)
 
-  // --------------------------------------------------------- bit reader
-  /** LSB-first bit reader over a byte range (the DEFLATE bit order).
-    * `consumedUpTo` rounds the last touched bit up to its byte — where
-    * the gzip trailer starts after the final block.
-    */
-  private final class BitReader(bytes: Array[Byte], start: Int, end: Int) {
-    private var pos = start
-    private var bitBuf = 0
-    private var bitCnt = 0
-
-    private def need(n: Int): Unit = {
-      while (bitCnt < n) {
-        require(pos < end, "deflate: truncated stream")
-        bitBuf |= (bytes(pos) & 0xFF) << bitCnt
-        pos += 1
-        bitCnt += 8
-      }
-    }
-
-    /** Read n ≤ 16 bits, LSB-first. */
-    def bits(n: Int): Int = {
-      need(n)
-      val v = bitBuf & ((1 << n) - 1)
-      bitBuf >>>= n
-      bitCnt -= n
-      v
-    }
-
-    /** Discard bits to the next byte boundary and return the index of
-      * that boundary (stored-block LEN/NLEN live there).
-      */
-    def alignByte(): Int = {
-      val drop = bitCnt % 8
-      bitBuf >>>= drop
-      bitCnt -= drop
-      // push whole buffered bytes back so byte-level reads see them
-      pos -= bitCnt / 8
-      bitBuf = 0
-      bitCnt = 0
-      pos
-    }
-
-    def readByte(): Int = {
-      require(bitCnt == 0, "deflate: byte read while bit-misaligned")
-      require(pos < end, "deflate: truncated stored block")
-      val v = bytes(pos) & 0xFF
-      pos += 1
-      v
-    }
-
-    def skipTo(p: Int): Unit = { require(p <= end, "deflate: truncated"); pos = p }
-    def position: Int = pos
-
-    /** First unconsumed BYTE (a partially consumed byte counts as used). */
-    def consumedUpTo: Int = pos - bitCnt / 8
-  }
-
   // ---------------------------------------------------- canonical codes
   /** A canonical Huffman decoder built from code lengths (RFC 1951
     * §3.2.2). Rejects oversubscribed length vectors at construction;
@@ -163,7 +106,7 @@ object Deflate {
     }
 
     /** Decode one symbol (codes are packed MSB-of-code-first). */
-    def decode(br: BitReader): Int = {
+    def decode(br: Bits.LsbReader): Int = {
       var code = 0
       var first = 0
       var index = 0
@@ -218,7 +161,7 @@ object Deflate {
     * the final block's end-of-block; bytes past it are untouched.
     */
   def inflate(bytes: Array[Byte], start: Int, end: Int): Inflated = {
-    val br = new BitReader(bytes, start, end)
+    val br = new Bits.LsbReader("deflate", bytes, start, end)
     val out = new OutBuffer("deflate", (end - start) * 3)
     var bfinal = 0
     var firstBtype = -1
@@ -228,15 +171,14 @@ object Deflate {
       if (firstBtype < 0) firstBtype = btype
       btype match {
         case 0 => // stored
-          val p = br.alignByte()
-          br.skipTo(p)
-          val len = br.readByte() | (br.readByte() << 8)
-          val nlen = br.readByte() | (br.readByte() << 8)
+          br.alignByte()
+          val len = br.bits(16)
+          val nlen = br.bits(16)
           require((len ^ 0xFFFF) == nlen,
             s"deflate: stored-block NLEN $nlen is not the complement of LEN $len")
           out.ensure(len)
-          var i = 0
-          while (i < len) { out.add(br.readByte().toByte); i += 1 }
+          br.readBytes(out.buf, out.len, len)
+          out.len += len
         case 1 | 2 =>
           val (lit, dist) =
             if (btype == 1) (FixedLit, FixedDist)
@@ -294,7 +236,7 @@ object Deflate {
           throw new IllegalArgumentException("deflate: reserved BTYPE 11")
       }
     } while (bfinal == 0)
-    Inflated(out.result, br.consumedUpTo, firstBtype)
+    Inflated(out.result, br.position, firstBtype)
   }
 
   /** Adler-32 (RFC 1950 §8) — the zlib stream checksum. */
@@ -357,34 +299,6 @@ object Deflate {
     out.toByteArray
   }
 
-  // --------------------------------------------------------- bit writer
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var bitBuf = 0
-    private var bitCnt = 0
-    /** Append n bits, LSB-first (header fields, extra bits). */
-    def bits(v: Int, n: Int): Unit = {
-      bitBuf |= (v & ((1 << n) - 1)) << bitCnt
-      bitCnt += n
-      while (bitCnt >= 8) {
-        out.write(bitBuf & 0xFF)
-        bitBuf >>>= 8
-        bitCnt -= 8
-      }
-    }
-    /** Append a Huffman code of `n` bits, MSB-of-code-first as the
-      * format packs them.
-      */
-    def code(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bits((v >>> i) & 1, 1); i -= 1 }
-    }
-    def flush(): Array[Byte] = {
-      if (bitCnt > 0) { out.write(bitBuf & 0xFF); bitBuf = 0; bitCnt = 0 }
-      out.toByteArray
-    }
-  }
-
   /** Stored-block (BTYPE 00) encode: `5·⌈len/65535⌉ + len` bytes on the
     * wire (5 for an empty input — one final block with LEN = 0).
     */
@@ -411,7 +325,7 @@ object Deflate {
     * bits + 7 end-of-block bits, rounded up.
     */
   def deflateFixed(data: Array[Byte]): Array[Byte] = {
-    val bw = new BitWriter
+    val bw = new Bits.LsbWriter("deflate", data.length + 2)
     bw.bits(1, 1) // BFINAL
     bw.bits(1, 2) // BTYPE 01
     var i = 0
@@ -422,7 +336,7 @@ object Deflate {
       i += 1
     }
     bw.code(0, 7) // end of block (symbol 256)
-    bw.flush()
+    bw.result
   }
 }
 

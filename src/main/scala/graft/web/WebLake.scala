@@ -159,7 +159,19 @@ object WebLake {
     * exercised by the gzip bundle tier).
     */
   def warcGzFromDocs(spark: SparkSession, docs: DataFrame,
-      nArchives: Int = DefaultArchives): Dataset[ArchiveRow] = {
+      nArchives: Int = DefaultArchives): Dataset[ArchiveRow] =
+    warcGzArchives(spark, docs, nArchives) { (id, t, src) =>
+      Warc.encodeRecord("response", s"urn:graft:doc:$id",
+        Some(s"https://corpus.example/$src/$id"), "text/plain", asciiBytes(t))
+    }
+
+  /** The documents grouped into archive `doc_id mod nArchives`, each
+    * archive's (aid, id, text, source) rows in doc_id order; `write`
+    * puts the archive's bytes into `out`.
+    */
+  private def perArchive(spark: SparkSession, docs: DataFrame,
+      nArchives: Int)(write: (Long, Array[(Long, Long, String, String)],
+        java.io.ByteArrayOutputStream) => Unit): Dataset[ArchiveRow] = {
     import spark.implicits._
     docs.select(pmod(col("doc_id"), lit(nArchives)).cast("long").as("aid"),
         col("doc_id").cast("long").as("id"),
@@ -170,21 +182,26 @@ object WebLake {
       .mapGroups { (aid, it) =>
         val rows = it.toArray.sortBy(_._2)
         val out = new java.io.ByteArrayOutputStream()
-        val info = Gzip.member(
-          Warc.encodeRecord("warcinfo", s"urn:graft:archive:$aid", None,
-            "application/warc-fields", WarcInfoPayload.getBytes(Ascii)),
-          fname = None, fixedHuffman = false, mtime = 0L)
-        out.write(info, 0, info.length)
-        rows.foreach { case (_, id, t, src) =>
-          val rec = Warc.encodeRecord("response", s"urn:graft:doc:$id",
-            Some(s"https://corpus.example/$src/$id"), "text/plain",
-            asciiBytes(t))
-          val m = Gzip.member(rec, fname = None, fixedHuffman = false, mtime = 0L)
-          out.write(m, 0, m.length)
-        }
+        write(aid, rows, out)
         ArchiveRow(aid, out.toByteArray)
       }
   }
+
+  /** `.warc.gz` archives: the `warcinfo` member, then one stored-DEFLATE
+    * member per doc holding the WARC record `record(id, text, source)`.
+    */
+  private def warcGzArchives(spark: SparkSession, docs: DataFrame,
+      nArchives: Int)(record: (Long, String, String) => Array[Byte]
+      ): Dataset[ArchiveRow] =
+    perArchive(spark, docs, nArchives) { (aid, rows, out) =>
+      def member(rec: Array[Byte]): Unit = {
+        val m = Gzip.member(rec, fname = None, fixedHuffman = false, mtime = 0L)
+        out.write(m, 0, m.length)
+      }
+      member(Warc.encodeRecord("warcinfo", s"urn:graft:archive:$aid", None,
+        "application/warc-fields", WarcInfoPayload.getBytes(Ascii)))
+      rows.foreach { case (_, id, t, src) => member(record(id, t, src)) }
+    }
 
   /** Gunzip every member and parse it as EXACTLY ONE WARC record (the
     * one-record-per-member convention is enforced, not assumed).
@@ -342,34 +359,14 @@ object WebLake {
     */
   def warcHttpFromDocs(spark: SparkSession, docs: DataFrame,
       nArchives: Int = DefaultArchives,
-      corruptEvery: Long = 0L): Dataset[ArchiveRow] = {
-    import spark.implicits._
-    docs.select(pmod(col("doc_id"), lit(nArchives)).cast("long").as("aid"),
-        col("doc_id").cast("long").as("id"),
-        coalesce(col("text"), lit("")).as("t"),
-        coalesce(col("source"), lit("")).as("src"))
-      .as[(Long, Long, String, String)]
-      .groupByKey(_._1)
-      .mapGroups { (aid, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val out = new java.io.ByteArrayOutputStream()
-        val info = Gzip.member(
-          Warc.encodeRecord("warcinfo", s"urn:graft:archive:$aid", None,
-            "application/warc-fields", WarcInfoPayload.getBytes(Ascii)),
-          fname = None, fixedHuffman = false, mtime = 0L)
-        out.write(info, 0, info.length)
-        rows.foreach { case (_, id, t, src) =>
-          val corrupt = corruptEvery > 0 && id % corruptEvery == 0
-          val msg = httpMessageFor(id, asciiBytes(t), corrupt)
-          val rec = Warc.encodeRecord("response", s"urn:graft:doc:$id",
-            Some(s"https://corpus.example/$src/$id"),
-            "application/http;msgtype=response", msg)
-          val m = Gzip.member(rec, fname = None, fixedHuffman = false, mtime = 0L)
-          out.write(m, 0, m.length)
-        }
-        ArchiveRow(aid, out.toByteArray)
-      }
-  }
+      corruptEvery: Long = 0L): Dataset[ArchiveRow] =
+    warcGzArchives(spark, docs, nArchives) { (id, t, src) =>
+      val corrupt = corruptEvery > 0 && id % corruptEvery == 0
+      val msg = httpMessageFor(id, asciiBytes(t), corrupt)
+      Warc.encodeRecord("response", s"urn:graft:doc:$id",
+        Some(s"https://corpus.example/$src/$id"),
+        "application/http;msgtype=response", msg)
+    }
 
   /** Per-archive census of the HTTP layer: response count, status /
     * transfer-framing / content-coding splits, header/body/wire byte
@@ -702,31 +699,20 @@ object WebLake {
     * index, q213's is the record taxonomy.
     */
   def warcZstFromDocs(spark: SparkSession, docs: DataFrame,
-      nArchives: Int = DefaultArchives): Dataset[ArchiveRow] = {
-    import spark.implicits._
-    docs.select(pmod(col("doc_id"), lit(nArchives)).cast("long").as("aid"),
-        col("doc_id").cast("long").as("id"),
-        coalesce(col("text"), lit("")).as("t"),
-        coalesce(col("source"), lit("")).as("src"))
-      .as[(Long, Long, String, String)]
-      .groupByKey(_._1)
-      .mapGroups { (aid, it) =>
-        val rows = it.toArray.sortBy(_._2)
-        val out = new java.io.ByteArrayOutputStream()
-        val sizes = Vector.newBuilder[(Int, Long)]
-        rows.foreach { case (_, id, t, src) =>
-          val rec = Warc.encodeRecord("response", s"urn:graft:doc:$id",
-            Some(s"https://corpus.example/$src/$id"), "text/plain",
-            asciiBytes(t))
-          val frame = Zstd.encodeFrame(rec, rleLen = 0, rleByte = 0)
-          sizes += ((frame.length, rec.length.toLong))
-          out.write(frame, 0, frame.length)
-        }
-        val table = Zstd.encodeSeekTable(sizes.result())
-        out.write(table, 0, table.length)
-        ArchiveRow(aid, out.toByteArray)
+      nArchives: Int = DefaultArchives): Dataset[ArchiveRow] =
+    perArchive(spark, docs, nArchives) { (_, rows, out) =>
+      val sizes = Vector.newBuilder[(Int, Long)]
+      rows.foreach { case (_, id, t, src) =>
+        val rec = Warc.encodeRecord("response", s"urn:graft:doc:$id",
+          Some(s"https://corpus.example/$src/$id"), "text/plain",
+          asciiBytes(t))
+        val frame = Zstd.encodeFrame(rec, rleLen = 0, rleByte = 0)
+        sizes += ((frame.length, rec.length.toLong))
+        out.write(frame, 0, frame.length)
       }
-  }
+      val table = Zstd.encodeSeekTable(sizes.result())
+      out.write(table, 0, table.length)
+    }
 
   /** The `.warc.zst` random-access index — [[CdxEntry]] rows with the
     * FRAME (offset, compressed length) as the seek coordinates. The

@@ -137,27 +137,8 @@ private[graft] object ZstdEntropy {
     */
   def readFseDescription(bytes: Array[Byte], start: Int, end: Int,
       maxAl: Int, maxSymbol: Int): (Array[Int], Int, Int) = {
-    val totalBits = (end - start).toLong * 8
-    var bitPos = 0L
-    def peek(nb: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < nb) {
-        val bi = bitPos + i
-        val bit =
-          if (bi < totalBits)
-            (bytes(start + (bi >> 3).toInt) >> (bi & 7).toInt) & 1
-          else 0
-        v |= bit << i
-        i += 1
-      }
-      v
-    }
-    def take(nb: Int): Int = {
-      require(bitPos + nb <= totalBits, "zstd: truncated FSE description")
-      val v = peek(nb); bitPos += nb; v
-    }
-    val al = 5 + take(4)
+    val r = new Bits.LsbReader("zstd", bytes, start, end)
+    val al = 5 + r.bits(4)
     require(al <= maxAl, s"zstd: FSE accuracy log $al exceeds max $maxAl")
     var remaining = (1 << al) + 1
     var threshold = 1 << al
@@ -168,16 +149,14 @@ private[graft] object ZstdEntropy {
       require(charnum <= maxSymbol,
         s"zstd: FSE description names symbol > $maxSymbol")
       val max = (threshold << 1) - 1 - remaining
-      var count = peek(nbBits)
+      var count = r.peek(nbBits)
       if ((count & (threshold - 1)) < max) {
         count &= threshold - 1
-        bitPos += nbBits - 1
-        require(bitPos <= totalBits, "zstd: truncated FSE description")
+        r.bits(nbBits - 1)
       } else {
         count &= (threshold << 1) - 1
         if (count >= threshold) count -= max
-        bitPos += nbBits
-        require(bitPos <= totalBits, "zstd: truncated FSE description")
+        r.bits(nbBits)
       }
       count -= 1 // -1 encodes less-than-one
       require(count >= -1 && math.abs(count) <= remaining,
@@ -188,7 +167,7 @@ private[graft] object ZstdEntropy {
       if (count == 0) {
         var rep = 0
         do {
-          rep = take(2)
+          rep = r.bits(2)
           require(charnum + rep <= maxSymbol + 1,
             s"zstd: FSE zero-repeat past symbol $maxSymbol")
           charnum += rep // cells already zero-initialized
@@ -199,7 +178,7 @@ private[graft] object ZstdEntropy {
       }
     }
     require(remaining == 1, "zstd: FSE distribution does not close")
-    (java.util.Arrays.copyOf(norm, charnum), al, ((bitPos + 7) / 8).toInt)
+    (java.util.Arrays.copyOf(norm, charnum), al, r.position - start)
   }
 
   /** Decode a 2-state interleaved FSE stream (the Huffman-weight
@@ -809,12 +788,8 @@ private[graft] object ZstdEntropy {
     * WebArchiveSpec.
     */
   def writeFseDescription(norm: Array[Int], al: Int): Array[Byte] = {
-    val bits = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    def put(v: Int, nb: Int): Unit = {
-      var i = 0
-      while (i < nb) { bits += ((v >> i) & 1) == 1; i += 1 }
-    }
-    put(al - 5, 4)
+    val w = new Bits.LsbWriter("zstd")
+    w.bits(al - 5, 4)
     var remaining = (1 << al) + 1
     var threshold = 1 << al
     var nbBits = al + 1
@@ -828,7 +803,7 @@ private[graft] object ZstdEntropy {
       var count = p + 1
       val small = count < max
       if (count >= threshold) count += max
-      put(count, if (small) nbBits - 1 else nbBits)
+      w.bits(count, if (small) nbBits - 1 else nbBits)
       remaining -= math.abs(p)
       i += 1
       if (p == 0) {
@@ -839,7 +814,7 @@ private[graft] object ZstdEntropy {
         var more = true
         while (more) {
           val g = math.min(3, left)
-          put(g, 2)
+          w.bits(g, 2)
           left -= g
           more = g == 3
         }
@@ -849,13 +824,7 @@ private[graft] object ZstdEntropy {
         nbBits -= 1; threshold >>= 1
       }
     }
-    val out = new Array[Byte]((bits.length + 7) / 8)
-    var j = 0
-    while (j < bits.length) {
-      if (bits(j)) out(j >> 3) = (out(j >> 3) | (1 << (j & 7))).toByte
-      j += 1
-    }
-    out
+    w.result
   }
 
   /** The FSE ENCODE transition: the unique state of `sym` whose update
