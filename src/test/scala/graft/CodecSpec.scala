@@ -1728,4 +1728,26 @@ class CodecSpec extends AnyFunSuite with SharedSpark {
     val refused = seededFlips(base, data.result())(Codecs.decodeGif)
     assert(refused > 0, "no flip was ever refused — the checks are dead")
   }
+
+  test("hostile pin on a dynamic-Huffman DEFLATE stream: seeded bit " +
+      "flips in the block header, the code-length code and the data " +
+      "either inflate or raise the loud contract") {
+    import graft.web.Deflate
+    val words = Array("job", "salary", "engineer", "hong", "kong",
+      "senior", "analyst", "data", "the", "of", "and", "remote",
+      "contract", "manager", "python", "spark", "sql", "team", "apply")
+    val rnd = new scala.util.Random(13)
+    val text = Iterator.continually(words(rnd.nextInt(words.length)))
+      .take(560).mkString(" ").getBytes("US-ASCII")
+    val d = new java.util.zip.Deflater(6, true)
+    d.setInput(text); d.finish()
+    val buf = new Array[Byte](text.length * 2)
+    val base = java.util.Arrays.copyOf(buf, d.deflate(buf))
+    d.end()
+    assert(((base(0) >> 1) & 3) == 2, "the stream is not a dynamic block")
+    assert(Deflate.inflate(base, 0, base.length).data.toSeq === text.toSeq)
+    val refused = seededFlips(base, base.indices)(m =>
+      Deflate.inflate(m, 0, m.length))
+    assert(refused > 0, "no flip was ever refused — the checks are dead")
+  }
 }
