@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.web.Bits
+import graft.web.{Bits, PrefixCode}
 
 /** From-scratch, zero-dependency codecs for the two classic uncompressed
   * media containers — real parsers, not stubs:
@@ -528,11 +528,11 @@ object Codecs {
     var codeSize = minCodeSize + 1
     val codes = new Bits.LsbReader("gif", data)
     var prevCode = -1
+    val stack = new Array[Byte](4096)
     def expand(code: Int): Unit = {
       // walk the prefix chain, then reverse into the output
       var c = code
       var len = 0
-      val stack = new Array[Byte](4096)
       while (c >= clear + 2) {
         stack(len) = suffix(c); len += 1; c = prefix(c)
       }
@@ -1486,36 +1486,6 @@ object Codecs {
     out.toByteArray
   }
 
-  /** Canonical Huffman decoder built from a DHT's (bits, vals) — the
-    * T.81 mincode/maxcode/valptr walk, one bit at a time.
-    */
-  private final class HuffDecoder(bits: Array[Int], vals: Array[Int]) {
-    private val minCode = new Array[Int](17)
-    private val maxCode = Array.fill(17)(-1)
-    private val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var vi = 0
-      for (l <- 1 to 16) {
-        if (bits(l - 1) > 0) {
-          valPtr(l) = vi; minCode(l) = code
-          vi += bits(l - 1); code += bits(l - 1)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-      }
-      require(vi == vals.length, "DHT bits/vals mismatch")
-    }
-    def decode(br: Bits.MsbReader): Int = {
-      var code = 0; var l = 0
-      while (l < 16) {
-        code = (code << 1) | br.bit(); l += 1
-        if (maxCode(l) >= 0 && code <= maxCode(l))
-          return vals(valPtr(l) + code - minCode(l))
-      }
-      throw new IllegalArgumentException("invalid Huffman code in scan")
-    }
-  }
-
   /** Sign-extend a `t`-bit magnitude payload (T.81 EXTEND). */
   private def extend(v: Int, t: Int): Int =
     if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
@@ -1604,7 +1574,7 @@ object Codecs {
       pos += 2; v
     }
     val quants = scala.collection.mutable.Map.empty[Int, Array[Int]]
-    val huffs = scala.collection.mutable.Map.empty[(Int, Int), HuffDecoder]
+    val huffs = scala.collection.mutable.Map.empty[(Int, Int), PrefixCode]
     var width = -1; var height = -1; var compQuant = -1
     var dcSel = -1; var acSel = -1
     var sosSeen = false
@@ -1630,7 +1600,7 @@ object Codecs {
             val tc = u8(); val cls = tc >>> 4; val id = tc & 0x0F
             val bl = Array.tabulate(16)(_ => u8())
             val vl = Array.tabulate(bl.sum)(_ => u8())
-            huffs((cls, id)) = new HuffDecoder(bl, vl)
+            huffs((cls, id)) = new PrefixCode("jpeg", 0 +: bl, vl)
           }
         case 0xC0 => // SOF0 baseline
           u16()

@@ -277,68 +277,18 @@ object Brotli {
 
   // ------------------------------------------------------ prefix codes
 
-  /** A canonical prefix code built from per-symbol lengths (≤ 15).
-    * Codes are assigned in (length, symbol) order — the RFC's canonical
-    * rule for both simple and complex codes.
+  /** The canonical prefix code of per-symbol lengths (≤ 15), codes in
+    * (length, symbol) order — the RFC's rule for both simple and complex
+    * codes — decoded by [[PrefixCode]]. A code with one used symbol
+    * takes zero bits on the wire: that symbol gets length 0.
     */
-  private final class Prefix(lens: Array[Int]) {
-    private val count = new Array[Int](16)
-    private var nz = 0
-    private var last = 0
-    locally {
-      var s = 0
-      while (s < lens.length) {
-        val l = lens(s)
-        require(l >= 0 && l <= 15, s"brotli: code length $l out of range")
-        if (l > 0) { count(l) += 1; nz += 1; last = s }
-        s += 1
-      }
-    }
-    val single: Int = if (nz == 1) last else -1
-    private val syms: Array[Int] = {
-      // bucket symbols by length, ascending symbol within each length
-      val off = new Array[Int](16)
-      var l = 1
-      var acc = 0
-      while (l <= 15) { off(l) = acc; acc += count(l); l += 1 }
-      val a = new Array[Int](nz)
-      var s = 0
-      while (s < lens.length) {
-        if (lens(s) > 0) { a(off(lens(s))) = s; off(lens(s)) += 1 }
-        s += 1
-      }
-      a
-    }
-    // completeness: sum of 2^(15-len) must be exactly 2^15 (unless the
-    // degenerate single-symbol code, which uses zero bits)
-    if (single < 0) {
-      var space = 0L
-      var l = 1
-      while (l <= 15) { space += count(l).toLong << (15 - l); l += 1 }
-      require(space == (1L << 15),
-        s"brotli: prefix code over/under-subscribed (space $space)")
-    }
-
-    def read(r: Bits.LsbReader): Int = {
-      if (single >= 0) return single
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= 15) {
-        code = (code << 1) | r.bits(1)
-        val c = count(len)
-        if (code - first < c) return syms(index + (code - first))
-        index += c
-        first = (first + c) << 1
-        len += 1
-      }
-      throw new IllegalArgumentException("brotli: invalid prefix code word")
-    }
-  }
+  private def prefixCode(lens: Array[Int]): PrefixCode =
+    if (lens.count(_ != 0) == 1)
+      new PrefixCode("brotli", Array(1), Array(lens.indexWhere(_ != 0)))
+    else PrefixCode.fromLengths("brotli", lens, 15)
 
   /** Read a prefix-code descriptor (§3.4/§3.5) over `alphabet` symbols. */
-  private def readPrefixCode(r: Bits.LsbReader, alphabet: Int): Prefix = {
+  private def readPrefixCode(r: Bits.LsbReader, alphabet: Int): PrefixCode = {
     val hskip = r.bits(2)
     if (hskip == 1) {
       // simple code: 1-4 explicit symbols
@@ -360,7 +310,7 @@ object Brotli {
       }
       val lens = new Array[Int](alphabet)
       nsym match {
-        case 1 => lens(syms(0)) = 1 // degenerate: zero bits on the wire
+        case 1 => lens(syms(0)) = 1 // zero bits on the wire (prefixCode)
         case 2 => lens(syms(0)) = 1; lens(syms(1)) = 1
         case 3 => lens(syms(0)) = 1; lens(syms(1)) = 2; lens(syms(2)) = 2
         case _ =>
@@ -372,9 +322,7 @@ object Brotli {
             while (k < 4) { lens(syms(k)) = 2; k += 1 }
           }
       }
-      // a 1-symbol simple code really is zero-bit on the wire;
-      // Prefix.single short-circuits read() for that case
-      new Prefix(lens)
+      prefixCode(lens)
     } else {
       // complex code: code-length code first (wire order, fixed VLC)
       val clLens = new Array[Int](18)
@@ -394,7 +342,7 @@ object Brotli {
       }
       require(numCodes == 1 || space == 32,
         s"brotli: code-length code over/under-subscribed (space $space)")
-      val clCode = new Prefix(clLens)
+      val clCode = prefixCode(clLens)
 
       // symbol lengths, with 16 (repeat prev nonzero, 2 extra) and 17
       // (repeat zero, 3 extra); consecutive same-symbol repeats chain
@@ -405,7 +353,7 @@ object Brotli {
       var repeatLen = -1 // the len being repeated, or -1 when not chaining
       var s = 0
       while (s < alphabet && symSpace < (1L << 15)) {
-        val cl = clCode.read(r)
+        val cl = clCode.decode(r)
         if (cl < 16) {
           lens(s) = cl
           s += 1
@@ -433,7 +381,7 @@ object Brotli {
       require(symSpace == (1L << 15) ||
         (symSpace < (1L << 15) && lens.count(_ != 0) == 1),
         s"brotli: symbol lengths over/under-subscribed (space $symSpace)")
-      new Prefix(lens)
+      prefixCode(lens)
     }
   }
 
@@ -474,7 +422,7 @@ object Brotli {
     val code = readPrefixCode(r, ntrees + rleMax)
     var i = 0
     while (i < n) {
-      val sym = code.read(r)
+      val sym = code.decode(r)
       if (sym == 0) {
         cmap(i) = 0
         i += 1
@@ -652,8 +600,8 @@ object Brotli {
   private final class BlockState(r: Bits.LsbReader, val nTypes: Int) {
     var cur = 0
     private var prev = 1
-    private var typeCode: Prefix = null
-    private var lenCode: Prefix = null
+    private var typeCode: PrefixCode = null
+    private var lenCode: PrefixCode = null
     var left: Long = 1L << 60
     if (nTypes >= 2) {
       typeCode = readPrefixCode(r, nTypes + 2)
@@ -661,12 +609,12 @@ object Brotli {
       left = readLen(r)
     }
     private def readLen(r: Bits.LsbReader): Long = {
-      val sym = lenCode.read(r)
+      val sym = lenCode.decode(r)
       BlockLenBase(sym).toLong + r.bits(BlockLenExtra(sym))
     }
     def switchIfDone(r: Bits.LsbReader): Unit = {
       if (left == 0) {
-        val sym = typeCode.read(r)
+        val sym = typeCode.decode(r)
         val next = sym match {
           case 0 => prev
           case 1 => (cur + 1) % nTypes
@@ -724,7 +672,7 @@ object Brotli {
     while (mlen > 0) {
       cmdBlocks.switchIfDone(r)
       cmdBlocks.left -= 1
-      val cmd = cmdCodes(cmdBlocks.cur).read(r)
+      val cmd = cmdCodes(cmdBlocks.cur).decode(r)
       val rangeIdx = cmd >> 6
       val implicitD0 = rangeIdx < 2
       val cell = if (rangeIdx >= 2) rangeIdx - 2 else rangeIdx
@@ -749,7 +697,7 @@ object Brotli {
         }
         val tree = cmapL(litBlocks.cur * 64 + ctx) & 0xFF
         out.ensure(1)
-        out.add(litCodes(tree).read(r).toByte)
+        out.add(litCodes(tree).decode(r).toByte)
         nLit += 1
         k += 1
       }
@@ -770,7 +718,7 @@ object Brotli {
           // 3 for every longer copy
           val dctx = (if (copyLen > 4) 5 else copyLen) - 2
           val tree = cmapD(distBlocks.cur * 4 + dctx) & 0xFF
-          dsym = distCodes(tree).read(r)
+          dsym = distCodes(tree).decode(r)
           if (dsym < 16) {
             distance =
               ring((ringIdx + ShortIdx(dsym)) & 3).toLong + ShortDelta(dsym)

@@ -10,7 +10,7 @@ package graft.web
   * The DECODER implements the full bit-level format: stored blocks,
   * fixed-Huffman blocks, dynamic-Huffman blocks (HLIT/HDIST/HCLEN, the
   * code-length meta-alphabet with its 16/17/18 repeat codes), canonical
-  * Huffman construction per RFC 1951 §3.2.2, and LZ77 length/distance
+  * Huffman codes ([[PrefixCode]], RFC 1951 §3.2.2) and LZ77 length/distance
   * back-references with overlapped copy. The ENCODER drives the
   * synthesizable subset the oracles can price exactly — stored blocks
   * and literal-only fixed-Huffman blocks (both are fully conformant
@@ -64,66 +64,6 @@ object Deflate {
 
   def crc32(bytes: Array[Byte]): Long = crc32(bytes, 0, bytes.length)
 
-  // ---------------------------------------------------- canonical codes
-  /** A canonical Huffman decoder built from code lengths (RFC 1951
-    * §3.2.2). Rejects oversubscribed length vectors at construction;
-    * an incomplete code that is actually walked off fails at decode.
-    * The walk is the counts/offsets form (as in the public zlib
-    * `puff` reference decoder).
-    */
-  private final class Huffman(lengths: Array[Int], maxBits: Int = 15) {
-    // An all-zero alphabet is legal while unused (e.g. the distance
-    // alphabet of a literal-only dynamic block); walking it fails loudly
-    // in decode. Oversubscription check: the Kraft sum may not exceed 1.
-    private val count: Array[Int] = {
-      val c = new Array[Int](maxBits + 1)
-      lengths.foreach { l =>
-        require(l >= 0 && l <= maxBits, s"deflate: code length $l out of range")
-        c(l) += 1
-      }
-      var left = 1
-      var l = 1
-      while (l <= maxBits) {
-        left <<= 1
-        left -= c(l)
-        require(left >= 0, "deflate: oversubscribed Huffman code")
-        l += 1
-      }
-      c
-    }
-    // symbols sorted by (code length, symbol value)
-    private val symbol: Array[Int] = {
-      val offs = new Array[Int](maxBits + 2)
-      var l = 1
-      while (l <= maxBits) { offs(l + 1) = offs(l) + count(l); l += 1 }
-      val sym = new Array[Int](offs(maxBits + 1))
-      var s = 0
-      while (s < lengths.length) {
-        if (lengths(s) != 0) { sym(offs(lengths(s))) = s; offs(lengths(s)) += 1 }
-        s += 1
-      }
-      sym
-    }
-
-    /** Decode one symbol (codes are packed MSB-of-code-first). */
-    def decode(br: Bits.LsbReader): Int = {
-      var code = 0
-      var first = 0
-      var index = 0
-      var len = 1
-      while (len <= maxBits) {
-        code |= br.bits(1)
-        val cnt = count(len)
-        if (code - first < cnt) return symbol(index + (code - first))
-        index += cnt
-        first = (first + cnt) << 1
-        code <<= 1
-        len += 1
-      }
-      throw new IllegalArgumentException("deflate: invalid Huffman code (incomplete walk)")
-    }
-  }
-
   // RFC 1951 §3.2.5 length/distance tables (symbol 257.. / 0..29).
   private val LenBase = Array(3, 4, 5, 6, 7, 8, 9, 10, 11, 13, 15, 17, 19, 23,
     27, 31, 35, 43, 51, 59, 67, 83, 99, 115, 131, 163, 195, 227, 258)
@@ -135,16 +75,12 @@ object Deflate {
   private val DistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5, 6, 6,
     7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
 
-  private val FixedLit: Huffman = {
-    val l = new Array[Int](288)
-    var i = 0
-    while (i < 288) {
-      l(i) = if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8
-      i += 1
-    }
-    new Huffman(l)
-  }
-  private val FixedDist: Huffman = new Huffman(Array.fill(32)(5))
+  private def code(lengths: Array[Int], maxBits: Int = 15): PrefixCode =
+    PrefixCode.fromLengths("deflate", lengths, maxBits)
+
+  private val FixedLit: PrefixCode = code(Array.tabulate(288)(i =>
+    if (i < 144) 8 else if (i < 256) 9 else if (i < 280) 7 else 8))
+  private val FixedDist: PrefixCode = code(Array.fill(32)(5))
 
   // order in which code-length-code lengths appear (RFC 1951 §3.2.7)
   private val ClOrder =
@@ -191,7 +127,7 @@ object Deflate {
               val clLens = new Array[Int](19)
               var i = 0
               while (i < hclen) { clLens(ClOrder(i)) = br.bits(3); i += 1 }
-              val clCode = new Huffman(clLens, 7)
+              val clCode = code(clLens, 7)
               val lens = new Array[Int](hlit + hdist)
               var n = 0
               while (n < lens.length) {
@@ -211,8 +147,8 @@ object Deflate {
                 }
               }
               require(lens(256) != 0, "deflate: dynamic block has no end-of-block code")
-              (new Huffman(java.util.Arrays.copyOfRange(lens, 0, hlit)),
-                new Huffman(java.util.Arrays.copyOfRange(lens, hlit, hlit + hdist)))
+              (code(java.util.Arrays.copyOfRange(lens, 0, hlit)),
+                code(java.util.Arrays.copyOfRange(lens, hlit, hlit + hdist)))
             }
           var sym = lit.decode(br)
           while (sym != 256) {

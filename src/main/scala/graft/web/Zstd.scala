@@ -63,6 +63,55 @@ object Zstd {
       ((bytes(pos + 2) & 0xFFL) << 16) | ((bytes(pos + 3) & 0xFFL) << 24)
   }
 
+  /** Little-endian output of the frame writers. */
+  private final class FrameOut extends java.io.ByteArrayOutputStream {
+    def u32(v: Long): Unit = {
+      var t = v; var i = 0
+      while (i < 4) { write((t & 0xFF).toInt); t >>>= 8; i += 1 }
+    }
+
+    def blockHeader(last: Boolean, btype: Int, size: Int): Unit = {
+      val hdr = (if (last) 1 else 0) | (btype << 1) | (size << 3)
+      write(hdr & 0xFF); write((hdr >>> 8) & 0xFF); write((hdr >>> 16) & 0xFF)
+    }
+  }
+
+  /** One content-checksummed data frame whose blocks (written by
+    * `blocks`) regenerate `content`: magic, frame header, blocks, and
+    * the low 32 bits of the content's XXH64. The header is
+    * single-segment with a 1/2/4-byte FCS unless the largest block
+    * (`maxBlock` bytes) outgrows the content: Block_Maximum_Size =
+    * min(window, 128 KB) would then be violated, so the header declares
+    * the smallest window 2^(10+e) covering the block and a 4-byte FCS
+    * (the 2-byte form cannot hold sizes < 256).
+    */
+  private def writeFrame(content: Array[Byte], maxBlock: Int)(
+      blocks: FrameOut => Unit): Array[Byte] = {
+    val size = content.length
+    val out = new FrameOut
+    out.u32(Magic & 0xFFFFFFFFL)
+    if (maxBlock <= size) {
+      // descriptor: FCS_flag (bits 7-6), single_segment (bit 5),
+      // checksum (bit 2); reserved bit 3 and dict bits zero
+      val fcsFlag = if (size < 256) 0 else if (size < 65792) 1 else 2
+      out.write((fcsFlag << 6) | 0x20 | 0x04)
+      if (fcsFlag == 0) out.write(size)
+      else if (fcsFlag == 1) { // 2-byte FCS stores size - 256 (§3.1.1.1.4)
+        out.write((size - 256) & 0xFF); out.write((size - 256) >>> 8)
+      } else out.u32(size)
+    } else {
+      var e = 0
+      while ((1L << (10 + e)) < maxBlock) e += 1
+      require(10 + e <= 17, "zstd: compressed block exceeds 128 KB")
+      out.write((2 << 6) | 0x04) // FCS 4 bytes, window descriptor, checksum
+      out.write(e << 3) // mantissa 0
+      out.u32(size)
+    }
+    blocks(out)
+    out.u32(xxh64(content, size) & 0xFFFFFFFFL)
+    out.toByteArray
+  }
+
   /** Encode one data frame: single-segment, content-checksummed, raw
     * blocks of `rawChunk` bytes + one trailing RLE block of `rleLen` ×
     * `rleByte` (the planted pad that keeps the RLE path live on the
@@ -72,55 +121,41 @@ object Zstd {
       rawChunk: Int = 128): Array[Byte] = {
     require(rleLen >= 0 && rleLen < (1 << 21), s"zstd: bad RLE length $rleLen")
     require(rawChunk > 0 && rawChunk < (1 << 21), s"zstd: bad chunk $rawChunk")
-    val contentSize = data.length.toLong + rleLen
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      var t = v; var i = 0
-      while (i < 4) { out.write((t & 0xFF).toInt); t >>>= 8; i += 1 }
-    }
-    u32(Magic & 0xFFFFFFFFL)
-    // descriptor: FCS_flag (bits 7-6), single_segment (bit 5),
-    // checksum (bit 2); reserved bit 3 and dict bits zero
-    val fcsFlag =
-      if (contentSize < 256) 0 else if (contentSize < 65792) 1 else 2
-    require(contentSize < (1L << 32),
-      s"zstd: content $contentSize needs the 8-byte FCS (unimplemented)")
-    out.write((fcsFlag << 6) | 0x20 | 0x04)
-    if (fcsFlag == 0) out.write(contentSize.toInt)
-    else if (fcsFlag == 1) { // 2-byte FCS stores size - 256 (§3.1.1.1.4)
-      val v = (contentSize - 256).toInt
-      out.write(v & 0xFF); out.write(v >>> 8)
-    } else { // 4-byte FCS stores the raw size — the ~64 KB record cliff
-      // the 2-byte-only encoder had is gone (decoder always handled it)
-      var v = contentSize; var i = 0
-      while (i < 4) { out.write((v & 0xFF).toInt); v >>>= 8; i += 1 }
-    }
-    def blockHeader(last: Boolean, btype: Int, size: Int): Unit = {
-      val hdr = (if (last) 1 else 0) | (btype << 1) | (size << 3)
-      out.write(hdr & 0xFF); out.write((hdr >>> 8) & 0xFF)
-      out.write((hdr >>> 16) & 0xFF)
-    }
-    var off = 0
-    while (off < data.length) {
-      val n = math.min(rawChunk, data.length - off)
-      // with no RLE pad, the final raw chunk carries the last flag
-      blockHeader(last = rleLen == 0 && off + n == data.length,
-        btype = 0, size = n)
-      out.write(data, off, n)
-      off += n
-    }
-    if (rleLen > 0) {
-      blockHeader(last = true, btype = 1, size = rleLen) // size = regenerated
-      out.write(rleByte & 0xFF)
-    } else if (data.isEmpty) {
-      blockHeader(last = true, btype = 0, size = 0) // empty frame: one raw block
-    }
-    val full = new Array[Byte](contentSize.toInt)
+    val full = new Array[Byte](data.length + rleLen)
     System.arraycopy(data, 0, full, 0, data.length)
     java.util.Arrays.fill(full, data.length, full.length, rleByte)
-    u32(xxh64(full, full.length) & 0xFFFFFFFFL)
-    out.toByteArray
+    writeFrame(full, math.min(rawChunk, data.length)) { out =>
+      var off = 0
+      while (off < data.length) {
+        val n = math.min(rawChunk, data.length - off)
+        // with no RLE pad, the final raw chunk carries the last flag
+        out.blockHeader(last = rleLen == 0 && off + n == data.length,
+          btype = 0, size = n)
+        out.write(data, off, n)
+        off += n
+      }
+      if (rleLen > 0) {
+        out.blockHeader(last = true, btype = 1, size = rleLen) // size = regenerated
+        out.write(rleByte & 0xFF)
+      } else if (data.isEmpty) {
+        out.blockHeader(last = true, btype = 0, size = 0) // empty frame: one raw block
+      }
+    }
   }
+
+  /** The compressed block `block`, then an RLE pad block of `rleLen` ×
+    * `rleByte` when `rleLen > 0`, framed around `full`.
+    */
+  private def entropyFrame(full: Array[Byte], block: Array[Byte],
+      rleLen: Int, rleByte: Byte): Array[Byte] =
+    writeFrame(full, block.length) { out =>
+      out.blockHeader(last = rleLen == 0, btype = 2, size = block.length)
+      out.write(block, 0, block.length)
+      if (rleLen > 0) {
+        out.blockHeader(last = true, btype = 1, size = rleLen)
+        out.write(rleByte & 0xFF)
+      }
+    }
 
   /** Encode one ENTROPY-CODED data frame: single-segment and
     * checksummed like [[encodeFrame]], but the payload ships in a
@@ -138,61 +173,14 @@ object Zstd {
       rleLen: Int = 16, rleByte: Byte = '~'): Array[Byte] = {
     require(rleLen >= 0 && rleLen < (1 << 21), s"zstd: bad RLE length $rleLen")
     val padded = data.length + (if (data.isEmpty) 0 else matchPad)
-    val contentSize = padded.toLong + rleLen
     val block = ZstdEntropy.encodeCompressedBlock(data,
       if (data.isEmpty) 0 else matchPad)
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      var t = v; var i = 0
-      while (i < 4) { out.write((t & 0xFF).toInt); t >>>= 8; i += 1 }
-    }
-    u32(Magic & 0xFFFFFFFFL)
-    require(contentSize < (1L << 32), "zstd: content needs 8-byte FCS")
-    if (block.length <= contentSize) {
-      // single-segment: window = content, which covers the block
-      val fcsFlag =
-        if (contentSize < 256) 0 else if (contentSize < 65792) 1 else 2
-      out.write((fcsFlag << 6) | 0x20 | 0x04)
-      if (fcsFlag == 0) out.write(contentSize.toInt)
-      else if (fcsFlag == 1) {
-        val v = (contentSize - 256).toInt
-        out.write(v & 0xFF); out.write(v >>> 8)
-      } else {
-        var v = contentSize; var i = 0
-        while (i < 4) { out.write((v & 0xFF).toInt); v >>>= 8; i += 1 }
-      }
-    } else {
-      // the block (weight description + streams) outgrows the tiny
-      // content: Block_Maximum_Size = min(window, 128 KB) would be
-      // violated under single-segment framing, so declare an explicit
-      // window instead — smallest 2^(10+e) covering the block — and a
-      // 4-byte FCS (the 2-byte form cannot hold sizes < 256)
-      var e = 0
-      while ((1L << (10 + e)) < block.length) e += 1
-      require(10 + e <= 17, "zstd: compressed block exceeds 128 KB")
-      out.write((2 << 6) | 0x04) // FCS 4 bytes, window descriptor, checksum
-      out.write(e << 3) // mantissa 0
-      var v = contentSize; var i = 0
-      while (i < 4) { out.write((v & 0xFF).toInt); v >>>= 8; i += 1 }
-    }
-    def blockHeader(last: Boolean, btype: Int, size: Int): Unit = {
-      val hdr = (if (last) 1 else 0) | (btype << 1) | (size << 3)
-      out.write(hdr & 0xFF); out.write((hdr >>> 8) & 0xFF)
-      out.write((hdr >>> 16) & 0xFF)
-    }
-    blockHeader(last = rleLen == 0, btype = 2, size = block.length)
-    out.write(block, 0, block.length)
-    if (rleLen > 0) {
-      blockHeader(last = true, btype = 1, size = rleLen)
-      out.write(rleByte & 0xFF)
-    }
-    val full = new Array[Byte](contentSize.toInt)
+    val full = new Array[Byte](padded + rleLen)
     System.arraycopy(data, 0, full, 0, data.length)
     if (data.nonEmpty)
       java.util.Arrays.fill(full, data.length, padded, data(data.length - 1))
     java.util.Arrays.fill(full, padded, full.length, rleByte)
-    u32(xxh64(full, full.length) & 0xFFFFFFFFL)
-    out.toByteArray
+    entropyFrame(full, block, rleLen, rleByte)
   }
 
   /** The FSE-mode sibling of [[encodeEntropyFrame]] (r16): the payload
@@ -209,49 +197,9 @@ object Zstd {
       matchPad: Int = 16, rleLen: Int = 16, rleByte: Byte = '~'): Array[Byte] = {
     require(rleLen >= 0 && rleLen < (1 << 21), s"zstd: bad RLE length $rleLen")
     require(data.length >= nSeq, "zstd: fewer literals than sequences")
-    val contentSize = data.length.toLong + nSeq.toLong * matchPad + rleLen
     val block = ZstdEntropy.encodeCompressedBlockFse(data, nSeq, matchPad)
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      var t = v; var i = 0
-      while (i < 4) { out.write((t & 0xFF).toInt); t >>>= 8; i += 1 }
-    }
-    u32(Magic & 0xFFFFFFFFL)
-    require(contentSize < (1L << 32), "zstd: content needs 8-byte FCS")
-    if (block.length <= contentSize) {
-      val fcsFlag =
-        if (contentSize < 256) 0 else if (contentSize < 65792) 1 else 2
-      out.write((fcsFlag << 6) | 0x20 | 0x04)
-      if (fcsFlag == 0) out.write(contentSize.toInt)
-      else if (fcsFlag == 1) {
-        val v = (contentSize - 256).toInt
-        out.write(v & 0xFF); out.write(v >>> 8)
-      } else {
-        var v = contentSize; var i = 0
-        while (i < 4) { out.write((v & 0xFF).toInt); v >>>= 8; i += 1 }
-      }
-    } else {
-      var e = 0
-      while ((1L << (10 + e)) < block.length) e += 1
-      require(10 + e <= 17, "zstd: compressed block exceeds 128 KB")
-      out.write((2 << 6) | 0x04)
-      out.write(e << 3)
-      var v = contentSize; var i = 0
-      while (i < 4) { out.write((v & 0xFF).toInt); v >>>= 8; i += 1 }
-    }
-    def blockHeader(last: Boolean, btype: Int, size: Int): Unit = {
-      val hdr = (if (last) 1 else 0) | (btype << 1) | (size << 3)
-      out.write(hdr & 0xFF); out.write((hdr >>> 8) & 0xFF)
-      out.write((hdr >>> 16) & 0xFF)
-    }
-    blockHeader(last = rleLen == 0, btype = 2, size = block.length)
-    out.write(block, 0, block.length)
-    if (rleLen > 0) {
-      blockHeader(last = true, btype = 1, size = rleLen)
-      out.write(rleByte & 0xFF)
-    }
     // regenerated content: the chunks with their per-sequence pads
-    val full = new Array[Byte](contentSize.toInt)
+    val full = new Array[Byte](data.length + nSeq * matchPad + rleLen)
     val ends = ZstdEntropy.fseChunkEnds(data.length, nSeq)
     var w = 0
     var i = 0
@@ -265,8 +213,7 @@ object Zstd {
       i += 1
     }
     java.util.Arrays.fill(full, w, full.length, rleByte)
-    u32(xxh64(full, full.length) & 0xFFFFFFFFL)
-    out.toByteArray
+    entropyFrame(full, block, rleLen, rleByte)
   }
 
   /** A 16-byte skippable frame wrapping an 8-byte payload (or any
@@ -274,13 +221,9 @@ object Zstd {
     */
   def encodeSkippable(data: Array[Byte], nibble: Int = 0): Array[Byte] = {
     require(nibble >= 0 && nibble <= 15, s"zstd: bad skippable nibble $nibble")
-    val out = new java.io.ByteArrayOutputStream()
-    var m = (SkippableBase | nibble).toLong & 0xFFFFFFFFL
-    var i = 0
-    while (i < 4) { out.write((m & 0xFF).toInt); m >>>= 8; i += 1 }
-    var s = data.length.toLong
-    i = 0
-    while (i < 4) { out.write((s & 0xFF).toInt); s >>>= 8; i += 1 }
+    val out = new FrameOut
+    out.u32((SkippableBase | nibble).toLong & 0xFFFFFFFFL)
+    out.u32(data.length.toLong)
     out.write(data, 0, data.length)
     out.toByteArray
   }
@@ -293,13 +236,9 @@ object Zstd {
     * random-access archive.
     */
   def encodeSeekTable(frames: Seq[(Int, Long)]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def u32(v: Long): Unit = {
-      var t = v; var i = 0
-      while (i < 4) { out.write((t & 0xFF).toInt); t >>>= 8; i += 1 }
-    }
-    frames.foreach { case (c, d) => u32(c.toLong); u32(d) }
-    u32(frames.size.toLong)
+    val out = new FrameOut
+    frames.foreach { case (c, d) => out.u32(c.toLong); out.u32(d) }
+    out.u32(frames.size.toLong)
     encodeSkippable(out.toByteArray, nibble = 0xE)
   }
 

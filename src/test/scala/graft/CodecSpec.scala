@@ -653,6 +653,22 @@ class CodecSpec extends AnyFunSuite with SharedSpark {
     boom(progressive)
   }
 
+  test("JPEG refuses an oversubscribed DHT: every code of the first " +
+      "table moved to length 1 is refused when the table is read") {
+    val good = Codecs.encodeJpeg(8, 8, Array.fill(64)(7.toByte))
+    val dht = good.indexOfSlice(Seq(0xFF.toByte, 0xC4.toByte))
+    val bits = dht + 5 // marker, length, Tc/Th
+    val n = (0 until 16).map(l => good(bits + l) & 0xFF).sum
+    assert(n >= 3)
+    // the same number of HUFFVAL bytes follows, so the segment still
+    // parses; only the BITS counts change
+    val bad = good.clone()
+    bad(bits) = n.toByte
+    (1 until 16).foreach(l => bad(bits + l) = 0)
+    val e = intercept[IllegalArgumentException](Codecs.decodeJpeg(bad))
+    assert(e.getMessage.endsWith("jpeg: oversubscribed prefix code"))
+  }
+
   test("q170 pipeline: JPEG-encoded corpus (one constant 8x8 block per " +
       "code, real Huffman transform coding) decodes to statistics " +
       "predictable from the source text") {
