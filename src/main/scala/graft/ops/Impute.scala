@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: the aggregate is a partial+final hash aggregate (one shuffle
   * on the key); the merge is a left join where the imputed side — an
   * aggregate keyed by PK — is typically much smaller than the fact table and
-  * broadcast-eligible.
+  * broadcast-eligible. Broadcast stays the generic default (q04 merges
+  * through it). A caller whose merge feeds a file sink can hint the update
+  * side `shuffle_hash` instead, as `JobsPipeline.run` does: the join's
+  * exchange then lets AQE size the written files by output bytes.
   */
 object Impute {
 

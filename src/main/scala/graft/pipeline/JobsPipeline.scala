@@ -20,6 +20,11 @@ import graft.ops.{Dedupe, Impute, Ledger, Quality}
   *  5. impute   — min/max band per job + null-only merge backfill
   *                (impute_salary DAG)
   *  6. quality  — the sanity_check gate (scrape_url.py:424-436)
+  *
+  * [[run]] is the sink-bound composition (the reference's parsed_jobs
+  * append, ParseHtml.py:74-80). Its backfill join is shuffled on `job_id`
+  * so that the append writes files sized by its output, not one per input
+  * split of the HTML lake.
   */
 object JobsPipeline {
 
@@ -93,11 +98,24 @@ object JobsPipeline {
     Quality.enforce(scrapedLedger, "job_id", notNullCol, "scraped_date",
       rangeMin, rangeMax)
 
-  /** End-to-end: sightings + fetched pages → parsed_jobs with imputed bands. */
+  /** End-to-end: sightings + fetched pages → parsed_jobs with imputed bands.
+    *
+    * The backfill is a shuffle-hash join, not [[backfill]]'s default
+    * broadcast, because this result goes to a sink: a broadcast join keeps
+    * the page scan's input splits as the writer's partitions, one small
+    * file each. The hash join gives the plan one exchange keyed by
+    * `job_id`, which AQE coalesces by bytes, so the files follow the
+    * output's size: one for a small day, more for a large one. The imputed
+    * side is already partitioned by `job_id` from its aggregate, so only
+    * the parsed pages shuffle, after the parse UDF has run at the scan's
+    * parallelism; the exchange's map stage takes the place of the
+    * broadcast job. The build side holds one row per job of the batch's
+    * sightings, so a hash build is safe at any scale.
+    */
   def run(spark: SparkSession, batches: Seq[DataFrame], pages: DataFrame): DataFrame = {
     val raw = ingest(batches)
     val parsed = parse(pages)
     val imputed = imputeSalaries(raw)
-    backfill(parsed, imputed)
+    backfill(parsed, imputed.hint("shuffle_hash"))
   }
 }

@@ -68,9 +68,16 @@ object StorageQueries {
       |           'source':'VARCHAR','n_chars':'BIGINT'})
       |ORDER BY doc_id""".stripMargin
 
-  /** Run-scoped shard directory (q104's pid discipline). */
+  /** Run-scoped shard directory (q104's pid discipline). Unlike q104's,
+    * no reader needs it after the writing JVM exits (the oracle recomputes
+    * the manifest from the documents), so the first q117 run registers its
+    * deletion at exit.
+    */
   val feedShardDir =
     s"/tmp/graft_q117_shards_${ProcessHandle.current().pid()}"
+
+  private lazy val deleteFeedShardsAtExit = sys.addShutdownHook(
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(feedShardDir)))
 
   /** q117 — feed-shard sink round-trip: q100's deterministic shuffle+pack
     * feed materialized through [[graft.pipeline.CorpusBuild.writeFeedShards]]
@@ -93,6 +100,7 @@ object StorageQueries {
     val feed = Packing.packSequences(counts, "skey", "mix", "n_toks",
         seqLen = 2048L, shardRows = 1L << 52)
       .select("doc_id", "skey", "n_toks", "seq_id", "seq_offset")
+    deleteFeedShardsAtExit
     graft.pipeline.CorpusBuild.writeFeedShards(feed, feedShardDir,
       seqsPerShard = 4L)
   }

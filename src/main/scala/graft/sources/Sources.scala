@@ -80,9 +80,14 @@ object Sources {
         col("modificationTime"),
         col("content").cast("string").as("html"))
 
-  /** S7: partitioned lake write for derived text/binary artifacts. */
+  /** S7: partitioned lake write for derived text/binary artifacts. The
+    * rows are rebalanced by the partition columns first: an exchange that
+    * AQE coalesces, and splits where skewed, by bytes. So each partition
+    * value's rows reach one writer task (a few for a very large value) and
+    * a directory gets one file, not one per input task that held its rows.
+    */
   def writePartitioned(df: DataFrame, path: String, partitions: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    df.hint("rebalance", partitions.map(col): _*).write.mode(SaveMode.Overwrite)
       .partitionBy(partitions: _*)
       .parquet(path)
 
@@ -90,10 +95,11 @@ object Sources {
     * in `df`, leaving every other partition untouched — the idempotent
     * daily-rewrite primitive for a partitioned lake (re-running a day's
     * job rewrites that day, never truncates the table). Static overwrite
-    * (the default) would drop ALL partitions first.
+    * (the default) would drop ALL partitions first. Files are sized as in
+    * [[writePartitioned]].
     */
   def overwritePartitions(df: DataFrame, path: String, partitions: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    df.hint("rebalance", partitions.map(col): _*).write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitions: _*)
       .parquet(path)

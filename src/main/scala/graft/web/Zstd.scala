@@ -167,7 +167,9 @@ object Zstd {
     * execution, and the block-type mix are all live on the wire.
     * Regenerated content = `data ++ last*matchPad ++ rleByte*rleLen`
     * (just `rleByte*rleLen` for an empty payload) — every byte of it
-    * oracle-priceable from the source text.
+    * oracle-priceable from the source text. A payload whose block
+    * (payload + `matchPad`) would pass the 128 KiB block cap is refused
+    * with an IllegalArgumentException before any encoding.
     */
   def encodeEntropyFrame(data: Array[Byte], matchPad: Int = 32,
       rleLen: Int = 16, rleByte: Byte = '~'): Array[Byte] = {
@@ -191,7 +193,9 @@ object Zstd {
     * final byte, then the RLE pad block. Regenerated content =
     * chunk0 ++ last(chunk0)·pad ++ … ++ rleByte·rleLen — every byte
     * oracle-priceable. Requires data.length ≥ nSeq (callers fall back
-    * to [[encodeEntropyFrame]] below that).
+    * to [[encodeEntropyFrame]] below that) and, like
+    * [[encodeEntropyFrame]], a block (payload + nSeq × `matchPad`)
+    * within the 128 KiB cap.
     */
   def encodeEntropyFrameFse(data: Array[Byte], nSeq: Int = 2,
       matchPad: Int = 16, rleLen: Int = 16, rleByte: Byte = '~'): Array[Byte] = {

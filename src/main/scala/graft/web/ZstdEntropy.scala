@@ -719,12 +719,25 @@ private[graft] object ZstdEntropy {
     c
   }
 
+  /** Refuses, before any encoding work, a block whose regenerated content
+    * (`payload` literals plus `matchBytes` written by its sequences) would
+    * pass the spec's 128 KiB block cap, which the decoder enforces.
+    */
+  private def requireBlockCap(payload: Int, matchBytes: Int): Unit =
+    require(payload.toLong + matchBytes <= MaxBlockContent,
+      s"zstd encoder: payload of $payload bytes plus $matchBytes match bytes " +
+        s"exceeds the $MaxBlockContent-byte block cap")
+
   /** Encode the literals section (compressed block flavor) for
     * `data`: Huffman type 2 when ≥ 2 distinct symbols (single stream
     * up to 1023 literals, 4-stream with jump table beyond), RLE
     * type 1 for a single repeated symbol, Raw type 0 when empty.
+    * Huffman sizes use the 14-bit header (sizeFormat 2) up to 16383
+    * literals and the 18-bit one (sizeFormat 3) above, up to the block
+    * cap.
     */
   def encodeLiteralsSection(data: Array[Byte]): Array[Byte] = {
+    requireBlockCap(data.length, 0)
     val out = new java.io.ByteArrayOutputStream()
     val distinct = data.map(_ & 0xFF).distinct.length
     if (data.isEmpty) {
@@ -735,7 +748,6 @@ private[graft] object ZstdEntropy {
       else if (n <= 4095) { // 2-byte, sizeFormat 1
         out.write(0x05 | ((n & 0xF) << 4)); out.write(n >> 4)
       } else {
-        require(n <= MaxBlockContent, "RLE literals over block cap")
         out.write(0x0D | ((n & 0xF) << 4)) // 3-byte, sizeFormat 3
         out.write((n >> 4) & 0xFF); out.write(n >> 12)
       }
@@ -753,8 +765,7 @@ private[graft] object ZstdEntropy {
         out.write(((v >> 16) & 0xFF).toInt)
         out.write(desc, 0, desc.length)
         out.write(stream, 0, stream.length)
-      } else { // 4 streams, 4-byte header, sizeFormat 2
-        require(regen <= 16383, "4-stream literals over 14-bit size")
+      } else { // 4 streams with a jump table
         val per = (regen + 3) / 4
         val parts = Array(
           java.util.Arrays.copyOfRange(data, 0, per),
@@ -763,10 +774,13 @@ private[graft] object ZstdEntropy {
           java.util.Arrays.copyOfRange(data, 3 * per, regen))
         val streams = parts.map(huffEncodeStream(_, weights, maxBits))
         val comp = desc.length + 6 + streams.map(_.length).sum
-        require(comp <= 16383, "4-stream literals over 14-bit comp size")
-        val v = 0x0AL | (regen.toLong << 4) | (comp.toLong << 18)
-        out.write((v & 0xFF).toInt); out.write(((v >> 8) & 0xFF).toInt)
-        out.write(((v >> 16) & 0xFF).toInt); out.write(((v >> 24) & 0xFF).toInt)
+        // sizeFormat 2: 14-bit sizes in a 4-byte header, to 16383
+        // literals; sizeFormat 3: 18-bit sizes in 5 bytes, above
+        val (sizeFormat, sizeBits) = if (regen <= 16383) (2, 14) else (3, 18)
+        require(comp < (1 << sizeBits), s"4-stream literals over $sizeBits-bit comp size")
+        val v = 0x02L | (sizeFormat << 2) | (regen.toLong << 4) |
+          (comp.toLong << (4 + sizeBits))
+        (0 until sizeFormat + 2).foreach(k => out.write(((v >> (8 * k)) & 0xFF).toInt))
         out.write(desc, 0, desc.length)
         var j = 0
         while (j < 3) {
@@ -905,6 +919,7 @@ private[graft] object ZstdEntropy {
     require(data.length >= nSeq,
       "zstd encoder: need at least one literal per sequence")
     require(padLen >= 3, s"zstd encoder: match length $padLen below minimum")
+    requireBlockCap(data.length, nSeq * padLen)
     val out = new java.io.ByteArrayOutputStream()
     val lits = encodeLiteralsSection(data)
     out.write(lits, 0, lits.length)
@@ -979,6 +994,7 @@ private[graft] object ZstdEntropy {
     * block.
     */
   def encodeCompressedBlock(data: Array[Byte], padLen: Int): Array[Byte] = {
+    requireBlockCap(data.length, if (data.isEmpty) 0 else padLen)
     val out = new java.io.ByteArrayOutputStream()
     val lits = encodeLiteralsSection(data)
     out.write(lits, 0, lits.length)

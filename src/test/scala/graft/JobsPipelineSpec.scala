@@ -1,17 +1,32 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.sql.Date
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ops.Impute
 import graft.pipeline.JobsPipeline
 import graft.schema.Schemas.RawScrapedUrl
+import graft.sources.Sources
 
 /** End-to-end pipeline test on synthetic fixtures (FIXTURES.md §2):
   * sightings → dedupe → parse → impute → backfill, with hand-computed
   * goldens for the salary-interval property (reference README.md:28).
   */
-class JobsPipelineSpec extends AnyFunSuite with SharedSpark {
+class JobsPipelineSpec extends AnyFunSuite with SharedSpark
+    with AdaptiveSparkPlanHelper {
 
   private def page(title: String, career: String): String =
     s"""<html><body>
@@ -118,5 +133,76 @@ class JobsPipelineSpec extends AnyFunSuite with SharedSpark {
     assert(out("J1") == (Some(10), Some(20)), "both-null row backfilled")
     assert(out("J2") == (Some(500), Some(600)), "populated row untouched")
     assert(out("J3") == (Some(7), None), "half-null row untouched (AND semantics)")
+  }
+
+  /** Appends `df` as parquet to a fresh dir; returns the dir, the write's
+    * final physical plan and the number of jobs the write started.
+    */
+  private def append(df: DataFrame): (Path, SparkPlan, Int) = {
+    val dir = tempDir("graft_jobs_sink").resolve("parsed_jobs")
+    val plans = new LinkedBlockingQueue[SparkPlan]
+    val jobs = new AtomicInteger
+    val planListener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.put(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.listenerManager.register(planListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    try {
+      df.write.parquet(dir.toString)
+      // both listeners sit on the bus's shared queue, so the write's
+      // job starts are delivered before its end event
+      val plan = plans.poll(60, TimeUnit.SECONDS)
+      assert(plan != null, "the write's plan never arrived")
+      (dir, plan, jobs.get)
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+  }
+
+  test("run's append writes one file for a day whose pages span several " +
+      "input splits: a shuffle-hash backfill, no broadcast, no extra job") {
+    import spark.implicits._
+    val d = Date.valueOf("2022-10-08")
+    val lake = tempDir("graft_jobs_lake")
+    val day = lake.resolve("2022/10/08")
+    Files.createDirectories(day)
+    val ids = (1 to 12).map(i => f"J$i%02d")
+    ids.zipWithIndex.foreach { case (id, i) =>
+      Files.writeString(day.resolve(s"$id.html"), page(s"Title $i", "Middle"))
+    }
+    // two bands per job; the last two pages have no sightings
+    val batches = Seq(ids.take(10).zipWithIndex.flatMap { case (id, i) =>
+      Seq(RawScrapedUrl("kw1", id, Some(1000 * i), Some(1000 * i + 500), d, s"/$id"),
+        RawScrapedUrl("kw2", id, Some(1000 * i + 200), Some(1000 * i + 900), d, s"/$id"))
+    }.toDF())
+    val pages = Sources.readHtmlLake(spark, lake.toString + "/*/*/*")
+      .select(regexp_extract(col("path"), "([^/]+)\\.html$", 1).as("job_id"),
+        col("html"), lit(d).as("scraped_date"))
+    assert(pages.rdd.getNumPartitions >= 2, "the pages must span several splits")
+
+    val (hashDir, hashPlan, hashJobs) = append(JobsPipeline.run(spark, batches, pages))
+    val (castDir, castPlan, castJobs) = append(Impute.mergeUpdateWhenAllNull(
+      JobsPipeline.parse(pages), JobsPipeline.imputeSalaries(JobsPipeline.ingest(batches)),
+      "job_id", Seq("min_salary", "max_salary")))
+
+    def parquetFiles(dir: Path) =
+      dir.toFile.listFiles().count(_.getName.endsWith(".parquet"))
+    assert(parquetFiles(hashDir) === 1)
+    assert(parquetFiles(castDir) >= 2, "the broadcast form writes one file per split")
+    def rows(dir: Path) = spark.read.parquet(dir.toString).collect().map(_.toSeq).toSet
+    assert(rows(hashDir).size === 12)
+    assert(rows(hashDir) === rows(castDir))
+
+    assert(collect(hashPlan) { case a: AdaptiveSparkPlanExec => a.isFinalPlan } === Seq(true))
+    assert(collect(hashPlan) { case j: ShuffledHashJoinExec => j }.size === 1, hashPlan)
+    assert(collect(hashPlan) { case b: BroadcastExchangeExec => b }.isEmpty, hashPlan)
+    assert(collect(castPlan) { case b: BroadcastExchangeExec => b }.size === 1, castPlan)
+    assert(hashJobs <= castJobs, s"shuffle-hash write ran $hashJobs jobs, broadcast $castJobs")
   }
 }

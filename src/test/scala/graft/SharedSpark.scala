@@ -8,6 +8,8 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuiteLike
 
+import graft.queries.StorageQueries
+
 /** The session every spec runs on: `local[4]` with 4 shuffle partitions,
   * built by [[Sessions]] like the mains' sessions. All specs share one
   * test JVM and therefore one session, so a spec that needs a different
@@ -48,9 +50,14 @@ object SharedSpark {
 
   private val tempDirs = new ConcurrentLinkedQueue[Path]
 
-  // one hook for every dir, registered on the first tempDir call
-  private lazy val deleteAtExit = sys.addShutdownHook(
-    tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile)))
+  // one hook for every dir, registered on the first tempDir call; it also
+  // removes q104's pid-scoped CSV dir, which only an oracle compare reads
+  // after its JVM exits and none reads after the tests (q117's shard dir
+  // deletes itself)
+  private lazy val deleteAtExit = sys.addShutdownHook {
+    tempDirs.forEach(d => FileUtils.deleteQuietly(d.toFile))
+    FileUtils.deleteQuietly(new java.io.File(StorageQueries.csvRoundtripDir))
+  }
 
   /** A fresh temp dir under `java.io.tmpdir`, deleted recursively when
     * the test JVM exits (a spec's dirs may outlive the spec: a later one

@@ -82,6 +82,27 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
       "partition filters applied at the file index")
   }
 
+  test("partitioned writes size files by partition value: one file per " +
+      "day= directory from an input of three splits (S7)") {
+    import spark.implicits._
+    val rows = Seq(("J1", 8), ("J2", 9), ("J3", 8), ("J4", 9), ("J5", 8), ("J6", 9))
+    val df = spark.sparkContext.parallelize(rows, 3).toDF("job_id", "day")
+    assert(df.rdd.glom().collect().forall(_.map(_.getInt(1)).distinct.length == 2),
+      "every split must hold both days")
+    val root = tempDir("graft_part_files")
+    def filesPerDay(path: String) = Seq(8, 9).map(d =>
+      new java.io.File(s"$path/day=$d").listFiles().count(_.getName.endsWith(".parquet")))
+    val written = root.resolve("written").toString
+    Sources.writePartitioned(df, written, Seq("day"))
+    assert(filesPerDay(written) === Seq(1, 1))
+    val overwritten = root.resolve("overwritten").toString
+    Sources.overwritePartitions(df, overwritten, Seq("day"))
+    assert(filesPerDay(overwritten) === Seq(1, 1))
+    Seq(written, overwritten).foreach { p =>
+      assert(spark.read.parquet(p).as[(String, Int)].collect().toSet === rows.toSet)
+    }
+  }
+
   test("single-file CSV export: one plain file, null='' contract (S5)") {
     import spark.implicits._
     val file = tempDir("graft_csv1").toString + "/export.csv"

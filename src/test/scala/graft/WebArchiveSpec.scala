@@ -656,6 +656,45 @@ class WebArchiveSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("zstd entropy encoder: literals past 16383 bytes take the 18-bit " +
+      "size header up to the 128 KiB block cap and round-trip; a " +
+      "payload past the cap is refused before encoding") {
+    import graft.web.{Zstd, ZstdEntropy}
+    val cap = 1 << 17
+    val rnd = new scala.util.Random(17)
+    def printable(n: Int) = Array.fill(n)((32 + rnd.nextInt(95)).toByte)
+    // the frame's block carries the payload plus 32 (Huffman flavor) or
+    // 2 × 16 (FSE flavor) match bytes, so both cap at the same payload
+    for (n <- Seq(16383, 16384, 65791, 70000, cap - 32)) {
+      val p = printable(n)
+      val sizeFormat = (ZstdEntropy.encodeLiteralsSection(p)(0) >> 2) & 3
+      assert(sizeFormat === (if (n <= 16383) 2 else 3), s"n=$n")
+      val huff = Zstd.decodeStream(Zstd.encodeEntropyFrame(p)).frames.head
+      assert(java.util.Arrays.equals(huff.content,
+        p ++ Array.fill(32)(p.last) ++ Array.fill(16)('~'.toByte)), s"n=$n")
+      val fse = Zstd.decodeStream(
+        Zstd.encodeEntropyFrameFse(p, nSeq = 2, matchPad = 16)).frames.head
+      val mid = ZstdEntropy.fseChunkEnds(n, 2)(0)
+      assert(java.util.Arrays.equals(fse.content,
+        p.take(mid) ++ Array.fill(16)(p(mid - 1)) ++ p.drop(mid) ++
+          Array.fill(16)(p.last) ++ Array.fill(16)('~'.toByte)), s"n=$n")
+    }
+    // a literals section may fill the whole block
+    val full = printable(cap)
+    val lits = ZstdEntropy.encodeLiteralsSection(full)
+    val back = ZstdEntropy.decodeLiterals(lits, 0, lits.length, None)
+    assert(back.consumed === lits.length &&
+      java.util.Arrays.equals(back.bytes, full))
+    val over = printable(cap - 31)
+    Seq[() => Any](
+      () => Zstd.encodeEntropyFrame(over),
+      () => Zstd.encodeEntropyFrameFse(over, nSeq = 2, matchPad = 16),
+      () => ZstdEntropy.encodeLiteralsSection(printable(cap + 1))).foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("exceeds the 131072-byte block cap"))
+    }
+  }
+
   test("zstd entropy: TREELESS literals and REPEAT table modes across " +
       "blocks in one frame (CLI-conformance of this exact construction " +
       "verified against zstd v1.5.7 at authoring time)") {

@@ -10,11 +10,15 @@ rows sorted by all columns; floats compared exactly AND with 1e-9 rtol so we
 can see how close a miss is).
 """
 import json
+import re
+import shutil
 import sys
 
 import duckdb
 import pandas as pd
 
+# a dir a query writes under its JVM's pid: /tmp/graft_q104_csv_<pid>
+RUN_DIR = re.compile(r"/tmp/graft_q\d+_[a-z]+_\d+")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -86,7 +90,16 @@ def main(out_dir: str, sf_dir: str) -> int:
                              "hash_match": None, "err": None}
     with open(os.path.join(out_dir, "correctness_local.json"), "w") as f:
         json.dump(summary, f, indent=1)
+    remove_run_dirs(oracle.values())
     return 1 if failed else 0
+
+
+def remove_run_dirs(sqls) -> None:
+    """Delete the pid-scoped dirs the oracle SQL reads (q104's CSV
+    round-trip): the JVM that wrote them has exited, and no later run
+    reads another pid's dir."""
+    for d in sorted({m for sql in sqls for m in RUN_DIR.findall(sql)}):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 if __name__ == "__main__":
