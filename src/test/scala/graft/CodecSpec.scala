@@ -1766,4 +1766,42 @@ class CodecSpec extends AnyFunSuite with SharedSpark {
       Deflate.inflate(m, 0, m.length))
     assert(refused > 0, "no flip was ever refused — the checks are dead")
   }
+
+  // a narrow image: one scanline byte in 19 is a filter-type byte
+  private val (pinW, pinH) = (6, 40)
+  private val pinPng = Codecs.encodePng(pinW, pinH,
+    Array.tabulate(pinW * pinH * 3)(i => ((i * 29 + (i / 18) * 7) % 251).toByte))
+
+  test("hostile pin on the PNG container: seeded bit flips anywhere in " +
+      "an encodePng file either decode or raise the loud contract") {
+    val refused = seededFlips(pinPng, pinPng.indices)(Codecs.decodePng)
+    // signature, lengths, types, bodies and CRCs are all checked: no
+    // byte of the file is free to flip
+    assert(refused === 400)
+  }
+
+  test("hostile pin on the PNG scanlines: seeded bit flips in the inflated " +
+      "filter bytes and pixels, re-deflated under valid CRCs, either decode " +
+      "or raise the loud contract") {
+    val idat = new java.io.ByteArrayOutputStream()
+    val bb = java.nio.ByteBuffer.wrap(pinPng)
+    var pos = 8
+    while (pos < pinPng.length) {
+      val len = bb.getInt(pos)
+      if (new String(pinPng, pos + 4, 4, "US-ASCII") == "IDAT")
+        idat.write(pinPng, pos + 8, len)
+      pos += 12 + len
+    }
+    val raw = new java.util.zip.InflaterInputStream(
+      new java.io.ByteArrayInputStream(idat.toByteArray)).readAllBytes()
+    assert(raw.length === pinH * (1 + pinW * 3))
+    def wrap(scanlines: Array[Byte]): Array[Byte] =
+      pngSig ++ handIhdr(pinW, pinH) ++ handChunk("IDAT", zlib(scanlines)) ++
+        handChunk("IEND", Array.emptyByteArray)
+    assert(Codecs.decodePng(wrap(raw)).pixels.toSeq ===
+      Codecs.decodePng(pinPng).pixels.toSeq)
+    val refused = seededFlips(raw, raw.indices)(m => Codecs.decodePng(wrap(m)))
+    // only a filter-type byte flipped past 4 is refused
+    assert(refused > 0, "no flip was ever refused — the checks are dead")
+  }
 }
