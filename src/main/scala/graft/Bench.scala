@@ -178,7 +178,7 @@ object Bench {
 
     // Designated BUILDER entry: the shared posting/pack/model/CC state
     // build (ensurePostingState — idempotent per process) is paid HERE,
-    // once, as its own visible number — the SharedAnn publish/serve
+    // once, as its own visible number — the Materialize.Shared publish/serve
     // discipline applied to the ensure. Without this, the build landed
     // on whichever state consumer ran first in sorted order (r14
     // verdict: q128_state_drift read as a 1.71x regression with

@@ -171,32 +171,14 @@ object Codecs {
     require(width > 0 && height > 0, s"bad dimensions ${width}x$height")
     require(pixels.length == width * height * 3,
       s"pixel plane ${pixels.length} != ${width * height * 3}")
-    val bpp = 3
-    val stride = width * bpp
+    val stride = width * 3
     // filter the scanlines (raw -> filtered, one filter byte per row)
     val raw = new Array[Byte](height * (1 + stride))
     var r = 0
     while (r < height) {
-      val ft = r % 5
-      raw(r * (1 + stride)) = ft.toByte
-      var x = 0
-      while (x < stride) {
-        val cur = pixels(r * stride + x) & 0xFF
-        val left = if (x >= bpp) pixels(r * stride + x - bpp) & 0xFF else 0
-        val up = if (r > 0) pixels((r - 1) * stride + x) & 0xFF else 0
-        val upLeft =
-          if (r > 0 && x >= bpp) pixels((r - 1) * stride + x - bpp) & 0xFF
-          else 0
-        val predicted = ft match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paethPredictor(left, up, upLeft)
-        }
-        raw(r * (1 + stride) + 1 + x) = ((cur - predicted) & 0xFF).toByte
-        x += 1
-      }
+      raw(r * (1 + stride)) = (r % 5).toByte
+      pngFilterRow(r % 5, pixels, r, stride, raw, r * (1 + stride) + 1,
+        unfilter = false)
       r += 1
     }
     // zlib-deflate the filtered stream
@@ -227,6 +209,34 @@ object Codecs {
     }
     writePngChunk(out, "IEND", Array.emptyByteArray)
     out.toByteArray
+  }
+
+  /** Filter row `r` of an RGB `plane` (`stride` bytes a row) with
+    * filter type `ft` into `line` from `off` — or, with `unfilter`,
+    * rebuild the row in `plane` from the filtered bytes in `line`. The
+    * prediction reads the plane's left, up and upper-left bytes, which
+    * un-filtering has already rebuilt, so both directions predict alike.
+    * One call a row keeps the per-byte loop free of calls but Paeth's.
+    */
+  private def pngFilterRow(ft: Int, plane: Array[Byte], r: Int,
+      stride: Int, line: Array[Byte], off: Int, unfilter: Boolean): Unit = {
+    val i0 = r * stride
+    var x = 0
+    while (x < stride) {
+      val left = if (x >= 3) plane(i0 + x - 3) & 0xFF else 0
+      val up = if (r > 0) plane(i0 - stride + x) & 0xFF else 0
+      val predicted = ft match {
+        case 0 => 0
+        case 1 => left
+        case 2 => up
+        case 3 => (left + up) / 2
+        case 4 => paethPredictor(left, up,
+          if (r > 0 && x >= 3) plane(i0 - stride + x - 3) & 0xFF else 0)
+      }
+      if (unfilter) plane(i0 + x) = ((line(off + x) + predicted) & 0xFF).toByte
+      else line(off + x) = ((plane(i0 + x) - predicted) & 0xFF).toByte
+      x += 1
+    }
   }
 
   /** The Paeth predictor exactly as specified: the neighbor (left,
@@ -300,8 +310,7 @@ object Codecs {
         case _ => // ancillary chunk (tEXt, gAMA, …): CRC-checked, skipped
       }
     }
-    val bpp = 3
-    val stride = width * bpp
+    val stride = width * 3
     val rawLen = height * (1 + stride)
     // the engine's own RFC 1950/1951 decoder (graft.web.Deflate) — the
     // same proven inflate the gzip front door runs, plus the Adler-32
@@ -315,24 +324,8 @@ object Codecs {
     while (r < height) {
       val ft = raw(r * (1 + stride)) & 0xFF
       require(ft <= 4, s"unknown filter type $ft on row $r")
-      var x = 0
-      while (x < stride) {
-        val filt = raw(r * (1 + stride) + 1 + x) & 0xFF
-        val left = if (x >= bpp) pixels(r * stride + x - bpp) & 0xFF else 0
-        val up = if (r > 0) pixels((r - 1) * stride + x) & 0xFF else 0
-        val upLeft =
-          if (r > 0 && x >= bpp) pixels((r - 1) * stride + x - bpp) & 0xFF
-          else 0
-        val predicted = ft match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paethPredictor(left, up, upLeft)
-        }
-        pixels(r * stride + x) = ((filt + predicted) & 0xFF).toByte
-        x += 1
-      }
+      pngFilterRow(ft, pixels, r, stride, raw, r * (1 + stride) + 1,
+        unfilter = true)
       r += 1
     }
     PpmImage(width, height, 255, pixels)

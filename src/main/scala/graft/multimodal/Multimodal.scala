@@ -145,6 +145,14 @@ object Multimodal {
     t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       .filter(b => (b & 0x80) == 0)
 
+  // A text's image: its ASCII sub-stream as the RGB plane of a
+  // 16-pixel-wide image, height ceil(n/48) (at least 1), zero-padded.
+  private def textPlane(t: String): (Int, Array[Byte]) = {
+    val ascii = asciiBytes(t)
+    val h = math.max(1, (ascii.length + 47) / 48)
+    (h, java.util.Arrays.copyOf(ascii, 16 * h * 3))
+  }
+
   /** REAL P6 PPM payloads synthesized deterministically from text: the
     * ASCII sub-stream becomes the RGB plane of a 16-pixel-wide image
     * (height = ceil(n/48), zero-padded) — so the decoded pixel
@@ -158,9 +166,7 @@ object Multimodal {
         coalesce(col(textCol), lit("")).as("t"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        val ascii = asciiBytes(t)
-        val h = math.max(1, (ascii.length + 47) / 48)
-        val plane = java.util.Arrays.copyOf(ascii, 16 * h * 3)
+        val (h, plane) = textPlane(t)
         MediaRow(id, "image/x-portable-pixmap",
           Codecs.encodePpm(16, h, 255, plane))
       })
@@ -221,9 +227,7 @@ object Multimodal {
         coalesce(col(textCol), lit("")).as("t"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        val ascii = asciiBytes(t)
-        val h = math.max(1, (ascii.length + 47) / 48)
-        val plane = java.util.Arrays.copyOf(ascii, 16 * h * 3)
+        val (h, plane) = textPlane(t)
         MediaRow(id, "image/png", Codecs.encodePng(16, h, plane))
       })
   }
@@ -433,16 +437,12 @@ object Multimodal {
         coalesce(col(textCol), lit("")).as("t"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
-        val ascii = asciiBytes(t)
-        val nf = math.max(1, (ascii.length + 47) / 48)
+        val (nf, plane) = textPlane(t) // one 16x1 frame per row
         val out = new java.io.ByteArrayOutputStream()
         var f = 0
         while (f < nf) {
-          val plane = new Array[Byte](48)
-          val from = f * 48
-          val n = math.max(0, math.min(48, ascii.length - from))
-          if (n > 0) System.arraycopy(ascii, from, plane, 0, n)
-          out.write(Codecs.encodePpm(16, 1, 255, plane))
+          out.write(Codecs.encodePpm(16, 1, 255,
+            java.util.Arrays.copyOfRange(plane, f * 48, f * 48 + 48)))
           f += 1
         }
         MediaRow(id, "video/x-ppm-stream", out.toByteArray)

@@ -262,30 +262,19 @@ object TokenizerQueries {
       .agg(countDistinct(col("tok")).as("n_terms"),
         count(lit(1)).as("total_tf"))
 
-  // The match core computed once per (session, corpus) and shared
-  // between its own tier query (q110, which REBUILDS and republishes so
-  // a min-of-N bench bills the token explode to it) and the readers —
-  // the q115 gate and the q116 population audit, which serve the pinned
-  // memo instead of re-exploding the corpus (the SharedAnn billing
-  // discipline; admissible under the pin contract because the relation
-  // is at most one 3-long row per matching doc — strictly smaller than
-  // the per-doc cluster relation q56 already pins).
-  private val matchCoreMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
+  // The match core shared between its own tier query (q110 publishes)
+  // and its readers, the q115 gate and the q116 population audit, which
+  // serve it instead of re-exploding the corpus. At most one 3-long row
+  // per matching doc.
+  private val matchCore = new graft.ops.Materialize.Shared[
+    (SparkSession, String)]({ case (s, d) =>
+      graft.ops.Materialize(keywordMatchCore(s, d)) })
 
-  private[graft] def publishMatchCore(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.Materialize
-    val fresh = Materialize.pin(Materialize(keywordMatchCore(s, d)))
-    val old = matchCoreMemo.put((s, d), fresh)
-    if (old != null && (old ne fresh)) Materialize.unpinAndRelease(old)
-    fresh
-  }
+  private[graft] def publishMatchCore(s: SparkSession, d: String): DataFrame =
+    matchCore.publish((s, d))
 
-  private[graft] def serveMatchCore(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.Materialize
-    matchCoreMemo.computeIfAbsent((s, d),
-      _ => Materialize.pin(Materialize(keywordMatchCore(s, d))))
-  }
+  private[graft] def serveMatchCore(s: SparkSession, d: String): DataFrame =
+    matchCore.serve((s, d))
 
   val q110_keyword_search: Q = (s, d) =>
     publishMatchCore(s, d)

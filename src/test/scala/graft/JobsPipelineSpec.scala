@@ -3,9 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Date
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -141,28 +139,20 @@ class JobsPipelineSpec extends AnyFunSuite with SharedSpark
   private def append(df: DataFrame): (Path, SparkPlan, Int) = {
     val dir = tempDir("graft_jobs_sink").resolve("parsed_jobs")
     val plans = new LinkedBlockingQueue[SparkPlan]
-    val jobs = new AtomicInteger
     val planListener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         plans.put(qe.executedPlan)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     spark.listenerManager.register(planListener)
-    spark.sparkContext.addSparkListener(jobListener)
     try {
-      df.write.parquet(dir.toString)
-      // both listeners sit on the bus's shared queue, so the write's
-      // job starts are delivered before its end event
+      val jobs = jobsStartedBy(df.write.parquet(dir.toString))
+      // the write's plan is the first to arrive: the marker job that
+      // jobsStartedBy runs after it comes later on the same bus
       val plan = plans.poll(60, TimeUnit.SECONDS)
       assert(plan != null, "the write's plan never arrived")
-      (dir, plan, jobs.get)
-    } finally {
-      spark.listenerManager.unregister(planListener)
-      spark.sparkContext.removeSparkListener(jobListener)
-    }
+      (dir, plan, jobs)
+    } finally spark.listenerManager.unregister(planListener)
   }
 
   test("run's append writes one file for a day whose pages span several " +

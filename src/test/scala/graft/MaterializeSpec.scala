@@ -96,4 +96,53 @@ class MaterializeSpec extends AnyFunSuite with SharedSpark {
       docs, sf, "doc_id", "text", "lang", n = 3, threshold = 0.5))
     assert(second === first && servedAgain === first)
   }
+
+  test("a Shared memo builds once per serve, always on publish, releases " +
+      "the generation a republish replaces, and keeps the current one " +
+      "readable through releaseAll") {
+    import graft.ops.Materialize
+    import org.apache.spark.sql.execution.LogicalRDD
+    def rddIds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case l: LogicalRDD => l.rdd.id
+      }
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.collect().map(_.getLong(0)).toSeq.sorted
+
+    withConf("spark.graft.checkpointMode" -> "local") {
+      var builds = 0
+      // each generation has its own row count, so a read names it
+      val memo = new Materialize.Shared[String](_ => {
+        builds += 1
+        Materialize(spark.range(10L * builds).toDF())
+      })
+
+      val first = memo.serve("k")
+      assert(memo.serve("k") eq first)
+      assert(builds === 1)
+      assert(rows(first) === (0L until 10L))
+      val firstIds = rddIds(first)
+      assert(firstIds.nonEmpty && firstIds.forall(persisted))
+
+      val second = memo.publish("k")
+      assert(builds === 2)
+      assert(memo.serve("k") eq second)
+      assert(builds === 2)
+      assert(rows(memo.serve("k")) === (0L until 20L))
+      // the replaced generation's blocks are released, not leaked
+      assert(firstIds.forall(id => !persisted(id)))
+
+      assert(memo.publish("k") ne second)
+      assert(builds === 3)
+
+      // localCheckpoint blocks cannot be recomputed: the current
+      // generation reads after releaseAll only because it is pinned
+      Materialize.releaseAll(spark)
+      val current = memo.serve("k")
+      assert(rddIds(current).forall(persisted))
+      assert(rows(current) === (0L until 30L))
+      assert(builds === 3)
+    }
+  }
 }

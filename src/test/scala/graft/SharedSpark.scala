@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.commons.io.FileUtils
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuiteLike
 
@@ -35,6 +36,27 @@ trait SharedSpark extends AnyFunSuiteLike {
     }
   }
 
+  /** Jobs `body` starts, counted by running it in its own job group and
+    * then waiting for a marker job: the bus delivers in order, so once the
+    * marker's start arrives every earlier start has too.
+    */
+  protected def jobsStartedBy(body: => Unit): Int = {
+    val groups = new SharedSpark.JobGroups
+    val group = s"counted-${System.nanoTime()}"
+    spark.sparkContext.addSparkListener(groups)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(s"$group-marker", "marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (groups.count(s"$group-marker") == 0 && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.count(s"$group-marker") > 0, "marker job never arrived")
+      groups.count(group)
+    } finally spark.sparkContext.removeSparkListener(groups)
+  }
+
   /** A fresh temp dir, deleted with its contents when the JVM exits. */
   protected def tempDir(prefix: String): Path = SharedSpark.tempDir(prefix)
 
@@ -47,6 +69,20 @@ trait SharedSpark extends AnyFunSuiteLike {
 }
 
 object SharedSpark {
+
+  /** Job starts per job group, delivered by the listener bus. */
+  private final class JobGroups extends SparkListener {
+    private val seen = new ConcurrentLinkedQueue[String]
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      seen.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse(""))
+    def count(group: String): Int = {
+      var n = 0
+      seen.forEach(g => if (g == group) n += 1)
+      n
+    }
+  }
 
   private val tempDirs = new ConcurrentLinkedQueue[Path]
 

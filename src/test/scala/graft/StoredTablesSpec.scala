@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,41 +20,6 @@ class StoredTablesSpec extends AnyFunSuite with SharedSpark {
 
   private def tmp(prefix: String): String =
     tempDir(prefix).toString
-
-  /** Job starts per job group, delivered by the listener bus. */
-  private final class JobGroups extends SparkListener {
-    private val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      seen.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse(""))
-    def count(group: String): Int = {
-      var n = 0
-      seen.forEach(g => if (g == group) n += 1)
-      n
-    }
-  }
-
-  /** Jobs `body` starts, counted by running it in its own job group and
-    * then waiting for a marker job: the bus delivers in order, so once the
-    * marker's start arrives every earlier start has too.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val groups = new JobGroups
-    val group = s"stored-${System.nanoTime()}"
-    spark.sparkContext.addSparkListener(groups)
-    try {
-      spark.sparkContext.setJobGroup(group, group)
-      try body finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.setJobGroup(s"$group-marker", "marker")
-      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (groups.count(s"$group-marker") == 0 && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.count(s"$group-marker") > 0, "marker job never arrived")
-      groups.count(group)
-    } finally spark.sparkContext.removeSparkListener(groups)
-  }
 
   test("every corpus table resolves to the plain read's schema") {
     for (name <- Seq("lineitem", "orders", "customer", "supplier", "part",
