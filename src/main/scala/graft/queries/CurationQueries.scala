@@ -281,14 +281,14 @@ object CurationQueries {
     * exact-duplicate ppm (docs whose md5 digest appears more than once
     * WITHIN the source), mean quality ppm, and the per-modality NEAR-dup
     * membership counts (docs of the source appearing in ≥ 1 text /
-    * image / audio near-dup pair — read from the [[Shared.pairs]] memo
-    * q165 publishes, so the card bills its own |pairs|-sized rollup,
-    * not three re-decoded media corpora), and the perplexity-informed
-    * MIXING WEIGHT (q201's DoReMi-family ppm weight per source, the
-    * rollup over the [[Shared.pplx]] memo — the card documents the mix
-    * the engine would actually train with) — every figure an exact
-    * integer so the card is bit-identical across engines and re-runs.
-    * One corpus scan + a digest aggregate + a |sources|-row rollup; at
+    * image / audio near-dup pair — read from the
+    * [[SharedReadouts.pairs]] memo q165 publishes, so the card bills its
+    * own |pairs|-sized rollup, not three re-decoded media corpora), and
+    * the perplexity-informed MIXING WEIGHT (q201's DoReMi-family ppm
+    * weight per source, the rollup over the [[SharedReadouts.pplx]] memo
+    * — the card documents the mix the engine would actually train with)
+    * — every figure an exact integer so the card is bit-identical
+    * across engines and re-runs. One corpus scan + a digest aggregate + a |sources|-row rollup; at
     * 100 TB this is two shuffles (digest, source) plus a pair-scale
     * membership join plus one broadcast of the |sources|-row weight
     * relation, all map-side combined, output |sources| rows.
@@ -304,7 +304,7 @@ object CurationQueries {
       .agg(count(lit(1)).as("n"))
       .groupBy("source")
       .agg(sum(when(col("n") > 1, col("n")).otherwise(0L)).as("dup_docs"))
-    val modal = Shared.pairs.serve((s, d))
+    val modal = SharedReadouts.pairs.serve((s, d))
       .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"),
         col("modality"))
       .distinct()
@@ -577,21 +577,22 @@ object CurationQueries {
     val emb = Tables.embeddings(s, d)
     val vecs = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
-    // The audited tiers are READ from the Shared.ann memo (each tier's own
-    // query publishes its output — the q56/q74/q97 billing discipline):
-    // the gate audits the LITERAL relations q26/q32/q109/q53 emit and
-    // pays one union + one pair of vector joins + one HOF rescoring
-    // pass — never four re-trained ANN pipelines.
-    val claimed = Shared.ann.serve((s, d, "lsh"))
+    // The audited tiers are READ from the SharedReadouts.ann memo (each
+    // tier's own query publishes its output — the q56/q74/q97 billing
+    // discipline): the gate audits the LITERAL relations
+    // q26/q32/q109/q53 emit and pays one union + one pair of vector
+    // joins + one HOF rescoring pass — never four re-trained ANN
+    // pipelines.
+    val claimed = SharedReadouts.ann.serve((s, d, "lsh"))
       .select(lit("lsh").as("tier"), col("query_id"), col("neighbor_id"),
         col("cos"))
-      .unionByName(Shared.ann.serve((s, d, "ivf"))
+      .unionByName(SharedReadouts.ann.serve((s, d, "ivf"))
         .select(lit("ivf").as("tier"), col("query_id"), col("neighbor_id"),
           col("cos")))
-      .unionByName(Shared.ann.serve((s, d, "ivfpq"))
+      .unionByName(SharedReadouts.ann.serve((s, d, "ivfpq"))
         .select(lit("ivfpq").as("tier"), col("query_id"),
           col("neighbor_id"), col("cos")))
-      .unionByName(Shared.ann.serve((s, d, "neardup"))
+      .unionByName(SharedReadouts.ann.serve((s, d, "neardup"))
         .select(lit("neardup").as("tier"), col("id_a").as("query_id"),
           col("id_b").as("neighbor_id"), col("cos")))
     annGate(claimed, vecs)
@@ -713,11 +714,11 @@ object CurationQueries {
       // pair emptiness is data-dependent, a memo readout can't promise
       // the literal 1)
       .unionByName(nonempty("ann_lsh_topk_nonempty",
-        Shared.ann.serve((s, d, "lsh"))))
+        SharedReadouts.ann.serve((s, d, "lsh"))))
       .unionByName(nonempty("ann_ivf_topk_nonempty",
-        Shared.ann.serve((s, d, "ivf"))))
+        SharedReadouts.ann.serve((s, d, "ivf"))))
       .unionByName(nonempty("ann_ivfpq_topk_nonempty",
-        Shared.ann.serve((s, d, "ivfpq"))))
+        SharedReadouts.ann.serve((s, d, "ivfpq"))))
       .unionByName(nonempty("ann_neardup_scored_nonempty", scored))
       // the match-core population reads the memo q110 publishes and the
       // q115 gate consumes — the audit no longer re-explodes the corpus
@@ -763,16 +764,16 @@ object CurationQueries {
         graft.pipeline.CorpusBuild.stateVecs(s,
           TokenizerQueries.ensurePostingState(s, d))))
       // q156's tier must EMIT: the state-served ANN readout is consumed
-      // through the same Shared.ann memo the gate reads (serve builds
+      // through the same SharedReadouts.ann memo the gate reads (serve builds
       // only if q155 has not run this session)
       .unionByName(nonempty("state_ann_claims_nonempty",
-        Shared.ann.serve((s, d, "state_ivf"))))
+        SharedReadouts.ann.serve((s, d, "state_ivf"))))
       // q168's tier family must EMIT even at its narrowest probe: with
       // nProbe=1 every query probes its own (Euclidean-argmin) list, so
       // any cluster with >= 2 members produces a claim — consumed
       // through the same memo the gate reads
       .unionByName(nonempty("state_ann_curve_claims_nonempty",
-        Shared.ann.serve((s, d, "state_ivf_curve"))
+        SharedReadouts.ann.serve((s, d, "state_ivf_curve"))
           .filter(col("nprobe") === 1L)))
   }
 
@@ -1252,7 +1253,7 @@ object CurationQueries {
     * hash-mismatches.
     *
     * 100 TB: short/rep/pii ride the scan (map-only); pplx SERVES the
-    * pinned [[Shared.pplx]] memo (built once per session — the matrix
+    * pinned [[SharedReadouts.pplx]] memo (built once per session — the matrix
     * prices its own join, not a second model build); cdc adds q194's
     * one rolling-hash pass + key join; the survivor join serves the
     * memoized cluster relation; one final per-doc join tree on 8-byte
@@ -1283,7 +1284,7 @@ object CurationQueries {
       .select(col("id").as("doc_id"), lit(1L).as("is_kept"))
     val cdcHit = cdc.filter(col("n_eval_shared") > 0L)
       .select(col("doc_id"), lit(1L).as("cdc_hit"))
-    val pplx = Shared.pplx.serve((s, d))
+    val pplx = SharedReadouts.pplx.serve((s, d))
       .select(col("doc_id"), col("avg_q6"))
     val st = TextAnalysis.runStats(
       filter(TextAnalysis.tokens(col("text")), t => length(t) > 0))

@@ -308,7 +308,7 @@ object ExpansionQueries {
     * ScalaTest; reported-cosine exactness stays q88's gate.
     */
   val q53_embedding_neardup: Q = (s, d) =>
-    Shared.ann.publish((s, d, "neardup"))
+    SharedReadouts.ann.publish((s, d, "neardup"))
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
 
   val q53Sql: String =

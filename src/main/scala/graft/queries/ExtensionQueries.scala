@@ -613,7 +613,7 @@ object ExtensionQueries {
     * ScalaTest; reported-cosine exactness stays q88's gate.
     */
   val q26_lsh_cosine: Q = (s, d) =>
-    Shared.ann.publish((s, d, "lsh"))
+    SharedReadouts.ann.publish((s, d, "lsh"))
       .select(col("query_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cos"), col("rank"))
 
@@ -705,7 +705,7 @@ object ExtensionQueries {
     * driver check, planted-twin recall asserted in ScalaTest).
     */
   val q32_ivf_cosine: Q = (s, d) =>
-    Shared.ann.publish((s, d, "ivf"))
+    SharedReadouts.ann.publish((s, d, "ivf"))
 
   /** q109 — IVF-PQ approximate top-1 (the memory-bound tier: byte codes +
     * ADC shortlist, exact re-rank — see Similarity.ivfPqTopK). Rows-only
@@ -714,7 +714,7 @@ object ExtensionQueries {
     * WHICH candidates reach the exact re-rank, never the emitted score).
     */
   val q109_ivfpq_cosine: Q = (s, d) =>
-    Shared.ann.publish((s, d, "ivfpq"))
+    SharedReadouts.ann.publish((s, d, "ivfpq"))
 
   /** q112 — per-group embedding centroids, EXACT: component-wise mean of
     * the embedding vectors within each doc_id%4 slice (a stand-in for
@@ -923,10 +923,10 @@ object ExtensionQueries {
     * training history); q156 re-scores every claimed row.
     */
   val q155_state_ann: Q = (s, d) =>
-    // publish into the Shared.ann memo (the q26/q32/q109 billing
+    // publish into the SharedReadouts.ann memo (the q26/q32/q109 billing
     // discipline): the tier's own query always rebuilds and pays its
     // pipeline; the q156 gate reads the published readout
-    Shared.ann.publish((s, d, "state_ivf"))
+    SharedReadouts.ann.publish((s, d, "state_ivf"))
 
   /** q156 — the q88 rescoring gate over q155: every state-served
     * (query, neighbor, cos) re-scored with the independent HOF cosine
@@ -938,7 +938,7 @@ object ExtensionQueries {
     // READ the published readout (serve builds only if q155 has not run
     // this session) — the gate pays its rescoring join, not a second
     // state-ANN search
-    val claimed = Shared.ann.serve((s, d, "state_ivf"))
+    val claimed = SharedReadouts.ann.serve((s, d, "state_ivf"))
       .select(lit("state_ivf").as("tier"), col("query_id"),
         col("neighbor_id"), col("cos"))
     val vecs = graft.pipeline.CorpusBuild.stateVecs(s, dir)
@@ -957,7 +957,7 @@ object ExtensionQueries {
 
   /** q167 — IVF RECALL-vs-nPROBE CURVE over the stored model: the
     * whole top-1 family comes from ONE candidate-generation pass
-    * ([[Shared.ann]] `state_ivf_curve`, published here so a bench bills
+    * ([[SharedReadouts.ann]] `state_ivf_curve`, published here so a bench bills
     * the single search to this number — per width the relation is
     * EXACTLY `stateIvfTopK(k=1, nProbe=width)`'s, ClusteringSpec-
     * asserted) and is judged against the brute-force exact top-1 over
@@ -979,7 +979,7 @@ object ExtensionQueries {
       .select(col("id").as("vec_id"), col("v").as("embedding"))
     val exact = Similarity.cosineTopK(vecs, vecs, "vec_id", "embedding", k = 1)
       .select(col("query_id"), col("cos").as("best_cos"))
-    val curve = Shared.ann.publish((s, d, "state_ivf_curve"))
+    val curve = SharedReadouts.ann.publish((s, d, "state_ivf_curve"))
     import s.implicits._
     val spine = RecallCurveProbes.map(_.toLong).toDF("nprobe")
     exact.crossJoin(broadcast(spine))
@@ -1006,7 +1006,7 @@ object ExtensionQueries {
     val dir = TokenizerQueries.ensurePostingState(s, d)
     val vecs = graft.pipeline.CorpusBuild.stateVecs(s, dir)
       .select(col("id").as("vec_id"), col("v"))
-    val claims = Shared.ann.serve((s, d, "state_ivf_curve"))
+    val claims = SharedReadouts.ann.serve((s, d, "state_ivf_curve"))
       .select(concat(lit("state_ivf_p"), col("nprobe")).as("tier"),
         col("query_id"), col("neighbor_id"), col("cos"))
     CurationQueries.annGate(claims, vecs)

@@ -247,13 +247,13 @@ object FilterQueries {
     * The algebra lives in [[graft.ops.BigramLm]], shared verbatim with
     * the stored-state tier (q196 — folded unpruned count deltas,
     * singleton pruning at read) and the `onPerplexity` ingest door.
-    * The per-doc readout PUBLISHES into the [[Shared.pplx]] memo so the
+    * The per-doc readout PUBLISHES into the [[SharedReadouts.pplx]] memo so the
     * q201 reweighting rollup and q190's matrix column serve the scored
     * relation instead of rebuilding the model (the Materialize.Shared billing
     * discipline — q187's own number always prices the full build).
     */
   val q187_bigram_perplexity: Q = (s, d) =>
-    Shared.pplx.publish((s, d))
+    SharedReadouts.pplx.publish((s, d))
 
   val q187Sql: String =
     """WITH t AS (
@@ -401,7 +401,7 @@ object FilterQueries {
     * operands, so the oracle reproduces it bit for bit.
     *
     * Scale shape: the per-doc perplexities are SERVED from the pinned
-    * [[Shared.pplx]] memo (built once per session — by q187's publish
+    * [[SharedReadouts.pplx]] memo (built once per session — by q187's publish
     * or on first demand), so this query prices the rollup it exists to
     * perform, not a second model build over a corpus q187 already
     * scored; the rollup is one map-side-combined shuffle with
@@ -411,7 +411,7 @@ object FilterQueries {
     */
   val q201_source_reweight: Q = (s, d) =>
     reweightRollup(Tables.documents(s, d),
-      Shared.pplx.serve((s, d))
+      SharedReadouts.pplx.serve((s, d))
         .select(col("doc_id"), col("n_pairs"), col("pplx_sum")))
 
   /** The excess/normalize rollup shared by q201 (in-query model) and
@@ -452,7 +452,7 @@ object FilterQueries {
     */
   private[queries] def sourceWeights(s: SparkSession, d: String): DataFrame =
     reweightRollup(Tables.documents(s, d),
-      Shared.pplx.serve((s, d))
+      SharedReadouts.pplx.serve((s, d))
         .select(col("doc_id"), col("n_pairs"), col("pplx_sum")))
       .select(col("source"), col("weight_ppm"))
 

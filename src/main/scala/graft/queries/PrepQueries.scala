@@ -570,7 +570,7 @@ object PrepQueries {
     * duplicate clusters (a doc textually near another and visually near
     * a third lands all three in one cluster — the keep-one unit a
     * multimodal training corpus actually dedups by). Builds and
-    * PUBLISHES the tagged pair memo ([[Shared.pairs]]) so the q163 card
+    * PUBLISHES the tagged pair memo ([[SharedReadouts.pairs]]) so the q163 card
     * reads it instead of re-decoding three media corpora. The oracle
     * re-derives everything brute-force in DuckDB: exact Jaccard pairs ∪
     * brute-force hamming pairs for both sketch modalities, then a
@@ -579,7 +579,8 @@ object PrepQueries {
     * union is pair-scale, CC shuffles only the edge list.
     */
   val q165_crossmodal_clusters: Q = (s, d) => {
-    val edges = Shared.pairs.publish((s, d)).select("id_a", "id_b").distinct()
+    val edges = SharedReadouts.pairs.publish((s, d))
+      .select("id_a", "id_b").distinct()
     graft.ops.Components.connectedComponents(
         Tables.documents(s, d).select(col("doc_id").as("id")), edges)
       .select(col("id").as("doc_id"), col("component"))
@@ -744,12 +745,12 @@ object PrepQueries {
     * zeroed columns). The production contract for 100 TB lakes, where
     * corrupt files are a certainty; the quarantine relation is the
     * re-fetch worklist. Map-only. PUBLISHES the per-doc readout into
-    * the [[Shared.quarantine]] memo so the state-served release card
+    * the [[SharedReadouts.quarantine]] memo so the state-served release card
     * (q206) prices a join, not a re-decoded lake — q178's own number
     * always bills the full encode→corrupt→decode pipeline.
     */
   val q178_quarantine_decode: Q = (s, d) =>
-    Shared.quarantine.publish((s, d))
+    SharedReadouts.quarantine.publish((s, d))
 
   val q178Sql: String =
     s"""${ModalPairSql.mediaCodes}

@@ -164,7 +164,7 @@ object ReleaseQueries {
     *    in the plan (PlanSpec pins the absence);
     *  - DSIR: [[graft.pipeline.CorpusBuild.stateDsirScores]] — the
     *    folded 256-bucket table, zero model work;
-    *  - media quarantine: the [[Shared.quarantine]] memo (q178's decode
+    *  - media quarantine: the [[SharedReadouts.quarantine]] memo (q178's decode
     *    readout — a join, not a re-decoded lake);
     *  - PII + domains: map-only planted algebra riding the one
     *    document scan the card needs anyway.
@@ -191,7 +191,7 @@ object ReleaseQueries {
       // data-selection tier: the folded DSIR bucket table
       graft.pipeline.CorpusBuild.stateDsirScores(s, dir, docs),
       // media tier: q178's decode readout served from the pinned memo
-      Shared.quarantine.serve((s, d)))
+      SharedReadouts.quarantine.serve((s, d)))
   }
 
   val queries: Map[String, Q] = Map(

@@ -10,7 +10,7 @@ import graft.ops.{Materialize, Similarity}
   * owner query publishes; its consumers serve (the billing and pin rules
   * are [[Materialize.Shared]]'s). Every build materializes its readout.
   */
-private[graft] object Shared {
+private[queries] object SharedReadouts {
 
   /** The approximate-similarity tier readouts, keyed by (session, sf dir,
     * tier). Owners: q26 (lsh), q32 (ivf), q109 (ivfpq), q53 (neardup),

@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
 """Find repeated runs of code lines under src/main.
 
-A run is a stretch of at least --min consecutive code lines (non-blank,
-not comments, leading/trailing whitespace ignored) that occurs
-identically in two or more places. Each maximal run is printed once,
-largest first, with every place it occurs as file:line (the line of the
-run's first code line):
+A run is a stretch of at least MIN_RUN (6) consecutive code lines
+(non-blank, not comments, leading/trailing whitespace ignored) that
+occurs identically in two or more places. Each maximal run is printed
+once, largest first, with every place it occurs as file:line (the line
+of the run's first code line):
 
-    python3 tools/dup_runs.py [--min 6] [--top 15] [root ...]
+    python3 tools/dup_runs.py [--top 15]
 
-The roots default to src/main next to this script. Stdlib only.
+It scans src/main next to this script. Stdlib only.
 """
 
 import argparse
@@ -18,6 +18,7 @@ import sys
 from collections import defaultdict
 
 SOURCE_EXT = (".scala", ".java")
+MIN_RUN = 6
 
 
 def code_lines(path):
@@ -43,12 +44,11 @@ def code_lines(path):
     return out
 
 
-def sources(roots):
-    for root in roots:
-        for d, _, names in os.walk(root):
-            for n in sorted(names):
-                if n.endswith(SOURCE_EXT):
-                    yield os.path.join(d, n)
+def sources(root):
+    for d, _, names in os.walk(root):
+        for n in sorted(names):
+            if n.endswith(SOURCE_EXT):
+                yield os.path.join(d, n)
 
 
 def runs(files, k):
@@ -89,15 +89,12 @@ def runs(files, k):
 def main(argv):
     here = os.path.dirname(os.path.abspath(__file__))
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("--min", type=int, default=6,
-                   help="shortest run to report (default 6)")
     p.add_argument("--top", type=int, default=0,
                    help="print only the N largest runs (default all)")
-    p.add_argument("roots", nargs="*",
-                   default=[os.path.join(here, "..", "src", "main")])
     a = p.parse_args(argv)
-    files = {f: code_lines(f) for f in sources(a.roots)}
-    found = runs(files, a.min)
+    files = {f: code_lines(f)
+             for f in sources(os.path.join(here, "..", "src", "main"))}
+    found = runs(files, MIN_RUN)
     base = os.path.join(here, "..")
     rows = []
     for key, places in found.items():
